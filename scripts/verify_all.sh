@@ -1,10 +1,12 @@
 #!/usr/bin/env bash
-# Full local verification: the test suite plus the Spark-vs-DuckDB parity
-# sweep at both scale factors (the same gates the driver runs).
+# Full local verification: the test suite, the benchmark's smoke test, and
+# the Spark-vs-DuckDB parity sweep at both scale factors.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
+echo "== perfbench smoke =="
+python -m pytest perfbench/test_smoke.py -q
 echo "== oracle parity sf0.01 =="
 python scripts/check_oracle.py /root/testdata/sf0.01
 echo "== oracle parity sf0.1 =="

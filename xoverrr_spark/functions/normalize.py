@@ -95,17 +95,37 @@ def canonical_column(c: Column, dtype: T.DataType) -> Column:
     return _blank_to_na(out) if needs_blank_regex else out
 
 
+def _canonical_view(df: DataFrame, exclude: set, built: dict) -> DataFrame:
+    cols = []
+    for f in df.schema.fields:
+        if f.name in exclude:
+            cols.append(F.col(f.name))
+            continue
+        key = (f.name, f.dataType)
+        if key not in built:
+            built[key] = canonical_column(F.col(f.name), f.dataType).alias(f.name)
+        cols.append(built[key])
+    return df.select(*cols)
+
+
 def canonicalize(df: DataFrame, exclude: list[str] | None = None) -> DataFrame:
     """All-string canonical view of ``df`` (reference ``prepare_dataframe``).
 
     Columns in ``exclude`` (e.g. binary image payloads that must pass through
     untouched) are kept as-is.
     """
-    exclude = set(exclude or [])
-    cols = []
-    for f in df.schema.fields:
-        if f.name in exclude:
-            cols.append(F.col(f.name))
-        else:
-            cols.append(canonical_column(F.col(f.name), f.dataType).alias(f.name))
-    return df.select(*cols)
+    return _canonical_view(df, set(exclude or []), {})
+
+
+def canonicalize_pair(src: DataFrame, trg: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(canonicalize(src), canonicalize(trg))``, with each column's
+    expression built once per (name, type) and shared by both sides.
+
+    An expression holds only unresolved column references, so one built
+    object serves both selects; a column typed differently on the two
+    sides gets one expression per type. Every Column call made while
+    building an expression is a py4j round trip, and those calls are most
+    of a diff plan's driver-side build time.
+    """
+    built: dict = {}
+    return _canonical_view(src, set(), built), _canonical_view(trg, set(), built)

@@ -26,10 +26,11 @@ Spark, not translated:
   map-side-combinable aggregate (a window+row_number formulation would
   shuffle every duplicate row; this shuffles one partial per key per mapper).
 
-Scale notes (100 TB): two key-hash shuffles + one join shuffle, all on the
-primary key — AQE handles skew/partition sizing; the per-column issue counts
-ride the same single agg (no per-column passes); examples are separate
-``limit`` jobs that short-circuit after a few tasks.
+Scale notes (100 TB): one key-hash shuffle, on the primary key — AQE
+handles skew/partition sizing; the per-column issue counts ride the same
+single agg (no per-column passes). Examples are stats-gated lookups over the
+persisted per-key frame: each is a short ``limit``/window job, and it runs
+only when the stats row counts at least one row of its kind.
 """
 
 from __future__ import annotations
@@ -40,7 +41,8 @@ from statistics import median
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.normalize import canonicalize
+from ..functions.normalize import canonicalize_pair
+from ..session import local_rows
 
 DEFAULT_MAX_EXAMPLES = 3  # reference constants.py:7
 
@@ -150,12 +152,11 @@ def diff_joined(
     absent on that side, exactly like the outer-join formulation.
     """
     if normalize:
-        src = canonicalize(src)
-        trg = canonicalize(trg)
+        src, trg = canonicalize_pair(src, trg)
     vals = _common_value_columns(src, trg, keys)
     u = (
-        src.select(*keys, *vals).withColumn("_side", F.lit("s"))
-        .unionByName(trg.select(*keys, *vals).withColumn("_side", F.lit("t")))
+        src.select(*keys, *vals, F.lit("s").alias("_side"))
+        .unionByName(trg.select(*keys, *vals, F.lit("t").alias("_side")))
     )
     is_s = F.col("_side") == "s"
     row_expr = (
@@ -235,8 +236,9 @@ def _issue_examples_from_joined(
     from pyspark.sql.window import Window
 
     if not vals:
-        return j.sparkSession.createDataFrame(
-            [], "primary_key string, column_name string, source_value string, target_value string"
+        return local_rows(
+            j.sparkSession, [],
+            "primary_key string, column_name string, source_value string, target_value string",
         )
     both = F.col("s_cnt").isNotNull() & F.col("t_cnt").isNotNull()
     pk = F.concat_ws("|", *[F.col(k).cast("string") for k in keys]).alias("primary_key")
@@ -301,7 +303,10 @@ def compare_frames(
     all derived from the cached frame — one scan + one shuffle of the
     inputs total, instead of ~5 full recomputations. The stats collect
     materializes the cache; every follow-up is a short job over the cached
-    partitions. unpersist() in finally keeps executor storage bounded.
+    partitions, and a follow-up whose kind the stats row counts zero of
+    (no source-only keys, no dups, no differing rows, ...) is skipped — it
+    could only return nothing. unpersist() in finally keeps executor
+    storage bounded.
     """
     j, vals = diff_joined(src, trg, keys, normalize)
     j = j.persist()
@@ -358,14 +363,22 @@ def compare_frames(
                     .select(*keys).orderBy(*keys).limit(max_examples).collect()
                 )
 
-            details.source_only_keys_examples = _keys("source_only")
-            details.target_only_keys_examples = _keys("target_only")
-            details.dup_source_keys_examples = _dup_keys("s_cnt")
-            details.dup_target_keys_examples = _dup_keys("t_cnt")
-            details.issue_examples = [
-                r.asDict()
-                for r in _issue_examples_from_joined(j, vals, keys, max_examples).collect()
-            ]
+            if row["only_source_rows"]:
+                details.source_only_keys_examples = _keys("source_only")
+            if row["only_target_rows"]:
+                details.target_only_keys_examples = _keys("target_only")
+            if row["dup_source_rows"]:
+                details.dup_source_keys_examples = _dup_keys("s_cnt")
+            if row["dup_target_rows"]:
+                details.dup_target_keys_examples = _dup_keys("t_cnt")
+            # an issue example needs a comparable row whose value structs
+            # differ — exactly the rows comparable_rows counts and
+            # passed_rows does not
+            if row["comparable_rows"] > row["passed_rows"]:
+                details.issue_examples = [
+                    r.asDict()
+                    for r in _issue_examples_from_joined(j, vals, keys, max_examples).collect()
+                ]
         return stats, details
     finally:
         j.unpersist()

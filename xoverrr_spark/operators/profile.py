@@ -19,6 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_rows
+
+_DIST_SCHEMA = "column_name string, hist_l1 double, src_n bigint, trg_n bigint"
+
 
 def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """(column_name, n_rows, n_nulls, n_distinct) per column — exact."""
@@ -431,14 +435,9 @@ def histogram_drift(
             )
         )
     else:
-        dist = spark.createDataFrame(
-            [], "column_name string, hist_l1 double, src_n bigint, trg_n bigint"
-        )
+        dist = local_rows(spark, [], _DIST_SCHEMA)
     if degenerate:
-        deg = spark.createDataFrame(
-            [(c, 0.0, 0, 0) for c in degenerate],
-            "column_name string, hist_l1 double, src_n bigint, trg_n bigint",
-        )
+        deg = local_rows(spark, [(c, 0.0, 0, 0) for c in degenerate], _DIST_SCHEMA)
         dist = dist.unionByName(deg)
     return dist.select(
         "column_name", "hist_l1", (F.col("hist_l1") / 2).alias("hist_tv"),

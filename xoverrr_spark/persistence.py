@@ -28,6 +28,7 @@ from dataclasses import dataclass, fields
 from datetime import datetime
 
 from .operators.diff import CheckDetails, CheckStats
+from .session import local_rows
 
 STATS_FLOAT_DECIMALS = 5          # reference constants.py:48
 DATETIME_FORMAT = "%Y-%m-%d %H:%M:%S"  # reference constants.py:3
@@ -216,7 +217,14 @@ def build_audit_record(
     return rec
 
 
+def audit_frame(spark, record: dict):
+    """The one-row audit DataFrame, typed by ``audit_schema()``. It plans
+    as a ``LocalTableScan`` (``session.local_rows``), so writing it runs
+    no Python worker."""
+    row = tuple(record.get(c) for c in AUDIT_COLUMNS)
+    return local_rows(spark, [row], audit_schema())
+
+
 def persist_audit_record(spark, record: dict, path: str) -> None:
     """Append one audit row to the results sink (parquet dir / table path)."""
-    row = tuple(record.get(c) for c in AUDIT_COLUMNS)
-    spark.createDataFrame([row], audit_schema()).write.mode("append").parquet(path)
+    audit_frame(spark, record).write.mode("append").parquet(path)

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sniff import drop_reason_breakdown
+from ..session import local_rows
 from .quality_filter import quality_filter
 
 
@@ -195,7 +196,8 @@ def _run_bucket(
         "duration_s": time.time() - t0,
         "skipped": False,
     }
-    spark.createDataFrame(
+    local_rows(
+        spark,
         [(run_id, b, row["n_rows"], row["n_keep"], row["duration_s"])],
         "run_id string, bucket int, n_rows long, n_keep long, duration_s double",
     ).write.mode("overwrite").parquet(os.path.join(output_dir, "lineage", f"bucket={b}"))

@@ -6,13 +6,24 @@ Local-mode defaults mirror what we would set on a real cluster: AQE on
 rather than the 200 default, UTC session timezone (the reference pins a
 session timezone per query — ``adapters/postgres.py:38``; one engine here,
 one setting).
+
+DataFrame debugging is off (``spark.python.sql.dataFrameDebugging.enabled``
+= false). With it on, every PySpark ``Column``/``DataFrame`` method call
+walks the Python stack and makes several py4j round trips to record its
+call site; building a check's diff plan makes hundreds of such calls, and
+Spark's docs warn of the "non-trivial performance overhead". The trade: a
+runtime error's error class, message and SQLSTATE are unchanged, but the
+"called from" line of its DataFrame query context no longer names the
+user's Python file:line. Pass ``extra_conf`` to turn it back on when
+debugging a plan.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -70,9 +81,29 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_rows(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame of ``rows`` typed by the DDL ``schema``.
+
+    ``createDataFrame(list)`` plans an ``ExistingRDD`` of pickled rows, so
+    the job that reads it starts a Python worker (and the pyspark daemon)
+    just to unpickle them. Here the rows travel as one Arrow table and
+    plan as a ``LocalTableScan``: no Python worker, same schema, same
+    values.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
