@@ -336,12 +336,13 @@ def test_skipped_runs_persist_audit_rows(spark, tmp_path_factory, views):
     # ADVICE r02: skipped runs must leave an audit trail too
     out = tmp_path_factory.mktemp("skipped_runs")
     ck = QualityChecker(spark, results_table=str(out / "runs"))
-    s1, *_ = ck.check_counts(
+    s1, r1, *_ = ck.check_counts(
         "api_orders", "api_orders", date_column="o_orderdate",
-        date_range=("2199-01-01", "2199-01-02"),
+        date_range=("2199-01-01", "2199-01-02"), report_output_format="json",
     )
-    s2, *_ = ck.check_sniff_query(
-        "SELECT o_orderkey, 'y' AS xsniff_passed FROM api_orders WHERE o_orderkey < 0"
+    s2, r2, *_ = ck.check_sniff_query(
+        "SELECT o_orderkey, 'y' AS xsniff_passed FROM api_orders WHERE o_orderkey < 0",
+        report_output_format="json",
     )
     assert s1 == s2 == "skipped"
     rows = spark.read.parquet(ck.results_table).collect()
@@ -351,6 +352,15 @@ def test_skipped_runs_persist_audit_rows(spark, tmp_path_factory, views):
     for r in rows:
         assert r["run_started_at"] and r["run_finished_at"]
         assert r["dataset_check_finished_at"]
+    # a SKIPPED outcome honors the requested format like any other; the
+    # audit row keeps the text report
+    for rep, ctype, text in ((r1, "counts", "both sides empty"),
+                             (r2, "sniff_query", "sniff query returned no rows")):
+        payload = json.loads(rep)
+        assert payload["check_type"] == ctype and payload["status"] == "skipped"
+        assert payload["report"] == text
+    assert {r["report"] for r in rows} == {
+        "both sides empty", "sniff query returned no rows"}
 
 
 def test_counts_per_side_query_timings_are_real(spark, tmp_path_factory, views):
@@ -400,17 +410,28 @@ def test_zero_row_schema_probe_invalid_sql_clean_error(spark, views):
 
 
 def test_structured_logging_emits_run_record(checker, views, caplog):
-    # R8: the run log line carries run_id + status for correlation
+    # R8: every run, FAILED ones included, logs exactly one line carrying
+    # run_id + status + final_score for correlation
     import logging
+    import re
 
     with caplog.at_level(logging.INFO, logger="xoverrr_spark.checker"):
         status, *_ = checker.check_samples(
             "api_orders", "api_orders", custom_primary_key=["o_orderkey"]
         )
-    assert status == "success"
+        status2, *_ = checker.check_sniff_query(
+            "SELECT o_orderkey, 'y' AS xsniff_passed FROM api_orders"
+        )
+        status3, *_ = checker.check_counts("api_orders", "api_orders_trg")
+    assert (status, status2, status3) == ("success", "success", "failed")
     msgs = [r.getMessage() for r in caplog.records if r.name == "xoverrr_spark.checker"]
-    assert any("check_samples" in m and "run_id=" in m and "status=success" in m
-               for m in msgs), msgs
+    pattern = r"^check_{} run_id=[0-9a-f]{{16}} status={} final_score={}$"
+    for ctype, st, score in (("samples", "success", "100.0"),
+                             ("sniff_query", "success", "100.0"),
+                             ("counts", "failed", "None")):
+        hits = [m for m in msgs if re.match(pattern.format(ctype, st, re.escape(score)), m)]
+        assert len(hits) == 1, (ctype, msgs)
+    assert len(msgs) == 3, msgs
 
 
 def test_check_profile_drift_scores_and_persists(spark, tmp_path):
@@ -676,3 +697,54 @@ def test_run_suite_declarative_checks(spark, tmp_path):
          "as_of": "2024-02-01 00:00:00"},
     ])
     assert ok["suite_status"] == "success" and ok["failed"] == 0
+
+
+def test_referential_failed_run_tracks_both_tables(spark, views):
+    # a FAILED run counts both of its named tables, as a successful run does
+    ck = QualityChecker(spark)
+    status, report, *_ = ck.check_referential(
+        "api_orders", "api_orders_trg", [("o_orderkey", "no_such_column")])
+    assert status == "failed" and "no such parent column" in report
+    assert ck.session_stats["tables"] == {"api_orders", "api_orders_trg"}
+    assert ck.session_stats["checked"] == ck.session_stats["failed"] == 1
+
+
+def test_check_methods_leave_the_envelope_to_run_check():
+    """Guard: no check method catches exceptions or builds, persists,
+    tracks or wraps its own result; the envelope calls live in
+    ``_run_check`` only, so a new check type adds a body, never an
+    envelope."""
+    import ast
+    import inspect
+
+    from xoverrr_spark import checker as mod
+
+    envelope_calls = {"_persist", "_track", "check_result_json",
+                      "persist_audit_record", "CheckRunTimings", "uuid4"}
+
+    def calls(node):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Call):
+                f = n.func
+                out.add(f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None))
+        return out
+
+    def catches_everything(node):
+        return [n for n in ast.walk(node) if isinstance(n, ast.ExceptHandler)
+                and (n.type is None or ast.unparse(n.type) in ("Exception", "BaseException"))]
+
+    tree = ast.parse(inspect.getsource(mod))
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "QualityChecker")
+    methods = {n.name: n for n in cls.body if isinstance(n, ast.FunctionDef)}
+    for name in QualityChecker.SUITE_TYPES.values():
+        fn = methods[name]
+        assert not [n for n in ast.walk(fn) if isinstance(n, ast.ExceptHandler)], name
+        assert not calls(fn) & envelope_calls, (name, calls(fn) & envelope_calls)
+
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef) and fn.name != "_run_check":
+            assert not calls(fn) & envelope_calls, (fn.name, calls(fn) & envelope_calls)
+            assert not catches_everything(fn), fn.name
+    assert envelope_calls - {"_persist", "_track"} <= calls(methods["_run_check"])

@@ -1,18 +1,36 @@
 """QualityChecker — the public API facade, mirroring the reference's
-``DataQualityChecker`` surface (``/root/reference/src/xoverrr/core.py:46``)
-re-expressed over one engine (Spark):
+``DataQualityChecker`` surface (reference ``src/xoverrr/core.py:46``)
+re-expressed over one engine (Spark). Ten check types:
 
 - check_samples(source_table, target_table, ...)    core.py:193
 - check_counts(source_table, target_table, ...)     core.py:117
 - check_custom_queries(src_sql, trg_sql, keys, ...) core.py:749
 - check_sniff_query(sql, ...)                       core.py:620
+- check_profile_drift  — per-column distribution drift between two tables
+- check_sequence       — key-sequence completeness of one table
+- check_referential    — foreign-key orphans of a child table
+- check_freshness      — max-timestamp SLA lag, optionally per group
+- check_uniqueness     — is a column set actually a primary key
+- check_split_leakage  — duplicates that straddle dataset splits
+
+Body / envelope split. The reference sends every check through one
+finalizer (``core.py:271 -> 908``, ``_finalize_check``); here every public
+``check_*`` validates its arguments (raising to the caller: a malformed
+CALL is not a failed CHECK), then hands a *body* to ``_run_check``. The
+body does the Spark work and returns one ``_Outcome``: status, text
+report, the stats/details the method returns, and what the audit row
+persists. ``_run_check`` is the envelope, written once: run_id and
+``CheckRunTimings``, report-format validation and the JSON envelope, the
+FAILED wrapping of any exception, the audit append, session tracking,
+one log line per run, and unpersisting every frame the body cached.
 
 Differences by design (Spark-first, not a port):
 - "tables" are Spark-readable identifiers (``spark.table``) or DataFrames —
   no per-DBMS adapters/engines; one Catalyst plan replaces generated SQL.
 - chunked date iteration (core.py:1447) is unnecessary inside one check —
-  a single distributed plan covers the range; incremental/resumable
-  execution lives in ``pipeline.runner``.
+  a single distributed plan covers the range; it is kept for bounded
+  retry units, and incremental/resumable execution lives in
+  ``pipeline.runner``.
 - persistence appends to parquet/Iceberg run tables (persistence.py:236's
   audit row, normalized).
 
@@ -25,9 +43,13 @@ from __future__ import annotations
 
 import re
 import uuid
+import warnings
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from .exceptions import MetadataError
 from .logger import get_logger
@@ -64,12 +86,65 @@ def _merge_counts(dicts: list[dict]) -> dict:
     return out
 
 
+def _final_score(stats):
+    if isinstance(stats, dict):
+        return stats.get("final_score")
+    return getattr(stats, "final_score", None)
+
+
 def quote_ident(name: str) -> str:
     """Backtick-quote reserved/odd identifiers for Spark SQL text
     (reference P3, adapters/base.py:85-89)."""
     if name.lower() in RESERVED_WORDS or not _IDENT_RE.match(name):
         return "`" + name.replace("`", "``") + "`"
     return name
+
+
+@dataclass
+class _Outcome:
+    """What a check body hands the envelope. ``stats``/``details`` are
+    returned to the caller and ride the JSON envelope (``envelope_details``
+    replaces the details there when set); ``audit_*`` and
+    ``stats_overrides`` fill the persisted row."""
+
+    status: str
+    report: str
+    stats: object = None
+    details: object = None
+    envelope_details: object = None
+    audit_stats: D.CheckStats | None = None
+    audit_details: D.CheckDetails | None = None
+    stats_overrides: dict | None = None
+
+
+@dataclass
+class _CheckRun:
+    """One run's identity, timings and cached intermediates, as seen by a
+    check body."""
+
+    name: str
+    run_id: str
+    timings: CheckRunTimings
+    cached: list = field(default_factory=list)
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` (lazily: no job runs here) and unpersist it when
+        the run ends."""
+        df = df.persist()
+        self.cached.append(df)
+        return df
+
+    @contextmanager
+    def query(self, side: str):
+        self.timings.mark_query_start(side)
+        yield
+        self.timings.mark_query_end(side)
+
+    @contextmanager
+    def dataset_check(self):
+        self.timings.mark_dataset_check_start()
+        yield
+        self.timings.mark_dataset_check_end()
 
 
 class QualityChecker:
@@ -84,12 +159,72 @@ class QualityChecker:
             "checked": 0, "success": 0, "failed": 0, "skipped": 0, "tables": set(),
         }
 
-    def _track(self, status: str, *tables) -> None:
+    # ----------------------------------------------------------- envelope --
+
+    def _run_check(self, check_type: str, check_name: str | None,
+                   report_output_format: str, body, *, source_table=None,
+                   target_table=None, source_query: str | None = None,
+                   source_params: dict | None = None,
+                   target_query: str | None = None,
+                   target_params: dict | None = None):
+        """Run ``body(run)`` inside the one envelope every check shares
+        (reference ``_finalize_check``, core.py:271 -> 908): a body
+        exception becomes a FAILED result with a plain-text report (the
+        format argument may itself be the bad input); every outcome,
+        FAILED included, appends its audit row (core.py:174-191)."""
+        run = _CheckRun(check_name or f"check_{check_type}", uuid.uuid4().hex[:16],
+                        CheckRunTimings(run_started_at=CheckRunTimings.now()))
+        error = None
+        try:
+            fmt = validate_report_output_format(report_output_format)
+            out = body(run)
+            report = out.report
+            if fmt == "json":
+                report = check_result_json(
+                    run_id=run.run_id, check_type=check_type, status=out.status,
+                    check_name=run.name, report=out.report,
+                    source_table=source_table, target_table=target_table,
+                    timezone=self.timezone, stats=out.stats,
+                    details=(out.details if out.envelope_details is None
+                             else out.envelope_details),
+                    source_query=source_query, target_query=target_query,
+                )
+            result = (out.status, report, out.stats, out.details)
+        except Exception as exc:
+            error = exc
+            out = _Outcome(D.CHECK_FAILED, f"check failed with error: {exc}")
+            result = (out.status, out.report, None, None)
+        finally:
+            for df in run.cached:
+                df.unpersist()
+        run.timings.finish_run()
+        if self.results_table:
+            try:
+                rec = build_audit_record(
+                    run_id=run.run_id, check_type=check_type, status=out.status,
+                    check_name=run.name, source_table=source_table,
+                    target_table=target_table, timezone=self.timezone,
+                    source_query=source_query, source_params=source_params,
+                    target_query=target_query, target_params=target_params,
+                    report=out.report, stats=out.audit_stats,
+                    details=out.audit_details, timings=run.timings,
+                )
+                for k, v in (out.stats_overrides or {}).items():
+                    rec[f"stats_{k}"] = v
+                persist_audit_record(self.spark, rec, self.results_table)
+            except Exception as exc:  # reference swallows persist errors (persistence.py:285)
+                warnings.warn(f"failed to persist check result: {exc}")
         self.session_stats["checked"] += 1
-        self.session_stats[status] = self.session_stats.get(status, 0) + 1
-        for t in tables:
+        self.session_stats[out.status] = self.session_stats.get(out.status, 0) + 1
+        for t in (source_table, target_table):
             if isinstance(t, str):
                 self.session_stats["tables"].add(t)
+        _LOG.info(
+            "check_%s run_id=%s status=%s final_score=%s",
+            check_type, run.run_id, out.status, _final_score(out.stats),
+            exc_info=error,
+        )
+        return result
 
     # ------------------------------------------------------------ helpers --
 
@@ -158,22 +293,48 @@ class QualityChecker:
             keep = [c for c in keep if c not in {x.lower() for x in exclude} or c in keys]
         return df.select(*keep)
 
-    def _persist(self, stats_overrides: dict | None = None, **payload) -> None:
-        """Append the full ~45-column audit row (reference persistence.py:
-        290-317 record shape; see persistence.build_audit_record).
-        ``stats_overrides`` fills individual stats_* columns for check types
-        whose stats dataclass differs from CheckStats (counts/sniff)."""
-        if not self.results_table:
-            return
-        try:
-            rec = build_audit_record(timezone=self.timezone, **payload)
-            for k, v in (stats_overrides or {}).items():
-                rec[f"stats_{k}"] = v
-            persist_audit_record(self.spark, rec, self.results_table)
-        except Exception as exc:  # reference swallows persist errors (persistence.py:285)
-            import warnings
+    def _diff_outcome(self, run: _CheckRun, src: DataFrame, trg: DataFrame,
+                      keys: list[str], max_examples: int, tolerance_pct: float,
+                      date_column, date_range, chunk_size_days) -> _Outcome:
+        """The keyed diff shared by check_samples and check_custom_queries:
+        one compare_frames over the whole range, or one per date chunk
+        (reference A10) merged by accumulator; examples come from the first
+        chunk that has rows."""
+        from .chunking import iter_date_chunks, merge_chunk_stats
 
-            warnings.warn(f"failed to persist check result: {exc}")
+        src, trg = self._exclude_recent(src, trg, keys)
+        chunks = (
+            iter_date_chunks(date_range[0], date_range[1], chunk_size_days)
+            if (date_column and date_range)
+            else [(None, None)]
+        )
+        with run.dataset_check():
+            if len(chunks) == 1:
+                stats, details = D.compare_frames(src, trg, keys, max_examples)
+            else:
+                per, issue_dicts, details = [], [], None
+                for cs, ce in chunks:
+                    st, dt_ = D.compare_frames(
+                        self._date_filter(src, date_column, (cs, ce)),
+                        self._date_filter(trg, date_column, (cs, ce)),
+                        keys, max_examples, with_examples=details is None,
+                    )
+                    per.append(st)
+                    if st is not None and dt_ is not None:
+                        issue_dicts.append(dict(dt_.issue_breakdown))
+                        if details is None:
+                            details = dt_
+                stats = merge_chunk_stats(per, issue_dicts)
+                if details is not None and stats is not None:
+                    details.issue_breakdown = sorted(
+                        _merge_counts(issue_dicts).items(), key=lambda x: (-x[1], x[0])
+                    )
+        status = D.check_status(stats, tolerance_pct)
+        report = render_samples_report(
+            run.name, run.run_id, status, stats, details, tolerance_pct,
+        )
+        return _Outcome(status, report, stats, details,
+                        audit_stats=stats, audit_details=details)
 
     # ------------------------------------------------------------- checks --
 
@@ -194,97 +355,29 @@ class QualityChecker:
         max_examples: int = D.DEFAULT_MAX_EXAMPLES,
         report_output_format: str = "text",
     ):
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        try:
-            fmt = validate_report_output_format(report_output_format)
+        def body(run):
             if not custom_primary_key:
                 raise MetadataError(
                     "custom_primary_key is required (Spark has no PK catalog)"
                 )
             keys = [k.lower() for k in custom_primary_key]
-            timings.mark_query_start("source")
-            src = self._resolve(source_table)
-            src = self._date_filter(src, date_column, date_range)
-            src = self._recent_flag(src, update_column, exclude_recent_hours)
-            src = self._apply_column_policy(src, keys, include_columns, exclude_columns)
-            timings.mark_query_end("source")
-            timings.mark_query_start("target")
-            trg = self._resolve(target_table)
-            trg = self._date_filter(trg, date_column, date_range)
-            trg = self._recent_flag(trg, update_column, exclude_recent_hours)
-            trg = self._apply_column_policy(trg, keys, include_columns, exclude_columns)
-            timings.mark_query_end("target")
-            src, trg = self._exclude_recent(src, trg, keys)
+            sides = []
+            for side, table in (("source", source_table), ("target", target_table)):
+                with run.query(side):
+                    df = self._resolve(table)
+                    df = self._date_filter(df, date_column, date_range)
+                    df = self._recent_flag(df, update_column, exclude_recent_hours)
+                    sides.append(self._apply_column_policy(
+                        df, keys, include_columns, exclude_columns))
+            return self._diff_outcome(
+                run, *sides, keys, max_examples, tolerance_pct,
+                date_column, date_range, chunk_size_days,
+            )
 
-            from .chunking import iter_date_chunks, merge_chunk_stats
-
-            chunks = (
-                iter_date_chunks(date_range[0], date_range[1], chunk_size_days)
-                if (date_column and date_range)
-                else [(None, None)]
-            )
-            timings.mark_dataset_check_start()
-            if len(chunks) == 1:
-                stats, details = D.compare_frames(src, trg, keys, max_examples)
-            else:
-                # per-chunk jobs + accumulator merge (reference A10); one
-                # distributed plan would do — chunking bounds retry units
-                per, issue_dicts, details = [], [], None
-                for cs, ce in chunks:
-                    csrc = self._date_filter(src, date_column, (cs, ce))
-                    ctrg = self._date_filter(trg, date_column, (cs, ce))
-                    st, dt_ = D.compare_frames(
-                        csrc, ctrg, keys, max_examples,
-                        with_examples=details is None,
-                    )
-                    per.append(st)
-                    if st is not None and dt_ is not None:
-                        issue_dicts.append(dict(dt_.issue_breakdown))
-                        if details is None:
-                            details = dt_
-                stats = merge_chunk_stats(per, issue_dicts)
-                if details is not None and stats is not None:
-                    details.issue_breakdown = sorted(
-                        _merge_counts(issue_dicts).items(), key=lambda x: (-x[1], x[0])
-                    )
-            timings.mark_dataset_check_end()
-            status = D.check_status(stats, tolerance_pct)
-            text_report = render_samples_report(
-                check_name or "check_samples", run_id, status, stats, details,
-                tolerance_pct,
-            )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="samples", status=status,
-                    check_name=check_name or "check_samples", report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    target_table=target_table if isinstance(target_table, str) else None,
-                    timezone=self.timezone, stats=stats, details=details,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="samples", status=status,
-                check_name=check_name or "check_samples",
-                source_table=source_table, target_table=target_table,
-                report=text_report, stats=stats, details=details, timings=timings,
-            )
-            self._track(status, source_table, target_table)
-            _LOG.info("check_samples run_id=%s status=%s", run_id, status)
-            return status, report, stats, details
-        except Exception as exc:
-            # reference wraps every failure into a FAILED result (core.py:174)
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="samples", status=D.CHECK_FAILED,
-                check_name=check_name or "check_samples",
-                source_table=source_table, target_table=target_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table, target_table)
-            return D.CHECK_FAILED, report, None, None
+        return self._run_check(
+            "samples", check_name, report_output_format, body,
+            source_table=source_table, target_table=target_table,
+        )
 
     def check_counts(
         self,
@@ -296,11 +389,7 @@ class QualityChecker:
         tolerance_pct: float = 0.0,
         report_output_format: str = "text",
     ):
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        src_daily = trg_daily = None
-        try:
-            fmt = validate_report_output_format(report_output_format)
+        def body(run):
             if not date_column:
                 raise ValueError("date_column is required for check_counts")
             # each side's daily-count aggregation is materialized (persist +
@@ -308,80 +397,37 @@ class QualityChecker:
             # timings measure REAL scan+aggregate execution (VERDICT r02)
             # and both the stats row and the discrepancy list below derive
             # from the same cached frames — one scan per side.
-            timings.mark_query_start("source")
-            src = self._date_filter(self._resolve(source_table), date_column, date_range)
-            src_daily = C.daily_counts(src, date_column).persist()
-            src_daily.count()
-            timings.mark_query_end("source")
-            timings.mark_query_start("target")
-            trg = self._date_filter(self._resolve(target_table), date_column, date_range)
-            trg_daily = C.daily_counts(trg, date_column).persist()
-            trg_daily.count()
-            timings.mark_query_end("target")
-            timings.mark_dataset_check_start()
-            cstats = C.check_counts_from_daily(src_daily, trg_daily)
-            if cstats.total_source == 0 and cstats.total_target == 0:
+            daily = []
+            for side, table in (("source", source_table), ("target", target_table)):
+                with run.query(side):
+                    df = self._date_filter(self._resolve(table), date_column, date_range)
+                    daily.append(run.cache(C.daily_counts(df, date_column)))
+                    daily[-1].count()
+            with run.dataset_check():
+                cstats = C.check_counts_from_daily(*daily)
+                empty = cstats.total_source == 0 and cstats.total_target == 0
+                if not empty:
+                    disc = C.count_discrepancies(*daily).limit(100).collect()
+            overrides = {"final_score": float(cstats.final_score)}
+            if empty:
                 # persist the SKIPPED audit row too — the reference persists
                 # every run outcome (core.py:174-191); a skipped nightly
                 # check that leaves no trail looks identical to one that
                 # never ran (ADVICE r02)
-                report = "both sides empty"
-                timings.mark_dataset_check_end()
-                timings.finish_run()
-                self._persist(
-                    run_id=run_id, check_type="counts", status=D.CHECK_SKIPPED,
-                    check_name=check_name or "check_counts",
-                    source_table=source_table, target_table=target_table,
-                    report=report, timings=timings,
-                    stats_overrides={"final_score": float(cstats.final_score)},
-                )
-                self._track(D.CHECK_SKIPPED, source_table, target_table)
-                return D.CHECK_SKIPPED, report, cstats, None
+                return _Outcome(D.CHECK_SKIPPED, "both sides empty", cstats,
+                                stats_overrides=overrides)
             status = (
                 D.CHECK_SUCCESS if cstats.diff_pct <= tolerance_pct else D.CHECK_FAILED
             )
-            disc = C.count_discrepancies(src_daily, trg_daily).limit(100).collect()
-            timings.mark_dataset_check_end()
-            text_report = render_counts_report(
-                check_name or "check_counts", run_id, status, cstats, disc, tolerance_pct
+            report = render_counts_report(
+                run.name, run.run_id, status, cstats, disc, tolerance_pct
             )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="counts", status=status,
-                    check_name=check_name or "check_counts", report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    target_table=target_table if isinstance(target_table, str) else None,
-                    timezone=self.timezone, stats=cstats, details=disc,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="counts", status=status,
-                check_name=check_name or "check_counts",
-                source_table=source_table, target_table=target_table,
-                report=text_report, timings=timings,
-                stats_overrides={"final_score": float(cstats.final_score)},
-            )
-            self._track(status, source_table, target_table)
-            return status, report, cstats, disc
-        except Exception as exc:
-            # reference persists an audit row for FAILED runs of every check
-            # type (core.py:174-191) — a failed nightly check is exactly when
-            # the audit trail matters (VERDICT r02)
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="counts", status=D.CHECK_FAILED,
-                check_name=check_name or "check_counts",
-                source_table=source_table, target_table=target_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table, target_table)
-            return D.CHECK_FAILED, report, None, None
-        finally:
-            for daily in (src_daily, trg_daily):
-                if daily is not None:
-                    daily.unpersist()
+            return _Outcome(status, report, cstats, disc, stats_overrides=overrides)
+
+        return self._run_check(
+            "counts", check_name, report_output_format, body,
+            source_table=source_table, target_table=target_table,
+        )
 
     def check_profile_drift(
         self,
@@ -409,62 +455,51 @@ class QualityChecker:
         to; it costs one extra scan per side, melted over all numeric
         columns at once.
         """
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        ps = pt = None
-        try:
-            fmt = validate_report_output_format(report_output_format)
+        def body(run):
             src = self._resolve(source_table)
             trg = self._resolve(target_table)
             cols = columns or [c for c in src.columns if c in set(trg.columns)]
             if not cols:
                 raise ValueError("no common columns to profile")
-            timings.mark_query_start("source")
-            ps = P.profile(src, cols).persist()
-            ps.count()
-            timings.mark_query_end("source")
-            timings.mark_query_start("target")
-            pt = P.profile(trg, cols).persist()
-            pt.count()
-            timings.mark_query_end("target")
-            timings.mark_dataset_check_start()
-            rows = P.drift_from_profiles(ps, pt).orderBy("column_name").collect()
-
-            from pyspark.sql.types import NumericType
-
-            # numeric selection is from the SRC schema on purpose: a column
-            # that drifted numeric->string on the TARGET side must still be
-            # histogrammed (histogram_drift try_casts, so uncastable target
-            # values land in the overflow bin and the TYPE drift itself
-            # scores as distance instead of throwing under ANSI — r4 ADVICE)
-            numeric = [
-                f.name for f in src.schema.fields
-                if f.name in cols and isinstance(f.dataType, NumericType)
-            ]
-            hist_tv = {}
-            if numeric:
-                hist_tv = {
-                    r["column_name"]: r["hist_tv"]
-                    for r in P.histogram_drift(src, trg, numeric).collect()
-                }
-
-            def _col_drift(r):
-                parts = [
-                    abs(r["row_delta"]) * 100.0 / max(r["src_rows"], 1),
-                    abs(r["trg_null_rate"] - r["src_null_rate"]) * 100.0,
-                    abs(r["distinct_delta"]) * 100.0 / max(r["src_distinct"], 1),
-                    hist_tv.get(r["column_name"], 0.0) * 100.0,
+            with run.query("source"):
+                ps = run.cache(P.profile(src, cols))
+                ps.count()
+            with run.query("target"):
+                pt = run.cache(P.profile(trg, cols))
+                pt.count()
+            with run.dataset_check():
+                rows = P.drift_from_profiles(ps, pt).orderBy("column_name").collect()
+                # numeric selection is from the SRC schema on purpose: a column
+                # that drifted numeric->string on the TARGET side must still be
+                # histogrammed (histogram_drift try_casts, so uncastable target
+                # values land in the overflow bin and the TYPE drift itself
+                # scores as distance instead of throwing under ANSI — r4 ADVICE)
+                numeric = [
+                    f.name for f in src.schema.fields
+                    if f.name in cols and isinstance(f.dataType, NumericType)
                 ]
-                return max(parts)
+                hist_tv = {}
+                if numeric:
+                    hist_tv = {
+                        r["column_name"]: r["hist_tv"]
+                        for r in P.histogram_drift(src, trg, numeric).collect()
+                    }
 
-            drift_pct = max((_col_drift(r) for r in rows), default=0.0)
-            status = (
-                D.CHECK_SUCCESS if drift_pct <= tolerance_pct else D.CHECK_FAILED
-            )
-            timings.mark_dataset_check_end()
-            name = check_name or "check_profile_drift"
+                def _col_drift(r):
+                    parts = [
+                        abs(r["row_delta"]) * 100.0 / max(r["src_rows"], 1),
+                        abs(r["trg_null_rate"] - r["src_null_rate"]) * 100.0,
+                        abs(r["distinct_delta"]) * 100.0 / max(r["src_distinct"], 1),
+                        hist_tv.get(r["column_name"], 0.0) * 100.0,
+                    ]
+                    return max(parts)
+
+                drift_pct = max((_col_drift(r) for r in rows), default=0.0)
+                status = (
+                    D.CHECK_SUCCESS if drift_pct <= tolerance_pct else D.CHECK_FAILED
+                )
             lines = [
-                f"profile drift check: {name} [{run_id}] -> {status}",
+                f"profile drift check: {run.name} [{run.run_id}] -> {status}",
                 f"columns: {len(rows)}  drift_pct: {drift_pct:.4f}  "
                 f"tolerance: {tolerance_pct}",
             ]
@@ -476,16 +511,11 @@ class QualityChecker:
                     f"distinct {r['src_distinct']}->{r['trg_distinct']}"
                     + (f" hist_tv {htv:.4f}" if htv is not None else "")
                 )
-            text_report = "\n".join(lines)
             stats = {
                 "columns": len(rows),
                 "drift_pct": round(drift_pct, 4),
                 "final_score": round(max(0.0, 100.0 - drift_pct), 4),
             }
-            detail_dicts = [
-                {**r.asDict(), "hist_tv": hist_tv.get(r["column_name"])}
-                for r in rows
-            ]
             # audit-row details: per-column worst drift (incl. histogram
             # distance), in the issue_breakdown (column, value) shape
             audit_details = D.CheckDetails(
@@ -496,47 +526,22 @@ class QualityChecker:
                     {"column_name": c, "hist_tv": round(v, 6)}
                     for c, v in sorted(hist_tv.items())
                 ],
-                dup_source_keys_examples=(),
-                dup_target_keys_examples=(),
-                source_only_keys_examples=(),
-                target_only_keys_examples=(),
                 evaluated_columns=list(cols),
             )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="profile_drift", status=status,
-                    check_name=name, report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    target_table=target_table if isinstance(target_table, str) else None,
-                    timezone=self.timezone, stats=stats,
-                    details=detail_dicts,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="profile_drift", status=status,
-                check_name=name,
-                source_table=source_table, target_table=target_table,
-                report=text_report, timings=timings, details=audit_details,
+            return _Outcome(
+                status, "\n".join(lines), stats, rows,
+                envelope_details=[
+                    {**r.asDict(), "hist_tv": hist_tv.get(r["column_name"])}
+                    for r in rows
+                ],
+                audit_details=audit_details,
                 stats_overrides={"final_score": stats["final_score"]},
             )
-            self._track(status, source_table, target_table)
-            return status, report, stats, rows
-        except Exception as exc:
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="profile_drift", status=D.CHECK_FAILED,
-                check_name=check_name or "check_profile_drift",
-                source_table=source_table, target_table=target_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table, target_table)
-            return D.CHECK_FAILED, report, None, None
-        finally:
-            for f in (ps, pt):
-                if f is not None:
-                    f.unpersist()
+
+        return self._run_check(
+            "profile_drift", check_name, report_output_format, body,
+            source_table=source_table, target_table=target_table,
+        )
 
     def check_sequence(
         self,
@@ -590,13 +595,10 @@ class QualityChecker:
             # arg validation raises to the caller (a malformed CALL is not
             # a failed CHECK — no audit row for it)
             raise ValueError("expected_min > expected_max")
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        gaps = None
-        try:
+
+        def body(run):
             from .operators.sequence import id_gaps
 
-            fmt = validate_report_output_format(report_output_format)
             src = self._resolve(source_table)
             if key_column not in src.columns:
                 raise MetadataError(f"no such column: {key_column}")
@@ -613,31 +615,27 @@ class QualityChecker:
             if expected_max is not None:
                 in_window = in_window & (k <= F.lit(expected_max))
             k_w = F.when(in_window, k)
-            timings.mark_query_start("source")
-            stats_row = src.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count(k).alias("n_keys"),
-                F.count(k_w).alias("n_keys_w"),
-                F.min(k_w).alias("k_min"),
-                F.max(k_w).alias("k_max"),
-            ).collect()[0]
-            timings.mark_query_end("source")
+            with run.query("source"):
+                stats_row = src.agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.count(k).alias("n_keys"),
+                    F.count(k_w).alias("n_keys_w"),
+                    F.min(k_w).alias("k_min"),
+                    F.max(k_w).alias("k_max"),
+                ).collect()[0]
 
-            timings.mark_dataset_check_start()
-            gaps = id_gaps(
-                src.where(in_window), key_column, bucket_bits
-            ).persist()
-            agg = gaps.agg(
-                F.count(F.lit(1)).alias("gap_count"),
-                F.coalesce(F.sum("missing"), F.lit(0)).alias("missing_total"),
-            ).collect()[0]
-            top = [
-                r.asDict()
-                for r in gaps.orderBy(F.desc("missing"), "gap_start")
-                .limit(max_examples)
-                .collect()
-            ]
-            timings.mark_dataset_check_end()
+            with run.dataset_check():
+                gaps = run.cache(id_gaps(src.where(in_window), key_column, bucket_bits))
+                agg = gaps.agg(
+                    F.count(F.lit(1)).alias("gap_count"),
+                    F.coalesce(F.sum("missing"), F.lit(0)).alias("missing_total"),
+                ).collect()[0]
+                top = [
+                    r.asDict()
+                    for r in gaps.orderBy(F.desc("missing"), "gap_start")
+                    .limit(max_examples)
+                    .collect()
+                ]
 
             n_nulls = stats_row["n_rows"] - stats_row["n_keys"]
             n_keys = stats_row["n_keys"]
@@ -685,9 +683,8 @@ class QualityChecker:
                     top.append({"gap_start": lo, "gap_end": hi, "missing": span})
                 missing_pct = 100.0
                 status = D.CHECK_FAILED
-            name = check_name or "check_sequence"
             lines = [
-                f"sequence check: {name} [{run_id}] -> {status}",
+                f"sequence check: {run.name} [{run.run_id}] -> {status}",
                 f"keys: {n_keys} (nulls: {n_nulls})  "
                 f"span: [{stats_row['k_min']}, {stats_row['k_max']}]  "
                 + (
@@ -714,7 +711,6 @@ class QualityChecker:
                     f"  gap [{r['gap_start']}, {r['gap_end']}] "
                     f"missing {r['missing']}"
                 )
-            text_report = "\n".join(lines)
             stats = {
                 "n_keys": int(n_keys),
                 "null_keys": int(n_nulls),
@@ -729,49 +725,18 @@ class QualityChecker:
                     (f"{r['gap_start']}-{r['gap_end']}", int(r["missing"]))
                     for r in top
                 ],
-                issue_examples=[],
-                dup_source_keys_examples=(),
-                dup_target_keys_examples=(),
-                source_only_keys_examples=(),
-                target_only_keys_examples=(),
                 evaluated_columns=[key_column],
             )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="sequence", status=status,
-                    check_name=name, report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    timezone=self.timezone, stats=stats,
-                    details=list(top),
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="sequence", status=status,
-                check_name=name, source_table=source_table,
-                report=text_report, timings=timings, details=audit_details,
+            return _Outcome(
+                status, "\n".join(lines), stats, top,
+                audit_details=audit_details,
                 stats_overrides={"final_score": stats["final_score"]},
             )
-            self._track(status, source_table)
-            _LOG.info(
-                "check_sequence run_id=%s status=%s missing_pct=%.4f",
-                run_id, status, missing_pct,
-            )
-            return status, report, stats, top
-        except Exception as exc:
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="sequence", status=D.CHECK_FAILED,
-                check_name=check_name or "check_sequence",
-                source_table=source_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table)
-            return D.CHECK_FAILED, report, None, None
-        finally:
-            if gaps is not None:
-                gaps.unpersist()
+
+        return self._run_check(
+            "sequence", check_name, report_output_format, body,
+            source_table=source_table,
+        )
 
     def check_referential(
         self,
@@ -817,13 +782,9 @@ class QualityChecker:
         out of rows whose parent simply landed on another day); same
         inclusive-day semantics as the other check families.
         """
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        orphan_frame = None
-        try:
+        def body(run):
             from .operators.integrity import _normalize_keys, fk_orphans
 
-            fmt = validate_report_output_format(report_output_format)
             pairs = _normalize_keys(foreign_keys)
             child = self._date_filter(
                 self._resolve(source_table), date_column, date_range)
@@ -839,28 +800,26 @@ class QualityChecker:
             for c, _ in pairs:
                 clause = F.col(c).isNull()
                 null_pred = clause if null_pred is None else (null_pred | clause)
-            timings.mark_query_start("source")
-            stats_row = child.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(null_pred.cast("long")).alias("null_fk"),
-            ).collect()[0]
-            timings.mark_query_end("source")
+            with run.query("source"):
+                stats_row = child.agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum(null_pred.cast("long")).alias("null_fk"),
+                ).collect()[0]
 
-            timings.mark_dataset_check_start()
-            orphan_frame = fk_orphans(
-                child, parent, pairs, broadcast_parent=broadcast_parent
-            ).persist()
-            orphan_count = orphan_frame.count()
             child_cols = [c for c, _ in pairs]
-            examples = [
-                tuple(r[c] for c in child_cols)
-                for r in orphan_frame.select(*child_cols)
-                .distinct()
-                .orderBy(*child_cols)
-                .limit(max_examples)
-                .collect()
-            ]
-            timings.mark_dataset_check_end()
+            with run.dataset_check():
+                orphan_frame = run.cache(fk_orphans(
+                    child, parent, pairs, broadcast_parent=broadcast_parent
+                ))
+                orphan_count = orphan_frame.count()
+                examples = [
+                    tuple(r[c] for c in child_cols)
+                    for r in orphan_frame.select(*child_cols)
+                    .distinct()
+                    .orderBy(*child_cols)
+                    .limit(max_examples)
+                    .collect()
+                ]
 
             n_rows = int(stats_row["n_rows"])
             null_fk = int(stats_row["null_fk"] or 0)
@@ -869,12 +828,11 @@ class QualityChecker:
             status = (
                 D.CHECK_SUCCESS if orphan_pct <= tolerance_pct else D.CHECK_FAILED
             )
-            name = check_name or "check_referential"
             key_desc = ", ".join(
                 c if c == p else f"{c}->{p}" for c, p in pairs
             )
             lines = [
-                f"referential check: {name} [{run_id}] -> {status}",
+                f"referential check: {run.name} [{run.run_id}] -> {status}",
                 f"fk: ({key_desc})  child rows: {n_rows}  "
                 f"null-fk rows (not scored, ANSI): {null_fk}  "
                 f"orphans: {orphan_count}  orphan_pct: {orphan_pct:.4f}  "
@@ -891,7 +849,6 @@ class QualityChecker:
                 )
             for ex in examples:
                 lines.append(f"  orphan key {ex}")
-            text_report = "\n".join(lines)
             stats = {
                 "n_rows": n_rows,
                 "null_fk_rows": null_fk,
@@ -899,71 +856,34 @@ class QualityChecker:
                 "orphan_pct": round(orphan_pct, 4),
                 "final_score": round(max(0.0, 100.0 - orphan_pct), 4),
             }
-            details = [dict(zip(child_cols, ex)) for ex in examples]
             audit_details = D.CheckDetails(
                 issue_breakdown=[(key_desc, int(orphan_count))],
-                issue_examples=[],
-                dup_source_keys_examples=(),
-                dup_target_keys_examples=(),
                 source_only_keys_examples=tuple(examples),
-                target_only_keys_examples=(),
                 evaluated_columns=child_cols,
             )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="referential", status=status,
-                    check_name=name, report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    target_table=target_table if isinstance(target_table, str) else None,
-                    timezone=self.timezone, stats=stats,
-                    details=details,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="referential", status=status,
-                check_name=name, source_table=source_table,
-                target_table=target_table,
-                report=text_report, timings=timings, details=audit_details,
+            return _Outcome(
+                status, "\n".join(lines), stats,
+                [dict(zip(child_cols, ex)) for ex in examples],
+                audit_details=audit_details,
                 stats_overrides={"final_score": stats["final_score"]},
             )
-            self._track(status, source_table, target_table)
-            _LOG.info(
-                "check_referential run_id=%s status=%s orphan_pct=%.4f",
-                run_id, status, orphan_pct,
-            )
-            return status, report, stats, details
-        except Exception as exc:
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="referential", status=D.CHECK_FAILED,
-                check_name=check_name or "check_referential",
-                source_table=source_table, target_table=target_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table)
-            return D.CHECK_FAILED, report, None, None
-        finally:
-            if orphan_frame is not None:
-                orphan_frame.unpersist()
+
+        return self._run_check(
+            "referential", check_name, report_output_format, body,
+            source_table=source_table, target_table=target_table,
+        )
 
     def _check_freshness_grouped(
-        self, src, ts_column, max_lag_hours, as_of, group_by,
-        max_examples, check_name, source_table, run_id, timings, fmt,
-    ):
+        self, run, src, ts_column, max_lag_hours, as_of, group_by, max_examples,
+    ) -> _Outcome:
         """Grouped leg of check_freshness (see its docstring). Only the
         ``max_examples`` stalest groups and a 3-counter aggregate reach
         the driver — group cardinality is feed identity, but nothing
         here assumes it is small."""
         sla = max_lag_hours * 3600.0
-        name = check_name or "check_freshness"
-        grouped = None
-        try:
-            timings.mark_query_start("source")
-            timings.mark_dataset_check_start()
-            grouped = P.freshness_by_group(
-                src, ts_column, group_by, as_of=as_of).persist()
+        with run.query("source"), run.dataset_check():
+            grouped = run.cache(P.freshness_by_group(
+                src, ts_column, group_by, as_of=as_of))
             stale_pred = (
                 F.col("lag_seconds").isNull()
                 | (F.col("lag_seconds") > F.lit(sla))
@@ -980,93 +900,66 @@ class QualityChecker:
                 .orderBy(F.col("lag_seconds").desc_nulls_first(), *group_by)
                 .limit(max_examples).collect()
             ]
-            timings.mark_dataset_check_end()
-            timings.mark_query_end("source")
 
-            n_groups = int(agg["n_groups"])
-            stale = int(agg["stale"] or 0)
-            unknown = int(agg["unknown"] or 0)
-            worst_lag = agg["worst_lag"]
-            if n_groups == 0 or unknown:
-                over_pct = 100.0
-            elif worst_lag is None:
-                over_pct = 100.0
-            else:
-                over_pct = max(0.0, (worst_lag - sla) / sla * 100.0)
-            status = (
-                D.CHECK_SUCCESS if n_groups > 0 and stale == 0
-                else D.CHECK_FAILED
-            )
-            lines = [
-                f"freshness check: {name} [{run_id}] -> {status}",
-                f"groups by ({', '.join(group_by)}): {n_groups}  "
-                f"stale: {stale} (no-timestamp: {unknown})  "
-                f"worst_lag_seconds: {worst_lag}  sla_hours: {max_lag_hours}",
-            ]
-            if n_groups == 0:
-                lines.append(
-                    "  no groups: the table is empty — staleness UNKNOWN; "
-                    "failing")
-            for r in worst:
-                gid = ", ".join(f"{g}={r[g]}" for g in group_by)
-                lines.append(
-                    f"  [{gid}] lag_seconds={r['lag_seconds']} "
-                    f"max_ts={r['max_ts']} rows={r['n_rows']}")
-            text_report = "\n".join(lines)
-            stats = {
-                "n_groups": n_groups,
-                "stale_groups": stale,
-                "unknown_groups": unknown,
-                "worst_lag_seconds":
-                    None if worst_lag is None else int(worst_lag),
-                "over_sla_pct": round(over_pct, 4),
-                "final_score": round(max(0.0, 100.0 - over_pct), 4),
-            }
-            details = [
-                {**{g: r[g] for g in group_by},
-                 "n_rows": r["n_rows"], "n_ts": r["n_ts"],
-                 "max_ts": str(r["max_ts"]) if r["max_ts"] is not None else None,
-                 "lag_seconds": r["lag_seconds"]}
+        n_groups = int(agg["n_groups"])
+        stale = int(agg["stale"] or 0)
+        unknown = int(agg["unknown"] or 0)
+        worst_lag = agg["worst_lag"]
+        if n_groups == 0 or unknown:
+            over_pct = 100.0
+        elif worst_lag is None:
+            over_pct = 100.0
+        else:
+            over_pct = max(0.0, (worst_lag - sla) / sla * 100.0)
+        status = (
+            D.CHECK_SUCCESS if n_groups > 0 and stale == 0
+            else D.CHECK_FAILED
+        )
+        lines = [
+            f"freshness check: {run.name} [{run.run_id}] -> {status}",
+            f"groups by ({', '.join(group_by)}): {n_groups}  "
+            f"stale: {stale} (no-timestamp: {unknown})  "
+            f"worst_lag_seconds: {worst_lag}  sla_hours: {max_lag_hours}",
+        ]
+        if n_groups == 0:
+            lines.append(
+                "  no groups: the table is empty — staleness UNKNOWN; "
+                "failing")
+        for r in worst:
+            gid = ", ".join(f"{g}={r[g]}" for g in group_by)
+            lines.append(
+                f"  [{gid}] lag_seconds={r['lag_seconds']} "
+                f"max_ts={r['max_ts']} rows={r['n_rows']}")
+        stats = {
+            "n_groups": n_groups,
+            "stale_groups": stale,
+            "unknown_groups": unknown,
+            "worst_lag_seconds":
+                None if worst_lag is None else int(worst_lag),
+            "over_sla_pct": round(over_pct, 4),
+            "final_score": round(max(0.0, 100.0 - over_pct), 4),
+        }
+        details = [
+            {**{g: r[g] for g in group_by},
+             "n_rows": r["n_rows"], "n_ts": r["n_ts"],
+             "max_ts": str(r["max_ts"]) if r["max_ts"] is not None else None,
+             "lag_seconds": r["lag_seconds"]}
+            for r in worst
+        ]
+        audit_details = D.CheckDetails(
+            issue_breakdown=[
+                (", ".join(str(r[g]) for g in group_by),
+                 int(r["lag_seconds"]) if r["lag_seconds"] is not None
+                 else -1)
                 for r in worst
-            ]
-            audit_details = D.CheckDetails(
-                issue_breakdown=[
-                    (", ".join(str(r[g]) for g in group_by),
-                     int(r["lag_seconds"]) if r["lag_seconds"] is not None
-                     else -1)
-                    for r in worst
-                ],
-                issue_examples=[],
-                dup_source_keys_examples=(),
-                dup_target_keys_examples=(),
-                source_only_keys_examples=(),
-                target_only_keys_examples=(),
-                evaluated_columns=[ts_column, *group_by],
-            )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="freshness", status=status,
-                    check_name=name, report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    timezone=self.timezone, stats=stats, details=details,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="freshness", status=status,
-                check_name=name, source_table=source_table,
-                report=text_report, timings=timings, details=audit_details,
-                stats_overrides={"final_score": stats["final_score"]},
-            )
-            self._track(status, source_table)
-            _LOG.info(
-                "check_freshness run_id=%s status=%s groups=%d stale=%d",
-                run_id, status, n_groups, stale,
-            )
-            return status, report, stats, details
-        finally:
-            if grouped is not None:
-                grouped.unpersist()
+            ],
+            evaluated_columns=[ts_column, *group_by],
+        )
+        return _Outcome(
+            status, "\n".join(lines), stats, details,
+            audit_details=audit_details,
+            stats_overrides={"final_score": stats["final_score"]},
+        )
 
     def check_freshness(
         self,
@@ -1111,31 +1004,24 @@ class QualityChecker:
             raise ValueError("max_lag_hours must be positive")
         if group_by is not None and not group_by:
             raise ValueError("group_by must be a non-empty list when given")
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        try:
-            fmt = validate_report_output_format(report_output_format)
+
+        def body(run):
             src = self._resolve(source_table)
             if ts_column not in src.columns:
                 raise MetadataError(f"no such column: {ts_column}")
             if group_by is not None:
                 return self._check_freshness_grouped(
-                    src, ts_column, max_lag_hours, as_of, group_by,
-                    max_examples, check_name, source_table, run_id,
-                    timings, fmt,
+                    run, src, ts_column, max_lag_hours, as_of, group_by,
+                    max_examples,
                 )
-            timings.mark_query_start("source")
-            timings.mark_dataset_check_start()
-            row = P.freshness(src, ts_column, as_of=as_of).collect()[0]
-            timings.mark_dataset_check_end()
-            timings.mark_query_end("source")
+            with run.query("source"), run.dataset_check():
+                row = P.freshness(src, ts_column, as_of=as_of).collect()[0]
 
             n_rows = int(row["n_rows"])
             n_ts = int(row["n_ts"])
             max_ts = row["max_ts"]
             lag = row["lag_seconds"]
             sla = max_lag_hours * 3600.0
-            name = check_name or "check_freshness"
             if lag is None:
                 over_pct = 100.0
                 status = D.CHECK_FAILED
@@ -1143,7 +1029,7 @@ class QualityChecker:
                 over_pct = max(0.0, (lag - sla) / sla * 100.0)
                 status = D.CHECK_SUCCESS if lag <= sla else D.CHECK_FAILED
             lines = [
-                f"freshness check: {name} [{run_id}] -> {status}",
+                f"freshness check: {run.name} [{run.run_id}] -> {status}",
                 f"rows: {n_rows} (null ts: {n_rows - n_ts})  "
                 f"max_ts: {max_ts}  lag_seconds: {lag}  "
                 f"sla_hours: {max_lag_hours}",
@@ -1159,7 +1045,6 @@ class QualityChecker:
                     "skew or corrupt event times; SLA passes but verify "
                     "the producer"
                 )
-            text_report = "\n".join(lines)
             stats = {
                 "n_rows": n_rows,
                 "null_ts_rows": n_rows - n_ts,
@@ -1169,37 +1054,15 @@ class QualityChecker:
             }
             details = [{"max_ts": str(max_ts) if max_ts is not None else None,
                         "sla_seconds": int(sla)}]
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="freshness", status=status,
-                    check_name=name, report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    timezone=self.timezone, stats=stats, details=details,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="freshness", status=status,
-                check_name=name, source_table=source_table,
-                report=text_report, timings=timings,
+            return _Outcome(
+                status, "\n".join(lines), stats, details,
                 stats_overrides={"final_score": stats["final_score"]},
             )
-            self._track(status, source_table)
-            _LOG.info(
-                "check_freshness run_id=%s status=%s lag=%s", run_id, status, lag,
-            )
-            return status, report, stats, details
-        except Exception as exc:
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="freshness", status=D.CHECK_FAILED,
-                check_name=check_name or "check_freshness",
-                source_table=source_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table)
-            return D.CHECK_FAILED, report, None, None
+
+        return self._run_check(
+            "freshness", check_name, report_output_format, body,
+            source_table=source_table,
+        )
 
     def check_uniqueness(
         self,
@@ -1242,31 +1105,24 @@ class QualityChecker:
         """
         if not key_columns:
             # malformed CALL, not a failed check: raise before the
-            # FAILED-wrapper try (run_suite records it as a config error)
+            # envelope (run_suite records it as a config error)
             raise ValueError("at least one key column is required")
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        grouped = None
-        try:
+
+        def body(run):
             from .operators.integrity import (
                 duplicate_key_examples, duplicate_key_stats, key_duplication,
             )
 
-            fmt = validate_report_output_format(report_output_format)
             src = self._date_filter(
                 self._resolve(source_table), date_column, date_range)
-
-            timings.mark_query_start("source")
-            timings.mark_dataset_check_start()
-            grouped = key_duplication(src, key_columns).persist()
-            stats_row = duplicate_key_stats(grouped, key_columns).collect()[0]
-            examples = [
-                tuple(r[c] for c in key_columns) + (int(r["row_count"]),)
-                for r in duplicate_key_examples(
-                    grouped, key_columns, max_examples).collect()
-            ]
-            timings.mark_dataset_check_end()
-            timings.mark_query_end("source")
+            with run.query("source"), run.dataset_check():
+                grouped = run.cache(key_duplication(src, key_columns))
+                stats_row = duplicate_key_stats(grouped, key_columns).collect()[0]
+                examples = [
+                    tuple(r[c] for c in key_columns) + (int(r["row_count"]),)
+                    for r in duplicate_key_examples(
+                        grouped, key_columns, max_examples).collect()
+                ]
 
             n_rows = int(stats_row["n_rows"] or 0)
             n_keys = int(stats_row["n_keys"])
@@ -1278,10 +1134,9 @@ class QualityChecker:
                 D.CHECK_SUCCESS if dup_pct <= max_duplicate_pct
                 else D.CHECK_FAILED
             )
-            name = check_name or "check_uniqueness"
             key_desc = ", ".join(key_columns)
             lines = [
-                f"uniqueness check: {name} [{run_id}] -> {status}",
+                f"uniqueness check: {run.name} [{run.run_id}] -> {status}",
                 f"key: ({key_desc})  rows: {n_rows}  distinct keys: {n_keys}  "
                 f"duplicated keys: {dup_keys}  excess rows: {excess}  "
                 f"duplicate_pct: {dup_pct:.4f}  tolerance: {max_duplicate_pct}",
@@ -1297,7 +1152,6 @@ class QualityChecker:
                 )
             for ex in examples:
                 lines.append(f"  dup key {ex[:-1]} x{ex[-1]}")
-            text_report = "\n".join(lines)
             stats = {
                 "n_rows": n_rows,
                 "n_keys": n_keys,
@@ -1313,48 +1167,19 @@ class QualityChecker:
             ]
             audit_details = D.CheckDetails(
                 issue_breakdown=[(key_desc, excess)],
-                issue_examples=[],
                 dup_source_keys_examples=tuple(ex[:-1] for ex in examples),
-                dup_target_keys_examples=(),
-                source_only_keys_examples=(),
-                target_only_keys_examples=(),
                 evaluated_columns=list(key_columns),
             )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="uniqueness", status=status,
-                    check_name=name, report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    timezone=self.timezone, stats=stats, details=details,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="uniqueness", status=status,
-                check_name=name, source_table=source_table,
-                report=text_report, timings=timings, details=audit_details,
+            return _Outcome(
+                status, "\n".join(lines), stats, details,
+                audit_details=audit_details,
                 stats_overrides={"final_score": stats["final_score"]},
             )
-            self._track(status, source_table)
-            _LOG.info(
-                "check_uniqueness run_id=%s status=%s duplicate_pct=%.4f",
-                run_id, status, dup_pct,
-            )
-            return status, report, stats, details
-        except Exception as exc:
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="uniqueness", status=D.CHECK_FAILED,
-                check_name=check_name or "check_uniqueness",
-                source_table=source_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table)
-            return D.CHECK_FAILED, report, None, None
-        finally:
-            if grouped is not None:
-                grouped.unpersist()
+
+        return self._run_check(
+            "uniqueness", check_name, report_output_format, body,
+            source_table=source_table,
+        )
 
     def check_split_leakage(
         self,
@@ -1410,73 +1235,62 @@ class QualityChecker:
                            (split_column, "split_column")):
             if not arg or not isinstance(arg, str):
                 # malformed CALL, not a failed check: raise before the
-                # FAILED-wrapper try (run_suite records it as a config error)
+                # envelope (run_suite records it as a config error)
                 raise ValueError(f"{label} must be a non-empty column name")
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        cached: list = []
-        try:
+
+        def body(run):
             from .operators.splits import near_dup_pair_leakage, split_leakage
 
-            fmt = validate_report_output_format(report_output_format)
             src = self._date_filter(
                 self._resolve(source_table), date_column, date_range)
-
-            timings.mark_query_start("source")
-            timings.mark_dataset_check_start()
-            n_rows = src.count()
-            leaked = split_leakage(
-                src, id_column, text_column, split_column).persist()
-            cached.append(leaked)
-            n_exact = leaked.count()
-            leaked_ids = leaked.select(F.col(id_column), F.col(split_column))
-            n_nd_pairs = 0
-            if near_dup_pairs is not None:
-                ndp = near_dup_pair_leakage(
-                    self._resolve(near_dup_pairs),
-                    src.select(id_column, split_column),
-                    id_column, split_column,
-                    near_dup_left, near_dup_right,
-                ).persist()
-                cached.append(ndp)
-                n_nd_pairs = ndp.count()
-                nd_ids = ndp.select(
-                    F.col(near_dup_left).alias(id_column),
-                    F.col("split_a").alias(split_column),
-                ).unionByName(ndp.select(
-                    F.col(near_dup_right).alias(id_column),
-                    F.col("split_b").alias(split_column),
-                ))
-                leaked_ids = leaked_ids.unionByName(nd_ids)
-            all_leaked = leaked_ids.distinct().persist()
-            cached.append(all_leaked)
-            n_leaked = all_leaked.count()
-            by_split = sorted(
-                ((r[split_column], int(r["c"])) for r in
-                 all_leaked.groupBy(split_column)
-                 .agg(F.count(F.lit(1)).alias("c")).collect()),
-                key=lambda t: (-t[1], str(t[0])),
-            )
-            groups = (
-                leaked.groupBy("text_fp", "n_splits", "splits")
-                .agg(F.count(F.lit(1)).alias("n_docs"),
-                     F.min(id_column).alias("example_id"))
-                .orderBy(F.desc("n_docs"), "text_fp")
-                .limit(max_examples)
-                .collect()
-            )
-            n_groups = leaked.select("text_fp").distinct().count()
-            timings.mark_dataset_check_end()
-            timings.mark_query_end("source")
+            with run.query("source"), run.dataset_check():
+                n_rows = src.count()
+                leaked = run.cache(split_leakage(
+                    src, id_column, text_column, split_column))
+                n_exact = leaked.count()
+                leaked_ids = leaked.select(F.col(id_column), F.col(split_column))
+                n_nd_pairs = 0
+                if near_dup_pairs is not None:
+                    ndp = run.cache(near_dup_pair_leakage(
+                        self._resolve(near_dup_pairs),
+                        src.select(id_column, split_column),
+                        id_column, split_column,
+                        near_dup_left, near_dup_right,
+                    ))
+                    n_nd_pairs = ndp.count()
+                    nd_ids = ndp.select(
+                        F.col(near_dup_left).alias(id_column),
+                        F.col("split_a").alias(split_column),
+                    ).unionByName(ndp.select(
+                        F.col(near_dup_right).alias(id_column),
+                        F.col("split_b").alias(split_column),
+                    ))
+                    leaked_ids = leaked_ids.unionByName(nd_ids)
+                all_leaked = run.cache(leaked_ids.distinct())
+                n_leaked = all_leaked.count()
+                by_split = sorted(
+                    ((r[split_column], int(r["c"])) for r in
+                     all_leaked.groupBy(split_column)
+                     .agg(F.count(F.lit(1)).alias("c")).collect()),
+                    key=lambda t: (-t[1], str(t[0])),
+                )
+                groups = (
+                    leaked.groupBy("text_fp", "n_splits", "splits")
+                    .agg(F.count(F.lit(1)).alias("n_docs"),
+                         F.min(id_column).alias("example_id"))
+                    .orderBy(F.desc("n_docs"), "text_fp")
+                    .limit(max_examples)
+                    .collect()
+                )
+                n_groups = leaked.select("text_fp").distinct().count()
 
             leaked_pct = n_leaked * 100.0 / n_rows if n_rows else 0.0
             status = (
                 D.CHECK_SUCCESS if leaked_pct <= max_leaked_pct
                 else D.CHECK_FAILED
             )
-            name = check_name or "check_split_leakage"
             lines = [
-                f"split-leakage check: {name} [{run_id}] -> {status}",
+                f"split-leakage check: {run.name} [{run.run_id}] -> {status}",
                 f"columns: id={id_column} text={text_column} "
                 f"split={split_column}  rows: {n_rows}  "
                 f"leaked docs: {n_leaked}  leaked groups: {n_groups}  "
@@ -1497,7 +1311,6 @@ class QualityChecker:
                     f"  dup group {g['text_fp'][:12]}… x{g['n_docs']} docs "
                     f"across [{g['splits']}] e.g. {id_column}="
                     f"{g['example_id']}")
-            text_report = "\n".join(lines)
             stats = {
                 "n_rows": n_rows,
                 "leaked_docs": n_leaked,
@@ -1516,50 +1329,20 @@ class QualityChecker:
             ]
             audit_details = D.CheckDetails(
                 issue_breakdown=[(str(s), c) for s, c in by_split],
-                issue_examples=[],
                 dup_source_keys_examples=tuple(
                     (g["text_fp"],) for g in groups),
-                dup_target_keys_examples=(),
-                source_only_keys_examples=(),
-                target_only_keys_examples=(),
                 evaluated_columns=[id_column, text_column, split_column],
             )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="split_leakage", status=status,
-                    check_name=name, report=text_report,
-                    source_table=source_table if isinstance(source_table, str) else None,
-                    timezone=self.timezone, stats=stats, details=details,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="split_leakage", status=status,
-                check_name=name, source_table=source_table,
-                report=text_report, timings=timings, details=audit_details,
+            return _Outcome(
+                status, "\n".join(lines), stats, details,
+                audit_details=audit_details,
                 stats_overrides={"final_score": stats["final_score"]},
             )
-            self._track(status, source_table)
-            _LOG.info(
-                "check_split_leakage run_id=%s status=%s leaked_pct=%.4f",
-                run_id, status, leaked_pct,
-            )
-            return status, report, stats, details
-        except Exception as exc:
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="split_leakage",
-                status=D.CHECK_FAILED,
-                check_name=check_name or "check_split_leakage",
-                source_table=source_table,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED, source_table)
-            return D.CHECK_FAILED, report, None, None
-        finally:
-            for frame in cached:
-                frame.unpersist()
+
+        return self._run_check(
+            "split_leakage", check_name, report_output_format, body,
+            source_table=source_table,
+        )
 
     def check_custom_queries(
         self,
@@ -1583,90 +1366,25 @@ class QualityChecker:
         binds, core.py:959-1028); ``date_column``/``date_range``/
         ``chunk_size_days`` run the same chunk loop as check_samples
         (reference runs all four check types chunked, core.py:1030-1146)."""
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        try:
-            fmt = validate_report_output_format(report_output_format)
+        def body(run):
             keys = [k.lower() for k in custom_primary_key]
-            timings.mark_query_start("source")
-            src = self.spark.sql(source_query, args=source_params or {})
-            src = self._date_filter(src, date_column, date_range)
-            src = self._apply_column_policy(src, keys, None, exclude_columns)
-            timings.mark_query_end("source")
-            timings.mark_query_start("target")
-            trg = self.spark.sql(target_query, args=target_params or {})
-            trg = self._date_filter(trg, date_column, date_range)
-            trg = self._apply_column_policy(trg, keys, None, exclude_columns)
-            timings.mark_query_end("target")
-            src, trg = self._exclude_recent(src, trg, keys)
+            sides = []
+            for side, query, params in (("source", source_query, source_params),
+                                        ("target", target_query, target_params)):
+                with run.query(side):
+                    df = self.spark.sql(query, args=params or {})
+                    df = self._date_filter(df, date_column, date_range)
+                    sides.append(self._apply_column_policy(df, keys, None, exclude_columns))
+            return self._diff_outcome(
+                run, *sides, keys, max_examples, tolerance_pct,
+                date_column, date_range, chunk_size_days,
+            )
 
-            from .chunking import iter_date_chunks, merge_chunk_stats
-
-            chunks = (
-                iter_date_chunks(date_range[0], date_range[1], chunk_size_days)
-                if (date_column and date_range)
-                else [(None, None)]
-            )
-            timings.mark_dataset_check_start()
-            if len(chunks) == 1:
-                stats, details = D.compare_frames(src, trg, keys, max_examples)
-            else:
-                per, issue_dicts, details = [], [], None
-                for cs, ce in chunks:
-                    st, dt_ = D.compare_frames(
-                        self._date_filter(src, date_column, (cs, ce)),
-                        self._date_filter(trg, date_column, (cs, ce)),
-                        keys, max_examples, with_examples=details is None,
-                    )
-                    per.append(st)
-                    if st is not None and dt_ is not None:
-                        issue_dicts.append(dict(dt_.issue_breakdown))
-                        if details is None:
-                            details = dt_
-                stats = merge_chunk_stats(per, issue_dicts)
-                if details is not None and stats is not None:
-                    details.issue_breakdown = sorted(
-                        _merge_counts(issue_dicts).items(), key=lambda x: (-x[1], x[0])
-                    )
-            timings.mark_dataset_check_end()
-            status = D.check_status(stats, tolerance_pct)
-            text_report = render_samples_report(
-                check_name or "check_custom_queries", run_id, status, stats,
-                details, tolerance_pct,
-            )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="custom_queries", status=status,
-                    check_name=check_name or "check_custom_queries",
-                    report=text_report, timezone=self.timezone,
-                    stats=stats, details=details,
-                    source_query=source_query, target_query=target_query,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="custom_queries", status=status,
-                check_name=check_name or "check_custom_queries",
-                source_query=source_query, source_params=source_params,
-                target_query=target_query, target_params=target_params,
-                report=text_report, stats=stats, details=details, timings=timings,
-            )
-            self._track(status)
-            return status, report, stats, details
-        except Exception as exc:
-            # FAILED-run audit row, mirroring check_samples (reference
-            # core.py:174-191 persists every outcome)
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="custom_queries", status=D.CHECK_FAILED,
-                check_name=check_name or "check_custom_queries",
-                source_query=source_query, source_params=source_params,
-                target_query=target_query, target_params=target_params,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED)
-            return D.CHECK_FAILED, report, None, None
+        return self._run_check(
+            "custom_queries", check_name, report_output_format, body,
+            source_query=source_query, source_params=source_params,
+            target_query=target_query, target_params=target_params,
+        )
 
     def check_sniff_query(
         self,
@@ -1684,90 +1402,54 @@ class QualityChecker:
         Named ``:param`` binds ride ``spark.sql(q, args=...)``; chunked
         execution mirrors the reference's chunked sniff (core.py:1216-1357)
         with the accumulator merge in operators.sniff.merge_sniff_stats."""
-        run_id = uuid.uuid4().hex[:16]
-        timings = CheckRunTimings(run_started_at=CheckRunTimings.now())
-        try:
-            fmt = validate_report_output_format(report_output_format)
-            timings.mark_query_start("source")
-            df = self.spark.sql(source_query, args=params or {})
-            df = self._date_filter(df, date_column, date_range)
-            timings.mark_query_end("source")
-
+        def body(run):
             from .chunking import iter_date_chunks
 
+            with run.query("source"):
+                df = self.spark.sql(source_query, args=params or {})
+                df = self._date_filter(df, date_column, date_range)
             chunks = (
                 iter_date_chunks(date_range[0], date_range[1], chunk_size_days)
                 if (date_column and date_range)
                 else [(None, None)]
             )
-            timings.mark_dataset_check_start()
-            if len(chunks) == 1:
-                stats = S.evaluate_sniff(df)
-            else:
-                stats = S.merge_sniff_stats([
-                    S.evaluate_sniff(self._date_filter(df, date_column, (cs, ce)))
-                    for cs, ce in chunks
-                ])
-            if stats.total_rows == 0:
+            with run.dataset_check():
+                if len(chunks) == 1:
+                    stats = S.evaluate_sniff(df)
+                else:
+                    stats = S.merge_sniff_stats([
+                        S.evaluate_sniff(self._date_filter(df, date_column, (cs, ce)))
+                        for cs, ce in chunks
+                    ])
+                if stats.total_rows:
+                    hist = S.sniff_histogram(df).collect()
+                    examples = df.filter(
+                        F.col(S.XSNIFF_PASSED) == S.FLAG_NO
+                    ).limit(max_examples).collect()
+            if not stats.total_rows:
                 # reference marks an empty sniff result SKIPPED (core.py:689)
-                # and persists the outcome like any other run (core.py:174-191)
-                report = "sniff query returned no rows"
-                timings.mark_dataset_check_end()
-                timings.finish_run()
-                self._persist(
-                    run_id=run_id, check_type="sniff_query", status=D.CHECK_SKIPPED,
-                    check_name=check_name or "check_sniff_query",
-                    source_query=source_query, source_params=params,
-                    report=report, timings=timings,
-                )
-                self._track(D.CHECK_SKIPPED)
-                return D.CHECK_SKIPPED, report, stats, []
+                return _Outcome(D.CHECK_SKIPPED, "sniff query returned no rows",
+                                stats, [])
             status = (
                 D.CHECK_SUCCESS if stats.issue_rows_pct <= tolerance_pct else D.CHECK_FAILED
             )
-            hist = S.sniff_histogram(df).collect()
-            examples = df.filter(F.col(S.XSNIFF_PASSED) == S.FLAG_NO).limit(max_examples).collect()
-            timings.mark_dataset_check_end()
-            text_report = render_sniff_report(
-                check_name or "check_sniff_query", run_id, status, stats, hist,
-                examples, tolerance_pct,
+            report = render_sniff_report(
+                run.name, run.run_id, status, stats, hist, examples, tolerance_pct,
             )
-            report = text_report
-            if fmt == "json":
-                report = check_result_json(
-                    run_id=run_id, check_type="sniff_query", status=status,
-                    check_name=check_name or "check_sniff_query",
-                    report=text_report, timezone=self.timezone, stats=stats,
-                    details={"histogram": hist, "examples": examples},
-                    source_query=source_query,
-                )
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="sniff_query", status=status,
-                check_name=check_name or "check_sniff_query",
-                source_query=source_query, source_params=params,
-                report=text_report, timings=timings,
+            return _Outcome(
+                status, report, stats, examples,
+                envelope_details={"histogram": hist, "examples": examples},
                 stats_overrides={
                     "final_score": float(stats.final_score),
                     "issue_rows_pct": float(stats.issue_rows_pct),
                     "passed_rows": int(stats.passed_rows),
                 },
             )
-            self._track(status)
-            return status, report, stats, examples
-        except Exception as exc:
-            # FAILED-run audit row, mirroring check_samples (reference
-            # core.py:174-191 persists every outcome)
-            report = f"check failed with error: {exc}"
-            timings.finish_run()
-            self._persist(
-                run_id=run_id, check_type="sniff_query", status=D.CHECK_FAILED,
-                check_name=check_name or "check_sniff_query",
-                source_query=source_query, source_params=params,
-                report=report, timings=timings,
-            )
-            self._track(D.CHECK_FAILED)
-            return D.CHECK_FAILED, report, None, None
+
+        return self._run_check(
+            "sniff_query", check_name, report_output_format, body,
+            source_query=source_query, source_params=params,
+        )
 
     # ------------------------------------------------------------- suite --
 
@@ -1793,9 +1475,10 @@ class QualityChecker:
 
         Each entry: ``{"type": <SUITE_TYPES key>, "name": optional,
         **kwargs for the check method}``. Config errors (unknown type,
-        bad kwargs) FAIL that entry and keep going — a 40-check nightly
-        suite must not die on entry 3; every failure is still visible in
-        the summary and each check's own audit row persists as usual.
+        bad kwargs, argument validation) FAIL that entry and keep going —
+        a 40-check nightly suite must not die on entry 3; every failure is
+        still visible in the summary and each check's own audit row
+        persists as usual.
 
         Returns ``{"checks": [{name, type, status, final_score}...],
         "checked", "success", "failed", "skipped", "suite_status"}`` —
@@ -1815,20 +1498,14 @@ class QualityChecker:
                 continue
             try:
                 status, _report, stats, _details = getattr(self, method)(**spec)
-            except Exception as exc:  # malformed CALL (arg validation)
+            except (TypeError, ValueError) as exc:  # malformed CALL
                 _LOG.error("run_suite: %s raised: %s", name, exc)
                 results.append({"name": name, "type": ctype,
                                 "status": D.CHECK_FAILED, "final_score": None,
                                 "error": str(exc)})
                 continue
-            score = None
-            if stats is not None:
-                if isinstance(stats, dict):
-                    score = stats.get("final_score")
-                else:
-                    score = getattr(stats, "final_score", None)
             results.append({"name": name, "type": ctype, "status": status,
-                            "final_score": score})
+                            "final_score": _final_score(stats)})
         counts = {
             s: sum(1 for r in results if r["status"] == s)
             for s in (D.CHECK_SUCCESS, D.CHECK_FAILED, D.CHECK_SKIPPED)

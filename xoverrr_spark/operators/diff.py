@@ -78,12 +78,14 @@ class CheckStats:
 class CheckDetails:
     """Per-column breakdown + bounded examples (utils.py:175-188)."""
 
-    issue_breakdown: list  # [(column_name, issue_count)] sorted desc
-    issue_examples: list  # [{primary_key, column_name, source_value, target_value}]
-    dup_source_keys_examples: tuple
-    dup_target_keys_examples: tuple
-    source_only_keys_examples: tuple
-    target_only_keys_examples: tuple
+    # [(column_name, issue_count)] sorted desc
+    issue_breakdown: list = field(default_factory=list)
+    # [{primary_key, column_name, source_value, target_value}]
+    issue_examples: list = field(default_factory=list)
+    dup_source_keys_examples: tuple = ()
+    dup_target_keys_examples: tuple = ()
+    source_only_keys_examples: tuple = ()
+    target_only_keys_examples: tuple = ()
     evaluated_columns: list = field(default_factory=list)
     # non-key columns present on one side only — NOT compared (utils.py:187-188)
     skipped_source_columns: list = field(default_factory=list)
@@ -330,11 +332,6 @@ def compare_frames(
         )
         details = CheckDetails(
             issue_breakdown=breakdown,
-            issue_examples=[],
-            dup_source_keys_examples=(),
-            dup_target_keys_examples=(),
-            source_only_keys_examples=(),
-            target_only_keys_examples=(),
             evaluated_columns=vals,
             skipped_source_columns=[
                 c for c in src.columns if c not in keys and c not in vals
