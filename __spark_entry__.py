@@ -26,6 +26,7 @@ from xoverrr_spark.functions.tokens import (
     quality_score,
     ws_token_count,
 )
+from xoverrr_spark.intermediates import persist, scope
 from xoverrr_spark.operators.counts import (
     count_discrepancies,
     counts_joined,
@@ -434,13 +435,14 @@ def q_minhash_near_dups(spark, sf_dir):
 
 
 def q_near_dup_clusters(spark, sf_dir):
-    from xoverrr_spark.operators.dedup import cluster_near_dups, release_intermediates
+    from xoverrr_spark.operators.dedup import cluster_near_dups
 
-    pairs = simhash_near_dups(_t(spark, sf_dir, "documents"), "doc_id", "text")
-    labels = cluster_near_dups(pairs)
-    # labels are checkpointed (materialized) — the pair set's caches can go
-    release_intermediates(pairs)
-    return labels
+    # labels come back checkpointed (materialized), so the pair set's
+    # caches can go when this nested scope closes
+    with scope():
+        return cluster_near_dups(
+            simhash_near_dups(_t(spark, sf_dir, "documents"), "doc_id", "text")
+        )
 
 
 def q_simhash(spark, sf_dir):
@@ -511,8 +513,6 @@ def q_curate_documents(spark, sf_dir):
     from xoverrr_spark.operators.dedup import contaminated_docs, exact_dedup_window
     from xoverrr_spark.pipeline.quality_filter import annotate
 
-    from xoverrr_spark.operators.dedup import _attach_intermediates
-
     # no rebalance: only the fingerprint map runs pre-shuffle here; the
     # battery runs on post-window partitions (measured 4.1s vs 4.9s plain-wins)
     d = _t(spark, sf_dir, "documents", rebalance=False)
@@ -532,10 +532,9 @@ def q_curate_documents(spark, sf_dir):
     # stage (the CLAUDE.md reused-tree trap via FilterPushdown). Caching
     # the four consumed columns evaluates the battery exactly once; the
     # filter then reads the cached boolean.
-    dec = (
+    dec = persist(
         annotate(survivors, caption_col="text", with_ppl=False)
         .select("doc_id", "source", "text", "keep")
-        .persist()
     )
     s2 = dec.filter("keep").select("doc_id", "source", "text")
     bench = d.filter(F.col("doc_id") % oracle.DECONTAM_BENCH_MOD == 0)
@@ -543,8 +542,7 @@ def q_curate_documents(spark, sf_dir):
         s2.select("doc_id", "source")
         .join(contaminated_docs(s2, bench, "doc_id", "text"), "doc_id", "left_anti")
     )
-    out = cap_per_source(s3, "source", "doc_id", oracle.CURATE_SOURCE_CAP)
-    return _attach_intermediates(out, [dec])
+    return cap_per_source(s3, "source", "doc_id", oracle.CURATE_SOURCE_CAP)
 
 
 def q_curate_documents_hash(spark, sf_dir):
@@ -554,8 +552,6 @@ def q_curate_documents_hash(spark, sf_dir):
     from xoverrr_spark.operators.corpus import cap_per_source_hash
     from xoverrr_spark.operators.dedup import contaminated_docs, exact_dedup_window
     from xoverrr_spark.pipeline.quality_filter import annotate
-
-    from xoverrr_spark.operators.dedup import _attach_intermediates
 
     d = _t(spark, sf_dir, "documents", rebalance=False)
     survivors = exact_dedup_window(d, "doc_id", "text")
@@ -569,10 +565,9 @@ def q_curate_documents_hash(spark, sf_dir):
     # stage (the CLAUDE.md reused-tree trap via FilterPushdown). Caching
     # the four consumed columns evaluates the battery exactly once; the
     # filter then reads the cached boolean.
-    dec = (
+    dec = persist(
         annotate(survivors, caption_col="text", with_ppl=False)
         .select("doc_id", "source", "text", "keep")
-        .persist()
     )
     s2 = dec.filter("keep").select("doc_id", "source", "text")
     bench = d.filter(F.col("doc_id") % oracle.DECONTAM_BENCH_MOD == 0)
@@ -580,8 +575,7 @@ def q_curate_documents_hash(spark, sf_dir):
         s2.select("doc_id", "source")
         .join(contaminated_docs(s2, bench, "doc_id", "text"), "doc_id", "left_anti")
     )
-    out = cap_per_source_hash(s3, "source", "doc_id", oracle.CURATE_SOURCE_CAP)
-    return _attach_intermediates(out, [dec])
+    return cap_per_source_hash(s3, "source", "doc_id", oracle.CURATE_SOURCE_CAP)
 
 
 def q_lsh_bucket_stats(spark, sf_dir):
@@ -646,24 +640,21 @@ def q_curate_documents_v2(spark, sf_dir):
     shuffles for the rates) -> token-budget sequence packing. Each stage
     is an independently oracle-verified operator; this pins composition."""
     from xoverrr_spark.operators.corpus import mixture_sample, pack_documents
-    from xoverrr_spark.operators.dedup import _attach_intermediates, exact_dedup_window
+    from xoverrr_spark.operators.dedup import exact_dedup_window
     from xoverrr_spark.operators.repetition import repetitive_docs
 
     d = _t(spark, sf_dir, "documents", rebalance=False)
     # the dedup survivors feed FOUR branches (repetition agg, anti-join
     # left side, mixture rate counts, mixture main) and branches of one
-    # lazy plan never share execution — persist, and free via
-    # release_intermediates after materializing (bench does)
-    dd = exact_dedup_window(d, "doc_id", "text").persist()
+    # lazy plan never share execution — persist
+    dd = persist(exact_dedup_window(d, "doc_id", "text"))
     rep = repetitive_docs(
         dd, max_dup_frac=oracle.CURATE2_MAX_DUP,
         max_top_frac=oracle.CURATE2_MAX_TOP,
     )
-    keepr = dd.join(F.broadcast(rep.select("doc_id")), "doc_id", "left_anti").persist()
+    keepr = persist(dd.join(F.broadcast(rep.select("doc_id")), "doc_id", "left_anti"))
     mixed = mixture_sample(keepr, oracle.MIXTURE_WEIGHTS, oracle.MIXTURE_TARGET_FRAC)
-    return _attach_intermediates(
-        pack_documents(mixed, oracle.PACK_BUDGET_TOKENS), [dd, keepr]
-    )
+    return pack_documents(mixed, oracle.PACK_BUDGET_TOKENS)
 
 
 def q_curate_documents_v3(spark, sf_dir):
@@ -682,16 +673,16 @@ def q_curate_documents_v3(spark, sf_dir):
     per-doc x corpus-total of 40-bit-hash rows).
     """
     from xoverrr_spark.operators.dedup import (
-        _attach_intermediates, contamination_scores, dup_shingle_fraction,
-        exact_dedup_window, shingle_table,
+        contamination_scores, dup_shingle_fraction, exact_dedup_window,
+        shingle_table,
     )
 
     d = _t(spark, sf_dir, "documents", rebalance=False)
-    dd = exact_dedup_window(d, "doc_id", "text").persist()
+    dd = persist(exact_dedup_window(d, "doc_id", "text"))
     # ONE shingle table feeds the dup-fraction agg, the benchmark set and
     # the containment scores (branches never share execution unpersisted)
-    sh = shingle_table(dd, "doc_id", "text").persist()
-    frac = dup_shingle_fraction(dd, "doc_id", "text", shingles=sh).persist()
+    sh = persist(shingle_table(dd, "doc_id", "text"))
+    frac = persist(dup_shingle_fraction(dd, "doc_id", "text", shingles=sh))
     tots = frac.agg(
         F.sum("n_shingles").alias("_ts"),
         F.sum("n_dup_shingles").alias("_td"),
@@ -710,8 +701,7 @@ def q_curate_documents_v3(spark, sf_dir):
         .filter("n_bench_shingles = n_shingles")
         .select("doc_id")
     )
-    out = gated.join(contained, "doc_id", "left_anti")
-    return _attach_intermediates(out, [dd, sh, frac])
+    return gated.join(contained, "doc_id", "left_anti")
 
 
 def q_bloom_decontaminate(spark, sf_dir):
@@ -723,16 +713,11 @@ def q_bloom_decontaminate(spark, sf_dir):
 
 
 def q_cluster_survivors(spark, sf_dir):
-    from xoverrr_spark.operators.dedup import (
-        cluster_near_dups,
-        cluster_survivors,
-        release_intermediates,
-    )
+    from xoverrr_spark.operators.dedup import cluster_near_dups, cluster_survivors
 
     d = _t(spark, sf_dir, "documents")
-    pairs = simhash_near_dups(d, "doc_id", "text")
-    labels = cluster_near_dups(pairs)
-    release_intermediates(pairs)
+    with scope():
+        labels = cluster_near_dups(simhash_near_dups(d, "doc_id", "text"))
     scores = d.select("doc_id", quality_score(F.col("text")).alias("quality_score"))
     return cluster_survivors(labels, scores)
 
@@ -909,24 +894,17 @@ def q_multimodal_near_dup_clusters(spark, sf_dir):
     detectors catch different duplicate families (shingle overlap vs
     token distribution), and clustering after fusion merges chains that
     cross modalities."""
-    from xoverrr_spark.operators.dedup import (
-        cluster_near_dups,
-        minhash_near_dups,
-        release_intermediates,
-    )
+    from xoverrr_spark.operators.dedup import cluster_near_dups, minhash_near_dups
 
     d = _t(spark, sf_dir, "documents")
-    mh = minhash_near_dups(d, "doc_id", "text", jaccard_threshold=0.8)
-    sh = simhash_near_dups(d, "doc_id", "text")
-    pairs = (
-        mh.select("doc_a", "doc_b")
-        .unionByName(sh.select("doc_a", "doc_b"))
-        .distinct()
-    )
-    labels = cluster_near_dups(pairs)
-    release_intermediates(mh)
-    release_intermediates(sh)
-    return labels
+    with scope():
+        mh = minhash_near_dups(d, "doc_id", "text", jaccard_threshold=0.8)
+        sh = simhash_near_dups(d, "doc_id", "text")
+        return cluster_near_dups(
+            mh.select("doc_a", "doc_b")
+            .unionByName(sh.select("doc_a", "doc_b"))
+            .distinct()
+        )
 
 
 def q_boilerplate_lines(spark, sf_dir):
@@ -1726,18 +1704,15 @@ def q_near_dup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     templated/lightly-edited contamination). Detector params match
     minhash_near_dups_documents; split params match
     split_assignment_documents."""
-    from xoverrr_spark.operators.dedup import _attach_intermediates, minhash_near_dups
+    from xoverrr_spark.operators.dedup import minhash_near_dups
     from xoverrr_spark.operators.splits import assign_splits, near_dup_pair_leakage
 
     d = _t(spark, sf_dir, "documents")
     pairs = minhash_near_dups(d, "doc_id", "text", jaccard_threshold=0.5)
-    # persisted caches don't ride derived frames — collect BEFORE deriving
-    inner = list(getattr(pairs, "_xoverrr_intermediates", ()))
     splits_df = assign_splits(
         d.select("doc_id"), "doc_id", oracle.SPLIT_FRACTIONS, seed=oracle.SPLIT_SEED
     )
-    out = near_dup_pair_leakage(pairs, splits_df, "doc_id", "split")
-    return _attach_intermediates(out, inner)
+    return near_dup_pair_leakage(pairs, splits_df, "doc_id", "split")
 
 
 def q_split_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -274,18 +274,17 @@ OPERATOR_QUERY_NAMES = [
 def run_operator_queries(spark, sf_dir: str | None = None) -> dict[str, float]:
     import __spark_entry__ as entrymod
 
-    from xoverrr_spark.operators.dedup import release_intermediates
+    from xoverrr_spark.intermediates import scope
 
     qs = entrymod.queries()
     out = {}
     for name in OPERATOR_QUERY_NAMES:
-        t0 = time.time()
-        df = qs[name](spark, sf_dir or SF_DIR)
-        _noop_write(df)
-        out[name] = round(time.time() - t0, 3)
-        # free any persisted dedup/LSH intermediates so earlier queries'
-        # cache blocks don't pressure later timings (one long session)
-        release_intermediates(df)
+        # one scope per query frees its persisted intermediates, so earlier
+        # queries' cache blocks don't pressure later timings (one session)
+        with scope():
+            t0 = time.time()
+            _noop_write(qs[name](spark, sf_dir or SF_DIR))
+            out[name] = round(time.time() - t0, 3)
     return out
 
 

@@ -17,6 +17,7 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entrymod
+from xoverrr_spark.intermediates import scope
 from xoverrr_spark.session import get_spark
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -72,7 +73,9 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            # one scope per query: 109 queries share one session
+            with scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             fails.append(name)
             print(f"FAIL  {name}: spark error {str(e)[:200]}")

@@ -44,17 +44,18 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("dump_plans", cores=cpus, shuffle_partitions=max(cpus, 8),
                       extra_conf={"spark.sql.files.maxPartitionBytes": str(1024 * 1024)})
+    from xoverrr_spark.intermediates import scope
+
     qs = entrymod.queries()
     for name in names:
-        df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        # the scope frees any persisted intermediates the query built
+        with scope():
+            df = qs[name](spark, SF_DIR)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(f"-- {name} @ {SF_DIR} ({suffix})\n")
             fh.write(plan)
-        # free any persisted intermediates the query construction created
-        from xoverrr_spark.operators.dedup import release_intermediates
-        release_intermediates(df)
         print(f"wrote {name}_{suffix}.txt")
     spark.stop()
 

@@ -1,5 +1,5 @@
 """Time the bench's operator-query list (bench.py methodology: one session,
-noop sink, release_intermediates between queries) without touching the
+noop sink, one intermediates.scope() per query) without touching the
 frozen bench.py. Usage:
   python scripts/opq_sweep.py [sf_dir] [query ...]
 """
@@ -20,7 +20,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from bench import OPERATOR_QUERY_NAMES, _noop_write
-    from xoverrr_spark.operators.dedup import release_intermediates
+    from xoverrr_spark.intermediates import scope
 
     names = sys.argv[2:] or OPERATOR_QUERY_NAMES
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -30,11 +30,10 @@ def main() -> None:
     out = {}
     print("loadavg:", os.getloadavg()[0])
     for name in names:
-        t0 = time.time()
-        df = qs[name](spark, SF_DIR)
-        _noop_write(df)
-        out[name] = round(time.time() - t0, 3)
-        release_intermediates(df)
+        with scope():
+            t0 = time.time()
+            _noop_write(qs[name](spark, SF_DIR))
+            out[name] = round(time.time() - t0, 3)
         print(f"{name}: {out[name]}")
     print(json.dumps(out))
     spark.stop()

@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from xoverrr_spark.intermediates import scope
 from xoverrr_spark.session import get_spark
 
 
@@ -18,3 +19,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(autouse=True)
+def _intermediates_scope():
+    """Each test runs inside one scope, as a driver wraps each query: frames
+    an operator persists are freed when the test ends."""
+    with scope():
+        yield

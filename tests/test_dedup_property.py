@@ -107,9 +107,8 @@ def _py_shingle_set(text, n=3):
 )
 @given(texts=_CORPUS)
 def test_dup_shingle_fraction_matches_set_replay(spark, texts):
-    from xoverrr_spark.operators.dedup import (
-        dup_shingle_fraction, release_intermediates,
-    )
+    from xoverrr_spark.intermediates import scope
+    from xoverrr_spark.operators.dedup import dup_shingle_fraction
 
     sets = {i: _py_shingle_set(t) for i, t in enumerate(texts)}
     freq = {}
@@ -123,7 +122,7 @@ def test_dup_shingle_fraction_matches_set_replay(spark, texts):
 
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id int, text string")
-    out = dup_shingle_fraction(df, "doc_id", "text")
-    got = {r.doc_id: (r.n_shingles, r.n_dup_shingles) for r in out.collect()}
-    release_intermediates(out)
+    with scope():  # one per example: free each example's shingle table
+        out = dup_shingle_fraction(df, "doc_id", "text")
+        got = {r.doc_id: (r.n_shingles, r.n_dup_shingles) for r in out.collect()}
     assert got == expect

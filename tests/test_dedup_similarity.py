@@ -338,21 +338,20 @@ def test_ngram_jaccard_stop_shingle_consistent_universe(spark):
     assert got[(0, 1)] == pytest.approx(1.0)
 
 
-def test_release_intermediates_frees_caches(spark):
-    from xoverrr_spark.operators.dedup import minhash_near_dups, release_intermediates
+def test_scope_frees_minhash_caches(spark):
+    from xoverrr_spark.intermediates import scope
+    from xoverrr_spark.operators.dedup import minhash_near_dups
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    nd = minhash_near_dups(docs, "doc_id", "text", jaccard_threshold=0.5)
-    nd.count()  # materialize the result (and thereby the caches)
-    frames = list(getattr(nd, "_xoverrr_intermediates", ()))
-    assert len(frames) >= 2  # LSH bucket table + candidate pair set
-    assert all(f.storageLevel.useMemory or f.storageLevel.useDisk for f in frames)
-    released = release_intermediates(nd)
-    assert released == len(frames)
+    with scope() as frames:
+        nd = minhash_near_dups(docs, "doc_id", "text", jaccard_threshold=0.5)
+        nd.count()  # materialize the result (and thereby the caches)
+        # shingle sets + LSH bucket table + candidate pair set
+        assert len(frames) >= 2
+        assert all(f.storageLevel.useMemory or f.storageLevel.useDisk for f in frames)
     assert all(
         not (f.storageLevel.useMemory or f.storageLevel.useDisk) for f in frames
     )
-    assert release_intermediates(nd) == 0  # idempotent
 
 
 def test_lsh_bucket_stats_reports_over_cap(spark):
@@ -389,19 +388,18 @@ def test_embedding_near_dups_cap_bounds_degenerate_flood(spark):
 def test_embedding_near_dups_bucket_table_cached_and_released(spark):
     # the bucket table (with its plane-dot projections) must be persisted so
     # the self-join's two sides share one computation (self-joins never
-    # reuse exchanges), and releasable afterwards
-    from xoverrr_spark.operators.dedup import release_intermediates
+    # reuse exchanges), and freed when its scope closes
+    from xoverrr_spark.intermediates import scope
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    nd = embedding_near_dups(emb, threshold=0.42, max_bucket_size=200)
-    plan = nd._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    nd.count()
-    frames = list(getattr(nd, "_xoverrr_intermediates", ()))
-    assert frames and all(
-        f.storageLevel.useMemory or f.storageLevel.useDisk for f in frames
-    )
-    release_intermediates(nd)
+    with scope() as frames:
+        nd = embedding_near_dups(emb, threshold=0.42, max_bucket_size=200)
+        plan = nd._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("InMemoryTableScan") >= 2, plan
+        nd.count()
+        assert frames and all(
+            f.storageLevel.useMemory or f.storageLevel.useDisk for f in frames
+        )
     assert all(
         not (f.storageLevel.useMemory or f.storageLevel.useDisk) for f in frames
     )
@@ -544,8 +542,7 @@ def test_incremental_exact_dedup_null_text_fresh_when_corpus_has_none(spark):
 
 
 def test_incremental_near_dups_finds_cross_table_pairs_only(spark):
-    from xoverrr_spark.operators.dedup import (
-        incremental_near_dups, release_intermediates)
+    from xoverrr_spark.operators.dedup import incremental_near_dups
     base = "the quick brown fox jumps over the lazy dog near the river bank today"
     corpus = spark.createDataFrame(
         [(i, base + f" tail{i}") for i in range(3)] +
@@ -558,7 +555,6 @@ def test_incremental_near_dups_finds_cross_table_pairs_only(spark):
     got = incremental_near_dups(new, corpus, "doc_id", "text",
                                 jaccard_threshold=0.6)
     rows = got.collect()
-    release_intermediates(got)
     assert all(r.new_id >= 100 and r.corpus_id < 100 for r in rows)
     assert any(r.new_id == 100 and r.corpus_id == 0 for r in rows)
     assert not any(r.new_id == 101 for r in rows)
@@ -587,11 +583,8 @@ def test_incremental_near_dups_rejects_colliding_ids(spark):
     ok = spark.createDataFrame(
         [(100, "totally different new document text here")],
         "doc_id bigint, text string")
-    from xoverrr_spark.operators.dedup import release_intermediates
-    got = incremental_near_dups(ok, corpus, "doc_id", "text",
-                                check_disjoint_ids=True)
-    got.collect()
-    release_intermediates(got)
+    incremental_near_dups(ok, corpus, "doc_id", "text",
+                          check_disjoint_ids=True).collect()
 
 
 # ------------------------------------------------- bloom decontamination ----
@@ -675,44 +668,46 @@ def test_dup_shingle_fraction_extremes(docs):
     """Exact/ws-case triplicate docs score 1.0 (every shingle in 3 docs);
     the unique doc scores 0.0; the near dup lands strictly between; the
     2-word doc participates via its single 0-padded shingle."""
-    from xoverrr_spark.operators.dedup import dup_shingle_fraction, release_intermediates
+    from xoverrr_spark.intermediates import scope
+    from xoverrr_spark.operators.dedup import dup_shingle_fraction
 
-    out = dup_shingle_fraction(docs, "doc_id", "text")
-    got = {r.doc_id: r for r in out.collect()}
+    with scope() as frames:
+        out = dup_shingle_fraction(docs, "doc_id", "text")
+        got = {r.doc_id: r for r in out.collect()}
     assert got[1].dup_fraction == got[2].dup_fraction == got[3].dup_fraction == 1.0
     assert got[5].dup_fraction == 0.0
     assert 0.0 < got[4].dup_fraction < 1.0
     assert got[6].n_shingles == 1 and got[6].dup_fraction == 0.0
-    # the internally-built shingle table is persisted and releasable
-    assert release_intermediates(out) == 1
+    # the internally-built shingle table is persisted in the caller's scope
+    assert len(frames) == 1
 
 
 def test_dup_shingle_fraction_prebuilt_and_nulls(spark):
-    """A prebuilt shingle table yields identical results (and attaches no
+    """A prebuilt shingle table yields identical results (and persists no
     intermediate — the caller owns its cache). Degenerate texts follow the
     shingle_table sentinel contract: the two null texts share shingle 0 and
     score 1.0 against each other (exact_dedup's null-grouping policy); a
     lone blank text folds md5('') and stays unique."""
-    from xoverrr_spark.operators.dedup import (
-        dup_shingle_fraction, release_intermediates, shingle_table,
-    )
+    from xoverrr_spark.intermediates import persist, scope
+    from xoverrr_spark.operators.dedup import dup_shingle_fraction, shingle_table
 
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, "a b c x"), (3, None), (4, None), (5, "   ")],
         "doc_id int, text string",
     )
-    sh = shingle_table(df, "doc_id", "text").persist()
-    try:
-        pre = dup_shingle_fraction(df, "doc_id", "text", shingles=sh)
-        own = dup_shingle_fraction(df, "doc_id", "text")
-        rows_pre = sorted(pre.collect())
-        assert rows_pre == sorted(own.collect())
+    with scope():
+        sh = persist(shingle_table(df, "doc_id", "text"))
+        with scope() as pre_frames:
+            rows_pre = sorted(
+                dup_shingle_fraction(df, "doc_id", "text", shingles=sh).collect()
+            )
+        with scope() as own_frames:
+            rows_own = sorted(dup_shingle_fraction(df, "doc_id", "text").collect())
+        assert rows_pre == rows_own
         got = {r.doc_id: r.dup_fraction for r in rows_pre}
         assert got == {1: 0.5, 2: 0.5, 3: 1.0, 4: 1.0, 5: 0.0}
-        assert release_intermediates(pre) == 0
-        assert release_intermediates(own) == 1
-    finally:
-        sh.unpersist()
+        assert len(pre_frames) == 0
+        assert len(own_frames) == 1
 
 
 def test_contamination_scores_closed_form(spark):

@@ -94,7 +94,6 @@ def test_phash_near_dups_banding_and_verify(spark):
     """Known hamming distances on an explicit phash table: <=3 paired,
     >3 not — and a cross-band distance (bits spread over 4 bands) is
     correctly EXCLUDED by the exact verify even though banding may pair it."""
-    from xoverrr_spark.operators.dedup import release_intermediates
     from xoverrr_spark.operators.multimodal import phash_near_dups
     base = 0x0123456789ABCDE7
     rows = [
@@ -108,7 +107,6 @@ def test_phash_near_dups_banding_and_verify(spark):
     df = spark.createDataFrame(rows, "image_id string, phash long")
     got = phash_near_dups(df, max_hamming=3)
     pairs = {(r.img_a, r.img_b): r.hamming for r in got.collect()}
-    release_intermediates(got)
     assert pairs[("a", "b")] == 3
     assert pairs[("a", "c")] == 1
     assert pairs[("b", "c")] == 4 if ("b", "c") in pairs else True  # >3 filtered
@@ -121,14 +119,12 @@ def test_phash_near_dups_finds_reencoded_copy_from_pixels(spark):
     hamming 0; unrelated fixture images are not flooded into pairs."""
     from pyspark.sql import functions as F
     from xoverrr_spark.fixtures.images import images_df
-    from xoverrr_spark.operators.dedup import release_intermediates
     from xoverrr_spark.operators.multimodal import phash_near_dups
     imgs = images_df(spark, 24, seed=7).select("image_id", "bytes", "fmt")
     clone = imgs.limit(1).withColumn("image_id", F.lit("clone_0"))
     both = imgs.unionByName(clone)
     got = phash_near_dups(both, max_hamming=2)
     pairs = [(r.img_a, r.img_b, r.hamming) for r in got.collect()]
-    release_intermediates(got)
     assert any("clone_0" in (a, b) and h == 0 for a, b, h in pairs)
     # near-dup pairs must be a small fraction, not an all-pairs explosion
     assert len(pairs) < 24
@@ -174,7 +170,6 @@ def test_phash_robust_across_codecs(spark):
     import numpy as np
     from xoverrr_spark.codecs.dct import encode_dct
     from xoverrr_spark.codecs.png import encode_png
-    from xoverrr_spark.operators.dedup import release_intermediates
     from xoverrr_spark.operators.multimodal import compute_phash, phash_near_dups
 
     rng = np.random.default_rng(5)
@@ -186,7 +181,6 @@ def test_phash_robust_across_codecs(spark):
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
     got = phash_near_dups(compute_phash(df), max_hamming=4, bands=8)
     pairs = [(r.img_a, r.img_b, r.hamming) for r in got.collect()]
-    release_intermediates(got)
     assert pairs and pairs[0][2] <= 4, pairs
 
 

@@ -42,17 +42,16 @@ def test_curate_v2_perf_gate(spark):
     numbers). Guards against the unpersisted-branch regression: without
     the dd/keepr persists this plan recomputes the window dedup 4x."""
     import __spark_entry__ as e
-    from xoverrr_spark.operators.dedup import release_intermediates
+    from xoverrr_spark.intermediates import scope
 
     q = e.queries()["curate_documents_v2"]
-    df = q(spark, "/root/testdata/sf0.01")
-    df.count()  # warm
-    release_intermediates(df)
-    df = q(spark, "/root/testdata/sf0.01")
-    t0 = time.time()
-    df.count()
-    dt = time.time() - t0
-    release_intermediates(df)
+    with scope():
+        q(spark, "/root/testdata/sf0.01").count()  # warm
+    with scope():
+        df = q(spark, "/root/testdata/sf0.01")
+        t0 = time.time()
+        df.count()
+        dt = time.time() - t0
     assert dt < 15.0, f"curate_v2 took {dt:.2f}s at sf0.01"
 
 

@@ -228,7 +228,7 @@ def test_candidate_jaccard_fresh_build_is_restricted_and_shared(spark, tmp_path)
     # shingle-set frame must be persisted — it feeds BOTH sides of the
     # pair join, and Spark never reuses a self-join exchange (unpersisted,
     # the whole scan+collect_set ran twice: 93s -> 19s at 1M docs).
-    from xoverrr_spark.operators.dedup import candidate_jaccard, release_intermediates
+    from xoverrr_spark.operators.dedup import candidate_jaccard
 
     docs_p = str(tmp_path / "docs")
     spark.createDataFrame(
@@ -239,20 +239,17 @@ def test_candidate_jaccard_fresh_build_is_restricted_and_shared(spark, tmp_path)
     cands = spark.createDataFrame(
         [(0, 1), (2, 3)], "doc_a bigint, doc_b bigint")
     j = candidate_jaccard(docs, "doc_id", "text", cands)
-    try:
-        j.collect()
-        plan = _plan(j).split("== Initial Plan ==")[0]
-        # the docs table is scanned exactly ONCE (inside the cached sets
-        # build — without the persist the self-join ran the scan twice),
-        # and both pair-join sides read the cache (AQE prints the second
-        # reference as a reused stage, so >= 1 literal occurrence)
-        assert plan.count("FileScan parquet") == 1, plan
-        assert "InMemoryTableScan" in plan, plan
-        # the one docs scan sits under a semi-join (restriction before
-        # shingling), so the explode never sees non-candidate docs
-        assert "LeftSemi" in plan, plan
-    finally:
-        release_intermediates(j)
+    j.collect()
+    plan = _plan(j).split("== Initial Plan ==")[0]
+    # the docs table is scanned exactly ONCE (inside the cached sets
+    # build — without the persist the self-join ran the scan twice),
+    # and both pair-join sides read the cache (AQE prints the second
+    # reference as a reused stage, so >= 1 literal occurrence)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "InMemoryTableScan" in plan, plan
+    # the one docs scan sits under a semi-join (restriction before
+    # shingling), so the explode never sees non-candidate docs
+    assert "LeftSemi" in plan, plan
 
 
 def test_id_gaps_degenerate_inputs(spark):

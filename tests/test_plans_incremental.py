@@ -3,10 +3,7 @@
 
 def test_incremental_near_dups_no_shingle_join_no_self_join(spark):
     from pyspark.sql import functions as F
-    from xoverrr_spark.operators.dedup import (
-        incremental_near_dups,
-        release_intermediates,
-    )
+    from xoverrr_spark.operators.dedup import incremental_near_dups
 
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     new = corpus.filter(F.col("doc_id") % 7 == 0).select(
@@ -20,7 +17,6 @@ def test_incremental_near_dups_no_shingle_join_no_self_join(spark):
     # verify stage must stay candidate-bounded: no join keyed on
     # shingle_hash (the full co-occurrence join) anywhere
     assert not any("shingle_hash" in l for l in join_lines), join_lines
-    release_intermediates(nd)
 
 
 def test_bloom_decontaminate_positions_join_is_broadcast(spark):

@@ -213,7 +213,7 @@ def test_token_budget_mixture_validation(spark):
 
 
 def test_assemble_dataset_quarantine_direction_and_budget(spark):
-    from xoverrr_spark.operators.dedup import release_intermediates
+    from xoverrr_spark.intermediates import scope
     from xoverrr_spark.operators.splits import assemble_dataset, assign_splits
 
     # 60 docs over 3 sources; doc 0..59. Make doc 7's text duplicate
@@ -225,10 +225,10 @@ def test_assemble_dataset_quarantine_direction_and_budget(spark):
     df = spark.createDataFrame(rows)
     fr = {"train": 0.5, "val": 0.25, "test": 0.25}
     weights = {"s0": 1.0, "s1": 1.0}  # s2 unweighted -> sampled out visibly
-    out = assemble_dataset(df, "doc_id", "text", "source", fr, weights, 10_000, seed=5)
-    rows_out = out.collect()
-    released = release_intermediates(out)
-    assert released == 1  # the persisted split-assigned corpus
+    with scope() as frames:
+        out = assemble_dataset(df, "doc_id", "text", "source", fr, weights, 10_000, seed=5)
+        rows_out = out.collect()
+    assert len(frames) == 1  # the persisted split-assigned corpus
 
     splits = {r["doc_id"]: r["split"] for r in
               assign_splits(df, "doc_id", fr, seed=5).collect()}
@@ -253,7 +253,6 @@ def test_assemble_dataset_quarantine_direction_and_budget(spark):
 
 
 def test_assemble_dataset_deterministic(spark):
-    from xoverrr_spark.operators.dedup import release_intermediates
     from xoverrr_spark.operators.splits import assemble_dataset
 
     df = spark.range(200).selectExpr(
@@ -265,7 +264,6 @@ def test_assemble_dataset_deterministic(spark):
     b = assemble_dataset(df.repartition(11), "doc_id", "text", "source", fr, w, 300, seed=9)
     ra = sorted((r["doc_id"], r["split"]) for r in a.collect())
     rb = sorted((r["doc_id"], r["split"]) for r in b.collect())
-    release_intermediates(a); release_intermediates(b)
     assert ra == rb and len(ra) > 0
 
 

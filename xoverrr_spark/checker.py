@@ -22,7 +22,8 @@ report, the stats/details the method returns, and what the audit row
 persists. ``_run_check`` is the envelope, written once: run_id and
 ``CheckRunTimings``, report-format validation and the JSON envelope, the
 FAILED wrapping of any exception, the audit append, session tracking,
-one log line per run, and unpersisting every frame the body cached.
+one log line per run, and an ``intermediates.scope()`` around the body
+that frees every frame it persisted.
 
 Differences by design (Spark-first, not a port):
 - "tables" are Spark-readable identifiers (``spark.table``) or DataFrames —
@@ -45,13 +46,14 @@ import re
 import uuid
 import warnings
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
 from .exceptions import MetadataError
+from .intermediates import persist, scope
 from .logger import get_logger
 from .operators import diff as D
 from .operators import counts as C
@@ -119,20 +121,11 @@ class _Outcome:
 
 @dataclass
 class _CheckRun:
-    """One run's identity, timings and cached intermediates, as seen by a
-    check body."""
+    """One run's identity and timings, as seen by a check body."""
 
     name: str
     run_id: str
     timings: CheckRunTimings
-    cached: list = field(default_factory=list)
-
-    def cache(self, df: DataFrame) -> DataFrame:
-        """Persist ``df`` (lazily: no job runs here) and unpersist it when
-        the run ends."""
-        df = df.persist()
-        self.cached.append(df)
-        return df
 
     @contextmanager
     def query(self, side: str):
@@ -177,7 +170,8 @@ class QualityChecker:
         error = None
         try:
             fmt = validate_report_output_format(report_output_format)
-            out = body(run)
+            with scope():
+                out = body(run)
             report = out.report
             if fmt == "json":
                 report = check_result_json(
@@ -194,9 +188,6 @@ class QualityChecker:
             error = exc
             out = _Outcome(D.CHECK_FAILED, f"check failed with error: {exc}")
             result = (out.status, out.report, None, None)
-        finally:
-            for df in run.cached:
-                df.unpersist()
         run.timings.finish_run()
         if self.results_table:
             try:
@@ -401,7 +392,7 @@ class QualityChecker:
             for side, table in (("source", source_table), ("target", target_table)):
                 with run.query(side):
                     df = self._date_filter(self._resolve(table), date_column, date_range)
-                    daily.append(run.cache(C.daily_counts(df, date_column)))
+                    daily.append(persist(C.daily_counts(df, date_column)))
                     daily[-1].count()
             with run.dataset_check():
                 cstats = C.check_counts_from_daily(*daily)
@@ -462,10 +453,10 @@ class QualityChecker:
             if not cols:
                 raise ValueError("no common columns to profile")
             with run.query("source"):
-                ps = run.cache(P.profile(src, cols))
+                ps = persist(P.profile(src, cols))
                 ps.count()
             with run.query("target"):
-                pt = run.cache(P.profile(trg, cols))
+                pt = persist(P.profile(trg, cols))
                 pt.count()
             with run.dataset_check():
                 rows = P.drift_from_profiles(ps, pt).orderBy("column_name").collect()
@@ -625,7 +616,7 @@ class QualityChecker:
                 ).collect()[0]
 
             with run.dataset_check():
-                gaps = run.cache(id_gaps(src.where(in_window), key_column, bucket_bits))
+                gaps = persist(id_gaps(src.where(in_window), key_column, bucket_bits))
                 agg = gaps.agg(
                     F.count(F.lit(1)).alias("gap_count"),
                     F.coalesce(F.sum("missing"), F.lit(0)).alias("missing_total"),
@@ -808,7 +799,7 @@ class QualityChecker:
 
             child_cols = [c for c, _ in pairs]
             with run.dataset_check():
-                orphan_frame = run.cache(fk_orphans(
+                orphan_frame = persist(fk_orphans(
                     child, parent, pairs, broadcast_parent=broadcast_parent
                 ))
                 orphan_count = orphan_frame.count()
@@ -882,7 +873,7 @@ class QualityChecker:
         here assumes it is small."""
         sla = max_lag_hours * 3600.0
         with run.query("source"), run.dataset_check():
-            grouped = run.cache(P.freshness_by_group(
+            grouped = persist(P.freshness_by_group(
                 src, ts_column, group_by, as_of=as_of))
             stale_pred = (
                 F.col("lag_seconds").isNull()
@@ -1116,7 +1107,7 @@ class QualityChecker:
             src = self._date_filter(
                 self._resolve(source_table), date_column, date_range)
             with run.query("source"), run.dataset_check():
-                grouped = run.cache(key_duplication(src, key_columns))
+                grouped = persist(key_duplication(src, key_columns))
                 stats_row = duplicate_key_stats(grouped, key_columns).collect()[0]
                 examples = [
                     tuple(r[c] for c in key_columns) + (int(r["row_count"]),)
@@ -1245,13 +1236,13 @@ class QualityChecker:
                 self._resolve(source_table), date_column, date_range)
             with run.query("source"), run.dataset_check():
                 n_rows = src.count()
-                leaked = run.cache(split_leakage(
+                leaked = persist(split_leakage(
                     src, id_column, text_column, split_column))
                 n_exact = leaked.count()
                 leaked_ids = leaked.select(F.col(id_column), F.col(split_column))
                 n_nd_pairs = 0
                 if near_dup_pairs is not None:
-                    ndp = run.cache(near_dup_pair_leakage(
+                    ndp = persist(near_dup_pair_leakage(
                         self._resolve(near_dup_pairs),
                         src.select(id_column, split_column),
                         id_column, split_column,
@@ -1266,7 +1257,7 @@ class QualityChecker:
                         F.col("split_b").alias(split_column),
                     ))
                     leaked_ids = leaked_ids.unionByName(nd_ids)
-                all_leaked = run.cache(leaked_ids.distinct())
+                all_leaked = persist(leaked_ids.distinct())
                 n_leaked = all_leaked.count()
                 by_split = sorted(
                     ((r[split_column], int(r["c"])) for r in

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokens import fingerprint, md5_long
+from ..intermediates import persist, scope
 
 # Affine permutations (a*x+b) mod 2^40 with ODD a: for odd a the map is a
 # bijection on Z_2^40, so each hash index i applies a genuinely different
@@ -259,31 +260,6 @@ def minhash_signature(
 DEFAULT_MAX_BUCKET = 200
 
 
-def _attach_intermediates(result: DataFrame, frames) -> DataFrame:
-    """Record persisted intermediate frames on the RESULT DataFrame so a
-    long-lived driver can free them deterministically once the result has
-    been materialized/written (``release_intermediates``). The functions
-    themselves stay lazy — an eager unpersist inside them would silently
-    re-run the bucket join twice when the caller finally acts."""
-    existing = list(getattr(result, "_xoverrr_intermediates", ()))
-    result._xoverrr_intermediates = existing + [f for f in frames if f is not None]
-    return result
-
-
-def release_intermediates(df: DataFrame) -> int:
-    """Unpersist every cached intermediate attached to ``df`` (see
-    ``_attach_intermediates``). Call AFTER materializing/writing ``df`` —
-    the result is lazy, so releasing earlier re-triggers the double
-    compute the caches exist to prevent. Returns the number of frames
-    released. Long-lived sessions (the runner, notebook drivers) should
-    call this per result; short-lived jobs can rely on session teardown."""
-    frames = list(getattr(df, "_xoverrr_intermediates", ()))
-    for f in frames:
-        f.unpersist()
-    df._xoverrr_intermediates = []
-    return len(frames)
-
-
 def _cap_buckets(buckets: DataFrame, max_bucket_size: int | None) -> DataFrame:
     """Drop rows of over-cap buckets via a window count over (band, bkey) —
     ONE shuffle on the same key the downstream self-join uses (the join
@@ -311,18 +287,17 @@ def _capped_bucket_self_join(buckets: DataFrame, max_bucket_size: int | None) ->
     shingle explode + k-min aggregation — the most expensive stage —
     executes twice. Caching costs ~40 bytes/doc/band; LRU eviction
     reclaims it under pressure (an eager unpersist would re-trigger the
-    double compute because the result is lazy); callers can free it
-    deterministically after materializing via ``release_intermediates``."""
-    buckets = _cap_buckets(buckets, max_bucket_size).persist()
+    double compute because the result is lazy); the caller's
+    ``intermediates.scope()`` frees it once the result is materialized."""
+    buckets = persist(_cap_buckets(buckets, max_bucket_size))
     a = buckets.alias("a")
     b2 = buckets.alias("b")
-    pairs = (
+    return (
         a.join(b2, ["band", "bkey"])
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return _attach_intermediates(pairs, [buckets])
 
 
 def _lsh_buckets(signatures: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -409,11 +384,10 @@ def candidate_jaccard(
     )
     if shingles is not None:
         # prebuilt (persisted) shingle table: restrict its rows, regroup
-        sets = (
+        sets = persist(
             shingles.join(cand_ids, "doc_id", "left_semi")
             .groupBy("doc_id")
             .agg(F.collect_set("shingle_hash").alias("shset"))
-            .persist()
         )
     else:
         # no prebuilt table: restrict the DOCS before shingling — the
@@ -424,12 +398,11 @@ def candidate_jaccard(
         docs_cand = df.join(
             cand_ids.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
         )
-        sets = shingle_sets(docs_cand, id_col, text_col, shingle_n).persist()
+        sets = persist(shingle_sets(docs_cand, id_col, text_col, shingle_n))
     # `sets` feeds BOTH sides of the pair join; without the persist the
     # whole shingle scan would execute twice (Spark never reuses a
     # self-join exchange — measured 93s -> ~45s at 1M docs)
-    out = _pairs_jaccard_from_sets(candidates, sets)
-    return _attach_intermediates(out, [sets])
+    return _pairs_jaccard_from_sets(candidates, sets)
 
 
 def _pairs_jaccard_from_sets(candidates: DataFrame, sets: DataFrame) -> DataFrame:
@@ -472,20 +445,16 @@ def minhash_near_dups(
     already had; now both consumers read the arrays directly, and the
     md5+fold map stage remains the only scan-side work). The candidate
     pair set is persisted so its two consumers share one LSH bucket
-    join. Both caches are LRU-evicted under pressure; after
-    materializing the result, call ``release_intermediates(result)`` to
-    free them deterministically (long-lived sessions otherwise
-    accumulate disk-spilled blocks that eviction never reclaims —
-    ADVICE r02).
+    join. Both caches are LRU-evicted under pressure; the caller's
+    ``intermediates.scope()`` frees them deterministically once the result
+    is materialized (long-lived sessions otherwise accumulate
+    disk-spilled blocks that eviction never reclaims — ADVICE r02).
     """
-    sets = shingle_sets(df, id_col, text_col, shingle_n).persist()
+    sets = persist(shingle_sets(df, id_col, text_col, shingle_n))
     sig = minhash_signature_from_sets(sets, num_hashes)
-    cands = lsh_candidate_pairs(sig, num_hashes, bands, max_bucket_size)
-    inner = list(getattr(cands, "_xoverrr_intermediates", ()))
-    cands = cands.persist()
+    cands = persist(lsh_candidate_pairs(sig, num_hashes, bands, max_bucket_size))
     j = _pairs_jaccard_from_sets(cands, sets)
-    out = j.filter(F.col("jaccard") >= jaccard_threshold).select("doc_a", "doc_b", "jaccard")
-    return _attach_intermediates(out, inner + [sets, cands])
+    return j.filter(F.col("jaccard") >= jaccard_threshold).select("doc_a", "doc_b", "jaccard")
 
 
 def ngram_jaccard(
@@ -576,10 +545,8 @@ def dup_shingle_fraction(
     /root/reference/src/xoverrr/utils.py:262) with a corpus-statistics
     rule a single-node engine has no analogue for.
     """
-    own = None
     if shingles is None:
-        own = shingle_table(df, id_col, text_col, n).persist()
-        shingles = own
+        shingles = persist(shingle_table(df, id_col, text_col, n))
     dup = (
         shingles.groupBy("shingle_hash")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -587,7 +554,7 @@ def dup_shingle_fraction(
         .drop("_df")
         .withColumn("_dup", F.lit(1))
     )
-    out = (
+    return (
         shingles.join(dup, "shingle_hash", "left")
         .groupBy("doc_id")
         .agg(
@@ -599,7 +566,6 @@ def dup_shingle_fraction(
             F.col("n_dup_shingles").cast("double") / F.col("n_shingles"),
         )
     )
-    return _attach_intermediates(out, [own])
 
 
 SIMHASH_BANDS = 4  # pigeonhole: hamming <= 3 pairs share at least one band
@@ -635,9 +601,8 @@ def simhash_near_dups(
         ])).alias("bb"),
     ).select("doc_id", "simhash", "bb.band", "bb.bkey")
     # persisted for the same self-join double-compute reason as
-    # _capped_bucket_self_join (the 48-column simhash agg runs once);
-    # freed via release_intermediates(result) after materialization
-    bands = _cap_buckets(bands, max_bucket_size).persist()
+    # _capped_bucket_self_join (the 48-column simhash agg runs once)
+    bands = persist(_cap_buckets(bands, max_bucket_size))
     a, b = bands.alias("a"), bands.alias("b")
     cands = (
         a.join(b, ["band", "bkey"])
@@ -648,7 +613,7 @@ def simhash_near_dups(
         )
         .distinct()
     )
-    return _attach_intermediates(cands.filter(F.col("hamming") <= max_hamming), [bands])
+    return cands.filter(F.col("hamming") <= max_hamming)
 
 
 class ClusteringNotConverged(RuntimeError):
@@ -685,57 +650,58 @@ def cluster_near_dups(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     component. Raises ClusteringNotConverged instead of returning silently
     split clusters when max_iter is insufficient (ADVICE r01).
     """
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .distinct()
-        .cache()
-    )
-    # checkpointed so every _changed_count_frame compares two materialized
-    # RDDs (the initial distinct would otherwise re-run under the compare)
-    labels = (
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.doc_id)
-            .groupBy(F.col("a").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
+    # edges feed every iteration's join; labels come back checkpointed, so
+    # the scope frees the edge cache before returning
+    with scope():
+        edges = persist(
+            pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+            .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+            .distinct()
         )
-        # pointer doubling: label of my label (cluster_id -> that node's label)
-        parent = labels.select(
-            F.col("doc_id").alias("cluster_id"), F.col("cluster_id").alias("grand")
+        # checkpointed so every _changed_count_frame compares two materialized
+        # RDDs (the initial distinct would otherwise re-run under the compare)
+        labels = (
+            edges.select(F.col("a").alias("doc_id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("doc_id"))
+            .localCheckpoint(eager=True)
         )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .join(parent, "cluster_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce("nbr_min", F.col("cluster_id")),
-                    F.coalesce("grand", F.col("cluster_id")),
-                ).alias("cluster_id"),
+        converged = False
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.b == labels.doc_id)
+                .groupBy(F.col("a").alias("doc_id"))
+                .agg(F.min("cluster_id").alias("nbr_min"))
             )
-        )
-        # checkpoint FIRST, then count changes from the materialized frame:
-        # the propagation joins execute exactly once per iteration
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = _changed_count_frame(new_labels, labels).count()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise ClusteringNotConverged(
-            f"label propagation still changing after {max_iter} iterations; "
-            "raise max_iter (doubling converges in O(log diameter))"
-        )
+            # pointer doubling: label of my label (cluster_id -> that node's label)
+            parent = labels.select(
+                F.col("doc_id").alias("cluster_id"), F.col("cluster_id").alias("grand")
+            )
+            new_labels = (
+                labels.join(neighbor_min, "doc_id", "left")
+                .join(parent, "cluster_id", "left")
+                .select(
+                    "doc_id",
+                    F.least(
+                        F.col("cluster_id"),
+                        F.coalesce("nbr_min", F.col("cluster_id")),
+                        F.coalesce("grand", F.col("cluster_id")),
+                    ).alias("cluster_id"),
+                )
+            )
+            # checkpoint FIRST, then count changes from the materialized frame:
+            # the propagation joins execute exactly once per iteration
+            new_labels = new_labels.localCheckpoint(eager=True)
+            changed = _changed_count_frame(new_labels, labels).count()
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
+        if not converged:
+            raise ClusteringNotConverged(
+                f"label propagation still changing after {max_iter} iterations; "
+                "raise max_iter (doubling converges in O(log diameter))"
+            )
     return labels
 
 
@@ -947,10 +913,10 @@ def incremental_near_dups(
     """
     if corpus_shingles is None and corpus is None:
         raise ValueError("pass either corpus or corpus_shingles")
-    new_sh = shingle_table(new_docs, id_col, text_col, shingle_n).persist()
-    new_buckets = _lsh_buckets(
+    new_sh = persist(shingle_table(new_docs, id_col, text_col, shingle_n))
+    new_buckets = persist(_lsh_buckets(
         minhash_signature_from_shingles(new_sh, num_hashes), num_hashes, bands
-    ).persist()
+    ))
 
     corpus_sh = (
         corpus_shingles
@@ -972,11 +938,10 @@ def incremental_near_dups(
     cb = corpus_buckets.select(
         F.col("doc_id").alias("corpus_id"), "band", "bkey"
     )
-    cands = (
+    cands = persist(
         nb.join(cb, ["band", "bkey"])
         .select(F.col("new_id").alias("doc_a"), F.col("corpus_id").alias("doc_b"))
         .distinct()
-        .persist()
     )
     if check_disjoint_ids:
         ndup = (
@@ -986,8 +951,6 @@ def incremental_near_dups(
         )
         hits = [r.doc_id for r in ndup.limit(5).collect()]
         if hits:
-            for frame in (new_sh, new_buckets, cands):
-                frame.unpersist()
             raise ValueError(
                 "incremental_near_dups: new-batch doc ids collide with "
                 f"corpus doc ids (examples: {hits}) — colliding ids would "
@@ -1000,8 +963,7 @@ def incremental_near_dups(
         new_docs, id_col, text_col, cands, shingle_n,
         shingles=new_sh.unionByName(corpus_sh),
     )
-    j_inner = list(getattr(j, "_xoverrr_intermediates", ()))
-    out = (
+    return (
         j.filter(F.col("jaccard") >= jaccard_threshold)
         .select(
             F.col("doc_a").alias("new_id"),
@@ -1009,7 +971,6 @@ def incremental_near_dups(
             "jaccard",
         )
     )
-    return _attach_intermediates(out, j_inner + [new_sh, new_buckets, cands])
 
 
 # ------------------------------------------------- bloom decontamination ----

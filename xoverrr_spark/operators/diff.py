@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import canonicalize_pair
+from ..intermediates import persist, scope
 from ..session import local_rows
 
 DEFAULT_MAX_EXAMPLES = 3  # reference constants.py:7
@@ -307,12 +308,12 @@ def compare_frames(
     materializes the cache; every follow-up is a short job over the cached
     partitions, and a follow-up whose kind the stats row counts zero of
     (no source-only keys, no dups, no differing rows, ...) is skipped — it
-    could only return nothing. unpersist() in finally keeps executor
-    storage bounded.
+    could only return nothing. The cache lives in this call's own
+    ``intermediates.scope()``, so executor storage stays bounded.
     """
     j, vals = diff_joined(src, trg, keys, normalize)
-    j = j.persist()
-    try:
+    with scope():
+        j = persist(j)
         row = _stats_row_from_joined(j, vals).collect()[0].asDict()
         if row["total_source_rows"] == 0 and row["total_target_rows"] == 0:
             return None, None
@@ -377,8 +378,6 @@ def compare_frames(
                     for r in _issue_examples_from_joined(j, vals, keys, max_examples).collect()
                 ]
         return stats, details
-    finally:
-        j.unpersist()
 
 
 def check_status(stats: CheckStats | None, tolerance_pct: float = 0.0) -> str:

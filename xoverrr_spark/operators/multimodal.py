@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..codecs.png import decode_image, psnr, quantize_lossy
+from ..intermediates import persist
 
 IMAGE_STATS_SCHEMA = (
     "image_id string, ok boolean, h int, w int, mean_r double, mean_g double, "
@@ -249,9 +250,9 @@ def phash_near_dups(
     (e.g. millions of monochrome thumbnails share one phash); default
     None = exact recall. Defaults mirror simhash_near_dups; the band
     table is persisted across the self-join (exchanges are never reused)
-    and freed via ``dedup.release_intermediates(result)``.
+    and freed by the caller's ``intermediates.scope()``.
     """
-    from .dedup import _attach_intermediates, _cap_buckets
+    from .dedup import _cap_buckets
 
     if max_hamming >= bands:
         raise ValueError("max_hamming must be < bands for the pigeonhole")
@@ -275,7 +276,7 @@ def phash_near_dups(
             for b in range(bands)
         ])).alias("bb"),
     ).select("doc_id", "phash", "bb.band", "bb.bkey")
-    bt = _cap_buckets(bt, max_bucket_size).persist()
+    bt = persist(_cap_buckets(bt, max_bucket_size))
     a, b2 = bt.alias("a"), bt.alias("b")
     pairs = (
         a.join(b2, ["band", "bkey"])
@@ -287,9 +288,7 @@ def phash_near_dups(
         )
         .distinct()
     )
-    return _attach_intermediates(
-        pairs.filter(F.col("hamming") <= max_hamming), [bt]
-    )
+    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 AUDIO_FEATURES_SCHEMA = (

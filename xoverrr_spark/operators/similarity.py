@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..intermediates import persist
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -307,24 +309,24 @@ def embedding_near_dups(
     the exact cosine. The bucket table (with its 2x``bands`` plane-dot
     projections) is PERSISTED before the self-join — Spark never reuses an
     exchange across a self-join's two sides, so without the cache every
-    plane dot runs twice; free it with ``dedup.release_intermediates``
-    after materializing. ``max_bucket_size`` caps degenerate buckets (a
-    flood of identical/zero vectors — failed encoders are common in
-    scraped corpora — lands in ONE bucket in EVERY band and self-joins
-    quadratically); the cap is the same replayable HAVING predicate as
+    plane dot runs twice; the caller's ``intermediates.scope()`` frees it
+    once the result is materialized. ``max_bucket_size`` caps degenerate
+    buckets (a flood of identical/zero vectors — failed encoders are
+    common in scraped corpora — lands in ONE bucket in EVERY band and
+    self-joins quadratically); the cap is the same replayable HAVING predicate as
     the text-LSH cap, and ``dedup.bucket_size_stats`` audits what it
     drops. Recall at the threshold is 1-(1-p^r)^m with
     p = 1-acos(threshold)/pi (~0.999 at cos 0.95 with 4x2 planes); the
     DuckDB oracle replays the identical planes and IEEE fold order, so the
     driver parity check is exact, not recall-bounded.
     """
-    from .dedup import _attach_intermediates, _cap_buckets
+    from .dedup import _cap_buckets
 
     v = corpus.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("ve"))
     buckets = embedding_band_buckets(
         corpus, id_col, vec_col, bands, planes_per_band, dim, seed
     )
-    buckets = _cap_buckets(buckets, max_bucket_size).persist()
+    buckets = persist(_cap_buckets(buckets, max_bucket_size))
     a, b = buckets.alias("a"), buckets.alias("b")
     cands = (
         a.join(b, ["band", "bkey"])
@@ -332,13 +334,12 @@ def embedding_near_dups(
         .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
         .distinct()
     )
-    out = (
+    return (
         cands.join(v.select(F.col("vid").alias("id_a"), F.col("ve").alias("va")), "id_a")
         .join(v.select(F.col("vid").alias("id_b"), F.col("ve").alias("vb")), "id_b")
         .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
-    return _attach_intermediates(out, [buckets])
 
 
 def embedding_near_dups_exact(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.tokens import fingerprint, md5_long, md5_long_sql, ws_token_count
+from ..intermediates import persist
 
 # The hash space of md5_long: first 15 hex chars of md5 = 60 bits.
 SPLIT_SPACE = 1 << 60
@@ -354,10 +355,11 @@ def assemble_dataset(
     Plan shape: the split-assigned corpus is persisted ONCE (it feeds
     the leakage audit twice, the training branch, and the eval branch —
     without the cache the scan+fingerprint would run 5x); the leaked-id
-    and rate frames are tiny and broadcast. The caller frees the cache
-    with ``dedup.release_intermediates(result)`` after materializing.
+    and rate frames are tiny and broadcast. The caller's
+    ``intermediates.scope()`` frees the cache once the result is
+    materialized.
     """
-    own = assign_splits(df, id_col, fractions, seed=seed).persist()
+    own = persist(assign_splits(df, id_col, fractions, seed=seed))
     leaked = split_leakage(own, id_col, text_col, "split")
     # alias the quarantine key: drop_train derives from `own`, so joining
     # on own[id] == drop_train[id] is the classic self-join attribute
@@ -392,14 +394,11 @@ def assemble_dataset(
         )
         .select(id_col, "split", source_col)
     )
-    out = (
+    return (
         clean.filter(F.col("split") != train_split)
         .select(id_col, "split", source_col)
         .unionByName(sampled_train)
     )
-    from .dedup import _attach_intermediates
-
-    return _attach_intermediates(out, [own])
 
 
 def near_dup_pair_leakage(

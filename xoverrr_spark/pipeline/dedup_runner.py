@@ -15,8 +15,9 @@ of re-shingling the corpus:
 
 Staging between stages is also what a 100 TB run needs operationally: the
 signature/candidate tables are the natural retry+audit boundaries, and
-writing them keeps each stage's shuffle lineage short. Persisted in-op
-caches are freed per stage via ``dedup.release_intermediates``.
+writing them keeps each stage's shuffle lineage short. Each stage builds
+and writes inside one ``intermediates.scope()``, which frees the stage's
+persisted in-op caches.
 
 Beyond-reference operator composition (round brief); job shape mirrors the
 reference's runner conventions (checkpointed stages, one summary JSON).
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokens import quality_score
+from ..intermediates import scope
 from ..operators import dedup as D
 
 
@@ -49,9 +51,8 @@ def _stage(
         log(f"stage {name}: complete, skipping")
         return path
     t0 = time.time()
-    df = build()
-    df.write.mode("overwrite").parquet(path)
-    D.release_intermediates(df)
+    with scope():
+        build().write.mode("overwrite").parquet(path)
     wall = time.time() - t0
     if walls is not None:
         walls[name] = round(wall, 2)
@@ -108,15 +109,9 @@ def run_dedup(
 
     def _pairs():
         j = D.candidate_jaccard(docs, id_col, text_col, cands, shingle_n)
-        out = j.filter(F.col("jaccard") >= jaccard_threshold).select(
+        return j.filter(F.col("jaccard") >= jaccard_threshold).select(
             "doc_a", "doc_b", "jaccard"
         )
-        # carry j's persisted shingle-set cache onto the derived frame so
-        # _stage's release_intermediates frees it after the write
-        out._xoverrr_intermediates = list(
-            getattr(j, "_xoverrr_intermediates", ())
-        )
-        return out
 
     pairs_p = _stage("pairs", output_dir, resume, _pairs, log, walls=walls)
     pairs = spark.read.parquet(pairs_p)

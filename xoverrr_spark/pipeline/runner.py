@@ -45,6 +45,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..intermediates import persist, scope
 from ..operators.sniff import drop_reason_breakdown
 from ..session import local_rows
 from .quality_filter import quality_filter
@@ -119,25 +120,25 @@ def _run_bucket(
         part = part.repartition(salt_partitions, F.xxhash64("image_id"))
     from ..sources import write_parquet_sized
 
-    if write_kept:
-        from .quality_filter import OUTPUT_COLUMNS, annotate
-
-        # ONE annotate feeds both outputs (persisted: branches of a plan
-        # never share execution); decisions stay the decision projection
-        ann = annotate(part, ppl_udf_override=ppl_udf_override).persist()
-        decisions = ann.select(*OUTPUT_COLUMNS)
-    else:
-        ann = None
-        decisions = quality_filter(part, ppl_udf_override=ppl_udf_override)
     dec_path = os.path.join(output_dir, "decisions", f"bucket={b}")
-    write_parquet_sized(decisions, dec_path, target_files=files_per_bucket)
-    if ann is not None:
-        write_parquet_sized(
-            ann.filter("keep"),
-            os.path.join(output_dir, "kept", f"bucket={b}"),
-            target_files=files_per_bucket,
-        )
-        ann.unpersist()
+    # this bucket's own scope: pool threads start with no scope open
+    with scope():
+        if write_kept:
+            from .quality_filter import OUTPUT_COLUMNS, annotate
+
+            # ONE annotate feeds both outputs (persisted: branches of a plan
+            # never share execution); decisions stay the decision projection
+            ann = persist(annotate(part, ppl_udf_override=ppl_udf_override))
+            decisions = ann.select(*OUTPUT_COLUMNS)
+        else:
+            decisions = quality_filter(part, ppl_udf_override=ppl_udf_override)
+        write_parquet_sized(decisions, dec_path, target_files=files_per_bucket)
+        if write_kept:
+            write_parquet_sized(
+                ann.filter("keep"),
+                os.path.join(output_dir, "kept", f"bucket={b}"),
+                target_files=files_per_bucket,
+            )
 
     dec_out = spark.read.parquet(dec_path)
     metrics = drop_reason_breakdown(dec_out).withColumn("run_id", F.lit(run_id))
@@ -220,15 +221,16 @@ def _drop_image_near_dups(
     are written to ``image_dups/`` (resumable via _SUCCESS), and the
     returned frame is the input minus the dropped ids (left_anti — the
     survivor keeps flowing)."""
-    from ..operators.dedup import cluster_near_dups, release_intermediates
+    from ..operators.dedup import cluster_near_dups
     from ..operators.multimodal import phash_near_dups
 
     path = os.path.join(output_dir, "image_dups")
     if not (resume and os.path.exists(os.path.join(path, "_SUCCESS"))):
-        pairs = phash_near_dups(images, max_hamming=max_hamming)
-        labels = cluster_near_dups(
-            pairs.select(F.col("img_a").alias("doc_a"), F.col("img_b").alias("doc_b"))
-        )
+        with scope():
+            pairs = phash_near_dups(images, max_hamming=max_hamming)
+            labels = cluster_near_dups(
+                pairs.select(F.col("img_a").alias("doc_a"), F.col("img_b").alias("doc_b"))
+            )
         surv = labels.groupBy("cluster_id").agg(F.min("doc_id").alias("survivor_id"))
         dropped = (
             labels.join(surv, "cluster_id")
@@ -236,7 +238,6 @@ def _drop_image_near_dups(
             .select(F.col("doc_id").alias("image_id"), "survivor_id")
         )
         dropped.write.mode("overwrite").parquet(path)
-        release_intermediates(pairs)
     dropped = spark.read.parquet(path)
     n = dropped.count()
     return images.join(dropped.select("image_id"), "image_id", "left_anti"), n
