@@ -4,13 +4,19 @@
 ``queries()``     — one Spark callable per implemented operator (SURVEY.md §2
                     + training-data ops), each over the parquet tables in a
                     given sf_dir.
-``oracle_sql()``  — the DuckDB twin of each query (built in
-                    ``xoverrr_spark/oracle.py`` from the same constants the
-                    Spark plans use).
+``oracle_sql()``  — the DuckDB twin of each query: ``oracle.<same name>()``
+                    in ``xoverrr_spark/oracle.py``, built from the same
+                    constants the Spark plans use. Each query is named once,
+                    in ``queries()``; a query without a twin fails loudly
+                    in ``oracle_sql()``. A twin that is plain SQL text runs
+                    on Spark verbatim through ``_tpch_sql``, so there is
+                    one text per query.
 """
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,17 +51,24 @@ from xoverrr_spark.operators.similarity import cosine_topk, embedding_near_dups
 from xoverrr_spark.pipeline.quality_filter import quality_filter
 
 
-import functools
-
-
-@functools.lru_cache(maxsize=None)
 def _row_groups_and_rows(path: str) -> tuple[int, int]:
     """(num_row_groups, num_rows) of a local parquet file — the EFFECTIVE
     scan parallelism signal. Spark splits a file by byte ranges, but one
     row group is always read by exactly one task, so a 6 MB single-row-
     group file computes its whole map stage on ONE core regardless of
     maxPartitionBytes (guide §2.5 "input skew": one huge unsplittable
-    file). Unknown layouts report as fully splittable (no rebalance)."""
+    file). Unknown layouts report as fully splittable (no rebalance).
+    The footer read is cached per (path, mtime, size), so a file
+    rewritten at the same path is read again."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return 1 << 30, 0
+    return _footer_layout(path, st.st_mtime_ns, st.st_size)
+
+
+@functools.lru_cache(maxsize=256)
+def _footer_layout(path: str, mtime_ns: int, size: int) -> tuple[int, int]:
     try:
         import pyarrow.parquet as pq
 
@@ -1201,21 +1214,7 @@ def q_q4_order_priority(spark, sf_dir):
     Catalyst rewrites the subquery to a left-semi hash join on
     l_orderkey; the date filter pushes to the orders scan. The fixture
     lacks l_commitdate, so l_returnflag='R' plays the late-line role."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_q4")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q4")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM orders_q4 o
-        WHERE CAST(o.o_orderdate AS DATE) >= DATE '1996-01-01'
-          AND CAST(o.o_orderdate AS DATE) < DATE '1996-04-01'
-          AND EXISTS (
-            SELECT 1 FROM lineitem_q4 l
-            WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
-          )
-        GROUP BY o_orderpriority
-        """
-    )
+    return _tpch_sql(spark, sf_dir, oracle.q4_order_priority(), "q4")
 
 
 def q_q13_customer_distribution(spark, sf_dir):
@@ -1223,20 +1222,7 @@ def q_q13_customer_distribution(spark, sf_dir):
     a two-level aggregation (per-customer count -> count distribution).
     Zero-order customers must survive into the c_count=0 bucket — the
     exclusion predicate lives in the JOIN condition, not a WHERE."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_q13")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_q13")
-    return spark.sql(
-        """
-        SELECT c_count, COUNT(*) AS custdist
-        FROM (
-          SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-          FROM customer_q13 c LEFT OUTER JOIN orders_q13 o
-            ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-          GROUP BY c.c_custkey
-        ) c_orders
-        GROUP BY c_count
-        """
-    )
+    return _tpch_sql(spark, sf_dir, oracle.q13_customer_distribution(), "q13")
 
 
 def q_q16_parts_supplier(spark, sf_dir):
@@ -1244,47 +1230,16 @@ def q_q16_parts_supplier(spark, sf_dir):
     Catalyst's null-aware anti join (the NOT IN subquery column is
     non-null here, so it stays a broadcast anti-join, not the O(n*m)
     null-aware fallback). lineitem stands in for partsupp."""
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part_q16")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q16")
-    _t(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_q16")
-    return spark.sql(
-        """
-        SELECT p.p_brand, p.p_type, p.p_size,
-               COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-        FROM part_q16 p JOIN lineitem_q16 l ON p.p_partkey = l.l_partkey
-        WHERE p.p_brand <> 'Brand#2'
-          AND p.p_size IN (11, 14, 23, 45, 19, 3, 36, 9)
-          AND l.l_suppkey NOT IN (
-            SELECT s_suppkey FROM supplier_q16 WHERE s_acctbal < 0
-          )
-        GROUP BY p.p_brand, p.p_type, p.p_size
-        """
-    )
+    return _tpch_sql(spark, sf_dir, oracle.q16_parts_supplier(), "q16")
 
 
 def q_q18_large_volume(spark, sf_dir):
     """TPC-H Q18 shape: IN-subquery over a HAVING aggregate — Catalyst
     plans a left-semi against the grouped lineitem quantities. Threshold
     tuned to the fixture's ~4 lines x uniform(1..50) per order."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_q18")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_q18")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q18")
-    return _decimals_to_double(spark.sql(
-        """
-        SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-               CAST(o.o_totalprice AS DECIMAL(18,2)) AS o_totalprice,
-               CAST(SUM(l.l_quantity) AS BIGINT) AS total_qty
-        FROM customer_q18 c
-        JOIN orders_q18 o ON c.c_custkey = o.o_custkey
-        JOIN lineitem_q18 l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey IN (
-          SELECT l_orderkey FROM lineitem_q18
-          GROUP BY l_orderkey HAVING SUM(l_quantity) > 280
-        )
-        GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-                 o.o_totalprice
-        """
-    ))
+    return _decimals_to_double(
+        _tpch_sql(spark, sf_dir, oracle.q18_large_volume(), "q18")
+    )
 
 
 def q_q22_global_sales(spark, sf_dir):
@@ -1294,30 +1249,7 @@ def q_q22_global_sales(spark, sf_dir):
     engines; a float AVG threshold could flip boundary rows per engine).
     The fixture has no c_phone; the customer-number digits play the
     country-code role."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_q22")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_q22")
-    return spark.sql(
-        """
-        SELECT cntrycode, COUNT(*) AS numcust,
-               CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        FROM (
-          SELECT substring(c.c_name, 17, 2) AS cntrycode, c.c_acctbal
-          FROM customer_q22 c
-          WHERE CAST(c.c_acctbal AS DECIMAL(18,2)) * (
-            SELECT COUNT(*) FROM customer_q22 WHERE c_acctbal > 0.0
-          ) > (
-            SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2)))
-            FROM customer_q22 WHERE c_acctbal > 0.0
-          )
-          AND NOT EXISTS (
-            SELECT 1 FROM orders_q22 o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderpriority = '1-URGENT'
-          )
-        ) custsale
-        GROUP BY cntrycode
-        """
-    )
+    return _tpch_sql(spark, sf_dir, oracle.q22_global_sales(), "q22")
 
 
 _TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
@@ -1327,10 +1259,11 @@ _TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
 def _tpch_sql(spark, sf_dir, sql, tag):
     """Execute an oracle TPC-H shape twin's SQL text on Spark verbatim.
 
-    The round-5 TPC-H additions (q2/q6/q9/q10/q11/q14/q15/q17/q19/q20/
-    q21) are written in the DuckDB ∩ Spark SQL dialect intersection
-    (DATE literals, EXTRACT(year), DECIMAL casts, correlated scalar
-    subqueries, EXISTS/IN) — so the Spark side runs the IDENTICAL text
+    The TPC-H shapes written as SQL (q2/q4/q6/q9/q10/q11/q13/q14/q15/
+    q16/q17/q18/q19/q20/q21/q22) use the DuckDB ∩ Spark SQL dialect
+    intersection (DATE literals, EXTRACT(year), DECIMAL casts, correlated
+    scalar subqueries, EXISTS/IN/NOT IN, LEFT OUTER joins with ON-clause
+    filters) — so the Spark side runs the IDENTICAL text
     with bare table names rewritten to per-query temp views. One SQL
     string per query means the two engines can never drift structurally;
     only Catalyst's physical planning differs.
@@ -1499,9 +1432,9 @@ def q_pack_documents(spark, sf_dir):
 
 
 def q_grouping_sets(spark, sf_dir):
-    """GROUPING SETS via spark.sql — the declarative SQL path end-to-end
-    (every other query uses the DataFrame API; Catalyst plans both the
-    same way, and the DuckDB twin runs the identical ANSI text)."""
+    """GROUPING SETS via spark.sql. The one SQL query with its own Spark
+    text: it spells the casts STRING/INT where the DuckDB twin spells
+    VARCHAR/INTEGER, so it cannot run the twin through ``_tpch_sql``."""
     _t(spark, sf_dir, "events").createOrReplaceTempView("events_gs")
     return spark.sql(
         """
@@ -1893,114 +1826,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "diff_classify_orders": oracle.diff_classify_orders(),
-        "diff_stats_orders": oracle.diff_stats_orders(),
-        "dup_keys_lineitem": oracle.dup_keys_lineitem(),
-        "daily_counts_events": oracle.daily_counts_events(),
-        "counts_crossfill_events": oracle.counts_crossfill_events(),
-        "count_mismatch_days": oracle.count_mismatch_days(),
-        "session_stats_events": oracle.session_stats_events(),
-        "count_anomalies_events": oracle.count_anomalies_events(),
-        "profile_orders": oracle.profile_orders(),
-        "json_extract_events": oracle.json_extract_events(),
-        "rollup_events": oracle.rollup_events(),
-        "sniff_histogram_orders": oracle.sniff_histogram_orders(),
-        "sniff_stats_orders": oracle.sniff_stats_orders(),
-        "normalize_lineitem": oracle.normalize_lineitem(),
-        "q1_pricing_summary": oracle.q1_pricing_summary(),
-        "revenue_top10": oracle.revenue_top10(),
-        "customers_without_orders": oracle.customers_without_orders(),
-        "fk_orphans_orders": oracle.fk_orphans_orders(),
-        "dup_key_stats_lineitem": oracle.dup_key_stats_lineitem(),
-        "freshness_events": oracle.freshness_events(),
-        "freshness_by_type_events": oracle.freshness_by_type_events(),
-        "salted_join_lineitem": oracle.salted_join_lineitem(),
-        "top3_suppliers_per_nation": oracle.top3_suppliers_per_nation(),
-        "langid_documents": oracle.langid_documents(),
-        "token_stats_documents": oracle.token_stats_documents(),
-        "fingerprint_documents": oracle.fingerprint_documents(),
-        "quality_score_documents": oracle.quality_score_documents(),
-        "exact_dedup_documents": oracle.exact_dedup_documents(),
-        "stratified_sample_documents": oracle.stratified_sample_documents(),
-        "vocab_top_terms": oracle.vocab_top_terms(),
-        "minhash_signatures_documents": oracle.minhash_signatures_documents(),
-        "lsh_candidates_documents": oracle.lsh_candidates_documents(),
-        "jaccard_pairs_documents": oracle.jaccard_pairs_documents(),
-        "simhash_documents": oracle.simhash_documents(),
-        "simhash_near_dups_documents": oracle.simhash_near_dups_documents(),
-        "minhash_near_dups_documents": oracle.minhash_near_dups_documents(),
-        "near_dup_clusters_documents": oracle.near_dup_clusters_documents(),
-        "cluster_survivors_documents": oracle.cluster_survivors_documents(),
-        "decontaminate_documents": oracle.decontaminate_documents(),
-        "curate_documents": oracle.curate_documents(),
-        "curate_documents_hash": oracle.curate_documents_hash(),
-        "lsh_bucket_stats_documents": oracle.lsh_bucket_stats_documents(),
-        "source_cap_documents": oracle.source_cap_documents(),
-        "source_cap_hash_documents": oracle.source_cap_hash_documents(),
-        "source_keep_rate_documents": oracle.source_keep_rate_documents(),
-        "ann_topk_embeddings": oracle.ann_topk_embeddings(),
-        "embedding_near_dup_pairs": oracle.embedding_near_dup_pairs(),
-        "quality_filter_documents": oracle.quality_filter_documents(),
-        "drop_reason_counts_documents": oracle.drop_reason_counts_documents(),
-        "drop_reason_examples_documents": oracle.drop_reason_examples_documents(),
-        "asof_events": oracle.asof_events(),
-        "quantiles_events": oracle.quantiles_events(),
-        "pivot_events_by_day": oracle.pivot_events_by_day(),
-        "exact_dedup_survivors_documents": oracle.exact_dedup_survivors_documents(),
-        "embedding_bucket_stats": oracle.embedding_bucket_stats(),
-        "cube_events": oracle.cube_events(),
-        "candidate_edit_distance_documents": oracle.candidate_edit_distance_documents(),
-        "value_outliers_events": oracle.value_outliers_events(),
-        "multimodal_near_dup_clusters": oracle.multimodal_near_dup_clusters(),
-        "boilerplate_lines_documents": oracle.boilerplate_lines_documents(),
-        "repetition_stats_documents": oracle.repetition_stats_documents(),
-        "dup_shingle_fraction_documents": oracle.dup_shingle_fraction_documents(),
-        "contamination_scores_documents": oracle.contamination_scores_documents(),
-        "split_assignment_documents": oracle.split_assignment_documents(),
-        "split_leakage_documents": oracle.split_leakage_documents(),
-        "token_budget_mixture_documents": oracle.token_budget_mixture_documents(),
-        "assemble_dataset_documents": oracle.assemble_dataset_documents(),
-        "near_dup_split_leakage_documents": oracle.near_dup_split_leakage_documents(),
-        "split_by_source_documents": oracle.split_by_source_documents(),
-        "range_count_events": oracle.range_count_events(),
-        "quality_top_fraction_documents": oracle.quality_top_fraction_documents(),
-        "mixture_sample_documents": oracle.mixture_sample_documents(),
-        "pack_documents": oracle.pack_documents(),
-        "incremental_dedup_documents": oracle.incremental_dedup_documents(),
-        "bloom_decontaminate_documents": oracle.bloom_decontaminate_documents(),
-        "apply_changes_orders": oracle.apply_changes_orders(),
-        "profile_drift_orders": oracle.profile_drift_orders(),
-        "curate_documents_v2": oracle.curate_documents_v2(),
-        "curate_documents_v3": oracle.curate_documents_v3(),
-        "chunk_documents": oracle.chunk_documents(),
-        "sliding_counts_events": oracle.sliding_counts_events(),
-        "q3_shipping_priority": oracle.q3_shipping_priority(),
-        "q5_local_supplier_volume": oracle.q5_local_supplier_volume(),
-        "histogram_orders": oracle.histogram_orders(),
-        "pii_counts_documents": oracle.pii_counts_documents(),
-        "key_skew_lineitem": oracle.key_skew_lineitem(),
-        "grouping_sets_events": oracle.grouping_sets_events(),
-        "id_gaps_orders": oracle.id_gaps_orders(),
-        "unpivot_events_metrics": oracle.unpivot_events_metrics(),
-        "cumulative_users_events": oracle.cumulative_users_events(),
-        "q7_volume_shipping": oracle.q7_volume_shipping(),
-        "q8_market_share": oracle.q8_market_share(),
-        "q12_priority_counts": oracle.q12_priority_counts(),
-        "q4_order_priority": oracle.q4_order_priority(),
-        "q13_customer_distribution": oracle.q13_customer_distribution(),
-        "q16_parts_supplier": oracle.q16_parts_supplier(),
-        "q18_large_volume": oracle.q18_large_volume(),
-        "q22_global_sales": oracle.q22_global_sales(),
-        "q2_min_cost_supplier": oracle.q2_min_cost_supplier(),
-        "q6_forecast_revenue": oracle.q6_forecast_revenue(),
-        "q9_product_profit": oracle.q9_product_profit(),
-        "q10_returned_items": oracle.q10_returned_items(),
-        "q11_important_parts": oracle.q11_important_parts(),
-        "q14_promo_revenue": oracle.q14_promo_revenue(),
-        "q15_top_supplier": oracle.q15_top_supplier(),
-        "q17_small_quantity": oracle.q17_small_quantity(),
-        "q19_disjunctive_revenue": oracle.q19_disjunctive_revenue(),
-        "q20_potential_promotion": oracle.q20_potential_promotion(),
-        "q21_waiting_suppliers": oracle.q21_waiting_suppliers(),
-    }
+    """``oracle.<name>()`` for every ``queries()`` name, in the same order;
+    a query without a twin raises AttributeError here."""
+    return {name: getattr(oracle, name)() for name in queries()}

@@ -80,9 +80,6 @@ def main():
             fails.append(name)
             print(f"FAIL  {name}: spark error {str(e)[:200]}")
             continue
-        if name not in os_:
-            print(f"skip  {name}: no oracle ({len(sdf)} rows)")
-            continue
         try:
             ddf = con.execute(os_[name]).df()
         except Exception as e:

@@ -1,16 +1,44 @@
 """Driver-contract wiring: every queries() entry has an oracle twin and
 the schemas the driver relies on stay importable without a live session."""
 
+import pytest
+
 import __spark_entry__ as entry
 
 
 def test_queries_and_oracle_keys_match():
     qs = entry.queries()
     sql = entry.oracle_sql()
-    assert set(qs) == set(sql), set(qs) ^ set(sql)
+    assert list(sql) == list(qs), set(qs) ^ set(sql)
     assert len(qs) >= 70
     assert all(callable(f) for f in qs.values())
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in sql.values())
+
+
+def test_no_sql_text_pasted_into_the_driver():
+    """A SQL twin runs on Spark through _tpch_sql from the oracle's one
+    text, so no string in the driver holds a query. q_grouping_sets is the
+    one exception: its Spark text casts to STRING/INT where the DuckDB
+    twin casts to VARCHAR/INTEGER."""
+    import ast
+    import inspect
+
+    pasted = [
+        n.lineno
+        for top in ast.parse(inspect.getsource(entry)).body
+        if getattr(top, "name", None) != "q_grouping_sets"
+        for n in ast.walk(top)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and "SELECT" in n.value
+    ]
+    assert not pasted, f"SQL text in __spark_entry__.py at lines {pasted}"
+
+
+def test_query_without_twin_fails_at_oracle_sql(monkeypatch):
+    qs = entry.queries()
+    monkeypatch.setattr(entry, "queries", lambda: {**qs, "no_such_twin": None})
+    with pytest.raises(AttributeError, match="no_such_twin"):
+        entry.oracle_sql()
 
 
 def test_entry_callable_exists():
