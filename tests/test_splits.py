@@ -183,6 +183,27 @@ def test_token_budget_mixture_under_supplied_source_capped(spark):
     assert b["epochs"] == 0
 
 
+def test_token_budget_mixture_null_text_source_plans_nothing(spark):
+    """An all-null-text source sums to a null ``n_tokens``. Spark's
+    ``least`` skips nulls, so an ungated capped plan would promise it its
+    full target."""
+    nulls = spark.createDataFrame(
+        [(96, "nulls", None)], "doc_id long, source string, text string")
+    df = _mix_fixture(spark).unionByName(nulls)
+    for upsample in (False, True):
+        out = {
+            r["source"]: r
+            for r in token_budget_mixture(
+                df, "source", "text", {"nulls": 1.0, "web": 1.0}, 100,
+                allow_upsample=upsample,
+            ).collect()
+        }
+        n = out["nulls"]
+        assert n["n_tokens"] is None and n["target_tokens"] == 50
+        assert (n["planned_tokens"], n["rate_ppm"], n["epochs"]) == (0, 0, 0), upsample
+        assert out["web"]["planned_tokens"] == 50
+
+
 def test_token_budget_mixture_upsample_epochs(spark):
     df = _mix_fixture(spark)
     out = {

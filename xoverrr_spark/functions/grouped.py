@@ -14,19 +14,26 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..pyworker import forget_zip_importers
 
 
-@pandas_udf("double")
-def mad_udf(v: pd.Series) -> float:
-    """Median absolute deviation — robust spread (outlier-insensitive
-    where stddev is dominated by the tail)."""
+def _mad(v: pd.Series) -> float:
+    forget_zip_importers()
     a = v.dropna().to_numpy(dtype=np.float64)
     if a.size == 0:
         return float("nan")
     return float(np.median(np.abs(a - np.median(a))))
+
+
+def mad_udf(col: Column) -> Column:
+    """Median absolute deviation of ``col`` per group — robust spread
+    (outlier-insensitive where stddev is dominated by the tail). Built per
+    call: pyspark ties a UDF's JVM function to the SparkContext that first
+    used it."""
+    return F.pandas_udf(_mad, "double")(col)
 
 
 def robust_spread(

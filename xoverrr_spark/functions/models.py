@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pyworker import forget_zip_importers
+
 
 def fasttext_lang_udf(model_path: str):
     """Series->Series pandas UDF '(lang|conf)' from a real fastText model.
@@ -38,6 +40,7 @@ def fasttext_lang_udf(model_path: str):
     from pyspark import SparkFiles
 
     def predict(batch: pd.Series) -> pd.DataFrame:
+        forget_zip_importers()
         import fasttext
 
         model = fasttext.load_model(SparkFiles.get(model_path))
@@ -120,6 +123,7 @@ def kenlm_ppl_udf(model_path: str):
 
     @F.pandas_udf(T.DoubleType())
     def score(batch: pd.Series) -> pd.Series:
+        forget_zip_importers()
         import kenlm
 
         model = kenlm.Model(SparkFiles.get(model_path))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..codecs.png import decode_image, psnr, quantize_lossy
 from ..intermediates import persist
+from ..pyworker import forget_zip_importers
 
 IMAGE_STATS_SCHEMA = (
     "image_id string, ok boolean, h int, w int, mean_r double, mean_g double, "
@@ -38,6 +39,7 @@ def decode_stats(df: DataFrame) -> DataFrame:
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             recs = []
             for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
@@ -92,6 +94,7 @@ def sharpness_stats(df: DataFrame) -> DataFrame:
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             recs = []
             for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
@@ -135,6 +138,7 @@ def psnr_vs_reference(df: DataFrame, reference_pixels: dict[str, np.ndarray]) ->
     binary column and this becomes a two-column decode."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             recs = []
             for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
@@ -166,6 +170,7 @@ def compute_phash(df: DataFrame, grid: int = 8) -> DataFrame:
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             recs = []
             for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
@@ -203,6 +208,7 @@ def thumbnail(df: DataFrame, size: int = 4) -> DataFrame:
     output is raw RGB bytes. Stands in for a real resize kernel."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             recs = []
             for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
@@ -315,6 +321,7 @@ def audio_features(
     rather than a crash (failed-download discipline)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             recs = []
             for cid, blob in zip(pdf[id_col], pdf[bytes_col]):
@@ -372,6 +379,7 @@ def sample_frames(
     null payloads likewise never crash the stage."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in it:
             recs = []
             for vid, blob in zip(pdf[id_col], pdf[bytes_col]):

@@ -303,7 +303,11 @@ def token_budget_mixture(
                 F.expr(f"(target_tokens * {_PPM}) div n_tokens"),
             ),
         )
-        planned = F.least(F.col("target_tokens"), F.col("n_tokens"))
+        # least skips nulls: an all-null-text source (null n_tokens) would
+        # be planned its full target
+        planned = F.when(
+            has_tokens, F.least(F.col("target_tokens"), F.col("n_tokens"))
+        ).otherwise(F.lit(0))
     return out.select(
         "source",
         "n_docs",

@@ -14,7 +14,14 @@ Architecture (Spark-first):
 - Perplexity is the one Python hop: a Series->Series pandas UDF whose
   numpy bigram table rides the closure (broadcast once per executor) and
   which is fully vectorized per Arrow batch (``np.add.reduceat``; zero
-  per-row Python) — see ``functions/perplexity.py``.
+  per-row Python) — see ``functions/perplexity.py``. The hop's cost is
+  therefore per-task Python-worker set-up, not per-row work; the scorer
+  keeps that set-up cheap with ``pyworker.forget_zip_importers``. The UDF
+  is built per call (``ppl_udf``), never once at import: pyspark builds a
+  UDF's JVM function once, tied to the accumulator, environment and
+  includes of the SparkContext that first used it, so after a session
+  restart a module-level UDF still reports to the stopped context and
+  misses the new context's py-files.
 - The binary ``bytes`` column is never touched, never normalized, and is
   projected away before any wide operation; downstream joins re-attach it
   by ``image_id`` if needed (caption byte-equality / pixel invariants are
@@ -28,7 +35,7 @@ from ``operators.sniff.drop_reason_breakdown``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,7 +50,11 @@ from ..functions.quality import (
 )
 from ..functions.scrub import scrub_caption
 
-ppl_udf = F.pandas_udf(batch_perplexity, T.DoubleType())
+
+def ppl_udf(col: Column) -> Column:
+    """Perplexity of ``col`` under the embedded char-bigram table."""
+    return F.pandas_udf(batch_perplexity, T.DoubleType())(col)
+
 
 OUTPUT_COLUMNS = [
     "image_id", "lang", "lang_conf", "ppl", "keep", "drop_reasons", "caption_scrubbed",

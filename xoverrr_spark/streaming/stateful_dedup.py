@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.tokens import fingerprint
+from ..pyworker import forget_zip_importers
 
 OUTPUT_SCHEMA = "image_id string, caption string, text_fp string"
 STATE_SCHEMA = "seen boolean"
@@ -37,6 +38,7 @@ def _make_first_seen(ttl_ms: int | None):
     def _first_seen(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         if ttl_ms is not None and state.hasTimedOut:
             state.remove()  # TTL eviction: bound the store to active keys
             return

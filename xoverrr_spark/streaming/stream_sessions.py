@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.counts import DEFAULT_SESSION_GAP_S
+from ..pyworker import forget_zip_importers
 
 OUTPUT_SCHEMA = "user_id long, session_start long, session_end long, n_events long"
 STATE_SCHEMA = "start long, end long, n long"
@@ -44,6 +45,7 @@ def make_sessionizer(gap_seconds: int = DEFAULT_SESSION_GAP_S):
     def _sessions(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         (user_id,) = key
         if state.hasTimedOut:
             start, end, n = state.get
