@@ -1392,9 +1392,8 @@ def q_q21_waiting_suppliers(spark, sf_dir):
 
 
 def q_sliding_counts(spark, sf_dir):
-    """Sliding event-time windows (10 min window / 5 min step) — the batch
-    twin of the streaming windowed aggregation; each event lands in
-    window/step = 2 epoch-aligned windows."""
+    """Sliding event-time windows (10 min window / 5 min step); each event
+    lands in window/step = 2 epoch-aligned windows."""
     ev = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = F.window(
         F.col("ts").cast("timestamp"),

@@ -345,8 +345,7 @@ def main() -> None:
     queries["compare_frames_full_1m"] = round(compare_full_sec, 3)
     # NOTE: pipeline_localN times are NOT duplicated into queries — the
     # scaling block carries both throughputs and `value` is the local[CPUS]
-    # wall; the ~90 chars saved keep the streaming block inside the
-    # driver's 2000-char tail window (it was being silently stripped)
+    # wall
     queries["pipeline_with_payload_100k"] = round(t_payload, 3)
     queries["diff_1m_rows_x10cols"] = round(diff_sec, 3)
     spark.stop()
@@ -425,27 +424,6 @@ def main() -> None:
                 summary["skew_over_cap_docs"] = s["over_cap_docs"]
         result["dedup_job_scale"] = summary
 
-    # streaming throughput evidence (scripts/streaming_throughput.py):
-    # headline rows/s only — full table in STREAM_BENCH.md
-    stream_json = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_cache", "stream_bench.json"
-    )
-    stream_recs = []
-    if os.path.exists(stream_json):
-        try:
-            with open(stream_json) as fh:
-                stream_recs = json.load(fh)
-        except ValueError:
-            stream_recs = []
-        if stream_recs:
-            # default-provider ops only: the RocksDB leg lives in
-            # STREAM_BENCH.md; folding it too would push the headline
-            # line past the driver's tail window and strip the block
-            result["streaming"] = {
-                r["op"]: r["rows_per_sec"] for r in stream_recs
-                if r.get("state_store", "default") == "default"
-            }
-
     # sf1 per-operator sweep (scripts/sf1_timing_sweep.py): one scalar —
     # the worst 10x wall ratio across the query list (full table in
     # SF1_BENCH.md; ~10 = linear, >10 = superlinear stage)
@@ -515,19 +493,7 @@ def main() -> None:
             "stress) lives in DEDUP_SCALE.md (scripts/dedup_scale_stress.py);\n"
             "the bench JSON carries its headline scalars as dedup_job_scale\n"
             "and references the full recording by path + sha256.\n\n"
-            + (
-                "Streaming throughput (scripts/streaming_throughput.py,\n"
-                "full table in STREAM_BENCH.md): "
-                + "; ".join(
-                    f"{r['op']} {r['rows_per_sec']:,.0f} rows/s "
-                    f"(state peak {r['state_rows_peak']:,} rows / "
-                    f"{r['state_mem_peak_mb']} MB over {r['micro_batches']} batches)"
-                    for r in stream_recs
-                )
-                + ".\n\n"
-                if stream_recs else ""
-            )
-            + "Per-operator seconds at "
+            "Per-operator seconds at "
             f"{SF_DIR}:\n\n| query | sec |\n|---|---|\n"
             + "".join(f"| {k} | {v} |\n" for k, v in queries.items())
         )
@@ -536,11 +502,8 @@ def main() -> None:
     # must be the final line AND fit that window (r4's line overflowed it →
     # parsed: null). Strip optional blocks in priority order until it fits.
     line = json.dumps(result)
-    # drop order = least-load-bearing first; "streaming" near the END so
-    # the only per-round streaming record survives stripping (pre-r5 it
-    # was the first casualty and silently vanished from the hard signal)
-    for drop in ("executors_1to4", "scale_up_4x", "dedup_job_scale",
-                 "streaming", "scaling"):
+    # drop order = least-load-bearing first
+    for drop in ("executors_1to4", "scale_up_4x", "dedup_job_scale", "scaling"):
         if len(line) <= 1900:
             break
         result.pop(drop, None)

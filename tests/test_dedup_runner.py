@@ -81,6 +81,22 @@ def test_staged_dedup_resume_skips_completed_stages(spark, tmp_path):
     assert sum("skipping" in m for m in skipped) == 7  # all seven stages
 
 
+def test_staged_dedup_resume_with_other_split_seed_raises(spark, tmp_path):
+    """splits/ was assigned under seed 7; a resume under seed 8 must not
+    report seed 8 next to seed 7's split counts."""
+    import pytest
+
+    out = str(tmp_path / "dedup_reseed")
+    fr = {"train": 0.8, "val": 0.1, "test": 0.1}
+    run_dedup(spark, _docs(spark), out, jaccard_threshold=0.8,
+              log=lambda *_: None, split_fractions=fr, split_seed=7)
+    logs = []
+    with pytest.raises(ValueError, match="split_seed: 7 -> 8"):
+        run_dedup(spark, _docs(spark), out, jaccard_threshold=0.8,
+                  log=logs.append, split_fractions=fr, split_seed=8)
+    assert logs == []  # raised before any stage was looked at
+
+
 # ------------------------------------------------- incremental ingestion ----
 
 def _batch(spark):
@@ -139,6 +155,14 @@ def test_incremental_job_resume_skips_done_stages(spark, tmp_path):
     msgs = []
     run_incremental_dedup(spark, batch, idx, out, log=msgs.append)
     assert sum("skipping" in m for m in msgs) == 6  # all six stages skipped
+
+    # stages built under other parameters are not reused
+    import pytest
+    with pytest.raises(ValueError, match="bands: 4 -> 8"):
+        run_incremental_dedup(spark, batch, idx, out, bands=8, log=msgs.append)
+    with pytest.raises(ValueError, match="num_hashes: 16 -> 32"):
+        build_dedup_index(spark, corpus, idx, num_hashes=32, log=msgs.append)
+    assert sum("skipping" in m for m in msgs) == 6
 
 
 def test_two_batch_ingestion_loop_closure(spark, tmp_path):

@@ -120,19 +120,3 @@ def test_real_model_hooks_raise_cleanly_when_absent():
         fasttext_lang_udf("/models/lid.176.bin")
     with _pytest.raises(NotImplementedError, match="kenlm"):
         kenlm_ppl_udf("/models/en.arpa.bin")
-
-
-def test_grouped_agg_pandas_udf_mad(spark):
-    """GROUPED_AGG pandas UDF: MAD per group matches numpy, rides the same
-    agg as JVM-side stddev, and is outlier-robust where stddev is not."""
-    import numpy as np
-    from xoverrr_spark.functions.grouped import robust_spread
-    rows = [(i, "a", float(v)) for i, v in enumerate([1, 2, 3, 4, 100])]
-    rows += [(10 + i, "b", 5.0) for i in range(4)]
-    rows.append((99, "b", None))
-    df = spark.createDataFrame(rows, "id int, g string, v double")
-    got = {r.g: r for r in robust_spread(df, "v", ["g"]).collect()}
-    assert got["a"].mad == np.median(np.abs(np.array([1, 2, 3, 4, 100]) - 3))
-    assert got["a"].stddev > 40          # classical spread blown up by 100
-    assert got["a"].mad <= 2             # robust spread is not
-    assert got["b"].mad == 0.0 and got["b"].n == 5

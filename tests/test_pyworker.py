@@ -223,11 +223,8 @@ def test_worker_functions_forget_zip_importers_first():
     modules = {s.split(":")[0] for s, _ in sites}
     assert {
         "xoverrr_spark/pipeline/quality_filter.py",
-        "xoverrr_spark/functions/grouped.py",
         "xoverrr_spark/functions/models.py",
         "xoverrr_spark/operators/multimodal.py",
-        "xoverrr_spark/streaming/stateful_dedup.py",
-        "xoverrr_spark/streaming/stream_sessions.py",
     } <= modules
     bad = [f"{site} {[f.name for f in fns] or 'unresolved'}"
            for site, fns in sites if not fns or not all(map(_reaches_helper, fns))]

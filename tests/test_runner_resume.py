@@ -47,6 +47,19 @@ def test_kill_and_resume_equals_fresh(spark, tmp_path):
     assert a["caption_scrubbed"].tolist() == b["caption_scrubbed"].tolist()
 
 
+def test_resume_with_other_bucket_count_raises(spark, tmp_path):
+    """The staged input and the bucket markers were built for 8 buckets;
+    resuming with 4 would only visit staged partitions 0-3 and drop the
+    rest of the rows without an error."""
+    images = images_df(spark, N, 42)
+    out = str(tmp_path / "o")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, images, out, n_buckets=8, _fail_after_bucket=1)
+    with pytest.raises(ValueError, match="n_buckets: 8 -> 4"):
+        run_pipeline(spark, images, out, n_buckets=4)
+    assert sorted(completed_buckets(out)) == [0, 1]
+
+
 def test_rerun_of_done_bucket_is_idempotent(spark, tmp_path):
     images = images_df(spark, 300, 7)
     out = tmp_path / "o"

@@ -78,8 +78,8 @@ def test_aqe_skew_split_suppressed_by_downstream_agg(spark, skew_conf):
     plan = _final_plan_after_collect(agg)
     # pinned DOCUMENTATION: the default planner keeps the straggler
     # rather than add a shuffle for the agg. If Spark changes this
-    # default, update the session guidance in streaming/state.py-style
-    # docs and flip the assertion.
+    # default, update the AQE skew guidance in session.py and flip the
+    # assertion.
     assert "skew=true" not in plan, plan
 
     spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")

@@ -13,6 +13,10 @@ of re-shingling the corpus:
     clusters/      (doc_id, cluster_id)            connected components
     survivors/     (doc_id, cluster_id, quality_score)  best doc per cluster
 
+A resume with parameters other than the ones recorded on the fresh start
+raises (``pipeline/resume.py``) instead of reusing stages built under the
+old ones.
+
 Staging between stages is also what a 100 TB run needs operationally: the
 signature/candidate tables are the natural retry+audit boundaries, and
 writing them keeps each stage's shuffle lineage short. Each stage builds
@@ -36,6 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.tokens import quality_score
 from ..intermediates import scope
 from ..operators import dedup as D
+from .resume import pin_run_params
 
 
 def _done(path: str) -> bool:
@@ -82,7 +87,13 @@ def run_dedup(
         from ..operators.splits import split_thresholds
 
         split_thresholds(split_fractions)
-    os.makedirs(output_dir, exist_ok=True)
+    pin_run_params(
+        output_dir, resume, id_col=id_col, text_col=text_col,
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+        jaccard_threshold=jaccard_threshold, max_bucket_size=max_bucket_size,
+        split_fractions=split_fractions,
+        split_seed=split_seed if split_fractions is not None else None,
+    )
     walls: dict = {}
 
     sig_p = _stage(
@@ -326,7 +337,10 @@ def build_dedup_index(
     (doc_id, shingle_hash), ``signatures/`` (doc_id, mh_*). Once built,
     incremental batches never rescan the corpus — they join these tables
     (the only thing you can afford to touch per batch at 100 TB)."""
-    os.makedirs(index_dir, exist_ok=True)
+    pin_run_params(
+        index_dir, resume, id_col=id_col, text_col=text_col,
+        num_hashes=num_hashes, shingle_n=shingle_n,
+    )
     _stage(
         "fingerprints", index_dir, resume,
         lambda: D.fingerprint_index(corpus, id_col, text_col), log,
@@ -378,7 +392,12 @@ def run_incremental_dedup(
     the near_pairs stage runs with ``check_disjoint_ids=True`` and raises
     with example ids if a batch id sequence restarts.
     """
-    os.makedirs(output_dir, exist_ok=True)
+    pin_run_params(
+        output_dir, resume, index_dir=index_dir, id_col=id_col,
+        text_col=text_col, num_hashes=num_hashes, bands=bands,
+        shingle_n=shingle_n, jaccard_threshold=jaccard_threshold,
+        max_bucket_size=max_bucket_size,
+    )
     fps = spark.read.parquet(os.path.join(index_dir, "fingerprints"))
     corpus_sh = spark.read.parquet(os.path.join(index_dir, "shingles"))
     # a retried append_index_delta can leave duplicate rows; every index

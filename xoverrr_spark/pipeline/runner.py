@@ -30,6 +30,8 @@ Directory layout under ``output_dir``::
     metrics_image/bucket=<i>/  pixel-side quality aggregates (--image-stats)
     lineage/bucket=<i>/     one row per completed bucket run
     _checkpoints/bucket_<i>.json             completion marker (atomic rename)
+    _run_params.json    n_buckets + image-dedup settings; a resume that
+                        changes them raises (pipeline/resume.py)
 
 ``spark-submit --py-files xoverrr_spark.zip -m`` entry at the bottom.
 """
@@ -49,6 +51,7 @@ from ..intermediates import persist, scope
 from ..operators.sniff import drop_reason_breakdown
 from ..session import local_rows
 from .quality_filter import quality_filter
+from .resume import pin_run_params, write_json_atomic
 
 
 def build_run_id() -> str:
@@ -58,15 +61,6 @@ def build_run_id() -> str:
 
 def _ckpt_path(output_dir: str, bucket: int) -> str:
     return os.path.join(output_dir, "_checkpoints", f"bucket_{bucket}.json")
-
-
-def _mark_done(output_dir: str, bucket: int, payload: dict) -> None:
-    path = _ckpt_path(output_dir, bucket)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, path)  # atomic: a crash never leaves a half marker
 
 
 def completed_buckets(output_dir: str) -> dict[int, dict]:
@@ -202,7 +196,7 @@ def _run_bucket(
         [(run_id, b, row["n_rows"], row["n_keep"], row["duration_s"])],
         "run_id string, bucket int, n_rows long, n_keep long, duration_s double",
     ).write.mode("overwrite").parquet(os.path.join(output_dir, "lineage", f"bucket={b}"))
-    _mark_done(output_dir, b, row)
+    write_json_atomic(_ckpt_path(output_dir, b), row)
     return row
 
 
@@ -306,6 +300,11 @@ def run_pipeline(
                 f"image_stats needs the binary payload columns {missing} "
                 "(a decisions-only input has no pixels to score)"
             )
+    # bucket membership (staged input, markers) depends on these
+    pin_run_params(
+        output_dir, resume, n_buckets=n_buckets, dedup_images=dedup_images,
+        image_dedup_hamming=image_dedup_hamming if dedup_images else None,
+    )
     run_id = build_run_id()
     if salt_partitions is None:
         salt_partitions = spark.sparkContext.defaultParallelism
