@@ -1,5 +1,5 @@
 """Python workers forget their zip importers, and the package's UDFs are
-built per call.
+built per call or per SparkContext, never at import.
 
 PySpark calls ``importlib.invalidate_caches()`` at the start of every
 task; on CPython 3.11/3.12 each cached ``zipimporter`` then re-reads its
@@ -7,7 +7,7 @@ whole archive (pyspark.zip, py4j, the Spark jar). Worker-side batch
 functions call ``pyworker.forget_zip_importers()`` first, so a reused
 worker has nothing to re-read. A UDF object built once at import keeps
 the JVM function of the first SparkContext that used it, so the pipeline
-builds its UDFs per call.
+builds its UDFs with its other Columns once per SparkContext.
 """
 
 import ast

@@ -60,6 +60,24 @@ def test_resume_with_other_bucket_count_raises(spark, tmp_path):
     assert sorted(completed_buckets(out)) == [0, 1]
 
 
+def test_fresh_start_with_fewer_buckets_drops_old_bucket_outputs(spark, tmp_path):
+    """Buckets 4-7 of an 8-bucket run are not part of a fresh 4-bucket run
+    into the same directory: none of their outputs may survive it."""
+    images = images_df(spark, N, 42)
+    out = tmp_path / "o"
+    run_pipeline(spark, images, str(out), n_buckets=8)
+    (out / "notes.txt").write_text("not the runner's")
+    s = run_pipeline(spark, images, str(out), n_buckets=4, resume=False)
+    assert s["total_rows"] == N
+    assert len(_decisions(spark, str(out))) == N
+    assert sorted(completed_buckets(str(out))) == [0, 1, 2, 3]
+    for sub in ("decisions", "metrics", "metrics_lang", "lineage"):
+        assert sorted(p.name for p in (out / sub).glob("bucket=*")) == [
+            f"bucket={b}" for b in range(4)
+        ], sub
+    assert (out / "notes.txt").read_text() == "not the runner's"
+
+
 def test_rerun_of_done_bucket_is_idempotent(spark, tmp_path):
     images = images_df(spark, 300, 7)
     out = tmp_path / "o"

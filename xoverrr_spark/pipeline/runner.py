@@ -26,12 +26,17 @@ Scale design (10^12 images, per north_rule):
 Directory layout under ``output_dir``::
 
     decisions/bucket=<i>/   part-*.parquet   (image_id, lang, ..., keep)
+    kept/bucket=<i>/        curated records (--write-kept)
     metrics/bucket=<i>/     per-reason issue counts
+    metrics_lang/bucket=<i>/   per-language keep counts
     metrics_image/bucket=<i>/  pixel-side quality aggregates (--image-stats)
     lineage/bucket=<i>/     one row per completed bucket run
     _checkpoints/bucket_<i>.json             completion marker (atomic rename)
     _run_params.json    n_buckets + image-dedup settings; a resume that
                         changes them raises (pipeline/resume.py)
+
+A fresh start (``resume=False``) removes the per-bucket directories above
+before any bucket runs and leaves everything else in ``output_dir`` alone.
 
 ``spark-submit --py-files xoverrr_spark.zip -m`` entry at the bottom.
 """
@@ -41,6 +46,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -72,6 +78,13 @@ def completed_buckets(output_dir: str) -> dict[int, dict]:
                 with open(os.path.join(d, name)) as fh:
                     out[int(name[len("bucket_"):-len(".json")])] = json.load(fh)
     return out
+
+
+# every directory _run_bucket writes bucket by bucket
+_BUCKET_OUTPUTS = (
+    "decisions", "kept", "metrics", "metrics_lang", "metrics_image", "lineage",
+    "_checkpoints",
+)
 
 
 def _run_bucket(
@@ -305,6 +318,13 @@ def run_pipeline(
         output_dir, resume, n_buckets=n_buckets, dedup_images=dedup_images,
         image_dedup_hamming=image_dedup_hamming if dedup_images else None,
     )
+    if not resume:
+        # a bucket only overwrites its own outputs, so a fresh start with
+        # fewer buckets would leave the old run's higher buckets behind
+        for name in _BUCKET_OUTPUTS:
+            path = os.path.join(output_dir, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
     run_id = build_run_id()
     if salt_partitions is None:
         salt_partitions = spark.sparkContext.defaultParallelism
