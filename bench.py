@@ -271,15 +271,14 @@ OPERATOR_QUERY_NAMES = [
 ]
 
 
-def run_operator_queries(spark, sf_dir: str | None = None,
-                         names=OPERATOR_QUERY_NAMES) -> dict[str, float]:
+def run_operator_queries(spark, sf_dir: str | None = None) -> dict[str, float]:
     import __spark_entry__ as entrymod
 
     from xoverrr_spark.intermediates import scope
 
     qs = entrymod.queries()
     out = {}
-    for name in names:
+    for name in OPERATOR_QUERY_NAMES:
         # one scope per query frees its persisted intermediates, so earlier
         # queries' cache blocks don't pressure later timings (one session)
         with scope():

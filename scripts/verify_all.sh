@@ -1,8 +1,11 @@
 #!/usr/bin/env bash
-# Full local verification: the test suite, the benchmark's smoke test, and
-# the Spark-vs-DuckDB parity sweep at both scale factors.
+# Full local verification: the reachability guards, the test suite, the
+# benchmark's smoke test, and the Spark-vs-DuckDB parity sweep at both
+# scale factors.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+echo "== reachability =="
+python -m pytest tests/test_reachable.py -q
 echo "== pytest =="
 python -m pytest tests/ -q
 echo "== perfbench smoke =="

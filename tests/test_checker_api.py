@@ -381,20 +381,6 @@ def test_counts_per_side_query_timings_are_real(spark, tmp_path_factory, views):
         assert row[f], f
 
 
-def test_check_counts_from_daily_matches_check_counts(spark, views):
-    from xoverrr_spark.operators.counts import (
-        check_counts, check_counts_from_daily, daily_counts,
-    )
-
-    src = spark.table("api_orders")
-    trg = spark.table("api_orders_trg")
-    a = check_counts(src, trg, "o_orderdate")
-    b = check_counts_from_daily(
-        daily_counts(src, "o_orderdate"), daily_counts(trg, "o_orderdate")
-    )
-    assert a == b
-
-
 def test_zero_row_schema_probe_invalid_sql_clean_error(spark, views):
     # S7 negative path: analysis rejects bad SQL cleanly, still zero jobs
     from pyspark.errors import AnalysisException

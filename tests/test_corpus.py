@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from xoverrr_spark.operators.corpus import (
     cap_per_source,
     cap_per_source_hash,
-    filter_low_quality_sources,
     source_keep_rate,
 )
 
@@ -47,9 +46,6 @@ def test_source_keep_rate_and_filter(spark, docs):
            for r in rates.collect()}
     assert got["src0"] == (30, 30, 100.0)
     assert got["src2"] == (30, 0, 0.0)
-    survivors = filter_low_quality_sources(docs, rates, min_keep_pct=50.0)
-    assert survivors.count() == 60
-    assert survivors.filter("source = 'src2'").count() == 0
 
 
 def test_remove_boilerplate_lines(spark):
@@ -120,37 +116,6 @@ def test_top_quality_fraction_keeps_about_the_fraction(spark):
         # pr >= 0.7 keeps ~0.3*(n-1)+1 ranks; score ties can only ADD rows.
         # Exactness is pinned by the DuckDB oracle — this is a sanity band.
         assert int(0.3 * (n - 1)) <= r["count"] <= 0.45 * n + 1
-
-
-def test_top_quality_fraction_approx_matches_exact_closely(spark):
-    from xoverrr_spark.operators.corpus import (
-        top_quality_fraction, top_quality_fraction_approx)
-    s = _scored_docs(spark)
-    exact = {r.doc_id for r in
-             top_quality_fraction(s, "lang", "score", 0.3).collect()}
-    approx = {r.doc_id for r in
-              top_quality_fraction_approx(s, "lang", "score", 0.3).collect()}
-    inter = len(exact & approx)
-    assert inter / max(len(exact), 1) > 0.9
-    assert inter / max(len(approx), 1) > 0.9
-
-
-def test_top_quality_fraction_approx_plan_has_no_window(spark):
-    from xoverrr_spark.operators.corpus import top_quality_fraction_approx
-    s = _scored_docs(spark)
-    plan = top_quality_fraction_approx(s, "lang", "score", 0.3)._jdf\
-        .queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_top_quality_fraction_approx_null_group_kept(spark):
-    from pyspark.sql import functions as F
-    from xoverrr_spark.operators.corpus import top_quality_fraction_approx
-    s = _scored_docs(spark).withColumn(
-        "lang", F.when(F.col("doc_id") % 3 == 0, None).otherwise(F.col("lang")))
-    kept = top_quality_fraction_approx(s, "lang", "score", 0.5)
-    assert kept.filter("lang IS NULL").count() > 0
 
 
 # ------------------------------------------------------- mixture_sample ----

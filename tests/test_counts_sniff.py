@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from xoverrr_spark.operators.counts import (
-    check_counts,
+    check_counts_from_daily,
     count_discrepancies,
     counts_joined,
     daily_counts,
@@ -21,7 +21,7 @@ from xoverrr_spark.operators.sniff import (
 def test_counts_identical(spark):
     rows = [(i, date(2024, 1, 1 + i % 3)) for i in range(30)]
     df = spark.createDataFrame(rows, "id int, d date")
-    stats = check_counts(df, df, "d")
+    stats = check_counts_from_daily(daily_counts(df, "d"), daily_counts(df, "d"))
     assert stats.final_score == 100
     assert stats.mismatched_days == 0
 
@@ -37,7 +37,7 @@ def test_counts_cross_fill_and_score(spark):
     j = counts_joined(daily_counts(src, "d"), daily_counts(trg, "d")).orderBy("dt").collect()
     assert [(str(r["dt"]), r["src_cnt"], r["trg_cnt"]) for r in j] == [
         ("2024-01-01", 2, 0), ("2024-01-02", 3, 3), ("2024-01-03", 0, 1)]
-    stats = check_counts(src, trg, "d")
+    stats = check_counts_from_daily(daily_counts(src, "d"), daily_counts(trg, "d"))
     # diff = |2-0| + 0 + |0-1| = 3 ; common = min sums = 0+3+0 = 3 -> 50%
     assert stats.diff_sum == 3 and stats.common_sum == 3
     assert stats.diff_pct == pytest.approx(50.0)

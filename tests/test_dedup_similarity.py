@@ -13,11 +13,7 @@ from xoverrr_spark.operators.dedup import (
     ngram_jaccard,
     simhash,
 )
-from xoverrr_spark.operators.similarity import (
-    cosine_topk,
-    embedding_near_dups,
-    lsh_topk,
-)
+from xoverrr_spark.operators.similarity import cosine_topk, embedding_near_dups
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -101,12 +97,6 @@ def test_cosine_topk_finds_clone(emb):
     assert [r["rank"] for r in top] == [1, 2, 3]
 
 
-def test_lsh_topk_recalls_clone(emb):
-    q = emb.filter(F.col("vec_id") == 100)
-    top = lsh_topk(emb, q, k=3, n_planes=6, dim=8).collect()
-    assert any(r["neighbor_id"] == 101 for r in top)
-
-
 def test_embedding_near_dups(emb):
     nd = embedding_near_dups(emb, threshold=0.95, dim=8).collect()
     assert {(r["id_a"], r["id_b"]) for r in nd} == {(100, 101)}
@@ -166,17 +156,6 @@ def test_candidate_jaccard_matches_ngram_jaccard(docs):
         assert v == pytest.approx(full[k])
 
 
-def test_ivf_topk_recalls_clone(emb):
-    from xoverrr_spark.operators.similarity import ivf_topk
-    from pyspark.sql import functions as F
-
-    q = emb.filter(F.col("vec_id") == 100)
-    top = ivf_topk(emb, q, k=3, n_centroids=4, dim=8).collect()
-    # clone 101 lands in the same centroid cell as 100 by construction
-    assert any(r["neighbor_id"] == 101 for r in top)
-    assert all(1 <= r["rank"] <= 3 for r in top)
-
-
 def test_cluster_near_dups_connected_components(spark):
     from xoverrr_spark.operators.dedup import cluster_near_dups
 
@@ -220,43 +199,6 @@ def test_cluster_near_dups_on_real_lsh_pairs(spark):
     # cluster_id is always the min doc_id of its component
     bad = labels.filter("cluster_id > doc_id").count()
     assert bad == 0
-
-
-def test_trained_ivf_centroids_follow_clusters(spark):
-    from xoverrr_spark.operators.similarity import ivf_topk, train_ivf_centroids
-
-    # 4 well-separated gaussian blobs; trained centroids should put each
-    # blob in one cell, so nprobe=1 already recalls within-blob neighbors
-    rng = np.random.default_rng(3)
-    centers = rng.standard_normal((4, 8)) * 6
-    rows = []
-    for i in range(200):
-        c = i % 4
-        v = centers[c] + 0.3 * rng.standard_normal(8)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-
-    ctr = train_ivf_centroids(emb, n_centroids=4, sample_size=200, seed=1)
-    assert ctr.shape == (4, 8)
-    q = emb.filter(F.col("vec_id") < 4)  # one query per blob
-    top = ivf_topk(emb, q, k=5, nprobe=1, centroids=ctr).collect()
-    by_q = {}
-    for r in top:
-        by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    assert set(by_q) == {0, 1, 2, 3}
-    for qid, neighbors in by_q.items():
-        assert len(neighbors) == 5
-        # all neighbors come from the query's own blob (id % 4 matches)
-        assert all(n % 4 == qid % 4 for n in neighbors), (qid, neighbors)
-
-
-def test_trained_ivf_deterministic(spark):
-    from xoverrr_spark.operators.similarity import train_ivf_centroids
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    c1 = train_ivf_centroids(emb, n_centroids=8, sample_size=64)
-    c2 = train_ivf_centroids(emb, n_centroids=8, sample_size=64)
-    assert np.array_equal(c1, c2)
 
 
 def test_ngram_jaccard_stop_shingle_cap(spark):
@@ -424,46 +366,6 @@ def test_changed_count_reads_checkpoints_only(spark):
     assert "ExistingRDD" in plan, plan
     assert "HashAggregate" not in plan, plan
     assert "FileScan" not in plan, plan
-
-
-def test_ivf_dead_cell_reseeds_are_distinct(spark):
-    from xoverrr_spark.operators.similarity import train_ivf_centroids
-
-    # 40 copies of one direction + 6 distinct axes: the seeded init almost
-    # surely picks duplicate (base) centroids, so several cells die in
-    # iteration 1 together. Each dead cell must take a DISTINCT
-    # worst-covered point (ADVICE r02: same-argmin reseeding makes them
-    # duplicate centroids), so the trained centroids are pairwise distinct.
-    base = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
-    rows = [(i, base) for i in range(40)]
-    eye = np.eye(8)
-    rows += [(100 + j, [float(x) for x in eye[2 + j]]) for j in range(6)]
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    ctr = train_ivf_centroids(emb, n_centroids=6, sample_size=46, iters=2, seed=0)
-    for i in range(len(ctr)):
-        for j in range(i + 1, len(ctr)):
-            assert not np.allclose(ctr[i], ctr[j]), (i, j, ctr)
-
-
-def test_ivf_sample_unbiased_on_id_ordered_corpus(spark):
-    from xoverrr_spark.operators.similarity import train_ivf_centroids
-
-    # ids 0..99 all point one direction ("early crawl"), 100..199 the
-    # opposite. sample_size=100 with first-N sampling sees ONLY the first
-    # cluster; the hash-ordered sample (VERDICT r02) spans both, so the
-    # trained centroids cover both directions.
-    rng = np.random.default_rng(5)
-    a = np.abs(rng.standard_normal(8))
-    a /= np.linalg.norm(a)
-    rows = []
-    for i in range(200):
-        c = a if i < 100 else -a
-        v = c + 0.05 * rng.standard_normal(8)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    ctr = train_ivf_centroids(emb, n_centroids=2, sample_size=100, iters=6, seed=2)
-    assert (ctr @ a).max() > 0.9, ctr @ a    # a centroid near +a
-    assert (ctr @ -a).max() > 0.9, ctr @ -a  # and one near -a
 
 
 def test_exact_dedup_window_matches_semi_join_form(spark):

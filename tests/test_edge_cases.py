@@ -64,7 +64,7 @@ def test_null_and_empty_text_rows_survive_dedup(spark):
     assert got_semi == expect
     assert got_win == expect  # both forms agree on degenerate inputs
     # null/blank texts all canonicalize to the empty whole-text shingle
-    # (word_shingles' short-doc fallback), so they near-dup-pair with each
+    # (shingle_table's short-doc fallback), so they near-dup-pair with each
     # other — consistently with being exact dups — and never with real text
     pairs = [
         (r["doc_a"], r["doc_b"])
@@ -162,12 +162,8 @@ def test_diff_engine_null_keys_group_together(spark):
 def test_null_source_docs_survive_hash_cap_and_source_filter(spark):
     # same bug class as the null-text dedup drop: a plain equi/semi join
     # on source silently deletes every null-source doc; the null-source
-    # group must be capped/filtered AS A GROUP like any other
-    from xoverrr_spark.operators.corpus import (
-        cap_per_source,
-        cap_per_source_hash,
-        filter_low_quality_sources,
-    )
+    # group must be capped AS A GROUP like any other
+    from xoverrr_spark.operators.corpus import cap_per_source, cap_per_source_hash
 
     d = spark.createDataFrame(
         [(i, None if i < 6 else "siteA") for i in range(12)],
@@ -178,13 +174,6 @@ def test_null_source_docs_survive_hash_cap_and_source_filter(spark):
     assert exact.count() == 12
     assert hashed.count() == 12  # null-source docs no longer vanish
     assert hashed.columns == ["doc_id", "source"]
-
-    rates = spark.createDataFrame(
-        [(None, 90.0), ("siteA", 5.0)], "source string, keep_pct double"
-    )
-    kept = filter_low_quality_sources(d, rates, min_keep_pct=10.0)
-    got = sorted(r["doc_id"] for r in kept.collect())
-    assert got == [0, 1, 2, 3, 4, 5]  # null group passes, siteA dropped
 
 
 def test_range_join_rejects_reserved_bin_column(spark):

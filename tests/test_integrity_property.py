@@ -4,7 +4,7 @@ keys both sides, empty frames, unreferenced parents)."""
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from xoverrr_spark.operators.integrity import fk_orphans, null_fk_count
+from xoverrr_spark.operators.integrity import fk_orphans
 
 _K1 = st.one_of(st.none(), st.integers(min_value=0, max_value=4))
 _K2 = st.one_of(st.none(), st.sampled_from(["x", "y"]))
@@ -39,6 +39,3 @@ def test_fk_orphans_matches_set_replay(spark, child_rows, parent_rows):
               else spark.createDataFrame([], "k1 bigint, k2 string"))
     got = sorted(r.v for r in fk_orphans(child, parent, ["k1", "k2"]).collect())
     assert got == _sequential_orphans(child_rows, parent_rows)
-    nf = null_fk_count(child, ["k1", "k2"]).collect()[0]
-    expect_null = sum(1 for k1, k2, _ in child_rows if k1 is None or k2 is None)
-    assert (nf.n_rows, nf.null_fk_rows or 0) == (len(child_rows), expect_null)

@@ -2,25 +2,8 @@
 
 import numpy as np
 
-from xoverrr_spark.fixtures.images import generate_images_pdf, images_df
-from xoverrr_spark.operators.multimodal import decode_stats, psnr_vs_reference, thumbnail
-
-
-def test_decode_stats(spark):
-    df = images_df(spark, 80, 11)
-    out = decode_stats(df).toPandas().set_index("image_id")
-    assert out["ok"].all()
-    src = generate_images_pdf(80, 11).set_index("image_id")
-    assert (out["h"] == src["h"]).all() and (out["w"] == src["w"]).all()
-    assert ((out["brightness"] >= 0) & (out["brightness"] <= 255)).all()
-
-
-def test_decode_stats_bad_bytes_marked_not_ok(spark):
-    df = spark.createDataFrame(
-        [("bad", b"not an image", "png")], "image_id string, bytes binary, fmt string"
-    )
-    row = decode_stats(df).collect()[0]
-    assert row["ok"] is False
+from xoverrr_spark.fixtures.images import images_df
+from xoverrr_spark.operators.multimodal import psnr_vs_reference
 
 
 def test_psnr_invariants(spark):
@@ -51,13 +34,6 @@ def test_psnr_invariants(spark):
     jpg = res[res["fmt"] == "jpeg"]
     assert png["lossless"].all()
     assert (jpg["psnr"] >= 40.0).all()
-
-
-def test_thumbnail_shape(spark):
-    df = images_df(spark, 20, 5)
-    out = thumbnail(df, size=4).toPandas()
-    assert len(out) == 20
-    assert all(len(bytes(t)) == 4 * 4 * 3 for t in out["thumb"])
 
 
 def test_compute_phash_deterministic_and_robust(spark):
@@ -143,8 +119,7 @@ def test_null_bytes_rows_never_crash_decode_ops(spark):
     crashes — a 100 TB scrape always contains them."""
     from pyspark.sql import functions as F
     from xoverrr_spark.fixtures.images import images_df
-    from xoverrr_spark.operators.multimodal import (
-        compute_phash, decode_stats, thumbnail)
+    from xoverrr_spark.operators.multimodal import compute_phash
     imgs = images_df(spark, 6, seed=3).select("image_id", "bytes", "fmt")
     dead = imgs.limit(1).select(
         F.lit("dead_row").alias("image_id"),
@@ -152,15 +127,9 @@ def test_null_bytes_rows_never_crash_decode_ops(spark):
         F.lit("png").alias("fmt"))
     both = imgs.unionByName(dead)
 
-    stats = {r.image_id: r.ok for r in decode_stats(both).collect()}
-    assert stats["dead_row"] is False and sum(stats.values()) == 6
-
     ph = {r.image_id: r.phash for r in compute_phash(both).collect()}
     assert ph["dead_row"] is None
     assert sum(v is not None for v in ph.values()) == 6
-
-    th = {r.image_id: r.thumb for r in thumbnail(both).collect()}
-    assert th["dead_row"] is None and len(th) == 7
 
 
 def test_phash_robust_across_codecs(spark):
@@ -182,80 +151,6 @@ def test_phash_robust_across_codecs(spark):
     got = phash_near_dups(compute_phash(df), max_hamming=4, bands=8)
     pairs = [(r.img_a, r.img_b, r.hamming) for r in got.collect()]
     assert pairs and pairs[0][2] <= 4, pairs
-
-
-# ------------------------------------------------------------ audio/video ----
-
-def test_audio_features_windows_match_numpy(spark):
-    import numpy as np
-    from xoverrr_spark.operators.multimodal import audio_features
-    t = np.arange(3000) / 16000.0
-    sine = (0.5 * np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
-    silence = np.zeros(1500, dtype="<i2")
-    rows = [("sine", sine.tobytes()), ("quiet", silence.tobytes()),
-            ("dead", None), ("short", b"\x01")]
-    df = spark.createDataFrame(rows, "clip_id string, pcm binary")
-    got = {}
-    for r in audio_features(df, window_samples=1024).collect():
-        got.setdefault(r.clip_id, []).append(r)
-    # sine: 3 windows (1024,1024,952); RMS ~ 0.5/sqrt(2); zcr > 0
-    s = sorted(got["sine"], key=lambda r: r.window_idx)
-    assert [r.n_samples for r in s] == [1024, 1024, 952]
-    assert abs(s[0].rms - 0.5 / np.sqrt(2)) < 0.01 and s[0].zcr > 0.02
-    # silence: rms 0, zcr 0
-    assert all(r.rms == 0.0 and r.zcr == 0.0 for r in got["quiet"])
-    # degenerate payloads: one null-feature row each, no crash
-    assert got["dead"][0].rms is None and got["short"][0].rms is None
-
-
-def test_sample_frames_every_n_and_error_rows(spark):
-    import numpy as np
-    from xoverrr_spark.operators.multimodal import (
-        encode_rawvideo, sample_frames)
-    frames = np.arange(25 * 4 * 6 * 3, dtype=np.uint8).reshape(25, 4, 6, 3)
-    rows = [("v1", encode_rawvideo(frames)),
-            ("bad", b"NOTAVIDEO"), ("dead", None)]
-    df = spark.createDataFrame(rows, "video_id string, video binary")
-    got = {}
-    for r in sample_frames(df, every_n=10).collect():
-        got.setdefault(r.video_id, []).append(r)
-    v = sorted(got["v1"], key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in v] == [0, 10, 20]
-    assert all((r.w, r.h) == (6, 4) for r in v)
-    assert bytes(v[1].frame) == frames[10].tobytes()
-    assert got["bad"][0].frame_idx == -1 and got["bad"][0].frame is None
-    assert got["dead"][0].frame_idx == -1
-
-
-def test_sample_frames_truncated_container_is_error_row(spark):
-    import numpy as np
-    from xoverrr_spark.operators.multimodal import (
-        encode_rawvideo, sample_frames)
-    frames = np.zeros((5, 2, 2, 3), dtype=np.uint8)
-    full = encode_rawvideo(frames)
-    rows = [("trunc", full[: len(full) - 7])]
-    df = spark.createDataFrame(rows, "video_id string, video binary")
-    got = sample_frames(df, every_n=1).collect()
-    assert len(got) == 1 and got[0].frame_idx == -1 and got[0].frame is None
-
-
-def test_silence_ratio_signal(spark):
-    import numpy as np
-    from xoverrr_spark.operators.multimodal import silence_ratio
-    t = np.arange(4096) / 16000.0
-    loud = (0.5 * np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
-    half = np.concatenate([loud[:2048], np.zeros(2048, dtype="<i2")])
-    rows = [("loud", loud.tobytes()),
-            ("half", half.tobytes()),
-            ("mute", np.zeros(4096, dtype="<i2").tobytes()),
-            ("dead", None)]
-    df = spark.createDataFrame(rows, "clip_id string, pcm binary")
-    got = {r.clip_id: (r.n_windows, r.silence_ratio) for r in
-           silence_ratio(df).collect()}
-    assert got["loud"] == (4, 0.0)
-    assert got["half"] == (4, 0.5)
-    assert got["mute"] == (4, 1.0)
-    assert got["dead"][0] == 0 and got["dead"][1] is None
 
 
 def test_sharpness_closed_form(spark):

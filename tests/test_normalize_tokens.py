@@ -12,7 +12,6 @@ from xoverrr_spark.functions.tokens import (
     md5_long,
     normalized_text,
     quality_score,
-    word_shingles,
     ws_token_count,
 )
 
@@ -83,13 +82,6 @@ def test_fingerprint_ws_case_insensitive(spark):
     assert fps[0] == fps[1]
 
 
-def test_word_shingles_small_doc_whole_text(spark):
-    df = spark.createDataFrame([("one two",), ("a b c d",)], "t string")
-    rows = df.select(word_shingles(F.col("t")).alias("s")).collect()
-    assert rows[0]["s"] == ["one two"]
-    assert rows[1]["s"] == ["a b c", "b c d"]
-
-
 def test_md5_long_matches_duckdb(spark):
     import duckdb
 
@@ -110,13 +102,3 @@ def test_quality_score_range(spark, sf_dir):
     ).collect()[0]
     assert 0 <= r[0] <= r[1] <= 100
 
-
-def test_real_model_hooks_raise_cleanly_when_absent():
-    import pytest as _pytest
-
-    from xoverrr_spark.functions.models import fasttext_lang_udf, kenlm_ppl_udf
-
-    with _pytest.raises(NotImplementedError, match="fasttext"):
-        fasttext_lang_udf("/models/lid.176.bin")
-    with _pytest.raises(NotImplementedError, match="kenlm"):
-        kenlm_ppl_udf("/models/en.arpa.bin")

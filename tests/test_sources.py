@@ -76,14 +76,3 @@ def test_write_parquet_sized_target_files(spark, tmp_path):
     files = glob.glob(f"{out}/part-*.parquet")
     assert len(files) == 4
     assert spark.read.parquet(out).count() == 1000
-
-
-def test_write_parquet_sized_max_records(spark, tmp_path):
-    import glob
-    from xoverrr_spark.sources import write_parquet_sized
-    df = spark.range(1000).coalesce(1)
-    out = str(tmp_path / "capped")
-    write_parquet_sized(df, out, max_records_per_file=300)
-    files = glob.glob(f"{out}/part-*.parquet")
-    assert len(files) == 4                           # ceil(1000/300)
-    assert spark.read.parquet(out).count() == 1000

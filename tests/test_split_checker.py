@@ -173,3 +173,26 @@ def test_check_split_leakage_near_dup_widening(spark, tmp_path):
     _, _, s2, _ = qc.check_split_leakage(
         "lk_nd", "doc_id", "text", "split", near_dup_pairs="lk_nd_same")
     assert s2["near_dup_leaked_pairs"] == 0 and s2["leaked_docs"] == 5
+
+
+def test_check_split_leakage_near_dup_counts_a_null_split_doc_once(spark, tmp_path):
+    # d (null split) exact-dups e (train) and near-dups f (test): d leaks
+    # on both paths, and both must name its split the same way
+    spark.createDataFrame(
+        [("d", "shared text", None), ("e", "shared text", "train"),
+         ("f", "other text", "test"), ("g", "lone text", "val")],
+        "doc_id string, text string, split string",
+    ).createOrReplaceTempView("lk_null_split")
+    spark.createDataFrame(
+        [Row(doc_a="d", doc_b="f", jaccard=0.9)]
+    ).createOrReplaceTempView("lk_null_split_pairs")
+    qc = QualityChecker(spark, results_table=str(tmp_path / "r"))
+
+    _, _, stats, _ = qc.check_split_leakage(
+        "lk_null_split", "doc_id", "text", "split",
+        near_dup_pairs="lk_null_split_pairs")
+    assert stats["exact_leaked_docs"] == 2
+    assert stats["near_dup_leaked_pairs"] == 1
+    assert stats["leaked_docs"] == 3
+    assert stats["leaked_by_split"] == {
+        "\x00<null-split>": 1, "test": 1, "train": 1}

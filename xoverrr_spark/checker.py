@@ -1230,7 +1230,11 @@ class QualityChecker:
                 raise ValueError(f"{label} must be a non-empty column name")
 
         def body(run):
-            from .operators.splits import near_dup_pair_leakage, split_leakage
+            from .operators.splits import (
+                NULL_SPLIT_SENTINEL,
+                near_dup_pair_leakage,
+                split_leakage,
+            )
 
             src = self._date_filter(
                 self._resolve(source_table), date_column, date_range)
@@ -1249,12 +1253,17 @@ class QualityChecker:
                         near_dup_left, near_dup_right,
                     ))
                     n_nd_pairs = ndp.count()
+                    # split_leakage names a null split by the sentinel;
+                    # the pair side must too, or distinct() keeps a
+                    # null-split doc twice (once per spelling)
                     nd_ids = ndp.select(
                         F.col(near_dup_left).alias(id_column),
-                        F.col("split_a").alias(split_column),
+                        F.coalesce("split_a", F.lit(NULL_SPLIT_SENTINEL))
+                        .alias(split_column),
                     ).unionByName(ndp.select(
                         F.col(near_dup_right).alias(id_column),
-                        F.col("split_b").alias(split_column),
+                        F.coalesce("split_b", F.lit(NULL_SPLIT_SENTINEL))
+                        .alias(split_column),
                     ))
                     leaked_ids = leaked_ids.unionByName(nd_ids)
                 all_leaked = persist(leaked_ids.distinct())

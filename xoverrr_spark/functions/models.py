@@ -1,17 +1,11 @@
-"""Optional real-model hooks for language-ID and perplexity.
+"""Perplexity from a model artifact shipped to the executors.
 
-The pipeline ships with self-contained stand-ins (stopword-membership
-langid, embedded char-bigram LM) so it runs hermetically. In production the
-north-star models slot in here behind the SAME column contracts:
-
-- fastText  -> (lang: string, lang_conf: double)
-- KenLM     -> (ppl: double)
-
-Neither library is installed in this sandbox; the factories below detect
-that and raise a clear error at build time (not at executor time). Model
-files are distributed via ``SparkContext.addFile`` so every executor loads
-them once from local disk — the standard broadcast-artifact pattern for
-binary models too big for a closure.
+The pipeline's built-in scorer embeds its char-bigram tables
+(functions/perplexity.py). Here the same tables are trained into an
+``.npz`` file and distributed via ``SparkContext.addFile``, so every
+executor loads them from local disk — the broadcast-artifact pattern a
+binary model too big for a closure uses. The column contract is the
+built-in one: ``ppl double``.
 """
 
 from __future__ import annotations
@@ -19,46 +13,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..pyworker import forget_zip_importers
-
-
-def fasttext_lang_udf(model_path: str):
-    """Series->Series pandas UDF '(lang|conf)' from a real fastText model.
-
-    Returns a struct-producing UDF: ``lang string, lang_conf double``.
-    """
-    try:
-        import fasttext  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "fasttext is not installed in this environment; the pipeline's "
-            "built-in stopword-membership langid (functions/langid.py) is "
-            "the active implementation"
-        ) from exc
-
-    from pyspark import SparkFiles
-
-    def predict(batch: pd.Series) -> pd.DataFrame:
-        forget_zip_importers()
-        import fasttext
-
-        model = fasttext.load_model(SparkFiles.get(model_path))
-        labels, probs = model.predict(
-            batch.fillna("").str.replace("\n", " ", regex=False).tolist()
-        )
-        return pd.DataFrame({
-            "lang": [l[0].replace("__label__", "") if l else "und" for l in labels],
-            "lang_conf": [float(p[0]) if len(p) else 0.0 for p in probs],
-        })
-
-    return F.pandas_udf(
-        predict,
-        T.StructType([
-            T.StructField("lang", T.StringType()),
-            T.StructField("lang_conf", T.DoubleType()),
-        ]),
-    )
 
 
 def train_char_bigram_artifact(corpus_text: str, path: str) -> str:
@@ -107,26 +61,3 @@ def artifact_ppl_udf(artifact_name: str):
 
     return score
 
-
-def kenlm_ppl_udf(model_path: str):
-    """Series->Series pandas UDF: per-caption perplexity from a KenLM binary."""
-    try:
-        import kenlm  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "kenlm is not installed in this environment; the pipeline's "
-            "built-in char-bigram scorer (functions/perplexity.py) is the "
-            "active implementation"
-        ) from exc
-
-    from pyspark import SparkFiles
-
-    @F.pandas_udf(T.DoubleType())
-    def score(batch: pd.Series) -> pd.Series:
-        forget_zip_importers()
-        import kenlm
-
-        model = kenlm.Model(SparkFiles.get(model_path))
-        return batch.fillna("").map(lambda s: model.perplexity(s) if s else 1.0)
-
-    return score

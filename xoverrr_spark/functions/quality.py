@@ -38,12 +38,6 @@ def alpha_ratio(text: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(letters.cast("double") / n)
 
 
-def digit_ratio(text: Column) -> Column:
-    n = F.length(text)
-    digits = n - F.length(F.translate(text, "0123456789", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(digits.cast("double") / n)
-
-
 def digit_count(text: Column) -> Column:
     return F.length(text) - F.length(F.translate(text, "0123456789", ""))
 

@@ -49,10 +49,6 @@ STOPWORDS = {
 }
 
 
-def lang_pattern(lang: str) -> str:
-    return r"\b(" + "|".join(STOPWORDS[lang]) + r")\b"
-
-
 # ---- rule thresholds ----
 MIN_CAPTION_CHARS = 8
 MAX_CAPTION_CHARS = 512

@@ -48,23 +48,6 @@ def bpe_token_count(c: Column) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_RE), F.lit(0)))
 
 
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as array<string> (MinHash input).
-
-    Documents with fewer than n words yield a single whole-text shingle so
-    they still participate in dedup.
-    """
-    words = F.split(F.trim(F.lower(c)), r"\s+")
-    k = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(1), k - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    return F.array_distinct(
-        F.when(k >= n, grams).otherwise(F.array(F.concat_ws(" ", words)))
-    )
-
-
 def deterministic_sample_flag(id_col: Column, rate_permille: Column) -> Column:
     """Content-deterministic sampling: keep iff md5-int(id) % 1000 < rate.
 

@@ -44,7 +44,7 @@ Operational notes (encoded in ``write_bucketed``):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -85,51 +85,3 @@ def write_bucketed(
         writer = writer.sortBy(*keys)
     writer.saveAsTable(table)
     return spark.table(table)
-
-
-def bucket_spec(spark: SparkSession, table: str) -> dict:
-    """Return {'n_buckets': int, 'bucket_keys': [...], 'sort_keys': [...]}
-    for a catalog table (from DESCRIBE EXTENDED), so callers can verify
-    two sides are co-bucketed BEFORE paying for a mis-planned join."""
-    rows = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    }
-    n = rows.get("Num Buckets")
-    cols = rows.get("Bucket Columns", "")
-    sorts = rows.get("Sort Columns", "")
-
-    def _cols(s: str) -> list[str]:
-        s = s.strip().strip("[]")
-        return [c.strip().strip("`") for c in s.split(",") if c.strip()]
-
-    return {
-        "n_buckets": int(n) if n is not None else 0,
-        "bucket_keys": _cols(cols),
-        "sort_keys": _cols(sorts),
-    }
-
-
-def assert_cobucketed(spark: SparkSession, left: str, right: str,
-                      on: list[str] | tuple[str, ...]) -> None:
-    """Raise ValueError unless ``left`` and ``right`` are bucketed the
-    same way on ``on`` — the guard that keeps a 'co-located' recurring
-    join from silently degrading into a full shuffle after someone
-    rewrites one side with a different bucket count."""
-    ls, rs = bucket_spec(spark, left), bucket_spec(spark, right)
-    on = list(on)
-    problems = []
-    if not ls["n_buckets"]:
-        problems.append(f"{left} is not bucketed")
-    if not rs["n_buckets"]:
-        problems.append(f"{right} is not bucketed")
-    if ls["n_buckets"] and rs["n_buckets"] and ls["n_buckets"] != rs["n_buckets"]:
-        problems.append(
-            f"bucket counts differ: {left}={ls['n_buckets']} "
-            f"{right}={rs['n_buckets']}")
-    for name, spec in ((left, ls), (right, rs)):
-        if spec["n_buckets"] and spec["bucket_keys"] != on:
-            problems.append(
-                f"{name} bucketed by {spec['bucket_keys']}, join is on {on}")
-    if problems:
-        raise ValueError("not co-bucketed: " + "; ".join(problems))

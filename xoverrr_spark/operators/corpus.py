@@ -94,23 +94,6 @@ def source_keep_rate(
     )
 
 
-def filter_low_quality_sources(
-    df: DataFrame, rates: DataFrame, source_col: str = "source",
-    min_keep_pct: float = 10.0,
-) -> DataFrame:
-    """Drop every doc of sources whose keep rate is below the floor —
-    left_semi against the (small) passing-source list. Null-safe: the
-    null-source group is a real group with a real keep rate; a plain
-    semi-join would drop its docs unconditionally (null keys never
-    match), turning a pass/fail decision into silent deletion."""
-    ok = rates.filter(F.col("keep_pct") >= min_keep_pct).select(
-        F.col(source_col).alias("_src_ok")
-    )
-    return df.join(
-        F.broadcast(ok), F.col(source_col).eqNullSafe(F.col("_src_ok")), "left_semi"
-    )
-
-
 def remove_boilerplate_lines(
     df: DataFrame, id_col: str, text_col: str, max_line_doc_freq: int,
 ) -> DataFrame:
@@ -173,41 +156,13 @@ def top_quality_fraction(
 
     Scale caveat (same as cap_per_source): a window partition cannot be
     split by AQE, so a dominant group (one language can be half a web
-    corpus) serializes on one task. Exact form is for moderate group sizes;
-    production uses ``top_quality_fraction_approx``.
+    corpus) serializes on one task. Exact form is for moderate group sizes.
     """
     w = Window.partitionBy(group_col).orderBy(score_col)
     return (
         df.withColumn("_pr", F.percent_rank().over(w))
         .filter(F.col("_pr") >= 1.0 - keep_frac)
         .drop("_pr")
-    )
-
-
-def top_quality_fraction_approx(
-    df: DataFrame,
-    group_col: str,
-    score_col: str,
-    keep_frac: float,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Scale path of ``top_quality_fraction``: per-group approximate
-    quantile threshold (one aggregate over tiny per-group sketches,
-    map-side combined), broadcast back, per-row filter. No window — hot
-    groups stay fully parallel. The threshold join is NULL-SAFE: docs with
-    a null group form a real group (same discipline as cap_per_source_hash).
-
-    approx boundary: rows whose score ties the approximate quantile are all
-    kept (>= threshold), so the kept fraction can deviate by the sketch
-    error (1/accuracy) plus the tie mass.
-    """
-    th = df.groupBy(group_col).agg(
-        F.percentile_approx(score_col, 1.0 - keep_frac, accuracy).alias("_th")
-    ).withColumnRenamed(group_col, "_grp")
-    return (
-        df.join(F.broadcast(th), F.col(group_col).eqNullSafe(F.col("_grp")))
-        .filter(F.col(score_col) >= F.col("_th"))
-        .drop("_grp", "_th")
     )
 
 

@@ -53,8 +53,8 @@ def fk_orphans(
     ``keys``: list of child column names (parent columns share the name)
     or ``(child_col, parent_col)`` pairs for renamed keys; composite keys
     are all pairs together. Rows with a NULL in ANY fk column are
-    excluded (ANSI FK semantics — count them separately via
-    ``null_fk_count``). Returns the full child rows, so callers can
+    excluded (ANSI FK semantics; ``QualityChecker.check_referential``
+    counts them separately). Returns the full child rows, so callers can
     project examples without a second scan.
     """
     pairs = _normalize_keys(keys)
@@ -134,19 +134,4 @@ def duplicate_key_examples(
         grouped.filter(F.col("row_count") > 1)
         .orderBy(F.desc("row_count"), *key_cols)
         .limit(limit)
-    )
-
-
-def null_fk_count(child: DataFrame, keys: list) -> DataFrame:
-    """One row: count of child rows with a NULL in ANY fk column —
-    the rows ``fk_orphans`` excludes by ANSI semantics, surfaced so a
-    feed where the FK went silently all-null cannot pass unnoticed."""
-    pairs = _normalize_keys(keys)
-    pred = None
-    for c, _ in pairs:
-        clause = F.col(c).isNull()
-        pred = clause if pred is None else (pred | clause)
-    return child.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(pred.cast("long")).alias("null_fk_rows"),
     )

@@ -1,12 +1,13 @@
 """Multimodal (binary image) column operators.
 
 Images are opaque ``binary`` columns with typed metadata (w, h, fmt) per
-BASELINE.json input_hint. Decode / feature-extraction / resize run as
-vectorized pandas batches over ``mapInPandas`` — the Spark plumbing
-(schemas, Arrow batch shapes, partition-parallel decode) is real; the codec
-is the pure-python PNG module (real for fmt in {png, jpeg-stand-in}); real
-JPEG/WebP decoding would need an image library absent from this container
-and raises ``NotImplementedError`` (clearly-marked stub path).
+BASELINE.json input_hint. Decode and pixel features (sharpness, entropy,
+perceptual hash) run as vectorized pandas batches over ``mapInPandas`` —
+the Spark plumbing (schemas, Arrow batch shapes, partition-parallel decode)
+is real; the codec is the pure-python PNG module (real for fmt in {png,
+jpeg-stand-in}); real JPEG/WebP decoding would need an image library the
+package does not depend on, and raises ``NotImplementedError``
+(clearly-marked stub path).
 
 The PSNR verifier implements the input_hint invariant: decoded pixels of
 the lossy stand-in must be within PSNR >= 40 dB of originals.
@@ -24,46 +25,6 @@ from pyspark.sql import functions as F
 from ..codecs.png import decode_image, psnr, quantize_lossy
 from ..intermediates import persist
 from ..pyworker import forget_zip_importers
-
-IMAGE_STATS_SCHEMA = (
-    "image_id string, ok boolean, h int, w int, mean_r double, mean_g double, "
-    "mean_b double, brightness double, px_checksum long"
-)
-
-
-def decode_stats(df: DataFrame) -> DataFrame:
-    """Per-image decode + feature extraction (means, brightness, checksum).
-
-    mapInPandas: one Python worker per partition, Arrow batches in/out;
-    decode cost parallelizes with the input partitioning (no shuffle).
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        forget_zip_importers()
-        for pdf in it:
-            recs = []
-            for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    px = decode_image(bytes(blob), fmt)
-                    means = px.reshape(-1, 3).mean(axis=0)
-                    recs.append(
-                        (iid, True, px.shape[0], px.shape[1],
-                         float(means[0]), float(means[1]), float(means[2]),
-                         float(means.mean()),
-                         int(np.int64(px.sum())))
-                    )
-                except (ValueError, NotImplementedError, TypeError):
-                    # TypeError = null bytes (failed download) — an error
-                    # row, never a task crash
-                    recs.append((iid, False, None, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "ok", "h", "w", "mean_r", "mean_g",
-                         "mean_b", "brightness", "px_checksum"],
-            )
-
-    return df.select("image_id", "bytes", "fmt").mapInPandas(batches, IMAGE_STATS_SCHEMA)
-
 
 SHARPNESS_SCHEMA = (
     "image_id string, ok boolean, sharpness double, entropy double"
@@ -200,35 +161,6 @@ def compute_phash(df: DataFrame, grid: int = 8) -> DataFrame:
     return df.select("image_id", "bytes", "fmt").mapInPandas(batches, PHASH_SCHEMA)
 
 
-RESIZED_SCHEMA = "image_id string, h int, w int, thumb binary"
-
-
-def thumbnail(df: DataFrame, size: int = 4) -> DataFrame:
-    """Deterministic box-downsample to size x size RGB (pure numpy);
-    output is raw RGB bytes. Stands in for a real resize kernel."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        forget_zip_importers()
-        for pdf in it:
-            recs = []
-            for iid, blob, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                if blob is None:
-                    recs.append((iid, None, None, None))
-                    continue
-                px = decode_image(bytes(blob), fmt).astype(np.float64)
-                h, w, _ = px.shape
-                ys = np.linspace(0, h, size + 1).astype(int)
-                xs = np.linspace(0, w, size + 1).astype(int)
-                out = np.zeros((size, size, 3), np.uint8)
-                for i in range(size):
-                    for j in range(size):
-                        out[i, j] = px[ys[i]:ys[i + 1], xs[j]:xs[j + 1]].mean(axis=(0, 1))
-                recs.append((iid, size, size, out.tobytes()))
-            yield pd.DataFrame(recs, columns=["image_id", "h", "w", "thumb"])
-
-    return df.select("image_id", "bytes", "fmt").mapInPandas(batches, RESIZED_SCHEMA)
-
-
 PHASH_BITS = 64
 
 
@@ -295,144 +227,3 @@ def phash_near_dups(
         .distinct()
     )
     return pairs.filter(F.col("hamming") <= max_hamming)
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, window_idx int, n_samples int, rms double, zcr double"
-)
-
-
-def audio_features(
-    df: DataFrame,
-    window_samples: int = 1024,
-    id_col: str = "clip_id",
-    bytes_col: str = "pcm",
-) -> DataFrame:
-    """Windowed audio features over raw 16-bit mono PCM bytes: per window
-    of ``window_samples`` samples, RMS level (normalized to [0,1]) and
-    zero-crossing rate — the standard cheap speech/music/silence signals a
-    training pipeline filters on (silence trimming, clipping detection).
-
-    REAL computation (int16 decode + numpy is library-free); only
-    container demuxing (mp3/ogg/flac) would need codecs absent from this
-    environment — feed decoded PCM. mapInPandas, no shuffle; one clip
-    fans out to its windows inside the worker (same batch shape as the
-    image ops). Null/odd-length payloads yield a single null-feature row
-    rather than a crash (failed-download discipline)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        forget_zip_importers()
-        for pdf in it:
-            recs = []
-            for cid, blob in zip(pdf[id_col], pdf[bytes_col]):
-                if blob is None or len(blob) < 2:
-                    recs.append((cid, None, None, None, None))
-                    continue
-                pcm = np.frombuffer(bytes(blob)[: len(blob) - len(blob) % 2],
-                                    dtype="<i2").astype(np.float64) / 32768.0
-                for wi in range(0, max(len(pcm), 1), window_samples):
-                    w = pcm[wi:wi + window_samples]
-                    if w.size == 0:
-                        continue
-                    zc = float(np.mean(np.abs(np.diff(np.signbit(w))))) if w.size > 1 else 0.0
-                    recs.append(
-                        (cid, wi // window_samples, int(w.size),
-                         float(np.sqrt(np.mean(w * w))), zc)
-                    )
-            yield pd.DataFrame(
-                recs, columns=["clip_id", "window_idx", "n_samples", "rms", "zcr"]
-            )
-
-    return df.select(
-        F.col(id_col).alias(id_col), F.col(bytes_col).alias(bytes_col)
-    ).mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
-
-
-# Synthetic raw-video container: 12-byte header (w, h, n_frames as <u4)
-# followed by n_frames raw RGB frames. Real video codecs need libraries
-# absent from this container — the FORMAT is a deterministic stand-in, the
-# Spark plumbing (binary -> exploded frame rows, metadata, batch shape) is
-# the real artifact and is what a libav-backed decoder would plug into.
-RAWVIDEO_MAGIC = b"RVID"
-FRAME_SAMPLE_SCHEMA = (
-    "video_id string, frame_idx int, w int, h int, frame binary"
-)
-
-
-def encode_rawvideo(frames: np.ndarray) -> bytes:
-    """frames: (n, h, w, 3) uint8 -> RVID container bytes."""
-    n, h, w, _ = frames.shape
-    head = RAWVIDEO_MAGIC + np.array([w, h, n], dtype="<u4").tobytes()
-    return head + frames.tobytes()
-
-
-def sample_frames(
-    df: DataFrame,
-    every_n: int = 10,
-    id_col: str = "video_id",
-    bytes_col: str = "video",
-) -> DataFrame:
-    """Frame sampling: explode every ``every_n``-th frame of each video as
-    (video_id, frame_idx, w, h, frame bytes) — the decode-side fan-out a
-    caption/embedding stage consumes. Unknown containers raise
-    NotImplementedError per clip into an error row (null frame, idx -1);
-    null payloads likewise never crash the stage."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        forget_zip_importers()
-        for pdf in it:
-            recs = []
-            for vid, blob in zip(pdf[id_col], pdf[bytes_col]):
-                if blob is None:
-                    recs.append((vid, -1, None, None, None))
-                    continue
-                b = bytes(blob)
-                if b[:4] != RAWVIDEO_MAGIC:
-                    # a real deployment would dispatch to libav here
-                    recs.append((vid, -1, None, None, None))
-                    continue
-                w, h, n = np.frombuffer(b[4:16], dtype="<u4")
-                fsz = int(w) * int(h) * 3
-                if len(b) < 16 + int(n) * fsz:
-                    # truncated container (interrupted upload): error row,
-                    # never a short/garbage frame passed downstream
-                    recs.append((vid, -1, None, None, None))
-                    continue
-                for i in range(0, int(n), every_n):
-                    off = 16 + i * fsz
-                    recs.append((vid, i, int(w), int(h), b[off:off + fsz]))
-            yield pd.DataFrame(
-                recs, columns=["video_id", "frame_idx", "w", "h", "frame"]
-            )
-
-    return df.select(
-        F.col(id_col).alias(id_col), F.col(bytes_col).alias(bytes_col)
-    ).mapInPandas(batches, FRAME_SAMPLE_SCHEMA)
-
-
-def silence_ratio(
-    df: DataFrame,
-    window_samples: int = 1024,
-    rms_threshold: float = 0.01,
-    id_col: str = "clip_id",
-    bytes_col: str = "pcm",
-) -> DataFrame:
-    """Per-clip silence fraction — the audio quality-filter signal (drop
-    clips that are mostly silence / failed recordings): fraction of
-    ``audio_features`` windows with RMS below ``rms_threshold``.
-
-    One mapInPandas (the feature pass) + one groupBy on clip_id with
-    map-side combine. Clips whose payload decoded to null features (null
-    bytes / sub-sample blobs) come back with null ratio and n_windows 0 —
-    distinguishable from a genuinely silent clip (ratio 1.0).
-    """
-    feats = audio_features(df, window_samples, id_col, bytes_col)
-    return feats.groupBy("clip_id").agg(
-        F.count(F.col("rms")).alias("n_windows"),
-        # try_divide: ANSI raises DIVIDE_BY_ZERO for the null-payload
-        # clips (0 feature windows); null ratio is the honest answer
-        F.try_divide(
-            F.count(F.when(F.col("rms") < rms_threshold, 1)) * F.lit(1.0),
-            F.count(F.col("rms")),
-        ).alias("silence_ratio"),
-    )

@@ -9,9 +9,8 @@ check.
 Scale shape: every counter rides a single ``agg`` — one job, one scan.
 ``countDistinct`` over many columns expands via Spark's Expand operator
 (rows x columns intermediate), which is exact and fine for tens of
-columns; for hundreds of columns or approximate-is-ok use
-``approx_profile`` (HyperLogLog, no Expand). Counts are integers, so the
-exact form replays value-for-value in the DuckDB oracle.
+columns. Counts are integers, so the profile replays value-for-value in
+the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -169,8 +168,7 @@ def quantiles(
     Scale shape: Spark's exact ``percentile`` aggregate buffers each
     group's values on one reducer — fine for the daily/per-type group
     sizes this targets. For billion-row single groups switch to
-    ``percentile_approx`` (t-digest, mergeable map-side), the same
-    exact/approx pairing as profile vs approx_profile."""
+    ``percentile_approx`` (t-digest, mergeable map-side)."""
     aggs = [
         F.percentile(F.col(value_col), F.lit(p)).alias(f"q_{int(round(p * 100))}")
         for p in probs
@@ -178,33 +176,6 @@ def quantiles(
     if group_cols:
         return df.groupBy(*group_cols).agg(*aggs)
     return df.agg(*aggs)
-
-
-def approx_profile(df: DataFrame, columns: list[str] | None = None,
-                   rsd: float = 0.05) -> DataFrame:
-    """Same shape with HyperLogLog distinct counts — the wide-table scale
-    path (no Expand; one pass regardless of column count). Distincts are
-    approximate (relative error ``rsd``), so this form is test-verified
-    against the exact profile rather than oracle-hashed."""
-    cols = columns or df.columns
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}__nulls"))
-        aggs.append(F.approx_count_distinct(F.col(c), rsd).alias(f"{c}__distinct"))
-    row = df.agg(*aggs)
-    return row.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("column_name"),
-                    F.col("__n").alias("n_rows"),
-                    F.col(f"{c}__nulls").alias("n_nulls"),
-                    F.col(f"{c}__distinct").alias("n_distinct"),
-                )
-                for c in cols
-            ])
-        ).alias("p")
-    ).select("p.*")
 
 
 def value_outliers(
@@ -471,30 +442,6 @@ def histogram(
             "cnt",
         )
     )
-
-
-def schema_diff(src: DataFrame, trg: DataFrame) -> list[dict]:
-    """Schema contract check: per-column presence + type comparison between
-    two frames (the metadata half of the reference's column comparison,
-    /root/reference/src/xoverrr/core.py:1610-1640 common-column
-    derivation). Driver-side (schemas are metadata, no job runs):
-    [{column, src_type, trg_type, status}] with status in
-    common/type_mismatch/src_only/trg_only, in src-then-trg column order."""
-    s = {f.name: f.dataType.simpleString() for f in src.schema.fields}
-    t = {f.name: f.dataType.simpleString() for f in trg.schema.fields}
-    out = []
-    for name in list(s) + [n for n in t if n not in s]:
-        st, tt = s.get(name), t.get(name)
-        if st is not None and tt is not None:
-            status = "common" if st == tt else "type_mismatch"
-        elif st is not None:
-            status = "src_only"
-        else:
-            status = "trg_only"
-        out.append(
-            {"column": name, "src_type": st, "trg_type": tt, "status": status}
-        )
-    return out
 
 
 def key_skew_stats(

@@ -29,28 +29,8 @@ single-node engine has no analogue for.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def word_bigrams(text: Column) -> Column:
-    """Adjacent word 2-grams of lower-cased, whitespace-split text (string
-    form — readable keys for tests/reporting; the stats path uses the
-    hashed form below, which shuffles longs instead of building a string
-    per bigram).
-
-    Documents with fewer than two words yield an EMPTY array (never a
-    whole-text fallback — a one-word doc has no repetition signal). The
-    ``size >= 2`` guard is required: Spark's ``sequence(1, 0)`` counts
-    DOWN ([1, 0]) and slice(start=0) raises under ANSI.
-    """
-    words = F.split(F.trim(F.lower(text)), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i, 2)),
-    )
-    empty = F.array().cast("array<string>")
-    return F.when(F.size(words) >= 2, grams).otherwise(empty)
 
 
 def repetition_stats(

@@ -93,7 +93,7 @@ def _projection(
     lang_col, top = lang_from_scores({lang: F.col(f"_s_{lang}") for lang in R.LANGS})
     if with_ppl:
         # ppl_udf_override swaps in an artifact-backed scorer (functions/
-        # models.py: SparkFiles-distributed char-LM / KenLM) behind the SAME
+        # models.py: a SparkFiles-distributed char-LM artifact) behind the SAME
         # (string) -> double contract; default is the embedded-table UDF
         ppl = (ppl_udf_override or ppl_udf)(F.col("_cnorm"))
     else:
@@ -174,12 +174,3 @@ def quality_filter(
     drop_reasons, caption_scrubbed). The binary payload is pruned from the
     scan (Catalyst column pruning) because it is not referenced."""
     return _layered(df, caption_col, with_ppl, ppl_udf_override).select(*OUTPUT_COLUMNS)
-
-
-def run_metrics(decisions: DataFrame) -> DataFrame:
-    """Aggregate run metrics: totals + keep-rate (one small row)."""
-    return decisions.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.count(F.when(F.col("keep"), 1)).alias("kept_rows"),
-        (F.count(F.when(F.col("keep"), 1)) / F.count(F.lit(1)) * 100).alias("keep_pct"),
-    )

@@ -96,32 +96,17 @@ def load_table(
     return spark.table(spec)
 
 
-def write_parquet_sized(
-    df,
-    path: str,
-    target_files: int | None = None,
-    max_records_per_file: int | None = None,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet sink with explicit output-file sizing — the small-files
-    guard for a many-task job (a 10k-task stage otherwise writes 10k tiny
-    files per partition, and at 100 TB the downstream scan dies on file-
+def write_parquet_sized(df, path: str, target_files: int | None = None) -> None:
+    """Parquet sink (mode overwrite) with explicit output-file sizing — the
+    small-files guard for a many-task job (a 10k-task stage otherwise
+    writes 10k tiny files, and at 100 TB the downstream scan dies on file-
     listing + row-group overhead, not bytes).
 
-    ``target_files``: coalesce-style repartition to exactly N output files
-    (round-robin, balanced — use for final outputs of a wide stage).
-    ``max_records_per_file``: let Spark split oversized tasks' outputs
-    (``maxRecordsPerFile``) without an extra shuffle — use when input
-    partitioning should be preserved. Both may be combined.
+    ``target_files``: round-robin repartition to exactly N balanced output
+    files; None keeps the input partitioning (one file per task).
     """
     if target_files is not None:
         if target_files <= 0:
             raise ValueError("target_files must be positive")
         df = df.repartition(target_files)
-    w = df.write.mode(mode)
-    if max_records_per_file is not None:
-        w = w.option("maxRecordsPerFile", int(max_records_per_file))
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    df.write.mode("overwrite").parquet(path)
