@@ -510,19 +510,18 @@ def q_session_stats(spark, sf_dir):
     return session_stats(_t(spark, sf_dir, "events"))
 
 
-def q_curate_documents(spark, sf_dir):
-    """The flagship curation COMPOSITION, one lazy plan end-to-end:
-    exact-dedup survivors -> quality-filter keep -> drop docs sharing
-    n-grams with the benchmark subset -> per-source cap. Each stage is an
-    already-oracle-verified operator; this query pins that they compose.
-    Dedup uses the single-scan window form: the composition reads and
-    fingerprints the corpus once instead of twice (the semi-join form is
+def _curated_survivors(spark, sf_dir):
+    """The flagship curation COMPOSITION up to its per-source cap, one lazy
+    plan end-to-end: exact-dedup survivors -> quality-filter keep -> drop
+    docs sharing n-grams with the benchmark subset. Each stage is an
+    already-oracle-verified operator; the curate queries pin that they
+    compose. Dedup uses the single-scan window form: the composition reads
+    and fingerprints the corpus once instead of twice (the semi-join form is
     for flood-prone corpora; see exact_dedup docstrings). Decontamination
     shingles ONLY the quality-kept survivors — the anti-join can only
     remove ids present in that frame, so flagging the rest of the corpus
     is pure wasted work (at 10^9 docs the decontamination pass runs over
     the curated subset, not the raw crawl)."""
-    from xoverrr_spark.operators.corpus import cap_per_source
     from xoverrr_spark.operators.dedup import contaminated_docs, exact_dedup_window
     from xoverrr_spark.pipeline.quality_filter import annotate
 
@@ -551,11 +550,18 @@ def q_curate_documents(spark, sf_dir):
     )
     s2 = dec.filter("keep").select("doc_id", "source", "text")
     bench = d.filter(F.col("doc_id") % oracle.DECONTAM_BENCH_MOD == 0)
-    s3 = (
+    return (
         s2.select("doc_id", "source")
         .join(contaminated_docs(s2, bench, "doc_id", "text"), "doc_id", "left_anti")
     )
-    return cap_per_source(s3, "source", "doc_id", oracle.CURATE_SOURCE_CAP)
+
+
+def q_curate_documents(spark, sf_dir):
+    """The curation composition capped per source by a window rank."""
+    from xoverrr_spark.operators.corpus import cap_per_source
+
+    return cap_per_source(
+        _curated_survivors(spark, sf_dir), "source", "doc_id", oracle.CURATE_SOURCE_CAP)
 
 
 def q_curate_documents_hash(spark, sf_dir):
@@ -563,32 +569,9 @@ def q_curate_documents_hash(spark, sf_dir):
     stage — the hot-domain scale path (a 10^8-doc domain stays fully
     parallel instead of serializing in one window partition)."""
     from xoverrr_spark.operators.corpus import cap_per_source_hash
-    from xoverrr_spark.operators.dedup import contaminated_docs, exact_dedup_window
-    from xoverrr_spark.pipeline.quality_filter import annotate
 
-    d = _t(spark, sf_dir, "documents", rebalance=False)
-    survivors = exact_dedup_window(d, "doc_id", "text")
-    # persisted two-consumer survivor frame, projected to the consumed
-    # columns before the persist; decontamination shingles only the kept
-    # survivors (see q_curate_documents)
-    # persist BEFORE the keep-filter: pushing filter("keep") below the
-    # annotate projection makes Catalyst inline the whole rule battery
-    # into the predicate — measured 116 regexp_replace / 46 split / 39
-    # stopword INSET copies in the optimized plan and 7.2s for this one
-    # stage (the CLAUDE.md reused-tree trap via FilterPushdown). Caching
-    # the four consumed columns evaluates the battery exactly once; the
-    # filter then reads the cached boolean.
-    dec = persist(
-        annotate(survivors, caption_col="text", with_ppl=False)
-        .select("doc_id", "source", "text", "keep")
-    )
-    s2 = dec.filter("keep").select("doc_id", "source", "text")
-    bench = d.filter(F.col("doc_id") % oracle.DECONTAM_BENCH_MOD == 0)
-    s3 = (
-        s2.select("doc_id", "source")
-        .join(contaminated_docs(s2, bench, "doc_id", "text"), "doc_id", "left_anti")
-    )
-    return cap_per_source_hash(s3, "source", "doc_id", oracle.CURATE_SOURCE_CAP)
+    return cap_per_source_hash(
+        _curated_survivors(spark, sf_dir), "source", "doc_id", oracle.CURATE_SOURCE_CAP)
 
 
 def q_lsh_bucket_stats(spark, sf_dir):

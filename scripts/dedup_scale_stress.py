@@ -139,8 +139,7 @@ def write_md(records: list[dict]) -> None:
                 "",
                 f"**Scaling {n:,} docs ({corpus}), local[{lo}] -> local[{hi}]: "
                 f"{t_lo}s -> {t_hi}s, speedup {t_lo / t_hi:.2f}x, "
-                f"efficiency {eff:.3f}** (hardware caps 8->32 at ~0.56 on "
-                "this SMT/shared host — see BENCH.md).",
+                f"efficiency {eff:.3f}**.",
             ]
     # weak scaling: throughput by corpus size at fixed cores (uniform only —
     # mixing corpus shapes would corrupt the size-vs-throughput signal)
@@ -192,8 +191,8 @@ def write_md(records: list[dict]) -> None:
     lines += [
         "",
         "Reading the core ladder honestly: this job is shuffle- and",
-        "GC-bound in one JVM on SMT-shared silicon (BENCH.md's CPU",
-        "microbench caps 8->32 at ~0.56), so the large-core wins are",
+        "GC-bound in one JVM on SMT-shared silicon (a CPU microbench on",
+        "the 32-thread r06 host capped 8->32 at ~0.56), so the large-core wins are",
         "modest and small corpora are overhead-dominated. On a real",
         "multi-executor cluster the same plan shape distributes the",
         "shuffles — executor-level evidence is in BENCH_EXECUTORS.md",

@@ -14,15 +14,17 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from scripts.bench_leaves import leaf  # noqa: E402
 
 ROWS = int(os.environ.get("XOVERRR_EXEC_ROWS", "1000000"))
 CORES_PER_EXEC = 2
 MEM_MB = 2048
 
 
-def run_at(n_executors: int, fixture: str, runs: int = 2) -> float:
+def run_at(n_executors: int, fixture: str) -> dict:
     from pyspark.sql import SparkSession
 
     from xoverrr_spark.pipeline.quality_filter import quality_filter
@@ -44,34 +46,24 @@ def run_at(n_executors: int, fixture: str, runs: int = 2) -> float:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    df = spark.read.parquet(fixture)
-    q = quality_filter(df)
-    q.write.format("noop").mode("overwrite").save()  # warm-up
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.time()
-        q.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
+    q = quality_filter(spark.read.parquet(fixture))
+    timing = leaf(lambda: q.write.format("noop").mode("overwrite").save())
     spark.stop()
     time.sleep(2)  # let executor JVMs exit before the next cluster
-    return best
+    return timing
 
 
 def main() -> None:
-    from bench import fixture_path
+    from xoverrr_spark.fixtures.images import cached_images_parquet
 
     if not os.path.exists(os.path.join(REPO, "dist", "xoverrr_spark.zip")):
         os.system(f"bash {REPO}/scripts/make_pyfiles.sh >/dev/null")
-    fixture = fixture_path(ROWS)
+    fixture = cached_images_parquet(ROWS, os.path.join(REPO, ".bench_cache"))
     load0 = os.getloadavg()[0]
 
-    # interleaved windows, best-window ratio (same noise rationale as bench.py)
-    windows = []
-    for _ in range(2):
-        t1 = run_at(1, fixture)
-        t4 = run_at(4, fixture)
-        windows.append((t1, t4, (t1 / t4) / 4))
-    t1, t4, eff = max(windows, key=lambda w: w[2])
+    r1, r4 = run_at(1, fixture), run_at(4, fixture)
+    t1, t4 = r1["median_s"], r4["median_s"]
+    eff = (t1 / t4) / 4
 
     thr1, thr4 = ROWS / t1, ROWS / t4
     result = {
@@ -98,7 +90,8 @@ def main() -> None:
             f"| 4 executors | {t4:.2f} | {thr4:,.0f} | {thr4 / 4:,.0f} |\n\n"
             f"**Scaling efficiency (1 -> 4 executors): {eff:.3f}** "
             f"(target >= 0.8). External loadavg at start: {load0:.2f}.\n"
-            f"Windows (t1, t4, eff): {[(round(a,2), round(b,2), round(c,3)) for a,b,c in windows]}\n"
+            "Wall s is the median over the steal-quiet calls of three after one\n"
+            f"warm-up; IQR 1 executor {r1['iqr_s']:.2f} s, 4 executors {r4['iqr_s']:.2f} s.\n"
         )
     print(json.dumps(result))
 

@@ -3,9 +3,10 @@
 Correctness is proven at sf1 (full oracle sweep green), but per-operator
 TIMING evidence topped out at sf0.1 — leaving the last operator-level
 scaling question open: does any headline query go superlinear at 10x the
-data? This runs the bench operator-query list once at each scale factor
-in one session (same cores, interleaved — the sf0.1 leg doubles as the
-noise reference) and records the 10x wall ratio per query.
+data? This times the bench operator-query list at each scale factor in
+one session (same cores; each query's wall is bench.py's leaf median over
+the steal-quiet calls of three after one warm-up) and records the 10x
+wall ratio per query.
 
 Reading the ratios: sf1 is 10x the rows, so a CPU-bound scan ratio of
 ~10 is linear; well under 10 means fixed per-query overhead (session,
@@ -18,7 +19,8 @@ Results: .bench_cache/sf1_sweep.json + SF1_BENCH.md (bench.py references
 the headline in its JSON line when present).
 
 Usage: python scripts/sf1_timing_sweep.py [--sf01 /root/testdata/sf0.1]
-       [--sf1 .bench_cache/sf1]
+       [--sf1 .bench_cache/sf1] [--cores N]   (N defaults to bench.CPUS:
+       $SPARK_GRAFT_CPUS, else nproc)
 """
 
 from __future__ import annotations
@@ -35,35 +37,28 @@ CACHE = os.path.join(REPO, ".bench_cache")
 
 
 def main(argv=None) -> None:
+    import bench
+    from xoverrr_spark.session import get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf01", default="/root/testdata/sf0.1")
     ap.add_argument("--sf1", default=os.path.join(CACHE, "sf1"))
-    ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=bench.CPUS)
     args = ap.parse_args(argv)
-
-    import bench
-    from xoverrr_spark.session import get_spark
 
     load = os.getloadavg()[0]
     spark = get_spark("sf1_sweep", cores=args.cores)
     try:
-        # warm-up: JIT + python workers, not recorded
-        bench.run_operator_queries(spark, args.sf01)
         t01 = bench.run_operator_queries(spark, args.sf01)
         t1 = bench.run_operator_queries(spark, args.sf1)
     finally:
         spark.stop()
 
-    rows = [
-        {
-            "query": q,
-            "sf01_s": t01[q],
-            "sf1_s": t1[q],
-            "ratio_10x": round(t1[q] / t01[q], 2) if t01[q] else None,
-        }
-        for q in t01
-    ]
+    rows = []
+    for q in t01:
+        a, b = t01[q]["median_s"], t1[q]["median_s"]
+        rows.append({"query": q, "sf01_s": a, "sf1_s": b,
+                     "ratio_10x": round(b / a, 2) if a else None})
     record = {
         "cores": args.cores,
         "external_loadavg_at_start": round(load, 2),

@@ -15,7 +15,6 @@ from xoverrr_spark.codecs.png import (
     encode_image,
     encode_png,
     psnr,
-    quantize_lossy,
 )
 
 
@@ -69,11 +68,10 @@ def test_dct_quality_scales_quant_table():
 
 
 def test_decode_image_dispatches_on_magic():
-    # older cached fixtures hold quantized-PNG bytes under fmt='jpeg';
-    # newer ones hold DCT1 containers — both must decode
+    # older cached fixtures hold PNG bytes under fmt='jpeg'; newer ones
+    # hold DCT1 containers — both must decode
     px = _px(10)
-    legacy = encode_png(quantize_lossy(px))
-    assert np.array_equal(decode_image(legacy, "jpeg"), quantize_lossy(px))
+    assert np.array_equal(decode_image(encode_png(px), "jpeg"), px)
     assert psnr(px, decode_image(encode_dct(px), "jpeg")) >= 40.0
 
 

@@ -2,9 +2,9 @@
 (/root/reference/tests/unit/test_utils.py:159-160 — 10k x 11 cols < 1 s;
 :211 — 1M x 10 cols < 5 s, both single-process pandas).
 
-Margins here are wide (shared host with external load bursts); BENCH.md
-carries the tight measured numbers (1M x 10 diff ~1.4-2.0 s at local[32],
-vs the reference's ~3 s).
+Margins here are wide (shared host with external load bursts); bench.py
+measures the tight numbers (its ``diff_1m_rows_x10cols`` leaf, against
+the reference's ~3 s).
 """
 
 import time
@@ -38,8 +38,8 @@ def test_diff_perf_gate(spark, n, cols, budget_s):
 
 def test_curate_v2_perf_gate(spark):
     """The four-stage recipe composition must stay in the single-digit
-    seconds at sf0.01 (wide margin for host bursts; BENCH.md has the tight
-    numbers). Guards against the unpersisted-branch regression: without
+    seconds at sf0.01 (wide margin for host bursts; bench.py's
+    ``curate_documents_v2`` leaf has the tight numbers). Guards against the unpersisted-branch regression: without
     the dd/keepr persists this plan recomputes the window dedup 4x."""
     import __spark_entry__ as e
     from xoverrr_spark.intermediates import scope
@@ -63,11 +63,12 @@ def test_bench_fixture_cache_is_content_keyed(tmp_path):
     import os
     import shutil
 
-    from bench import _fixture_digest, fixture_path
+    from xoverrr_spark.fixtures.images import _fixture_digest, cached_images_parquet
 
     repo = os.path.dirname(os.path.abspath(__file__ + "/.."))
     d0 = _fixture_digest()
-    assert d0 in fixture_path(1000)  # the digest actually keys the path
+    # the digest actually keys the path
+    assert d0 in cached_images_parquet(1000, str(tmp_path / "cache"))
 
     # clone the two keyed sources, tweak the rulespec clone: digest moves
     for rel in ("xoverrr_spark/fixtures/images.py",

@@ -6,10 +6,9 @@ byte-equality through the pipeline.
 """
 
 import numpy as np
-import pandas as pd
 import pytest
 
-from xoverrr_spark.codecs.png import decode_image, psnr, quantize_lossy
+from xoverrr_spark.codecs.png import decode_image
 from xoverrr_spark.fixtures.images import generate_images_pdf, images_df
 from xoverrr_spark.fixtures.labeler import label_frame
 from xoverrr_spark.pipeline.quality_filter import annotate, quality_filter

@@ -118,17 +118,27 @@ def _caller_files() -> list[Path]:
     return sorted(p for p in files if "__pycache__" not in p.parts)
 
 
-def _names(node: ast.AST) -> set[str]:
-    """Every name ``node`` refers to: plain names, attributes and the
-    names an import binds or reads."""
+def _reads(node: ast.AST) -> set[str]:
+    """The plain names and attributes ``node`` reads."""
     out = set()
     for sub in ast.walk(node):
         if isinstance(sub, ast.Name):
             out.add(sub.id)
         elif isinstance(sub, ast.Attribute):
             out.add(sub.attr)
-        elif isinstance(sub, ast.alias):
-            out.update(sub.name.split("."))
+    return out
+
+
+def _names(node: ast.AST, module_reads: set[str]) -> set[str]:
+    """Every name ``node`` refers to: the names it reads, and the names an
+    import in it brings in when its module (``module_reads``) reads the
+    name that import binds. An import nothing reads reaches nothing."""
+    out = _reads(node)
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.alias):
+            bound = sub.asname or sub.name.split(".")[0]
+            if bound in module_reads:
+                out.update(sub.name.split("."))
     return out
 
 
@@ -151,14 +161,15 @@ def _unreached_definitions() -> list[tuple[str, int, str]]:
     for path in _caller_files():
         rel = str(path.relative_to(ROOT))
         tree = ast.parse(path.read_text(), rel)
+        reads = _reads(tree)
         if not rel.startswith(f"{PKG}/"):
-            free |= _names(tree)
+            free |= _names(tree, reads)
             continue
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs[(rel, node.name)] = (node.lineno, _names(node))
+                defs[(rel, node.name)] = (node.lineno, _names(node, reads))
             else:
-                free |= _names(node)
+                free |= _names(node, reads)
     # A definition's own body never counts for it: it is read only once
     # the definition is reached.
     reached: set[tuple[str, str]] = set()

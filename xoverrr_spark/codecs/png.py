@@ -14,8 +14,7 @@ mechanism rather than the earlier per-pixel quantization stand-in
 uniform-noise fixtures is ~44 dB, satisfying the "PSNR >= 40 dB for lossy
 fmt" invariant in BASELINE.json input_hint. ``decode_image`` dispatches on
 the container magic, so parquet fixtures written by either generation
-decode transparently. ``quantize_lossy`` is kept for tests that need a
-pixel-domain perturbation.
+decode transparently.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ import zlib
 import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-LOSSY_QUANT_STEP = 8
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -94,12 +92,6 @@ def decode_png(data: bytes) -> np.ndarray:
         else:
             raise ValueError(f"unsupported PNG filter {f}")
     return out.astype(np.uint8).reshape(h, w, 3)
-
-
-def quantize_lossy(pixels: np.ndarray, step: int = LOSSY_QUANT_STEP) -> np.ndarray:
-    """Deterministic 'lossy' transform: quantize each channel to `step`."""
-    q = (pixels.astype(np.int32) + step // 2) // step * step
-    return np.clip(q, 0, 255).astype(np.uint8)
 
 
 def encode_image(pixels: np.ndarray, fmt: str) -> bytes:

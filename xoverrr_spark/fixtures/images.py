@@ -6,14 +6,17 @@ Schema per BASELINE.json input_hint:
 
 Captions cover every rule branch; phash is deliberately skewed (a dominant
 cluster landing in one bucket) to exercise the salting path. Image bytes
-are real PNGs from the pure-python codec; fmt='jpeg' rows are the
-deterministic lossy stand-in (quantized pixels, PSNR ~41 dB vs originals).
+are real PNGs from the pure-python codec; fmt='jpeg' rows ride the DCT
+lossy codec (codecs.dct, PSNR >= 40 dB vs originals).
 
 Everything is seeded via ``numpy.random.Generator(PCG64(seed))`` — same
 (n, seed) always yields byte-identical tables.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 import numpy as np
 import pandas as pd
@@ -154,3 +157,37 @@ def images_df(spark, n: int, seed: int = 42, with_bytes: bool = True):
     return spark.createDataFrame(
         generate_images_pdf(n, seed, with_bytes), schema=IMAGES_SCHEMA
     )
+
+
+def _fixture_digest(root: str | None = None) -> str:
+    """Content key for cached fixtures: a fixture is a function of the
+    generator AND the rule battery it is engineered against, so the key
+    hashes both source files under ``root`` (the directory holding the
+    package). Keying only by (n, seed) would let a generator or rulespec
+    edit silently bench stale inputs."""
+    root = root or os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    h = hashlib.sha256()
+    for rel in ("xoverrr_spark/fixtures/images.py", "xoverrr_spark/functions/rulespec.py"):
+        with open(os.path.join(root, rel), "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()[:10]
+
+
+def cached_images_parquet(n: int, cache_dir: str, with_bytes: bool = False) -> str:
+    """Path of the n-row, seed-42 fixture as parquet in ``cache_dir``,
+    written on first use and keyed by ``_fixture_digest``. Without
+    ``with_bytes`` the file has no ``bytes`` column: the filter never
+    decodes, so only the payload run needs it."""
+    kind = "images_bytes" if with_bytes else "images"
+    path = os.path.join(cache_dir, f"{kind}_n{n}_seed42_{_fixture_digest()}.parquet")
+    if not os.path.exists(path):
+        os.makedirs(cache_dir, exist_ok=True)
+        pdf = generate_images_pdf(n, seed=42, with_bytes=with_bytes)
+        if not with_bytes:
+            pdf = pdf.drop(columns=["bytes"])
+        tmp = path + ".tmp"
+        # small row groups => the file is splittable into many tasks (a real
+        # 100 TB table has thousands of files; one local file must emulate that)
+        pdf.to_parquet(tmp, index=False, row_group_size=max(n // 128, 1000))
+        os.replace(tmp, path)
+    return path

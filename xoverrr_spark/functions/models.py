@@ -24,15 +24,9 @@ def train_char_bigram_artifact(corpus_text: str, path: str) -> str:
     training on the same corpus yields bit-identical scores."""
     import numpy as np
 
-    lut = np.zeros(256, np.int32)
-    for i in range(26):
-        lut[ord("a") + i] = i + 1
-    counts = np.ones((27, 27), np.float64)
-    codes = lut[np.frombuffer(
-        corpus_text.replace("\n", " ").lower().encode("ascii", "replace"), np.uint8
-    )]
-    np.add.at(counts, (codes[:-1], codes[1:]), 1.0)
-    logp = np.log(counts / counts.sum(axis=1, keepdims=True))
+    from .perplexity import char_bigram_tables
+
+    lut, logp = char_bigram_tables(corpus_text)
     np.savez(path, lut=lut, logp=logp)
     return path
 

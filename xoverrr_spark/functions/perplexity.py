@@ -47,18 +47,20 @@ the boat sails across the calm lake with mountains reflected in the water
 """
 
 
-def _build_lut_and_table() -> tuple[np.ndarray, np.ndarray]:
+def char_bigram_tables(corpus_text: str) -> tuple[np.ndarray, np.ndarray]:
+    """Train a Laplace-smoothed char-bigram LM on ``corpus_text``: the
+    256-entry byte->code LUT and the 27x27 log-prob table the scorer reads."""
     lut = np.zeros(256, np.int32)
     for i in range(26):
         lut[ord("a") + i] = i + 1
     counts = np.ones((_ALPHA, _ALPHA), np.float64)  # Laplace smoothing
-    codes = lut[np.frombuffer(_SEED_CORPUS.replace("\n", " ").lower().encode("ascii", "replace"), np.uint8)]
+    codes = lut[np.frombuffer(corpus_text.replace("\n", " ").lower().encode("ascii", "replace"), np.uint8)]
     np.add.at(counts, (codes[:-1], codes[1:]), 1.0)
     logp = np.log(counts / counts.sum(axis=1, keepdims=True))
     return lut, logp
 
 
-_LUT, _LOGP = _build_lut_and_table()
+_LUT, _LOGP = char_bigram_tables(_SEED_CORPUS)
 
 
 def batch_perplexity(captions: pd.Series) -> pd.Series:

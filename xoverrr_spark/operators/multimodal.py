@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..codecs.png import decode_image, psnr, quantize_lossy
+from ..codecs.png import decode_image, psnr
 from ..intermediates import persist
 from ..pyworker import forget_zip_importers
 

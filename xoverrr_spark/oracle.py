@@ -658,12 +658,11 @@ DECONTAM_BENCH_MOD = 50  # synthetic "benchmark set": doc_id % 50 == 0
 CURATE_SOURCE_CAP = 20
 
 
-def curate_documents() -> str:
-    """Twin of the full curation composition (q_curate_documents):
-    exact-dedup survivors -> quality keep -> drop benchmark-contaminated
-    -> per-source cap. Every stage reuses an already-verified twin."""
-    return f"""
-WITH fp AS (
+def _curated_kept_ctes() -> str:
+    """The CTEs every curation twin shares, ending in ``kept``: exact-dedup
+    survivors -> quality keep -> drop benchmark-contaminated. Each stage
+    reuses an already-verified twin."""
+    return f"""WITH fp AS (
   SELECT doc_id, source,
          md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
   FROM documents
@@ -682,7 +681,14 @@ kept AS (
   FROM dedup dd
   JOIN qf ON qf.doc_id = dd.doc_id AND qf.keep
   ANTI JOIN contam c ON c.doc_id = dd.doc_id
-)
+)"""
+
+
+def curate_documents() -> str:
+    """Twin of the full curation composition (q_curate_documents): the
+    shared curation CTEs, then a per-source window cap."""
+    return f"""
+{_curated_kept_ctes()}
 SELECT doc_id, source FROM (
   SELECT doc_id, source,
          ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
@@ -701,26 +707,7 @@ def curate_documents_hash() -> str:
 
     h = md5_long_sql("CAST(k.doc_id AS VARCHAR)")
     return f"""
-WITH fp AS (
-  SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM documents
-),
-dedup AS (
-  SELECT doc_id, source FROM (
-    SELECT doc_id, source,
-           ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-    FROM fp
-  ) WHERE rn = 1
-),
-qf AS ({quality_filter_documents().strip()}),
-contam AS ({decontaminate_documents().strip()}),
-kept AS (
-  SELECT dd.doc_id, dd.source
-  FROM dedup dd
-  JOIN qf ON qf.doc_id = dd.doc_id AND qf.keep
-  ANTI JOIN contam c ON c.doc_id = dd.doc_id
-),
+{_curated_kept_ctes()},
 c AS (SELECT source AS src_n, COUNT(*) AS n FROM kept GROUP BY source)
 SELECT k.doc_id, k.source
 FROM kept k JOIN c ON k.source IS NOT DISTINCT FROM c.src_n
