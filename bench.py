@@ -4,9 +4,10 @@
    "queries": {...per-query sec...}, "sf": <sf>, ...extras}
 
 Headline = the image+caption quality-filter pipeline (the north-rule
-workload) over a cached deterministic fixture, timed at two local
-parallelism levels (local[N] and local[4N], N = CPUS // 4) on identical
-input to evidence the N->4N scaling-efficiency criterion on one host.
+workload) over a cached deterministic fixture, timed at local[CPUS] and,
+on identical input, at local[CPUS // 4] to evidence the N->4N
+scaling-efficiency criterion on one host (the ratio is exactly 1:4 when
+CPUS is a multiple of 4; under 4 cores there is no pair).
 Plus the operator queries over $SPARK_GRAFT_SF_DIR parquet.
 
 Every number is a leaf timed by ``scripts/bench_leaves.leaf``: the median
@@ -161,7 +162,7 @@ def _bucket_bench_tables(spark):
     return plain1, plain2
 
 
-def time_bucketed_join(spark) -> dict[str, dict]:
+def time_bucketed_join(spark) -> tuple[dict, dict]:
     """Fact-to-fact 4M x 4M equi-join + aggregate, plain parquet (two
     shuffle exchanges + sorts) vs co-bucketed tables (zero exchanges —
     the shuffle was paid ONCE at write time). The 100-TB argument in one
@@ -185,8 +186,7 @@ def time_bucketed_join(spark) -> dict[str, dict]:
 
         # same answer, or the comparison is meaningless
         assert plain().collect() == bucketed().collect()
-        return {"shuffle_join_4m": leaf(lambda: plain().collect()),
-                "bucketed_join_4m": leaf(lambda: bucketed().collect())}
+        return leaf(lambda: plain().collect()), leaf(lambda: bucketed().collect())
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -229,16 +229,18 @@ def main() -> None:
     quiet = wait_for_quiet()
     load_start = loadavg()
     # the N -> 4N evidence pair: 4N is every core the bench may use
-    low, high = max(1, CPUS // 4), CPUS
+    low, high = CPUS // 4, CPUS
     fixture = cached_images_parquet(PIPELINE_ROWS, CACHE)
 
-    spark = _new_spark(low)
-    java = spark._jvm.System.getProperty("java.version")
-    pipe_low = time_pipeline(spark, fixture)
-    spark.stop()
+    leaves = {}
+    if low:
+        spark = _new_spark(low)
+        leaves["pipeline_low"] = {"cores": low, **time_pipeline(spark, fixture)}
+        spark.stop()
 
     spark = _new_spark(high)
-    pipe = time_pipeline(spark, fixture)
+    java = spark._jvm.System.getProperty("java.version")
+    pipe = leaves["pipeline_high"] = {"cores": high, **time_pipeline(spark, fixture)}
     # scale-up point: the SAME pipeline at 4x the rows on the same cores.
     # Throughput should RISE (per-stage overhead amortizes; a falling
     # number would mean some stage is superlinear / driver-bound).
@@ -248,21 +250,19 @@ def main() -> None:
     payload = time_pipeline(
         spark, cached_images_parquet(PAYLOAD_ROWS, CACHE, with_bytes=True), annotate)
     queries = run_operator_queries(spark)
-    queries.update(time_bucketed_join(spark))
+    queries["shuffle_join_4m"], queries["bucketed_join_4m"] = time_bucketed_join(spark)
     queries["compare_frames_full_1m"] = time_compare_full_1m(spark)
     queries["pipeline_with_payload_100k"] = payload
     queries["diff_1m_rows_x10cols"] = time_diff_1m(spark)
     spark.stop()
 
-    leaves = {f"pipeline_local{low}": pipe_low, f"pipeline_local{high}": pipe,
-              "scale_up_4x": scale_up, **queries}
+    leaves.update(scale_up_4x=scale_up, **queries)
     host = host_stamp(java, quiet, load_start)
     host["spark_cores"] = high
     sha = write_leaves(os.path.join(ROOT, LEAVES_FILE), leaves, host)
 
-    t_low, t_high, t_4x = pipe_low["median_s"], pipe["median_s"], scale_up["median_s"]
-    thr_low, thr_high, thr_4x = PIPELINE_ROWS / t_low, PIPELINE_ROWS / t_high, 4 * PIPELINE_ROWS / t_4x
-    eff = (t_low / t_high) / (high / low)
+    t_high, t_4x = pipe["median_s"], scale_up["median_s"]
+    thr_high, thr_4x = PIPELINE_ROWS / t_high, 4 * PIPELINE_ROWS / t_4x
     shuffle_join, bucketed_join = (queries[k]["median_s"]
                                    for k in ("shuffle_join_4m", "bucketed_join_4m"))
     result = {
@@ -274,14 +274,6 @@ def main() -> None:
         "sf": _sf_label(),
         "pipeline_rows": PIPELINE_ROWS,
         "images_per_sec": round(thr_high, 1),
-        "scaling": {
-            "cores_low": low,
-            "cores_high": high,
-            "images_per_sec_low": round(thr_low, 1),
-            "images_per_sec_high": round(thr_high, 1),
-            "efficiency_n_to_4n": round(eff, 3),
-        },
-        "scaling_efficiency": round(eff, 3),
         "scale_up_4x": {
             "rows": 4 * PIPELINE_ROWS,
             "sec": round(t_4x, 3),
@@ -299,6 +291,18 @@ def main() -> None:
         "external_loadavg_at_start": load_start[0],
         "leaves": {"file": LEAVES_FILE, "sha256_12": sha},
     }
+    if low:
+        t_low = leaves["pipeline_low"]["median_s"]
+        # throughput per core at high over that at low
+        eff = round((t_low / t_high) / (high / low), 3)
+        result["scaling"] = {
+            "cores_low": low,
+            "cores_high": high,
+            "images_per_sec_low": round(PIPELINE_ROWS / t_low, 1),
+            "images_per_sec_high": round(thr_high, 1),
+            "efficiency": eff,
+        }
+        result["scaling_efficiency"] = eff
     # staged dedup-job scale evidence (recorded by scripts/
     # dedup_scale_stress.py on synthetic corpora up to 10M docs — far
     # beyond sf0.1's 5k documents; each record carries its own

@@ -27,11 +27,11 @@ LINE_LIMIT = 1900
 DROP_ORDER = ("executors_1to4", "scale_up_4x", "dedup_job_scale", "scaling", "leaves")
 
 
-def leaf(fn, calls: int = CALLS, ticks=_steal_ticks, clock=time.perf_counter) -> dict:
-    """Time ``fn()``: one warm-up call, then ``calls`` timed calls."""
+def leaf(fn, ticks=_steal_ticks, clock=time.perf_counter) -> dict:
+    """Time ``fn()``: one warm-up call, then ``CALLS`` timed calls."""
     fn()
     samples, steal = [], []
-    for _ in range(calls):
+    for _ in range(CALLS):
         t0, (all0, stolen0) = clock(), ticks()
         fn()
         t1, (all1, stolen1) = clock(), ticks()

@@ -66,6 +66,7 @@ def main(argv=None) -> None:
         "max_ratio": max(r["ratio_10x"] for r in rows),
         "rows": rows,
     }
+    os.makedirs(CACHE, exist_ok=True)
     with open(os.path.join(CACHE, "sf1_sweep.json"), "w") as fh:
         json.dump(record, fh, indent=1)
 

@@ -9,7 +9,7 @@ import ast
 import json
 from pathlib import Path
 
-from scripts.bench_leaves import LINE_LIMIT, headline_line, leaf
+from scripts.bench_leaves import CALLS, LINE_LIMIT, headline_line, leaf
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -30,8 +30,8 @@ def _scripted(samples, steals):
 def _leaf(samples, steals):
     calls = []
     clock, ticks = _scripted(samples, steals)
-    rec = leaf(lambda: calls.append(1), calls=len(samples), ticks=ticks, clock=clock)
-    assert len(calls) == len(samples) + 1  # one untimed warm-up call
+    rec = leaf(lambda: calls.append(1), ticks=ticks, clock=clock)
+    assert len(calls) == CALLS + 1  # one untimed warm-up call
     return rec
 
 
@@ -46,27 +46,31 @@ def test_leaf_selects_quiet_calls_by_steal_not_by_time():
 
 
 def test_leaf_keeps_every_call_within_slack_of_the_quietest():
-    rec = _leaf([1.0, 9.0, 3.0, 2.0, 5.0], [0.004, 0.5, 0.0, 0.2, 0.008])
-    assert rec["quiet"] == [0, 2, 4]
+    rec = _leaf([1.0, 5.0, 3.0], [0.0, 0.005, 0.009])
+    assert rec["quiet"] == [0, 1, 2]
     assert rec["median_s"] == 3.0
     assert rec["iqr_s"] == 2.0  # inclusive quartiles of 1, 3, 5
 
 
 def test_leaf_keeps_at_least_the_quieter_half():
-    rec = _leaf([1.0, 2.0, 3.0, 4.0], [0.1, 0.3, 0.2, 0.4])
+    rec = _leaf([1.0, 2.0, 3.0], [0.1, 0.3, 0.2])
     assert rec["quiet"] == [0, 2]
     assert rec["median_s"] == 2.0
-    assert rec["iqr_s"] == 1.0
+    assert rec["iqr_s"] == 1.0  # inclusive quartiles of 1, 3
 
 
 def _bench_query_names() -> list[str]:
-    """bench.py's query keys, read from its source."""
+    """bench.py's query keys, read from its source: ``OPERATOR_QUERY_NAMES``
+    plus every ``queries["..."] = ...`` in ``main()``. (bench.py is a script:
+    importing it would freeze its environment-read settings at collection.)"""
     tree = ast.parse((ROOT / "bench.py").read_text())
     names = next(
         ast.literal_eval(n.value) for n in tree.body
-        if isinstance(n, ast.Assign) and n.targets[0].id == "OPERATOR_QUERY_NAMES")
-    return names + ["shuffle_join_4m", "bucketed_join_4m", "compare_frames_full_1m",
-                    "pipeline_with_payload_100k", "diff_1m_rows_x10cols"]
+        if isinstance(n, ast.Assign) and getattr(n.targets[0], "id", None) == "OPERATOR_QUERY_NAMES")
+    names += [n.slice.value for n in ast.walk(tree)
+              if isinstance(n, ast.Subscript) and isinstance(n.ctx, ast.Store)
+              and getattr(n.value, "id", None) == "queries"]
+    return names
 
 
 def test_headline_line_fits_the_tail_for_a_maximal_record():
@@ -76,7 +80,7 @@ def test_headline_line_fits_the_tail_for_a_maximal_record():
         "unit": "sec", "queries": {name: big for name in _bench_query_names()},
         "sf": 1000.0, "pipeline_rows": 10**9, "images_per_sec": big,
         "scaling": {"cores_low": 1024, "cores_high": 4096, "images_per_sec_low": big,
-                    "images_per_sec_high": big, "efficiency_n_to_4n": big},
+                    "images_per_sec_high": big, "efficiency": big},
         "scaling_efficiency": big,
         "scale_up_4x": {"rows": 4 * 10**9, "sec": big, "images_per_sec": big,
                         "throughput_ratio_vs_1x": big},
