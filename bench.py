@@ -280,9 +280,6 @@ def main() -> None:
             "images_per_sec": round(thr_4x, 1),
             "throughput_ratio_vs_1x": round(thr_4x / thr_high, 3),
         },
-        # multi-JVM executor-level scaling (1 vs 4 real executors) is
-        # measured by scripts/executor_scaling.py -> BENCH_EXECUTORS.md
-        "executors_1to4": "eff 0.80-1.05, BENCH_EXECUTORS.md",
         "diff_row_pairs_per_sec": round(DIFF_BENCH_ROWS / queries["diff_1m_rows_x10cols"]["median_s"], 1),
         # co-located (bucketed) vs shuffle join, same 4Mx4M SMJ + agg
         "bucketed_join_speedup": round(shuffle_join / bucketed_join, 2),

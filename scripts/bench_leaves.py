@@ -24,7 +24,7 @@ CALLS = 3
 # line must fit in it
 LINE_LIMIT = 1900
 # optional blocks of the JSON line, least load-bearing first
-DROP_ORDER = ("executors_1to4", "scale_up_4x", "dedup_job_scale", "scaling", "leaves")
+DROP_ORDER = ("scale_up_4x", "dedup_job_scale", "scaling", "leaves")
 
 
 def leaf(fn, ticks=_steal_ticks, clock=time.perf_counter) -> dict:

@@ -1,11 +1,14 @@
 #!/usr/bin/env bash
-# Full local verification: the no-Spark fast lane (reachability guards and
-# bench.py's leaf timing), the test suite, the benchmark's smoke test, and
+# Full local verification: the no-Spark fast lane (reachability guards,
+# bench.py's leaf timing, the oracle paste guard and every oracle twin run
+# on DuckDB), the test suite, the benchmark's smoke test, and
 # the Spark-vs-DuckDB parity sweep at both scale factors.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "== no-Spark fast lane =="
-python -m pytest tests/test_reachable.py tests/test_bench_leaves.py -q
+python -m pytest tests/test_reachable.py tests/test_bench_leaves.py \
+    tests/test_entry_contract.py::test_no_stage_sql_pasted_into_the_oracle \
+    tests/test_oracle_twins.py -q
 echo "== pytest =="
 python -m pytest tests/ -q
 echo "== perfbench smoke =="

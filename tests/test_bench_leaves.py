@@ -84,7 +84,6 @@ def test_headline_line_fits_the_tail_for_a_maximal_record():
         "scaling_efficiency": big,
         "scale_up_4x": {"rows": 4 * 10**9, "sec": big, "images_per_sec": big,
                         "throughput_ratio_vs_1x": big},
-        "executors_1to4": "eff 0.80-1.05, BENCH_EXECUTORS.md",
         "diff_row_pairs_per_sec": big, "bucketed_join_speedup": big,
         "external_loadavg_at_start": big,
         "leaves": {"file": ".bench_cache/bench_leaves.json", "sha256_12": "0" * 12},

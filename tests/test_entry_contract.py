@@ -34,6 +34,51 @@ def test_no_sql_text_pasted_into_the_driver():
     assert not pasted, f"SQL text in __spark_entry__.py at lines {pasted}"
 
 
+# A distinctive fragment of each stage several oracle twins replay, with
+# the builder that alone spells it.
+ORACLE_STAGE_FRAGMENTS = {
+    "regexp_replace(lower(text)": "_FP (canonical fingerprint)",
+    "<null-text>": "_FP_KEY (null-safe fingerprint key)",
+    "string_split_regex(trim(lower(text))": "_LOWER_WORDS",
+    "string_split_regex(trim(text)": "_WS_WORDS / _WS_TOKENS",
+    "substr(md5(t), 1, 10)": "_word_hashes_sql (per-word hash list)",
+    "GREATEST(len(": "_shingles_sql",
+    "MIN((": "_minhash_sql",
+    "md5(concat_ws('_'": "_lsh_bands_sql",
+    "AS bkey FROM v": "_embedding_buckets_ctes",
+    "HAVING COUNT(*) <=": "_cap_buckets_sql",
+    "a.band = b.band AND a.bkey = b.bkey": "_capped_self_join_sql",
+    "AS over_cap_docs": "_bucket_size_stats_sql",
+    "DECONTAM_BENCH_MOD} = 0": "_bench_shingles_sql",
+    "AS n_dup_shingles": "_dup_shingle_fraction_sql",
+    "AS n_bench_shingles": "_contamination_scores_sql",
+    "r.b = e2.a": "_COMPONENTS_SQL",
+    "AS bigram": "_repetition_stats_sql",
+    "SUM(n) OVER () AS total": "_mixture_sample_sql",
+    "UNBOUNDED PRECEDING AND 1 PRECEDING": "_pack_sql",
+    "ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id)": "_source_cap_sql",
+    "AS n_distinct FROM": "_profile_sql",
+    "SPLIT_MIRROR_MOD} = 0": "_mirrored_corpus_sql",
+    "CASE source": "_token_targets_sql",
+}
+
+
+def test_no_stage_sql_pasted_into_the_oracle():
+    """An oracle twin composes the stage builders and never pastes a
+    stage's SQL: each fragment above is spelled once in oracle.py."""
+    import inspect
+
+    from xoverrr_spark import oracle
+
+    src = inspect.getsource(oracle)
+    pasted = [
+        f"{frag!r} x{src.count(frag)}: compose {builder}"
+        for frag, builder in ORACLE_STAGE_FRAGMENTS.items()
+        if src.count(frag) != 1
+    ]
+    assert not pasted, "stage SQL pasted in oracle.py:\n" + "\n".join(pasted)
+
+
 def test_query_without_twin_fails_at_oracle_sql(monkeypatch):
     qs = entry.queries()
     monkeypatch.setattr(entry, "queries", lambda: {**qs, "no_such_twin": None})

@@ -118,22 +118,41 @@ def _caller_files() -> list[Path]:
     return sorted(p for p in files if "__pycache__" not in p.parts)
 
 
-def _reads(node: ast.AST) -> set[str]:
-    """The plain names and attributes ``node`` reads."""
+def _imported(tree: ast.AST) -> set[str]:
+    """The names the imports anywhere in ``tree`` bind."""
     out = set()
-    for sub in ast.walk(node):
-        if isinstance(sub, ast.Name):
-            out.add(sub.id)
-        elif isinstance(sub, ast.Attribute):
-            out.add(sub.attr)
+    for sub in ast.walk(tree):
+        if isinstance(sub, ast.Import):
+            out.update(a.asname or a.name.split(".")[0] for a in sub.names)
+        elif isinstance(sub, ast.ImportFrom):
+            out.update(a.asname or a.name for a in sub.names)
     return out
 
 
-def _names(node: ast.AST, module_reads: set[str]) -> set[str]:
+def _reads(node: ast.AST, imported: set[str]) -> set[str]:
+    """The names ``node`` reads, and the attributes it reads off a name an
+    import binds (``imported``): ``oracle.twin`` counts, ``details.field``
+    does not, since a local's attribute is no top-level definition."""
+    out = set()
+    for sub in ast.walk(node):
+        if not isinstance(getattr(sub, "ctx", None), ast.Load):
+            continue
+        if isinstance(sub, ast.Name):
+            out.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            root = sub.value
+            while isinstance(root, ast.Attribute):
+                root = root.value
+            if isinstance(root, ast.Name) and root.id in imported:
+                out.add(sub.attr)
+    return out
+
+
+def _names(node: ast.AST, module_reads: set[str], imported: set[str]) -> set[str]:
     """Every name ``node`` refers to: the names it reads, and the names an
     import in it brings in when its module (``module_reads``) reads the
     name that import binds. An import nothing reads reaches nothing."""
-    out = _reads(node)
+    out = _reads(node, imported)
     for sub in ast.walk(node):
         if isinstance(sub, ast.alias):
             bound = sub.asname or sub.name.split(".")[0]
@@ -161,15 +180,16 @@ def _unreached_definitions() -> list[tuple[str, int, str]]:
     for path in _caller_files():
         rel = str(path.relative_to(ROOT))
         tree = ast.parse(path.read_text(), rel)
-        reads = _reads(tree)
+        imported = _imported(tree)
+        reads = _reads(tree, imported)
         if not rel.startswith(f"{PKG}/"):
-            free |= _names(tree, reads)
+            free |= _names(tree, reads, imported)
             continue
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs[(rel, node.name)] = (node.lineno, _names(node, reads))
+                defs[(rel, node.name)] = (node.lineno, _names(node, reads, imported))
             else:
-                free |= _names(node, reads)
+                free |= _names(node, reads, imported)
     # A definition's own body never counts for it: it is read only once
     # the definition is reached.
     reached: set[tuple[str, str]] = set()

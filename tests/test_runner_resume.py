@@ -104,6 +104,10 @@ def test_lineage_and_metrics_written(spark, tmp_path):
     assert (lm["n_keep"] <= lm["n_rows"]).all()
     assert "en" in set(lm["lang"])
     assert s["status"] == "success"
+    # one clock read ends a bucket: its duration is exactly the span
+    # between its recorded start and finish
+    for r in s["lineage"]:
+        assert r["duration_s"] == r["finished_at"] - r["started_at"]
 
 
 def test_concurrent_buckets_equal_serial(spark, tmp_path):

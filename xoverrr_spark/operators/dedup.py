@@ -183,7 +183,7 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     (verified identical in both engines; consistent with exact_dedup's
     sentinel policy of grouping null texts as duplicates of each other).
     The DuckDB oracle replays the identical integer fold
-    (oracle._SHINGLES_CTE).
+    (oracle._shingles_sql).
     """
     # the explode must sit DIRECTLY over the _wh projection: stacking it
     # on shingle_sets' two projects lets CollapseProject merge them and

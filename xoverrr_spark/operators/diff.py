@@ -175,7 +175,6 @@ def diff_joined(
 
 
 def _classify_from_joined(j: DataFrame, vals: list[str], keys: list[str]) -> DataFrame:
-    both = F.col("s_cnt").isNotNull() & F.col("t_cnt").isNotNull()
     eq = F.col("s_row") == F.col("t_row") if vals else F.lit(True)
     status = (
         F.when(F.col("t_cnt").isNull(), F.lit("source_only"))
@@ -236,6 +235,10 @@ def _issue_examples_from_joined(
     j: DataFrame, vals: list[str], keys: list[str],
     max_examples: int = DEFAULT_MAX_EXAMPLES,
 ) -> DataFrame:
+    """Per-column discrepancy examples from a ``diff_joined`` frame, capped
+    at ``max_examples`` per column with deterministic key ordering
+    (reference caps at utils.py:387-391; the reference's per-chunk row loop
+    becomes melt + ranked window here)."""
     from pyspark.sql.window import Window
 
     if not vals:
@@ -274,20 +277,6 @@ def _issue_examples_from_joined(
         .filter(F.col("rn") <= max_examples)
         .drop("rn")
     )
-
-
-def issue_examples(
-    src: DataFrame,
-    trg: DataFrame,
-    keys: list[str],
-    max_examples: int = DEFAULT_MAX_EXAMPLES,
-    normalize: bool = True,
-) -> DataFrame:
-    """Per-column discrepancy examples, capped at ``max_examples`` per column
-    with deterministic key ordering (reference caps at utils.py:387-391; the
-    reference's per-chunk row loop becomes melt + ranked window here)."""
-    j, vals = diff_joined(src, trg, keys, normalize)
-    return _issue_examples_from_joined(j, vals, keys, max_examples)
 
 
 def compare_frames(

@@ -20,12 +20,26 @@ Cross-engine determinism rules observed throughout:
 from __future__ import annotations
 
 from .functions import rulespec as R
+from .functions.tokens import md5_long_sql
+from .operators.corpus import MIXTURE_BUCKETS
 from .operators.dedup import (
+    BLOOM_K,
+    BLOOM_M_BITS,
+    BLOOM_SEED,
     DEFAULT_MAX_BUCKET,
     MINHASH_MOD,
+    SHINGLE_P,
+    SIMHASH_BANDS,
     SIMHASH_BITS,
     minhash_params,
 )
+from .operators.similarity import (
+    NEAR_DUP_BANDS,
+    NEAR_DUP_PLANE_SEED,
+    NEAR_DUP_PLANES_PER_BAND,
+    hyperplanes,
+)
+from .operators.splits import _sql_str, split_case_sql
 
 # ---------------------------------------------------------------- diff ----
 
@@ -324,6 +338,25 @@ GROUP BY ROLLUP(event_type, CAST(ts AS DATE))
 
 # -------------------------------------------------- text / training ops ----
 
+# Stage builders: each stage that several twins replay is spelled once
+# here, as the SQL of the one Spark operator it stands in for; twins
+# compose these and never paste a stage's text.
+
+# lowercase whitespace words (the split inside dedup._word_hash_array)
+_LOWER_WORDS = r"string_split_regex(trim(lower(text)), '\s+')"
+
+# whitespace words of the trimmed text, and their count (twin of
+# tokens.ws_token_count: 0 for blank text)
+_WS_WORDS = r"string_split_regex(trim(text), '\s+')"
+_WS_TOKENS = f"""CASE WHEN length(trim(text)) = 0 THEN 0
+              ELSE len({_WS_WORDS}) END"""
+
+# twin of tokens.fingerprint: md5 of the lowercased, whitespace-collapsed,
+# trimmed text; _FP_KEY is the null-safe group key (exact_dedup's sentinel)
+_FP = r"md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))"
+_FP_KEY = rf"COALESCE({_FP}, chr(0) || '<null-text>')"
+
+
 def _tokens_sql(text_expr: str) -> str:
     # WORD_SPLIT_RE is the shared explicit ASCII class — RE2's \s lacks
     # \x0B while Java's includes it, so `\s+` would diverge on vertical tabs
@@ -352,8 +385,7 @@ WITH tk AS (
   SELECT doc_id, text, {_tokens_sql('text')} AS toks FROM documents
 ), sc AS (
   SELECT doc_id, {_lang_counts_sql('toks')},
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END AS words
+         {_WS_TOKENS} AS words
   FROM tk
 ), m AS (
   SELECT doc_id, s_en, s_de, s_fr, s_es, words,
@@ -366,30 +398,29 @@ FROM m
 
 
 def token_stats_documents() -> str:
-    return r"""
+    return rf"""
 SELECT doc_id,
-       CASE WHEN length(trim(text)) = 0 THEN 0
-            ELSE len(string_split_regex(trim(text), '\s+')) END AS ws_tokens,
+       {_WS_TOKENS} AS ws_tokens,
        len(regexp_extract_all(text, '\pL+|[0-9]+|[^\pL0-9\s]')) AS bpe_tokens
 FROM documents
 """
 
 
 def fingerprint_documents() -> str:
-    return r"""
-SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+    return f"""
+SELECT doc_id, {_FP} AS fp
 FROM documents
 """
 
 
 # shared by quality_score_documents and quality_top_fraction_documents:
 # feature CTE + the score expression over its columns (n, wc, dwc, text)
-_QSCORE_F_CTE = r"""f AS (
+_QSCORE_F_CTE = f"""f AS (
   SELECT doc_id, lang, text, length(text) AS n,
          CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS wc,
+              ELSE len({_LOWER_WORDS}) END AS wc,
          CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(list_distinct(string_split_regex(trim(lower(text)), '\s+'))) END AS dwc
+              ELSE len(list_distinct({_LOWER_WORDS})) END AS dwc
   FROM documents
 )"""
 
@@ -443,7 +474,7 @@ def stratified_sample_documents() -> str:
     )
     return f"""
 SELECT doc_id, lang FROM documents
-WHERE (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT) % 1000
+WHERE {md5_long_sql('CAST(doc_id AS VARCHAR)')} % 1000
       < (CASE {cases} ELSE 0 END)
 """
 
@@ -454,7 +485,7 @@ VOCAB_TOP_K = 50
 def vocab_top_terms() -> str:
     return f"""
 WITH toks AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
+  SELECT unnest({_LOWER_WORDS}) AS term
   FROM documents
 ),
 counts AS (
@@ -468,24 +499,31 @@ QUALIFY rank <= {VOCAB_TOP_K}
 
 def exact_dedup_documents() -> str:
     # doubled corpus => every doc has exactly one clone
-    return r"""
+    return f"""
 WITH doubled AS (
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT doc_id + 1000000, text FROM documents
 )
-SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS text_fp,
+SELECT {_FP} AS text_fp,
        MIN(doc_id) AS canonical_id, COUNT(*) AS dup_count
 FROM doubled
 GROUP BY 1 HAVING COUNT(*) > 1
 """
 
 
+def _exact_dedup_window_sql(cols: str) -> str:
+    """``cols`` of the min-id document of every exact-duplicate text group
+    (twin of dedup.exact_dedup_window)."""
+    return f"""SELECT {cols} FROM (
+  SELECT {cols}, ROW_NUMBER() OVER (PARTITION BY {_FP} ORDER BY doc_id) AS rn
+  FROM documents
+) WHERE rn = 1"""
+
+
 def _shingle_fold(wh: str, i: str, n: int = 3) -> str:
     """Left-assoc rolling fold h=(h*P + w)%M over n word hashes, 0-padded
     past the end — the EXACT integer chain shingle_table runs."""
-    from xoverrr_spark.operators.dedup import SHINGLE_P
-
     acc = "0"
     for j in range(n):
         w = f"{wh}[{i} + {j}]" if j else f"{wh}[{i}]"
@@ -493,61 +531,136 @@ def _shingle_fold(wh: str, i: str, n: int = 3) -> str:
     return acc
 
 
-_SHINGLES_CTE = rf"""
-w AS (SELECT doc_id,
-             list_transform(string_split_regex(trim(lower(text)), '\s+'),
+def _word_hashes_sql(table: str, tag: str = "") -> str:
+    """CTE ``w{tag}`` (doc_id, wh): each word's 40-bit md5 hash in word
+    order (twin of dedup._word_hash_array)."""
+    return f"""w{tag} AS (SELECT doc_id,
+             list_transform({_LOWER_WORDS},
                             t -> ('0x' || substr(md5(t), 1, 10))::BIGINT) AS wh
-      FROM documents),
-sh0 AS (
-  SELECT w.doc_id, {_shingle_fold('w.wh', 'g.i')} AS x
-  FROM w, LATERAL (SELECT unnest(generate_series(1, GREATEST(len(w.wh) - 2, 1))) AS i) g
+      FROM {table})"""
+
+
+def _shingles_sql(table: str = "documents", tag: str = "") -> str:
+    """CTEs ending in ``sh{tag}`` (doc_id, x): the distinct word 3-gram
+    hashes of ``table`` (twin of dedup.shingle_table)."""
+    w = f"w{tag}"
+    return f"""{_word_hashes_sql(table, tag)},
+sh0{tag} AS (
+  SELECT {w}.doc_id, {_shingle_fold(f'{w}.wh', 'g.i')} AS x
+  FROM {w}, LATERAL (SELECT unnest(generate_series(1, GREATEST(len({w}.wh) - 2, 1))) AS i) g
 ),
-sh AS (SELECT DISTINCT doc_id, x FROM sh0)"""
+sh{tag} AS (SELECT DISTINCT doc_id, x FROM sh0{tag})"""
 
 
-def minhash_signatures_documents(num_hashes: int = 16) -> str:
+def _minhash_sql(sh: str, num_hashes: int) -> str:
+    """MinHash signatures (doc_id, mh_0..) over shingle CTE ``sh`` (twin of
+    dedup.minhash_signature_from_shingles)."""
     mins = ",\n       ".join(
         f"MIN(({a} * x + {b}) % {MINHASH_MOD}) AS mh_{i}"
         for i, (a, b) in enumerate(minhash_params(num_hashes))
     )
+    return f"SELECT doc_id, {mins} FROM {sh} GROUP BY doc_id"
+
+
+def _lsh_bands_sql(sig: str, num_hashes: int, bands: int) -> str:
+    """One (doc_id, band, bkey) row per doc per band of signature CTE
+    ``sig``, bkey = md5 of the band's slice (twin of dedup._lsh_buckets)."""
+    rows = num_hashes // bands
+    selects = []
+    for b in range(bands):
+        cols = ", ".join(f"mh_{b * rows + r}" for r in range(rows))
+        selects.append(
+            f"SELECT doc_id, {b} AS band, md5(concat_ws('_', {cols})) AS bkey FROM {sig}"
+        )
+    return "\n  UNION ALL\n  ".join(selects)
+
+
+def _lsh_buckets_ctes(num_hashes: int, bands: int) -> str:
+    """CTEs ending in ``buckets0``: shingles -> signatures -> LSH band
+    buckets over documents, the prefix of every text-LSH twin."""
+    return f"""{_shingles_sql()},
+sig AS ({_minhash_sql('sh', num_hashes)}),
+buckets0 AS (
+  {_lsh_bands_sql('sig', num_hashes, bands)}
+)"""
+
+
+def _cap_buckets_sql(dst: str) -> str:
+    """CTEs ``ok`` and ``dst``: the rows of bucket table ``{dst}0`` whose
+    (band, bkey) bucket holds at most DEFAULT_MAX_BUCKET rows (twin of
+    dedup._cap_buckets)."""
+    return f"""ok AS (SELECT band, bkey FROM {dst}0 GROUP BY band, bkey
+       HAVING COUNT(*) <= {DEFAULT_MAX_BUCKET}),
+{dst} AS (SELECT b.* FROM {dst}0 b SEMI JOIN ok USING (band, bkey))"""
+
+
+def _capped_self_join_sql(dst: str, key: str = "doc_id", left: str = "doc_a",
+                          right: str = "doc_b", extra: str = "") -> str:
+    """CTEs ending in ``cands`` (left, right): the distinct ``key`` pairs
+    sharing a capped bucket of ``{dst}0`` (twin of
+    dedup._capped_bucket_self_join); ``extra`` appends select items over
+    the pair's bucket rows ``a`` and ``b``."""
+    return f"""{_cap_buckets_sql(dst)},
+cands AS (
+  SELECT DISTINCT a.{key} AS {left}, b.{key} AS {right}{extra}
+  FROM {dst} a JOIN {dst} b ON a.band = b.band AND a.bkey = b.bkey
+  WHERE a.{key} < b.{key}
+)"""
+
+
+def _bucket_size_stats_sql(cap: int) -> str:
+    """CTE ``per_bucket``, then the per-band audit of bucket table
+    ``buckets0`` against ``cap`` (twin of dedup.bucket_size_stats)."""
+    return f"""per_bucket AS (SELECT band, bkey, COUNT(*) AS n FROM buckets0 GROUP BY band, bkey)
+SELECT band,
+       COUNT(*) AS n_buckets,
+       MAX(n) AS max_bucket_size,
+       COUNT(CASE WHEN n > {cap} THEN 1 END) AS over_cap_buckets,
+       CAST(COALESCE(SUM(CASE WHEN n > {cap} THEN n END), 0) AS BIGINT) AS over_cap_docs
+FROM per_bucket GROUP BY band"""
+
+
+def _bench_shingles_sql(sh: str) -> str:
+    """The distinct shingles, within CTE ``sh``, of the synthetic benchmark
+    subset (doc_id % DECONTAM_BENCH_MOD == 0)."""
+    return f"SELECT DISTINCT x FROM {sh} WHERE doc_id % {DECONTAM_BENCH_MOD} = 0"
+
+
+# connected components of the edge CTE ``pairs`` (doc_a, doc_b) by a
+# recursive transitive closure (tiny pair sets at oracle scale), cluster_id
+# = min doc_id of the component (twin of dedup.cluster_near_dups); the
+# enclosing query must be WITH RECURSIVE
+_COMPONENTS_SQL = """e AS (
+  SELECT doc_a AS a, doc_b AS b FROM pairs
+  UNION
+  SELECT doc_b AS a, doc_a AS b FROM pairs
+),
+reach AS (
+  SELECT a, b FROM e
+  UNION
+  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a
+)
+SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a"""
+
+
+def minhash_signatures_documents(num_hashes: int = 16) -> str:
     return f"""
-WITH {_SHINGLES_CTE.strip()}
-SELECT doc_id, {mins}
-FROM sh GROUP BY doc_id
+WITH {_shingles_sql()}
+{_minhash_sql('sh', num_hashes)}
 """
 
 
 def lsh_candidates_documents(num_hashes: int = 16, bands: int = 4) -> str:
-    rows = num_hashes // bands
-    band_selects = []
-    for b in range(bands):
-        cols = ", ".join(f"mh_{b * rows + r}" for r in range(rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, md5(concat_ws('_', {cols})) AS bkey FROM sig"
-        )
-    buckets = "\n  UNION ALL\n  ".join(band_selects)
-    mins = ",\n       ".join(
-        f"MIN(({a} * x + {b}) % {MINHASH_MOD}) AS mh_{i}"
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    )
     return f"""
-WITH {_SHINGLES_CTE.strip()},
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-buckets0 AS (
-  {buckets}
-),
-ok AS (SELECT band, bkey FROM buckets0 GROUP BY band, bkey
-       HAVING COUNT(*) <= {DEFAULT_MAX_BUCKET}),
-buckets AS (SELECT b.* FROM buckets0 b SEMI JOIN ok USING (band, bkey))
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey
-WHERE a.doc_id < b.doc_id
+WITH {_lsh_buckets_ctes(num_hashes, bands)},
+{_capped_self_join_sql('buckets')}
+SELECT doc_a, doc_b FROM cands
 """
 
 
 def jaccard_pairs_documents(threshold: float = 0.5) -> str:
     return f"""
-WITH {_SHINGLES_CTE.strip()},
+WITH {_shingles_sql()},
 sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
@@ -561,24 +674,28 @@ WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= {threshold}
 """
 
 
-def dup_shingle_fraction_documents(min_docs: int = 2) -> str:
-    """Twin of dedup.dup_shingle_fraction: share of each doc's distinct
-    word n-grams that occur in >= min_docs documents corpus-wide. Replays
-    the identical shingle fold (_SHINGLES_CTE); the fraction is the same
-    single int/int double division (exact operands, correctly rounded —
-    bit-identical across engines). SUM cast to BIGINT (DuckDB sums ints
-    into HUGEINT, which would schema-mismatch Spark's bigint)."""
-    return f"""
-WITH {_SHINGLES_CTE.strip()},
-dup AS (SELECT x FROM sh GROUP BY x HAVING COUNT(*) >= {min_docs})
+def _dup_shingle_fraction_sql(sh: str, min_docs: int) -> str:
+    """CTE ``dup``, then per doc of shingle CTE ``sh`` the share of its
+    distinct word n-grams that occur in >= min_docs documents (twin of
+    dedup.dup_shingle_fraction). The fraction is the same single int/int
+    double division (exact operands, correctly rounded — bit-identical
+    across engines). SUM cast to BIGINT (DuckDB sums ints into HUGEINT,
+    which would schema-mismatch Spark's bigint)."""
+    return f"""dup AS (SELECT x FROM {sh} GROUP BY x HAVING COUNT(*) >= {min_docs})
 SELECT s.doc_id,
        COUNT(*) AS n_shingles,
        CAST(SUM(CASE WHEN d.x IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_dup_shingles,
        CAST(SUM(CASE WHEN d.x IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
          / COUNT(*) AS dup_fraction
-FROM sh s LEFT JOIN dup d ON s.x = d.x
-GROUP BY s.doc_id
+FROM {sh} s LEFT JOIN dup d ON s.x = d.x
+GROUP BY s.doc_id"""
+
+
+def dup_shingle_fraction_documents(min_docs: int = 2) -> str:
+    return f"""
+WITH {_shingles_sql()},
+{_dup_shingle_fraction_sql('sh', min_docs)}
 """
 
 
@@ -589,32 +706,9 @@ def minhash_near_dups_documents(
     verified with exact Jaccard computed ONLY over the candidate pairs —
     the intersection join is restricted to candidate docs, mirroring the
     Spark side's candidate_jaccard (never a full shingle self-join)."""
-    rows = num_hashes // bands
-    band_selects = []
-    for b in range(bands):
-        cols = ", ".join(f"mh_{b * rows + r}" for r in range(rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, md5(concat_ws('_', {cols})) AS bkey FROM sig"
-        )
-    buckets = "\n  UNION ALL\n  ".join(band_selects)
-    mins = ",\n       ".join(
-        f"MIN(({a} * x + {b}) % {MINHASH_MOD}) AS mh_{i}"
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    )
     return f"""
-WITH {_SHINGLES_CTE.strip()},
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-buckets0 AS (
-  {buckets}
-),
-ok AS (SELECT band, bkey FROM buckets0 GROUP BY band, bkey
-       HAVING COUNT(*) <= {DEFAULT_MAX_BUCKET}),
-buckets AS (SELECT b.* FROM buckets0 b SEMI JOIN ok USING (band, bkey)),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey
-  WHERE a.doc_id < b.doc_id
-),
+WITH {_lsh_buckets_ctes(num_hashes, bands)},
+{_capped_self_join_sql('buckets')},
 sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
 inter AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
@@ -633,24 +727,12 @@ WHERE i.inter * 1.0 / (sa.sz + sb.sz - i.inter) >= {threshold}
 
 
 def near_dup_clusters_documents(max_hamming: int = 3) -> str:
-    """Twin of dedup.cluster_near_dups over the simhash near-dup pairs:
-    connected components via a recursive transitive closure (tiny pair set
-    at oracle scale), cluster_id = min doc_id of the component."""
+    """Twin of dedup.cluster_near_dups over the simhash near-dup pairs."""
     return f"""
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({simhash_near_dups_documents(max_hamming).strip()})
 ),
-e AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a
-)
-SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
+{_COMPONENTS_SQL}
 """
 
 
@@ -662,18 +744,7 @@ def _curated_kept_ctes() -> str:
     """The CTEs every curation twin shares, ending in ``kept``: exact-dedup
     survivors -> quality keep -> drop benchmark-contaminated. Each stage
     reuses an already-verified twin."""
-    return f"""WITH fp AS (
-  SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM documents
-),
-dedup AS (
-  SELECT doc_id, source FROM (
-    SELECT doc_id, source,
-           ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-    FROM fp
-  ) WHERE rn = 1
-),
+    return f"""WITH dedup AS ({_exact_dedup_window_sql('doc_id, source')}),
 qf AS ({quality_filter_documents().strip()}),
 contam AS ({decontaminate_documents().strip()}),
 kept AS (
@@ -689,11 +760,7 @@ def curate_documents() -> str:
     shared curation CTEs, then a per-source window cap."""
     return f"""
 {_curated_kept_ctes()}
-SELECT doc_id, source FROM (
-  SELECT doc_id, source,
-         ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-  FROM kept
-) WHERE rn <= {CURATE_SOURCE_CAP}
+{_source_cap_sql('kept', CURATE_SOURCE_CAP)}
 """
 
 
@@ -703,15 +770,9 @@ def curate_documents_hash() -> str:
     a 10^8-doc domain stays fully parallel instead of serializing in one
     window partition). Kept iff md5_long(id) mod n_source < cap, same md5
     integer math as corpus.cap_per_source_hash."""
-    from .functions.tokens import md5_long_sql
-
-    h = md5_long_sql("CAST(k.doc_id AS VARCHAR)")
     return f"""
 {_curated_kept_ctes()},
-c AS (SELECT source AS src_n, COUNT(*) AS n FROM kept GROUP BY source)
-SELECT k.doc_id, k.source
-FROM kept k JOIN c ON k.source IS NOT DISTINCT FROM c.src_n
-WHERE {h} % c.n < {CURATE_SOURCE_CAP}
+{_source_cap_hash_sql('kept', CURATE_SOURCE_CAP)}
 """
 
 
@@ -722,31 +783,9 @@ def lsh_bucket_stats_documents(
     band, how many buckets exist, the largest, and how many buckets/docs
     the DEFAULT_MAX_BUCKET cap would drop (ADVICE r02)."""
     cap = DEFAULT_MAX_BUCKET if cap is None else cap
-    rows = num_hashes // bands
-    band_selects = []
-    for b in range(bands):
-        cols = ", ".join(f"mh_{b * rows + r}" for r in range(rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, md5(concat_ws('_', {cols})) AS bkey FROM sig"
-        )
-    buckets = "\n  UNION ALL\n  ".join(band_selects)
-    mins = ",\n       ".join(
-        f"MIN(({a} * x + {b}) % {MINHASH_MOD}) AS mh_{i}"
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    )
     return f"""
-WITH {_SHINGLES_CTE.strip()},
-sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
-buckets0 AS (
-  {buckets}
-),
-per_bucket AS (SELECT band, bkey, COUNT(*) AS n FROM buckets0 GROUP BY band, bkey)
-SELECT band,
-       COUNT(*) AS n_buckets,
-       MAX(n) AS max_bucket_size,
-       COUNT(CASE WHEN n > {cap} THEN 1 END) AS over_cap_buckets,
-       CAST(COALESCE(SUM(CASE WHEN n > {cap} THEN n END), 0) AS BIGINT) AS over_cap_docs
-FROM per_bucket GROUP BY band
+WITH {_lsh_buckets_ctes(num_hashes, bands)},
+{_bucket_size_stats_sql(cap)}
 """
 
 
@@ -754,29 +793,33 @@ def decontaminate_documents() -> str:
     """Twin of dedup.contaminated_docs with the synthetic benchmark subset:
     docs sharing any 3-gram shingle with a doc_id % 50 == 0 document."""
     return f"""
-WITH {_SHINGLES_CTE.strip()},
-bench AS (SELECT DISTINCT x FROM sh WHERE doc_id % {DECONTAM_BENCH_MOD} = 0)
+WITH {_shingles_sql()},
+bench AS ({_bench_shingles_sql('sh')})
 SELECT DISTINCT doc_id FROM sh SEMI JOIN bench USING (x)
 """
 
 
-def contamination_scores_documents() -> str:
-    """Twin of dedup.contamination_scores with the synthetic benchmark
-    subset (doc_id % DECONTAM_BENCH_MOD == 0): per-doc fraction of
-    distinct 3-gram shingles appearing anywhere in the benchmark. Same
-    fold, same single int/int double division; SUM cast to BIGINT
-    (HUGEINT would schema-mismatch Spark)."""
-    return f"""
-WITH {_SHINGLES_CTE.strip()},
-bench AS (SELECT DISTINCT x FROM sh WHERE doc_id % {DECONTAM_BENCH_MOD} = 0)
+def _contamination_scores_sql(sh: str) -> str:
+    """CTE ``bench``, then per doc of shingle CTE ``sh`` the share of its
+    distinct 3-gram shingles appearing anywhere in the synthetic
+    benchmark subset (twin of dedup.contamination_scores). Same single
+    int/int double division; SUM cast to BIGINT (HUGEINT would
+    schema-mismatch Spark)."""
+    return f"""bench AS ({_bench_shingles_sql(sh)})
 SELECT s.doc_id,
        COUNT(*) AS n_shingles,
        CAST(SUM(CASE WHEN b.x IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_bench_shingles,
        CAST(SUM(CASE WHEN b.x IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
          / COUNT(*) AS contamination
-FROM sh s LEFT JOIN bench b ON s.x = b.x
-GROUP BY s.doc_id
+FROM {sh} s LEFT JOIN bench b ON s.x = b.x
+GROUP BY s.doc_id"""
+
+
+def contamination_scores_documents() -> str:
+    return f"""
+WITH {_shingles_sql()},
+{_contamination_scores_sql('sh')}
 """
 
 
@@ -812,7 +855,7 @@ def simhash_documents() -> str:
     )
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
+  SELECT doc_id, unnest({_LOWER_WORDS}) AS tok
   FROM documents
 ),
 h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS th FROM toks),
@@ -822,28 +865,19 @@ SELECT doc_id, {assemble} AS simhash FROM bits
 
 
 def simhash_near_dups_documents(max_hamming: int = 3) -> str:
-    from .operators.dedup import SIMHASH_BANDS
-
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     band_sel = "\n  UNION ALL\n  ".join(
         f"SELECT doc_id, simhash, {b} AS band, (simhash >> {b * band_bits}) & {mask} AS bkey FROM sig"
         for b in range(SIMHASH_BANDS)
     )
+    hamming = ",\n         bit_count(xor(a.simhash, b.simhash)) AS hamming"
     return f"""
 WITH sig AS ({simhash_documents().strip()}),
 bands0 AS (
   {band_sel}
 ),
-ok AS (SELECT band, bkey FROM bands0 GROUP BY band, bkey
-       HAVING COUNT(*) <= {DEFAULT_MAX_BUCKET}),
-bands AS (SELECT b.* FROM bands0 b SEMI JOIN ok USING (band, bkey)),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         bit_count(xor(a.simhash, b.simhash)) AS hamming
-  FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-  WHERE a.doc_id < b.doc_id
-)
+{_capped_self_join_sql('bands', extra=hamming)}
 SELECT doc_a, doc_b, hamming FROM cands WHERE hamming <= {max_hamming}
 """
 
@@ -872,15 +906,19 @@ PROFILE_ORDERS_COLS = [
 ]
 
 
-def profile_orders() -> str:
-    """Twin of operators.profile.profile over the orders table."""
-    parts = [
+def _profile_sql(table: str) -> str:
+    """Row, null and distinct counts of each PROFILE_ORDERS_COLS column of
+    ``table`` (twin of operators.profile.profile)."""
+    return "\nUNION ALL\n".join(
         f"SELECT '{c}' AS column_name, COUNT(*) AS n_rows, "
         f"COUNT(*) - COUNT({c}) AS n_nulls, "
-        f"COUNT(DISTINCT {c}) AS n_distinct FROM orders"
+        f"COUNT(DISTINCT {c}) AS n_distinct FROM {table}"
         for c in PROFILE_ORDERS_COLS
-    ]
-    return "\nUNION ALL\n".join(parts)
+    )
+
+
+def profile_orders() -> str:
+    return _profile_sql("orders")
 
 
 SESSION_GAP_S = 1800
@@ -918,28 +956,36 @@ FROM s GROUP BY 1, 2
 SOURCE_CAP_K = 20
 
 
-def source_cap_documents(k: int = SOURCE_CAP_K) -> str:
-    """Twin of corpus.cap_per_source (exact window form)."""
-    return f"""
-SELECT doc_id, source FROM (
+def _source_cap_sql(table: str, k: int) -> str:
+    """The k lowest-id rows of every source of ``table`` (twin of
+    corpus.cap_per_source, the exact window form)."""
+    return f"""SELECT doc_id, source FROM (
   SELECT doc_id, source,
          ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-  FROM documents
-) WHERE rn <= {k}
+  FROM {table}
+) WHERE rn <= {k}"""
+
+
+def _source_cap_hash_sql(table: str, k: int) -> str:
+    """CTE ``c``, then the rows of ``table`` kept iff md5_long(id) mod
+    n_source < k (twin of corpus.cap_per_source_hash, the windowless scale
+    form) — same md5 integer math as Spark."""
+    h = md5_long_sql("CAST(d.doc_id AS VARCHAR)")
+    return f"""c AS (SELECT source AS src_n, COUNT(*) AS n FROM {table} GROUP BY source)
+SELECT d.doc_id, d.source
+FROM {table} d JOIN c ON d.source IS NOT DISTINCT FROM c.src_n
+WHERE {h} % c.n < {k}"""
+
+
+def source_cap_documents(k: int = SOURCE_CAP_K) -> str:
+    return f"""
+{_source_cap_sql('documents', k)}
 """
 
 
 def source_cap_hash_documents(k: int = SOURCE_CAP_K) -> str:
-    """Twin of corpus.cap_per_source_hash (windowless scale form): doc kept
-    iff md5_long(id) mod n_source < k — same md5 integer math as Spark."""
-    from .functions.tokens import md5_long_sql
-
-    h = md5_long_sql("CAST(d.doc_id AS VARCHAR)")
     return f"""
-WITH c AS (SELECT source AS src_n, COUNT(*) AS n FROM documents GROUP BY source)
-SELECT d.doc_id, d.source
-FROM documents d JOIN c ON d.source IS NOT DISTINCT FROM c.src_n
-WHERE {h} % c.n < {k}
+WITH {_source_cap_hash_sql('documents', k)}
 """
 
 
@@ -1012,19 +1058,11 @@ def _fold_norm(v: str, dim: int = _EMB_DIM) -> str:
     return f"sqrt(0.0 + {terms})"
 
 
-def embedding_near_dup_pairs() -> str:
-    """Replays the Spark banded-hyperplane-LSH + exact-cosine-rerank plan
-    (operators/similarity.py:embedding_near_dups) with identical plane
-    literals and fold order — parity is exact even though LSH recall < 1
-    vs a brute-force all-pairs scan. The bucket-size cap is replayed as
-    the same HAVING predicate the text-LSH twins use (VERDICT r02)."""
-    from .operators.similarity import (
-        NEAR_DUP_BANDS,
-        NEAR_DUP_PLANE_SEED,
-        NEAR_DUP_PLANES_PER_BAND,
-        hyperplanes,
-    )
-
+def _embedding_buckets_ctes() -> str:
+    """CTEs ``v`` (vec_id, ve) and ``buckets0``: one (vec_id, band, bkey)
+    row per vector per band, bkey = the band's hyperplane sign bits as
+    identical fold-order dot products (twin of the banding inside
+    similarity.embedding_near_dups)."""
     planes = hyperplanes(_EMB_DIM, NEAR_DUP_BANDS * NEAR_DUP_PLANES_PER_BAND,
                          NEAR_DUP_PLANE_SEED)
     band_selects = []
@@ -1036,21 +1074,23 @@ def embedding_near_dup_pairs() -> str:
         )
         band_selects.append(f"SELECT vec_id, {b} AS band, {bits} AS bkey FROM v")
     buckets = "\n  UNION ALL\n  ".join(band_selects)
+    return f"""v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS ve FROM embeddings),
+buckets0 AS (
+  {buckets}
+)"""
+
+
+def embedding_near_dup_pairs() -> str:
+    """Replays the Spark banded-hyperplane-LSH + exact-cosine-rerank plan
+    (operators/similarity.py:embedding_near_dups) with identical plane
+    literals and fold order — parity is exact even though LSH recall < 1
+    vs a brute-force all-pairs scan. The bucket-size cap is replayed as
+    the same HAVING predicate the text-LSH twins use (VERDICT r02)."""
     den = f"({_fold_norm('va')} * {_fold_norm('vb')})"
     cos = f"CASE WHEN {den} = 0.0 THEN 0.0 ELSE {_fold_dot('va', 'vb')} / {den} END"
     return f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS ve FROM embeddings),
-buckets0 AS (
-  {buckets}
-),
-ok AS (SELECT band, bkey FROM buckets0 GROUP BY band, bkey
-       HAVING COUNT(*) <= {DEFAULT_MAX_BUCKET}),
-buckets AS (SELECT b.* FROM buckets0 b SEMI JOIN ok USING (band, bkey)),
-cands AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM buckets a JOIN buckets b ON a.band = b.band AND a.bkey = b.bkey
-  WHERE a.vec_id < b.vec_id
-),
+WITH {_embedding_buckets_ctes()},
+{_capped_self_join_sql('buckets', key='vec_id', left='id_a', right='id_b')},
 p AS (
   SELECT c.id_a, c.id_b, x.ve AS va, y.ve AS vb
   FROM cands c JOIN v x ON x.vec_id = c.id_a JOIN v y ON y.vec_id = c.id_b
@@ -1214,16 +1254,8 @@ FROM events GROUP BY 1
 def exact_dedup_survivors_documents() -> str:
     """Twin of dedup.exact_dedup_window (single-scan window form): the
     min-id survivor of every exact-duplicate text group."""
-    return """
-WITH fp AS (
-  SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-  FROM documents
-)
-SELECT doc_id, source FROM (
-  SELECT doc_id, source, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-  FROM fp
-) WHERE rn = 1
+    return f"""
+{_exact_dedup_window_sql('doc_id, source')}
 """
 
 
@@ -1231,36 +1263,9 @@ def embedding_bucket_stats() -> str:
     """Twin of bucket_size_stats over the embedding hyperplane-LSH bucket
     table — the same "no silent caps" audit as lsh_bucket_stats_documents
     for the embedding modality."""
-    from .operators.similarity import (
-        NEAR_DUP_BANDS,
-        NEAR_DUP_PLANE_SEED,
-        NEAR_DUP_PLANES_PER_BAND,
-        hyperplanes,
-    )
-
-    planes = hyperplanes(_EMB_DIM, NEAR_DUP_BANDS * NEAR_DUP_PLANES_PER_BAND,
-                         NEAR_DUP_PLANE_SEED)
-    band_selects = []
-    for b in range(NEAR_DUP_BANDS):
-        bits = " + ".join(
-            f"(CASE WHEN {_fold_dot_lit('ve', planes[b * NEAR_DUP_PLANES_PER_BAND + i])} > 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(NEAR_DUP_PLANES_PER_BAND)
-        )
-        band_selects.append(f"SELECT vec_id, {b} AS band, {bits} AS bkey FROM v")
-    buckets = "\n  UNION ALL\n  ".join(band_selects)
     return f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS ve FROM embeddings),
-buckets0 AS (
-  {buckets}
-),
-per_bucket AS (SELECT band, bkey, COUNT(*) AS n FROM buckets0 GROUP BY band, bkey)
-SELECT band,
-       COUNT(*) AS n_buckets,
-       MAX(n) AS max_bucket_size,
-       COUNT(CASE WHEN n > {DEFAULT_MAX_BUCKET} THEN 1 END) AS over_cap_buckets,
-       CAST(COALESCE(SUM(CASE WHEN n > {DEFAULT_MAX_BUCKET} THEN n END), 0) AS BIGINT) AS over_cap_docs
-FROM per_bucket GROUP BY band
+WITH {_embedding_buckets_ctes()},
+{_bucket_size_stats_sql(DEFAULT_MAX_BUCKET)}
 """
 
 
@@ -1346,17 +1351,7 @@ sh2 AS (
   SELECT doc_a, doc_b FROM ({simhash_near_dups_documents(max_hamming).strip()})
 ),
 pairs AS (SELECT * FROM mh UNION SELECT * FROM sh2),
-e AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a
-)
-SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
+{_COMPONENTS_SQL}
 """
 
 
@@ -1400,26 +1395,21 @@ FROM ml m LEFT JOIN rebuilt r USING (doc_id)
 """
 
 
-def repetition_stats_documents() -> str:
-    """Twin of operators.repetition.repetition_stats: word-bigram instance
-    counts per doc; fractions are single int/int double divisions (IEEE
-    correctly-rounded => bit-identical to Spark).
+def _repetition_stats_sql(table: str) -> str:
+    """Twin of operators.repetition.repetition_stats over ``table``:
+    word-bigram instance counts per doc; fractions are single int/int
+    double divisions (IEEE correctly-rounded => bit-identical to Spark).
 
     Bigrams are keyed by the SAME 40-bit hashed fold as the Spark operator
     (per-word md5-40 then ``(wh[i]*P + wh[i+1]) mod 2^40``) — not by raw
     strings — so a within-doc 40-bit collision merges the same two bigrams
-    on BOTH engines and counts replay identically (r03 ADVICE)."""
-    return r"""
-WITH w AS (
-  SELECT doc_id,
-         list_transform(string_split_regex(trim(lower(text)), '\s+'),
-                        t -> ('0x' || substr(md5(t), 1, 10))::BIGINT) AS wh
-  FROM documents WHERE text IS NOT NULL
-),
+    on BOTH engines and counts replay identically (r03 ADVICE). Null and
+    one-word texts have no bigram and no row."""
+    return f"""WITH {_word_hashes_sql(table)},
 bg AS (
   SELECT doc_id,
          unnest(list_transform(generate_series(1, len(wh) - 1),
-                i -> (wh[i] * 1000003 + COALESCE(wh[i + 1], 0)) % 1099511627776)) AS bigram
+                i -> (wh[i] * {SHINGLE_P} + COALESCE(wh[i + 1], 0)) % {MINHASH_MOD})) AS bigram
   FROM w WHERE len(wh) >= 2
 ),
 c AS (
@@ -1432,7 +1422,12 @@ SELECT doc_id,
        CAST(SUM(c) - COUNT(*) AS BIGINT) * 1.0 / CAST(SUM(c) AS BIGINT)
          AS dup_bigram_frac,
        MAX(c) * 1.0 / CAST(SUM(c) AS BIGINT) AS top_bigram_frac
-FROM c GROUP BY doc_id
+FROM c GROUP BY doc_id"""
+
+
+def repetition_stats_documents() -> str:
+    return f"""
+{_repetition_stats_sql('documents')}
 """
 
 
@@ -1464,20 +1459,18 @@ MIXTURE_WEIGHTS = {"src0": 0.5, "src1": 0.2, "src2": 0.2, "src3": 0.05, "src4": 
 MIXTURE_TARGET_FRAC = 0.4
 
 
-def mixture_sample_documents() -> str:
-    """Twin of corpus.mixture_sample: w*frac folded to repr() literals so
-    both engines run the identical (literal * total) / n -> min -> *2^20
-    -> floor chain (same policy as the LSH plane folds)."""
-    from xoverrr_spark.operators.corpus import MIXTURE_BUCKETS
-
+def _mixture_sample_sql(table: str, cols: str) -> str:
+    """``cols`` of the rows of ``table`` (alias ``d``) the weighted mixture
+    sample keeps (twin of corpus.mixture_sample): w*frac folded to repr()
+    literals so both engines run the identical (literal * total) / n ->
+    min -> *2^20 -> floor chain (same policy as the LSH plane folds)."""
     cases = " ".join(
         f"WHEN source = '{s}' THEN {w * MIXTURE_TARGET_FRAC!r}"
         for s, w in MIXTURE_WEIGHTS.items()
     )
     b = float(MIXTURE_BUCKETS)
-    return f"""
-WITH c AS (
-  SELECT source, COUNT(*) AS n FROM documents GROUP BY source
+    return f"""WITH c AS (
+  SELECT source, COUNT(*) AS n FROM {table} GROUP BY source
 ),
 ct AS (
   SELECT source, n, SUM(n) OVER () AS total FROM c
@@ -1489,34 +1482,43 @@ th AS (
                          * {b!r}) AS BIGINT) END AS th
   FROM ct
 )
-SELECT d.doc_id, d.source
-FROM documents d JOIN th ON d.source IS NOT DISTINCT FROM th.source
+SELECT {cols}
+FROM {table} d JOIN th ON d.source IS NOT DISTINCT FROM th.source
 WHERE th.th IS NOT NULL
-  AND (('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT)
-      % {MIXTURE_BUCKETS} < th.th
+  AND {md5_long_sql('CAST(d.doc_id AS VARCHAR)')}
+      % {MIXTURE_BUCKETS} < th.th"""
+
+
+def mixture_sample_documents() -> str:
+    return f"""
+{_mixture_sample_sql('documents', 'd.doc_id, d.source')}
 """
 
 
 PACK_BUDGET_TOKENS = 256
 
 
-def pack_documents() -> str:
-    """Twin of corpus.pack_documents: running-sum window (rows between
-    unbounded preceding and 1 preceding) -> floor(cum/budget). Integer /
-    in both engines is double division; floor of exact ints is exact."""
-    return f"""
-WITH t AS (
+def _pack_sql(table: str) -> str:
+    """Twin of corpus.pack_documents over ``table``: running-sum window
+    (rows between unbounded preceding and 1 preceding) ->
+    floor(cum/budget). Integer / in both engines is double division; floor
+    of exact ints is exact."""
+    return f"""WITH t AS (
   SELECT doc_id, source,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
-  FROM documents
+         {_WS_TOKENS} AS n_tokens
+  FROM {table}
 )
 SELECT doc_id, source, n_tokens,
        CAST(floor(COALESCE(SUM(n_tokens) OVER (
               PARTITION BY source ORDER BY doc_id
               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
             / {PACK_BUDGET_TOKENS}) AS BIGINT) AS pack_id
-FROM t
+FROM t"""
+
+
+def pack_documents() -> str:
+    return f"""
+{_pack_sql('documents')}
 """
 
 
@@ -1529,20 +1531,6 @@ INCR_ID_OFFSET = 1000000
 INCR_JACCARD = 0.7
 
 
-def _shingles_sql(table: str, tag: str) -> str:
-    """Parameterized twin of _SHINGLES_CTE over an arbitrary CTE/table."""
-    return rf"""
-w{tag} AS (SELECT doc_id,
-             list_transform(string_split_regex(trim(lower(text)), '\s+'),
-                            t -> ('0x' || substr(md5(t), 1, 10))::BIGINT) AS wh
-      FROM {table}),
-sh0{tag} AS (
-  SELECT w.doc_id, {_shingle_fold('w.wh', 'g.i')} AS x
-  FROM w{tag} w, LATERAL (SELECT unnest(generate_series(1, GREATEST(len(w.wh) - 2, 1))) AS i) g
-),
-sh{tag} AS (SELECT DISTINCT doc_id, x FROM sh0{tag})"""
-
-
 def incremental_dedup_documents(num_hashes: int = 16, bands: int = 4) -> str:
     """Twin of q_incremental_dedup: per new-batch doc, exact_dup (canonical
     fingerprint in the corpus index) / near_dup (capped corpus-side LSH
@@ -1550,22 +1538,6 @@ def incremental_dedup_documents(num_hashes: int = 16, bands: int = 4) -> str:
     Same affine MinHash + banding math as minhash_near_dups_documents,
     played across TWO tables (new batch never self-joins, corpus never
     self-joins)."""
-    rows = num_hashes // bands
-    mins = ",\n       ".join(
-        f"MIN(({a} * x + {b}) % {MINHASH_MOD}) AS mh_{i}"
-        for i, (a, b) in enumerate(minhash_params(num_hashes))
-    )
-
-    def _bands(sig: str) -> str:
-        sel = []
-        for b in range(bands):
-            cols = ", ".join(f"mh_{b * rows + r}" for r in range(rows))
-            sel.append(
-                f"SELECT doc_id, {b} AS band, md5(concat_ws('_', {cols})) AS bkey FROM {sig}"
-            )
-        return "\n  UNION ALL\n  ".join(sel)
-
-    fp = r"COALESCE(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), chr(0) || '<null-text>')"
     return f"""
 WITH newd AS (
   SELECT doc_id + {INCR_ID_OFFSET} AS doc_id,
@@ -1576,23 +1548,21 @@ WITH newd AS (
          END AS text
   FROM documents
 ),
-cfp AS (SELECT DISTINCT {fp} AS fpv FROM documents),
-nfp AS (SELECT doc_id, {fp} AS fpv FROM newd),
+cfp AS (SELECT DISTINCT {_FP_KEY} AS fpv FROM documents),
+nfp AS (SELECT doc_id, {_FP_KEY} AS fpv FROM newd),
 exact AS (SELECT n.doc_id FROM nfp n SEMI JOIN cfp c ON n.fpv = c.fpv),
 nonexact AS (SELECT d.* FROM newd d ANTI JOIN exact e USING (doc_id)),
-{_shingles_sql('nonexact', 'n').strip()},
-{_shingles_sql('documents', 'c').strip()},
-sign AS (SELECT doc_id, {mins} FROM shn GROUP BY doc_id),
-sigc AS (SELECT doc_id, {mins} FROM shc GROUP BY doc_id),
+{_shingles_sql('nonexact', 'n')},
+{_shingles_sql('documents', 'c')},
+sign AS ({_minhash_sql('shn', num_hashes)}),
+sigc AS ({_minhash_sql('shc', num_hashes)}),
 bn AS (
-  {_bands('sign')}
+  {_lsh_bands_sql('sign', num_hashes, bands)}
 ),
 bc0 AS (
-  {_bands('sigc')}
+  {_lsh_bands_sql('sigc', num_hashes, bands)}
 ),
-ok AS (SELECT band, bkey FROM bc0 GROUP BY band, bkey
-       HAVING COUNT(*) <= {DEFAULT_MAX_BUCKET}),
-bc AS (SELECT b.* FROM bc0 b SEMI JOIN ok USING (band, bkey)),
+{_cap_buckets_sql('bc')},
 cands AS (
   SELECT DISTINCT n.doc_id AS doc_a, c.doc_id AS doc_b
   FROM bn n JOIN bc c ON n.band = c.band AND n.bkey = c.bkey
@@ -1627,19 +1597,13 @@ def bloom_decontaminate_documents() -> str:
     benchmark (doc_id % DECONTAM_BENCH_MOD == 0): affine Bloom positions
     mod 2^20, a shingle hits iff ALL its distinct positions are set — even
     false positives replay exactly."""
-    from xoverrr_spark.operators.dedup import (
-        BLOOM_K,
-        BLOOM_M_BITS,
-        BLOOM_SEED,
-    )
-
     parms = minhash_params(BLOOM_K, BLOOM_SEED)
     pos_list = ", ".join(
         f"(({a} * x + {b}) % {MINHASH_MOD}) % {BLOOM_M_BITS}" for a, b in parms
     )
     return f"""
-WITH {_SHINGLES_CTE.strip()},
-bench AS (SELECT DISTINCT x FROM sh WHERE doc_id % {DECONTAM_BENCH_MOD} = 0),
+WITH {_shingles_sql()},
+bench AS ({_bench_shingles_sql('sh')}),
 bpos AS (SELECT DISTINCT unnest(list_distinct([{pos_list}])) AS pos FROM bench),
 dpos AS (SELECT doc_id, x, list_distinct([{pos_list}]) AS pl FROM sh),
 dx AS (
@@ -1691,15 +1655,6 @@ DRIFT_NULL_MOD = 13  # engineered drift: priority nulled on %13 keys
 def profile_drift_orders() -> str:
     """Twin of profile.profile_drift: src = orders, trg = engineered side
     (keys %97 dropped, status corrupted %101, priority NULLed %13)."""
-    def prof(table: str) -> str:
-        parts = [
-            f"SELECT '{c}' AS column_name, COUNT(*) AS n_rows, "
-            f"COUNT(*) - COUNT({c}) AS n_nulls, "
-            f"COUNT(DISTINCT {c}) AS n_distinct FROM {table}"
-            for c in PROFILE_ORDERS_COLS
-        ]
-        return "\nUNION ALL\n".join(parts)
-
     return f"""
 WITH trg AS (
   SELECT o_orderkey, o_custkey,
@@ -1708,8 +1663,8 @@ WITH trg AS (
          CASE WHEN o_orderkey % {DRIFT_NULL_MOD} = 0 THEN NULL ELSE o_orderpriority END AS o_orderpriority
   FROM orders WHERE o_orderkey % 97 <> 0
 ),
-ps AS ({prof('orders')}),
-pt AS ({prof('trg')})
+ps AS ({_profile_sql('orders')}),
+pt AS ({_profile_sql('trg')})
 SELECT ps.column_name,
        ps.n_rows AS src_rows, pt.n_rows AS trg_rows,
        pt.n_rows - ps.n_rows AS row_delta,
@@ -1733,73 +1688,15 @@ def curate_documents_v2() -> str:
     docs (Gopher bigram fractions) -> weighted mixture sample -> sequence
     packing. Every stage is an already-verified oracle piece, re-played
     over the previous stage's CTE."""
-    from xoverrr_spark.operators.corpus import MIXTURE_BUCKETS
-
-    cases = " ".join(
-        f"WHEN source = '{s}' THEN {w * MIXTURE_TARGET_FRAC!r}"
-        for s, w in MIXTURE_WEIGHTS.items()
-    )
-    b = float(MIXTURE_BUCKETS)
-    md5i = "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT)"
     return f"""
-WITH fpd AS (
-  SELECT doc_id, source, text,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fpv
-  FROM documents
-),
-dd AS (
-  SELECT doc_id, source, text FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY fpv ORDER BY doc_id) AS rn FROM fpd
-  ) WHERE rn = 1
-),
-wds AS (
-  SELECT doc_id,
-         list_transform(string_split_regex(trim(lower(text)), '\\s+'),
-                        t -> ('0x' || substr(md5(t), 1, 10))::BIGINT) AS wh
-  FROM dd WHERE text IS NOT NULL
-),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(wh) - 1),
-                i -> (wh[i] * 1000003 + COALESCE(wh[i + 1], 0)) % 1099511627776)) AS bigram
-  FROM wds WHERE len(wh) >= 2
-),
-bc AS (SELECT doc_id, bigram, COUNT(*) AS c FROM bg GROUP BY 1, 2),
+WITH dd AS ({_exact_dedup_window_sql('doc_id, source, text')}),
 rep AS (
-  SELECT doc_id FROM (
-    SELECT doc_id,
-           CAST(SUM(c) - COUNT(*) AS BIGINT) * 1.0 / CAST(SUM(c) AS BIGINT) AS df,
-           MAX(c) * 1.0 / CAST(SUM(c) AS BIGINT) AS tf
-    FROM bc GROUP BY doc_id
-  ) WHERE df > {CURATE2_MAX_DUP} OR tf > {CURATE2_MAX_TOP}
+  SELECT doc_id FROM ({_repetition_stats_sql('dd')})
+  WHERE dup_bigram_frac > {CURATE2_MAX_DUP} OR top_bigram_frac > {CURATE2_MAX_TOP}
 ),
 keepr AS (SELECT d.* FROM dd d ANTI JOIN rep r USING (doc_id)),
-cnt AS (SELECT source, COUNT(*) AS n FROM keepr GROUP BY source),
-ct AS (SELECT source, n, SUM(n) OVER () AS total FROM cnt),
-th AS (
-  SELECT source,
-         CASE WHEN (CASE {cases} ELSE NULL END) IS NULL THEN NULL
-              ELSE CAST(floor(LEAST((CASE {cases} ELSE NULL END) * total / n, 1.0)
-                         * {b!r}) AS BIGINT) END AS th
-  FROM ct
-),
-mixed AS (
-  SELECT k.doc_id, k.source, k.text
-  FROM keepr k JOIN th ON k.source IS NOT DISTINCT FROM th.source
-  WHERE th.th IS NOT NULL AND {md5i} % {MIXTURE_BUCKETS} < th.th
-),
-tok AS (
-  SELECT doc_id, source,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
-  FROM mixed
-)
-SELECT doc_id, source, n_tokens,
-       CAST(floor(COALESCE(SUM(n_tokens) OVER (
-              PARTITION BY source ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            / {PACK_BUDGET_TOKENS}) AS BIGINT) AS pack_id
-FROM tok
+mixed AS ({_mixture_sample_sql('keepr', 'd.doc_id, d.source, d.text')})
+SELECT * FROM ({_pack_sql('mixed')})
 """
 
 
@@ -1807,30 +1704,14 @@ def curate_documents_v3() -> str:
     """Twin of q_curate_documents_v3: window exact-dedup -> drop docs
     whose cross-corpus dup-ngram ratio exceeds 1.25x the global ratio
     (cross-multiplied BIGINT form, no float division) -> drop docs fully
-    contained in the benchmark shingle set (integer-equality containment,
-    no division). One shingle CTE over the dedup survivors feeds all
-    three, mirroring the Spark side's shared persisted shingle table."""
+    contained in the benchmark shingle set (integer equality
+    n_bench_shingles = n_shingles). One shingle CTE over the dedup
+    survivors feeds both scores, mirroring the Spark side's shared
+    persisted shingle table."""
     return f"""
-WITH fpd AS (
-  SELECT doc_id, source, text,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fpv
-  FROM documents
-),
-dd AS (
-  SELECT doc_id, source, text FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY fpv ORDER BY doc_id) AS rn FROM fpd
-  ) WHERE rn = 1
-),
-{_shingles_sql('dd', 'd').strip()},
-dupset AS (SELECT x FROM shd GROUP BY x HAVING COUNT(*) >= 2),
-per AS (
-  SELECT s.doc_id,
-         COUNT(*) AS n_shingles,
-         CAST(SUM(CASE WHEN f.x IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_dup_shingles
-  FROM shd s LEFT JOIN dupset f ON s.x = f.x
-  GROUP BY s.doc_id
-),
+WITH dd AS ({_exact_dedup_window_sql('doc_id, source, text')}),
+{_shingles_sql('dd', 'd')},
+per AS (WITH {_dup_shingle_fraction_sql('shd', 2)}),
 tot AS (
   SELECT CAST(SUM(n_shingles) AS BIGINT) AS ts,
          CAST(SUM(n_dup_shingles) AS BIGINT) AS td
@@ -1841,12 +1722,9 @@ gated AS (
   FROM per, tot
   WHERE 4 * n_dup_shingles * ts <= 5 * n_shingles * td
 ),
-bshd AS (SELECT DISTINCT x FROM shd WHERE doc_id % {DECONTAM_BENCH_MOD} = 0),
 contained AS (
-  SELECT s.doc_id
-  FROM shd s LEFT JOIN bshd b ON s.x = b.x
-  GROUP BY s.doc_id
-  HAVING COUNT(*) = SUM(CASE WHEN b.x IS NOT NULL THEN 1 ELSE 0 END)
+  SELECT doc_id FROM (WITH {_contamination_scores_sql('shd')})
+  WHERE n_bench_shingles = n_shingles
 )
 SELECT g.doc_id, g.n_shingles, g.n_dup_shingles
 FROM gated g ANTI JOIN contained c USING (doc_id)
@@ -1862,7 +1740,7 @@ def chunk_documents() -> str:
     1-based inclusive list slice, ordered string_agg-free rebuild."""
     return f"""
 WITH w AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
+  SELECT doc_id, {_WS_WORDS} AS words
   FROM documents
   WHERE text IS NOT NULL AND length(trim(text)) > 0
 ),
@@ -2463,10 +2341,29 @@ MIX_BUDGET_TOKENS = 10_000
 # unweighted -> visible rate-0 rows (the least(NULL,1.0) trap, r3)
 MIX_WEIGHTS = {**{f"src{i}": 1.0 for i in range(8)}, "src8": 2.0}
 
-_FP_SQL = (
-    r"COALESCE(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), "
-    r"chr(0) || '<null-text>')"
-)
+
+def _mirrored_corpus_sql(cols: str) -> str:
+    """CTE ``corpus`` (doc_id, ``cols``): documents plus a verbatim copy of
+    every SPLIT_MIRROR_MOD-th doc at doc_id + SPLIT_MIRROR_OFFSET (the raw
+    table has no exact dups)."""
+    return f"""corpus AS (
+  SELECT doc_id, {cols} FROM documents
+  UNION ALL
+  SELECT doc_id + {SPLIT_MIRROR_OFFSET} AS doc_id, {cols}
+  FROM documents WHERE doc_id % {SPLIT_MIRROR_MOD} = 0
+)"""
+
+
+def _token_targets_sql() -> str:
+    """Each source's target token count under MIX_WEIGHTS and
+    MIX_BUDGET_TOKENS, computed in the driver and inlined as BIGINT
+    literals of a CASE over ``source`` (the same integers Spark uses)."""
+    wsum = sum(MIX_WEIGHTS.values())
+    branches = " ".join(
+        f"WHEN {_sql_str(s)} THEN {int(MIX_BUDGET_TOKENS * w / wsum)}"
+        for s, w in MIX_WEIGHTS.items()
+    )
+    return f"CAST(CASE source {branches} ELSE 0 END AS BIGINT)"
 
 
 def split_assignment_documents() -> str:
@@ -2475,8 +2372,6 @@ def split_assignment_documents() -> str:
     fractions/seed constants), so the per-doc assignment matches
     value-for-value — the property that lets a split committed by one
     engine be honored by another."""
-    from .operators.splits import split_case_sql
-
     case = split_case_sql("doc_id", SPLIT_FRACTIONS, SPLIT_SEED)
     return f"SELECT doc_id, {case} AS split FROM documents\n"
 
@@ -2488,18 +2383,11 @@ def split_leakage_documents() -> str:
     split-assigned, and docs whose fingerprint spans >= 2 splits are
     reported with the sorted split set. Null texts share the
     exact_dedup sentinel, so cross-split null pairs leak too."""
-    from .operators.splits import split_case_sql
-
     case = split_case_sql("doc_id", SPLIT_FRACTIONS, SPLIT_SEED)
     return f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {SPLIT_MIRROR_OFFSET} AS doc_id, text
-  FROM documents WHERE doc_id % {SPLIT_MIRROR_MOD} = 0
-),
+WITH {_mirrored_corpus_sql('text')},
 d AS (
-  SELECT doc_id, {case} AS split, {_FP_SQL} AS text_fp FROM corpus
+  SELECT doc_id, {case} AS split, {_FP_KEY} AS text_fp FROM corpus
 ),
 p AS (SELECT DISTINCT text_fp, split FROM d),
 s AS (
@@ -2521,21 +2409,14 @@ def token_budget_mixture_documents() -> str:
     (weight 2) targets more tokens than it has -> epochs >= 1 + fractional
     remainder; the weight-1 sources stay sub-epoch. SUM/COUNT cast to
     BIGINT (HUGEINT schema-mismatches Spark)."""
-    wsum = sum(MIX_WEIGHTS.values())
-    targets = {s: int(MIX_BUDGET_TOKENS * w / wsum) for s, w in MIX_WEIGHTS.items()}
-    from .operators.splits import _sql_str
-
-    branches = " ".join(f"WHEN {_sql_str(s)} THEN {t}" for s, t in targets.items())
-    return rf"""
+    return f"""
 WITH ps AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+')) END)
-              AS BIGINT) AS n_tokens
+         CAST(SUM({_WS_TOKENS}) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
 ),
 t AS (
-  SELECT *, CAST(CASE source {branches} ELSE 0 END AS BIGINT) AS target_tokens
+  SELECT *, {_token_targets_sql()} AS target_tokens
   FROM ps
 )
 SELECT source, n_docs, n_tokens, target_tokens,
@@ -2556,28 +2437,15 @@ def assemble_dataset_documents() -> str:
     quarantined (null-safe anti join) -> token-budget plan over the
     quarantined train split (capped mode) -> independent-stream sample
     hash ('sample:seed:id') -> eval survivors UNION sampled train."""
-    from .operators.splits import split_case_sql
-
     case = split_case_sql("doc_id", SPLIT_FRACTIONS, SPLIT_SEED)
-    wsum = sum(MIX_WEIGHTS.values())
-    targets = {s: int(MIX_BUDGET_TOKENS * w / wsum) for s, w in MIX_WEIGHTS.items()}
-    from .operators.splits import _sql_str
-
-    branches = " ".join(f"WHEN {_sql_str(s)} THEN {t}" for s, t in targets.items())
-    sample_h = (
-        "(('0x' || substr(md5(('sample:" + str(SPLIT_SEED) + ":' || "
-        "COALESCE(CAST(doc_id AS VARCHAR), chr(0) || '<null-id>'))), 1, 15))"
-        "::BIGINT)"
+    sample_h = md5_long_sql(
+        f"('sample:{SPLIT_SEED}:' || "
+        "COALESCE(CAST(doc_id AS VARCHAR), chr(0) || '<null-id>'))"
     )
-    return rf"""
-WITH corpus AS (
-  SELECT doc_id, text, source FROM documents
-  UNION ALL
-  SELECT doc_id + {SPLIT_MIRROR_OFFSET} AS doc_id, text, source
-  FROM documents WHERE doc_id % {SPLIT_MIRROR_MOD} = 0
-),
+    return f"""
+WITH {_mirrored_corpus_sql('text, source')},
 d AS (
-  SELECT doc_id, {case} AS split, source, text, {_FP_SQL} AS text_fp
+  SELECT doc_id, {case} AS split, source, text, {_FP_KEY} AS text_fp
   FROM corpus
 ),
 p AS (SELECT DISTINCT text_fp, split FROM d),
@@ -2593,16 +2461,14 @@ clean AS (
 train AS (SELECT * FROM clean WHERE split = 'train'),
 ps AS (
   SELECT source,
-         CAST(SUM(CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(string_split_regex(trim(text), '\s+')) END)
-              AS BIGINT) AS n_tokens
+         CAST(SUM({_WS_TOKENS}) AS BIGINT) AS n_tokens
   FROM train GROUP BY source
 ),
 plan AS (
   SELECT source,
          CAST(CASE WHEN n_tokens > 0
                    THEN least(1000000,
-                        (CAST(CASE source {branches} ELSE 0 END AS BIGINT)
+                        ({_token_targets_sql()}
                          * 1000000) // n_tokens)
                    ELSE 0 END AS BIGINT) AS rate_ppm
   FROM ps
@@ -2623,8 +2489,6 @@ def near_dup_split_leakage_documents() -> str:
     """Twin of splits.near_dup_pair_leakage over the minhash detector:
     the full minhash_near_dups pair query as a subquery, each side joined
     to the split CASE, keeping split-straddling pairs."""
-    from .operators.splits import split_case_sql
-
     case = split_case_sql("doc_id", SPLIT_FRACTIONS, SPLIT_SEED)
     nd = minhash_near_dups_documents().strip()
     return f"""
@@ -2640,7 +2504,5 @@ WHERE sa.split IS DISTINCT FROM sb.split
 def split_by_source_documents() -> str:
     """Twin of the group-keyed split: the same CASE over the SOURCE
     column — all docs of a source share a split by construction."""
-    from .operators.splits import split_case_sql
-
     case = split_case_sql("source", SPLIT_FRACTIONS, SPLIT_SEED)
     return f"SELECT doc_id, source, {case} AS split FROM documents\n"

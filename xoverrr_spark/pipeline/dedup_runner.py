@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.tokens import quality_score
 from ..intermediates import scope
 from ..operators import dedup as D
-from .resume import pin_run_params
+from .resume import pin_run_params, write_json_atomic
 
 
 def _done(path: str) -> bool:
@@ -227,8 +227,7 @@ def run_dedup(
         "over_cap_docs": int(sum(r["over_cap_docs"] for r in stats_rows)),
         **split_summary,
     }
-    with open(os.path.join(output_dir, "dedup_summary.json"), "w") as fh:
-        json.dump(summary, fh, indent=2)
+    write_json_atomic(os.path.join(output_dir, "dedup_summary.json"), summary)
     return summary
 
 
@@ -472,8 +471,7 @@ def run_incremental_dedup(
         "jaccard_threshold": jaccard_threshold,
         "index_dir": index_dir,
     }
-    with open(os.path.join(output_dir, "incremental_summary.json"), "w") as fh:
-        json.dump(summary, fh, indent=2)
+    write_json_atomic(os.path.join(output_dir, "incremental_summary.json"), summary)
     return summary
 
 

@@ -194,14 +194,15 @@ def _run_bucket(
         F.count(F.lit(1)).alias("n_rows"),
         F.count(F.when(F.col("keep"), 1)).alias("n_keep"),
     ).collect()[0]
+    t1 = time.time()
     row = {
         "run_id": run_id,
         "bucket": b,
         "n_rows": int(counts["n_rows"]),
         "n_keep": int(counts["n_keep"]),
         "started_at": t0,
-        "finished_at": time.time(),
-        "duration_s": time.time() - t0,
+        "finished_at": t1,
+        "duration_s": t1 - t0,
         "skipped": False,
     }
     local_rows(
@@ -391,8 +392,7 @@ def run_pipeline(
     # run envelope on disk next to the outputs (reference persists one audit
     # row per run, persistence.py:236; here: summary json + the lineage/
     # metrics parquet dirs written per bucket above)
-    with open(os.path.join(output_dir, "run_summary.json"), "w") as fh:
-        json.dump(summary, fh, indent=1)
+    write_json_atomic(os.path.join(output_dir, "run_summary.json"), summary)
     return summary
 
 
