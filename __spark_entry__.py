@@ -477,20 +477,12 @@ def q_profile_orders(spark, sf_dir):
 def q_profile_drift(spark, sf_dir):
     from xoverrr_spark.operators.profile import profile_drift
 
-    src = _t(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    trg = (
-        src.filter(k % 97 != 0)
-        .withColumn(
-            "o_orderstatus",
-            F.when(k % 101 == 0, F.lit("X")).otherwise(F.col("o_orderstatus")),
-        )
-        .withColumn(
-            "o_orderpriority",
-            F.when(k % oracle.DRIFT_NULL_MOD == 0, F.lit(None)).otherwise(
-                F.col("o_orderpriority")
-            ),
-        )
+    src, trg = _orders_sides(spark, sf_dir)
+    trg = trg.withColumn(
+        "o_orderpriority",
+        F.when(F.col("o_orderkey") % oracle.DRIFT_NULL_MOD == 0, F.lit(None)).otherwise(
+            F.col("o_orderpriority")
+        ),
     )
     return profile_drift(src, trg, oracle.PROFILE_ORDERS_COLS)
 

@@ -108,10 +108,10 @@ def time_diff_1m(spark) -> dict:
 
 
 def time_compare_full_1m(spark) -> dict:
-    """FULL compare_frames on the same 1M x 10 shape: stats + classify key
-    examples + dup-key examples + issue examples. Single-pass (W4 r01): all
-    derivations ride ONE persisted diff_joined, so this should cost roughly
-    one cached-read more than the bare stats row — not ~5 recomputations."""
+    """FULL compare_frames on the same 1M x 10 shape: stats + key examples
+    + dup-key examples + issue examples. One query, stats observed on the
+    examples query: the scan + key shuffle runs once, so this should cost
+    about the bare stats row plus one small ranked-window stage."""
     from xoverrr_spark.operators.diff import compare_frames
 
     def call():

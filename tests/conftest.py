@@ -27,3 +27,25 @@ def _intermediates_scope():
     an operator persists are freed when the test ends."""
     with scope():
         yield
+
+
+@pytest.fixture
+def sql_plans(spark):
+    """``run(fn)`` calls ``fn`` and returns the plan description of each SQL
+    execution it started, oldest first, read from the SQL status store (an
+    adaptive plan's description is the last plan the execution reported)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def latest(n):
+        # execution events reach the status store through the listener bus
+        bus.waitUntilEmpty()
+        seq = store.executionsList(max(store.executionsCount() - n, 0), n)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def run(fn):
+        before = max((e.executionId() for e in latest(1)), default=-1)
+        fn()
+        return [e.physicalPlanDescription() for e in latest(20) if e.executionId() > before]
+
+    return run

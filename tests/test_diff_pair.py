@@ -1,23 +1,14 @@
 """Driver-side cost of the diff plan: pair canonicalization builds each
-column expression once for both sides, and ``compare_frames`` runs only
-the example lookups the stats row says can return something."""
+column expression once for both sides, and ``compare_frames`` is one SQL
+execution, its stats observed on the examples query, even on empty inputs."""
 
 import datetime
+import threading
+
+from pyspark.sql import functions as F
 
 from xoverrr_spark.functions.normalize import canonicalize, canonicalize_pair
-from xoverrr_spark.operators.diff import compare_frames
-
-
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(f"{group}_done", "")
-    # job-start events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+from xoverrr_spark.operators.diff import build_check_stats, compare_frames
 
 
 def test_pair_canonicalization_equals_per_side(spark):
@@ -39,38 +30,56 @@ def test_pair_canonicalization_equals_per_side(spark):
     assert sorted(r.a for r in pair[1].collect()) == ["10", "N/A"]
 
 
-def test_identical_frames_run_no_example_job(spark):
-    rows = [(i, f"v{i}", i * 1.5) for i in range(50)]
-    schema = "id int, name string, amt double"
-    src = spark.createDataFrame(rows, schema)
-    trg = spark.createDataFrame(rows, schema)
+def test_full_compare_is_one_sql_execution(spark, sql_plans):
+    # the stats are observed on the examples query: a full call is one SQL
+    # execution whether or not any example kind has rows, and so is a
+    # stats-only call
+    schema = "id int, name string"
+    rows = [(i, f"v{i}") for i in range(50)]
+    same = spark.createDataFrame(rows, schema)
+    src = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c"), (5, "e"), (5, "f")], schema)
+    trg = spark.createDataFrame([(1, "a"), (2, "B"), (4, "d"), (4, "d"), (5, "e")], schema)
     out = {}
-    full = _jobs_in_group(spark, "diff_identical_full",
-                          lambda: out.update(full=compare_frames(src, trg, ["id"])))
-    stats_only = _jobs_in_group(
-        spark, "diff_identical_stats",
-        lambda: compare_frames(src, trg, ["id"], with_examples=False))
-    assert stats_only > 0
-    assert full == stats_only
-    stats, details = out["full"]
+    for name, (s, t) in {"identical": (same, same), "every_kind": (src, trg)}.items():
+        plans = sql_plans(lambda: out.update({name: compare_frames(s, t, ["id"])}))
+        assert len(plans) == 1, (name, plans)
+        plans = sql_plans(lambda: compare_frames(s, t, ["id"], with_examples=False))
+        assert len(plans) == 1, (name, plans)
+    stats, details = out["identical"]
     assert stats.passed_rows == 50
     assert details.issue_examples == []
     assert details.source_only_keys_examples == () == details.dup_target_keys_examples
-
-
-def test_each_nonzero_count_runs_its_lookup(spark):
-    # the counter above is not blind: a frame with source-only keys and a
-    # differing row runs the two lookups those counts gate
-    schema = "id int, name string"
-    src = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema)
-    trg = spark.createDataFrame([(1, "a"), (2, "B")], schema)
-    stats_only = _jobs_in_group(
-        spark, "diff_gated_stats", lambda: compare_frames(src, trg, ["id"], with_examples=False))
-    out = {}
-    full = _jobs_in_group(spark, "diff_gated_full",
-                          lambda: out.update(full=compare_frames(src, trg, ["id"])))
-    assert full >= stats_only + 2
-    _, details = out["full"]
+    stats, details = out["every_kind"]
+    assert (stats.only_source_rows, stats.only_target_rows) == (1, 1)
     assert details.source_only_keys_examples == ("3",)
-    assert details.target_only_keys_examples == ()
-    assert [e["primary_key"] for e in details.issue_examples] == ["2"]
+    assert details.target_only_keys_examples == ("4",)
+    assert details.dup_source_keys_examples == ("5",)
+    assert details.dup_target_keys_examples == ("4",)
+    assert details.issue_examples == [
+        {"primary_key": "2", "column_name": "name", "source_value": "b", "target_value": "B"},
+    ]
+
+
+def _stats_within_timeout(src, trg):
+    """compare_frames' stats, from a thread joined with a timeout: a query
+    whose observation never arrives fails here instead of hanging."""
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(r=compare_frames(src, trg, ["id"])), daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "compare_frames did not return"
+    return out["r"][0]
+
+
+def test_empty_inputs_keep_their_stats(spark):
+    schema = "id int, name string"
+    full = spark.createDataFrame([(1, "a"), (2, "b"), (2, "c")], schema)
+    empty = spark.createDataFrame([], schema)
+    assert _stats_within_timeout(empty, empty) is None
+    # both sides statically empty: the optimizer folds them to empty relations
+    assert _stats_within_timeout(full.filter(F.lit(False)), full.limit(0)) is None
+    one_sided = build_check_stats(3, 0, 1, 0, 2, 0, 0, 0)
+    assert _stats_within_timeout(full, full.filter(F.lit(False))) == one_sided
+    assert _stats_within_timeout(full, full.limit(0)) == one_sided
+    assert _stats_within_timeout(full.limit(0), full) == build_check_stats(0, 3, 0, 1, 0, 2, 0, 0)

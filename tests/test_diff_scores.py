@@ -134,6 +134,9 @@ def test_issue_examples_capped(spark):
     assert stats.passed_rows == 0
     assert len(details.issue_examples) == 3
     assert all(e["column_name"] == "v" for e in details.issue_examples)
+    # no examples asked: the stats still arrive
+    stats0, details0 = compare_frames(src, trg, ["id"], max_examples=0)
+    assert stats0 == stats and details0.issue_examples == []
 
 
 def test_dup_key_examples_compound_pk(spark):
@@ -175,3 +178,33 @@ def test_null_vs_value_counted_null_safe(spark):
     assert stats.max_issue_pct == pytest.approx(50.0)
     ex = details.issue_examples
     assert len(ex) == 1 and ex[0]["source_value"] is None and ex[0]["target_value"] == "y"
+
+
+def test_key_examples_are_the_smallest_keys(spark):
+    # source-only and target-only examples are the max_examples smallest
+    # keys in key order, not whichever rows a partition yields first
+    schema = "id int, v string"
+    src = _df(spark, [(i, "x") for i in range(0, 200)], schema)
+    trg = _df(spark, [(i, "x") for i in range(150, 400)], schema)
+    _, details = compare_frames(src, trg, ["id"], max_examples=3, normalize=False)
+    assert details.source_only_keys_examples == (0, 1, 2)
+    assert details.target_only_keys_examples == (200, 201, 202)
+    # canonicalized keys are strings: string order
+    _, details_n = compare_frames(src, trg, ["id"], max_examples=3)
+    assert details_n.source_only_keys_examples == ("0", "1", "10")
+    assert details_n.target_only_keys_examples == ("200", "201", "202")
+
+
+def test_compound_key_example_orders(spark):
+    # struct order (1, 5) < (2, 1) < (10, 2) differs from primary_key string
+    # order "10|2" < "1|5" < "2|1": issue examples follow the string, key
+    # examples follow the keys
+    schema = "k1 int, k2 int, v string"
+    keys = [(1, 5), (2, 1), (10, 2)]
+    src = _df(spark, [(a, b, "x") for a, b in keys] * 2 + [(20, 0, "x")], schema)
+    trg = _df(spark, [(a, b, "y") for a, b in keys] + [(30, 0, "y")], schema)
+    _, details = compare_frames(src, trg, ["k1", "k2"], max_examples=2, normalize=False)
+    assert [e["primary_key"] for e in details.issue_examples] == ["10|2", "1|5"]
+    assert details.dup_source_keys_examples == ((1, 5), (2, 1))
+    assert details.source_only_keys_examples == ((20, 0),)
+    assert details.target_only_keys_examples == ((30, 0),)

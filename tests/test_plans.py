@@ -5,6 +5,8 @@ and a scan of 1 binary blob column per row; between a broadcast and a 2 PB
 shuffle. Asserted here so regressions fail loudly.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -122,30 +124,30 @@ def test_runner_bucket_scan_is_partition_pruned(spark, tmp_path):
     assert not pushed or "bucket" not in pushed[0], plan
 
 
-def test_diff_derivations_reuse_persisted_joined(spark, sf_dir):
-    # W4 fix: compare_frames persists diff_joined once; classify / examples
-    # must read the cache, not rebuild the scan+shuffle
-    from xoverrr_spark.operators.diff import (
-        _classify_from_joined,
-        _issue_examples_from_joined,
-        _stats_row_from_joined,
-        diff_joined,
-    )
+def test_diff_is_one_observed_query(spark, sf_dir, sql_plans):
+    # compare_frames persists nothing: its one query observes the stats on
+    # the per-key frame and ranks every example kind in one window, whose
+    # partial WindowGroupLimit caps each kind before the window's exchange
+    from xoverrr_spark.operators.diff import compare_frames
 
-    src = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    trg = src.limit(500)
-    j, vals = diff_joined(src, trg, ["o_orderkey"], normalize=False)
-    j = j.persist()
-    try:
-        _stats_row_from_joined(j, vals).collect()  # materializes the cache
-        for derived in (
-            _classify_from_joined(j, vals, ["o_orderkey"]),
-            _issue_examples_from_joined(j, vals, ["o_orderkey"]),
-        ):
-            plan = _plan(derived)
-            assert "InMemoryTableScan" in plan, plan
-    finally:
-        j.unpersist()
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    src = orders.filter(F.col("o_orderkey") % 7 != 0)
+    trg = orders.filter(F.col("o_orderkey") % 5 != 0).withColumn(
+        "o_orderstatus", F.when(F.col("o_orderkey") % 3 == 0, "X").otherwise(F.col("o_orderstatus"))
+    )
+    [plan] = sql_plans(lambda: compare_frames(src, trg, ["o_orderkey"], normalize=False))
+    # the final tree, top down, as (name, id); then each node's Arguments line
+    final = plan.split("== Initial Plan ==")[0]
+    nodes = re.findall(r"[+:]- (?:\* )?([A-Za-z][\w ]*?) +\((\d+)\)", final)
+    args = dict(re.findall(r"^\((\d+)\) .*\n(?:.+\n)*?Arguments: (.*)$", plan, re.M))
+    names = [n for n, _ in nodes]
+    assert names.count("CollectMetrics") == 1, final
+    assert names.count("Scan parquet") == 2, final
+    assert "InMemoryTableScan" not in plan, plan
+    exchange = names.index("Exchange", names.index("Window"))
+    partial = names.index("WindowGroupLimit", exchange)
+    assert partial < names.index("CollectMetrics"), final
+    assert args[nodes[partial][1]].endswith("Partial"), plan
 
 
 def test_source_keep_rate_single_scan_no_join(spark, sf_dir):

@@ -11,8 +11,8 @@ The rule: build a frame and materialize it (write, collect, count) inside
 ONE scope. Operators return lazy frames whose caches belong to the
 caller's scope; a lazy frame used after its scope closes recomputes its
 inputs, because the caches it was planned against are gone. A function
-that materializes its result before returning (``compare_frames``,
-``cluster_near_dups``, the runners) opens its own scope.
+that materializes its result before returning (``cluster_near_dups``,
+the runners) opens its own scope; ``compare_frames`` persists nothing.
 
 The open scopes live in a ``contextvars.ContextVar``: a thread started by
 ``ThreadPoolExecutor`` begins with an empty context, so work submitted to

@@ -28,9 +28,11 @@ Spark, not translated:
 
 Scale notes (100 TB): one key-hash shuffle, on the primary key — AQE
 handles skew/partition sizing; the per-column issue counts ride the same
-single agg (no per-column passes). Examples are stats-gated lookups over the
-persisted per-key frame: each is a short ``limit``/window job, and it runs
-only when the stats row counts at least one row of its kind.
+single agg (no per-column passes). ``compare_frames`` is one query, stats
+observed on the examples query: the stats aggregate is an ``Observation`` on
+the per-key frame, and every example kind is one ranked window over it,
+capped per kind by a partial ``WindowGroupLimit`` before the window's
+exchange. Nothing is persisted.
 """
 
 from __future__ import annotations
@@ -38,12 +40,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from statistics import median
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.normalize import canonicalize_pair
-from ..intermediates import persist, scope
-from ..session import local_rows
 
 DEFAULT_MAX_EXAMPLES = 3  # reference constants.py:7
 
@@ -174,7 +174,13 @@ def diff_joined(
     return j, vals
 
 
-def _classify_from_joined(j: DataFrame, vals: list[str], keys: list[str]) -> DataFrame:
+def diff_classify(
+    src: DataFrame, trg: DataFrame, keys: list[str], normalize: bool = True
+) -> DataFrame:
+    """Per-key classification DataFrame: keys + ``diff_status`` in
+    {source_only, target_only, differs, matched} (dup keys classified on
+    their deduped representative, like the reference)."""
+    j, vals = diff_joined(src, trg, keys, normalize)
     eq = F.col("s_row") == F.col("t_row") if vals else F.lit(True)
     status = (
         F.when(F.col("t_cnt").isNull(), F.lit("source_only"))
@@ -185,17 +191,10 @@ def _classify_from_joined(j: DataFrame, vals: list[str], keys: list[str]) -> Dat
     return j.select(*keys, status.alias("diff_status"))
 
 
-def diff_classify(
-    src: DataFrame, trg: DataFrame, keys: list[str], normalize: bool = True
-) -> DataFrame:
-    """Per-key classification DataFrame: keys + ``diff_status`` in
-    {source_only, target_only, differs, matched} (dup keys classified on
-    their deduped representative, like the reference)."""
-    j, vals = diff_joined(src, trg, keys, normalize)
-    return _classify_from_joined(j, vals, keys)
-
-
-def _stats_row_from_joined(j: DataFrame, vals: list[str]) -> DataFrame:
+def _stats_aggs(vals: list[str]) -> list[Column]:
+    """The global diff counters over a ``diff_joined`` frame, one named
+    aggregate each: totals, dups, src/trg-only, comparable, passed, and one
+    ``issue_<col>`` count per value column."""
     both = F.col("s_cnt").isNotNull() & F.col("t_cnt").isNotNull()
     eq = F.col("s_row") == F.col("t_row") if vals else F.lit(True)
     aggs = [
@@ -219,63 +218,77 @@ def _stats_row_from_joined(j: DataFrame, vals: list[str]) -> DataFrame:
                 F.when(both & ~F.col(f"s_row.{c}").eqNullSafe(F.col(f"t_row.{c}")), 1)
             ).alias(f"issue_{c}")
         )
-    return j.agg(*aggs)
+    return aggs
 
 
 def diff_stats_row(
     src: DataFrame, trg: DataFrame, keys: list[str], normalize: bool = True
 ) -> DataFrame:
     """One-row DataFrame with the global diff counters (SQL-expressible —
-    used by the driver-oracle queries and by ``compare_frames``)."""
+    used by the driver-oracle queries; ``compare_frames`` computes the same
+    aggregates)."""
     j, vals = diff_joined(src, trg, keys, normalize)
-    return _stats_row_from_joined(j, vals)
+    return j.agg(*_stats_aggs(vals))
 
 
-def _issue_examples_from_joined(
-    j: DataFrame, vals: list[str], keys: list[str],
-    max_examples: int = DEFAULT_MAX_EXAMPLES,
+# example kinds of the ranked examples frame; an issue example is kind
+# _ISSUE plus its column_name
+_SOURCE_ONLY, _TARGET_ONLY, _DUP_SOURCE, _DUP_TARGET, _ISSUE = range(5)
+
+
+def _examples_frame(
+    j: DataFrame, vals: list[str], keys: list[str], max_examples: int,
 ) -> DataFrame:
-    """Per-column discrepancy examples from a ``diff_joined`` frame, capped
-    at ``max_examples`` per column with deterministic key ordering
-    (reference caps at utils.py:387-391; the reference's per-chunk row loop
-    becomes melt + ranked window here)."""
+    """Every example kind of a ``diff_joined`` frame as one ranked window,
+    capped at ``max_examples`` rows per kind: source-only, target-only,
+    dup-source and dup-target keys in key order, and per differing column
+    the discrepancies in ``primary_key``-string order (reference caps at
+    utils.py:387-391; its per-chunk row loop becomes explode + window here).
+
+    Columns: ``_key`` (struct of the keys), kind, column_name, primary_key,
+    source_value, target_value, rn. The ``rn <= max_examples`` filter lets
+    Spark plan a partial ``WindowGroupLimit`` before the window's exchange,
+    so each kind ships at most ``max_examples`` rows per map task."""
     from pyspark.sql.window import Window
 
-    if not vals:
-        return local_rows(
-            j.sparkSession, [],
-            "primary_key string, column_name string, source_value string, target_value string",
-        )
-    both = F.col("s_cnt").isNotNull() & F.col("t_cnt").isNotNull()
-    pk = F.concat_ws("|", *[F.col(k).cast("string") for k in keys]).alias("primary_key")
-    # pre-filter to rows whose value structs DIFFER before melting: struct
-    # equality uses Spark's ordering (null fields compare equal), so it is
-    # exactly "every column eqNullSafe" — an equal row can contribute no
-    # example, yet the melt exploded it |vals| ways anyway (r6: the explode
-    # input drops from every comparable row to just the differing rows;
-    # per-column output unchanged)
-    differing = both & ~(F.col("s_row") == F.col("t_row"))
-    melted = j.filter(differing).select(
-        pk,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("column_name"),
-                    F.col(f"s_row.{c}").cast("string").alias("source_value"),
-                    F.col(f"t_row.{c}").cast("string").alias("target_value"),
-                )
-                for c in vals
-            ])
-        ).alias("d"),
-    ).select("primary_key", "d.*").filter(
+    s_cnt, t_cnt = F.col("s_cnt"), F.col("t_cnt")
+    # struct equality uses Spark's ordering (null fields compare equal), so
+    # it is exactly "every column eqNullSafe": an equal row has no example
+    differing = s_cnt.isNotNull() & t_cnt.isNotNull() & ~(F.col("s_row") == F.col("t_row"))
+    pk = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
+    none = F.lit(None).cast("string")
+
+    def kind(code, cond, column_name=none, primary_key=none,
+             source_value=none, target_value=none):
+        return F.when(cond, F.struct(
+            F.lit(code).alias("kind"), column_name.alias("column_name"),
+            primary_key.alias("primary_key"), source_value.alias("source_value"),
+            target_value.alias("target_value"),
+        ))
+
+    source_only, target_only = t_cnt.isNull(), s_cnt.isNull()
+    dup_source, dup_target = s_cnt > 1, t_cnt > 1
+    kinds = [
+        kind(_SOURCE_ONLY, source_only),
+        kind(_TARGET_ONLY, target_only),
+        kind(_DUP_SOURCE, dup_source),
+        kind(_DUP_TARGET, dup_target),
+    ]
+    for c in vals:
+        sv = F.col(f"s_row.{c}").cast("string")
+        tv = F.col(f"t_row.{c}").cast("string")
         # null-safe: a NULL-vs-value discrepancy is still an example
-        ~F.col("source_value").eqNullSafe(F.col("target_value"))
-    )
-    w = Window.partitionBy("column_name").orderBy("primary_key")
+        kinds.append(kind(_ISSUE, differing & ~sv.eqNullSafe(tv), F.lit(c), pk, sv, tv))
+    w = Window.partitionBy("kind", "column_name").orderBy("primary_key", "_key")
     return (
-        melted.withColumn("rn", F.row_number().over(w))
+        # every issue kind implies `differing`: rows with no example of any
+        # kind leave before the explode
+        j.filter(source_only | target_only | dup_source | dup_target | differing)
+        .select(F.struct(*keys).alias("_key"), F.explode(F.array(*kinds)).alias("_ex"))
+        .filter(F.col("_ex").isNotNull())
+        .select("_key", "_ex.*")
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= max_examples)
-        .drop("rn")
     )
 
 
@@ -290,83 +303,72 @@ def compare_frames(
     """Full diff run -> (CheckStats, CheckDetails); (None, None) when both
     sides are empty (reference utils.py:438-439 -> SKIPPED).
 
-    Single-pass (W4 r01): the diff_joined frame is persisted once; stats,
-    the four key-example paths, dup-key examples, and issue examples are
-    all derived from the cached frame — one scan + one shuffle of the
-    inputs total, instead of ~5 full recomputations. The stats collect
-    materializes the cache; every follow-up is a short job over the cached
-    partitions, and a follow-up whose kind the stats row counts zero of
-    (no source-only keys, no dups, no differing rows, ...) is skipped — it
-    could only return nothing. The cache lives in this call's own
-    ``intermediates.scope()``, so executor storage stays bounded.
+    One Spark query per call, nothing persisted: the stats aggregate is an
+    ``Observation`` on the ``diff_joined`` frame, and every example kind
+    comes from one ranked-window frame over that observed frame, collected
+    once — the collect runs the scan + key shuffle once and fills both.
+    ``with_examples=False`` collects the stats aggregate alone, also one
+    query; so does ``max_examples <= 0``, whose empty window the optimizer
+    folds away together with the metrics node.
     """
     j, vals = diff_joined(src, trg, keys, normalize)
-    with scope():
-        j = persist(j)
-        row = _stats_row_from_joined(j, vals).collect()[0].asDict()
-        if row["total_source_rows"] == 0 and row["total_target_rows"] == 0:
-            return None, None
+    examples = []
+    if with_examples and max_examples > 0:
+        obs = Observation()
+        examples = _examples_frame(
+            j.observe(obs, *_stats_aggs(vals)), vals, keys, max_examples
+        ).collect()
+        row = obs.get
+    else:
+        row = j.agg(*_stats_aggs(vals)).collect()[0].asDict()
+    if row["total_source_rows"] == 0 and row["total_target_rows"] == 0:
+        return None, None
 
-        issue_counts = [row[f"issue_{c}"] for c in vals if row[f"issue_{c}"] > 0]
-        stats = build_check_stats(
-            row["total_source_rows"], row["total_target_rows"],
-            row["dup_source_rows"], row["dup_target_rows"],
-            row["only_source_rows"], row["only_target_rows"],
-            row["comparable_rows"], row["passed_rows"],
-            issue_counts,
+    issue_counts = [row[f"issue_{c}"] for c in vals if row[f"issue_{c}"] > 0]
+    stats = build_check_stats(
+        row["total_source_rows"], row["total_target_rows"],
+        row["dup_source_rows"], row["dup_target_rows"],
+        row["only_source_rows"], row["only_target_rows"],
+        row["comparable_rows"], row["passed_rows"],
+        issue_counts,
+    )
+
+    breakdown = sorted(
+        ((c, row[f"issue_{c}"]) for c in vals if row[f"issue_{c}"] > 0),
+        key=lambda x: (-x[1], x[0]),
+    )
+    # rn orders each kind; kinds and issue columns come out in (kind,
+    # column_name) order whatever the partitioning of the window's output
+    examples.sort(key=lambda r: (r.kind, r.column_name or "", r.rn))
+
+    def _keys(code):
+        # one key -> its value, compound -> a tuple (reference surfaces
+        # dup key sets, utils.py:443-454, formatted utils.py:978-982)
+        return tuple(
+            r._key[0] if len(keys) == 1 else tuple(r._key)
+            for r in examples if r.kind == code
         )
 
-        breakdown = sorted(
-            ((c, row[f"issue_{c}"]) for c in vals if row[f"issue_{c}"] > 0),
-            key=lambda x: (-x[1], x[0]),
-        )
-        details = CheckDetails(
-            issue_breakdown=breakdown,
-            evaluated_columns=vals,
-            skipped_source_columns=[
-                c for c in src.columns if c not in keys and c not in vals
-            ],
-            skipped_target_columns=[
-                c for c in trg.columns if c not in keys and c not in vals
-            ],
-        )
-        if with_examples:
-            def _tuples(rows):
-                return tuple(r[0] if len(keys) == 1 else tuple(r) for r in rows)
-
-            cls = _classify_from_joined(j, vals, keys)
-
-            def _keys(status):
-                return _tuples(
-                    cls.filter(F.col("diff_status") == status)
-                    .select(*keys).limit(max_examples).collect()
-                )
-
-            def _dup_keys(cnt_col):
-                # deterministic ordering (reference surfaces dup key sets,
-                # utils.py:443-454, formatted utils.py:978-982)
-                return _tuples(
-                    j.filter(F.col(cnt_col) > 1)
-                    .select(*keys).orderBy(*keys).limit(max_examples).collect()
-                )
-
-            if row["only_source_rows"]:
-                details.source_only_keys_examples = _keys("source_only")
-            if row["only_target_rows"]:
-                details.target_only_keys_examples = _keys("target_only")
-            if row["dup_source_rows"]:
-                details.dup_source_keys_examples = _dup_keys("s_cnt")
-            if row["dup_target_rows"]:
-                details.dup_target_keys_examples = _dup_keys("t_cnt")
-            # an issue example needs a comparable row whose value structs
-            # differ — exactly the rows comparable_rows counts and
-            # passed_rows does not
-            if row["comparable_rows"] > row["passed_rows"]:
-                details.issue_examples = [
-                    r.asDict()
-                    for r in _issue_examples_from_joined(j, vals, keys, max_examples).collect()
-                ]
-        return stats, details
+    details = CheckDetails(
+        issue_breakdown=breakdown,
+        issue_examples=[
+            {"primary_key": r.primary_key, "column_name": r.column_name,
+             "source_value": r.source_value, "target_value": r.target_value}
+            for r in examples if r.kind == _ISSUE
+        ],
+        dup_source_keys_examples=_keys(_DUP_SOURCE),
+        dup_target_keys_examples=_keys(_DUP_TARGET),
+        source_only_keys_examples=_keys(_SOURCE_ONLY),
+        target_only_keys_examples=_keys(_TARGET_ONLY),
+        evaluated_columns=vals,
+        skipped_source_columns=[
+            c for c in src.columns if c not in keys and c not in vals
+        ],
+        skipped_target_columns=[
+            c for c in trg.columns if c not in keys and c not in vals
+        ],
+    )
+    return stats, details
 
 
 def check_status(stats: CheckStats | None, tolerance_pct: float = 0.0) -> str:

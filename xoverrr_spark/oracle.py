@@ -1653,18 +1653,18 @@ DRIFT_NULL_MOD = 13  # engineered drift: priority nulled on %13 keys
 
 
 def profile_drift_orders() -> str:
-    """Twin of profile.profile_drift: src = orders, trg = engineered side
-    (keys %97 dropped, status corrupted %101, priority NULLed %13)."""
+    """Twin of profile.profile_drift: src = orders, trg = the engineered
+    orders target (``ORDERS_TRG_CTE``) with priority NULLed %DRIFT_NULL_MOD."""
     return f"""
-WITH trg AS (
-  SELECT o_orderkey, o_custkey,
-         CASE WHEN o_orderkey % 101 = 0 THEN 'X' ELSE o_orderstatus END AS o_orderstatus,
-         o_totalprice, o_orderdate,
-         CASE WHEN o_orderkey % {DRIFT_NULL_MOD} = 0 THEN NULL ELSE o_orderpriority END AS o_orderpriority
-  FROM orders WHERE o_orderkey % 97 <> 0
+WITH {ORDERS_TRG_CTE.strip()},
+drift AS (
+  SELECT * REPLACE (
+    CASE WHEN o_orderkey % {DRIFT_NULL_MOD} = 0 THEN NULL ELSE o_orderpriority END AS o_orderpriority
+  )
+  FROM trg
 ),
 ps AS ({_profile_sql('orders')}),
-pt AS ({_profile_sql('trg')})
+pt AS ({_profile_sql('drift')})
 SELECT ps.column_name,
        ps.n_rows AS src_rows, pt.n_rows AS trg_rows,
        pt.n_rows - ps.n_rows AS row_delta,
