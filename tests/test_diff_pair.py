@@ -30,26 +30,33 @@ def test_pair_canonicalization_equals_per_side(spark):
     assert sorted(r.a for r in pair[1].collect()) == ["10", "N/A"]
 
 
-def test_full_compare_is_one_sql_execution(spark, sql_plans):
-    # the stats are observed on the examples query: a full call is one SQL
-    # execution whether or not any example kind has rows, and so is a
-    # stats-only call
-    schema = "id int, name string"
-    rows = [(i, f"v{i}") for i in range(50)]
-    same = spark.createDataFrame(rows, schema)
-    src = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c"), (5, "e"), (5, "f")], schema)
-    trg = spark.createDataFrame([(1, "a"), (2, "B"), (4, "d"), (4, "d"), (5, "e")], schema)
+def _compare_in_one_execution(sql_plans, src, trg):
+    """compare_frames(src, trg) with examples, asserting that it and a
+    stats-only call are one SQL execution each: the stats are observed on the
+    examples query, so no example kind runs a job of its own."""
     out = {}
-    for name, (s, t) in {"identical": (same, same), "every_kind": (src, trg)}.items():
-        plans = sql_plans(lambda: out.update({name: compare_frames(s, t, ["id"])}))
-        assert len(plans) == 1, (name, plans)
-        plans = sql_plans(lambda: compare_frames(s, t, ["id"], with_examples=False))
-        assert len(plans) == 1, (name, plans)
-    stats, details = out["identical"]
+    plans = sql_plans(lambda: out.update(r=compare_frames(src, trg, ["id"])))
+    assert len(plans) == 1, plans
+    plans = sql_plans(lambda: compare_frames(src, trg, ["id"], with_examples=False))
+    assert len(plans) == 1, plans
+    return out["r"]
+
+
+def test_identical_frames_run_no_example_job(spark, sql_plans):
+    rows = [(i, f"v{i}") for i in range(50)]
+    same = spark.createDataFrame(rows, "id int, name string")
+    stats, details = _compare_in_one_execution(sql_plans, same, same)
     assert stats.passed_rows == 50
     assert details.issue_examples == []
     assert details.source_only_keys_examples == () == details.dup_target_keys_examples
-    stats, details = out["every_kind"]
+
+
+def test_each_nonzero_count_runs_its_lookup(spark, sql_plans):
+    # every example kind has rows, and each comes from the same one execution
+    schema = "id int, name string"
+    src = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c"), (5, "e"), (5, "f")], schema)
+    trg = spark.createDataFrame([(1, "a"), (2, "B"), (4, "d"), (4, "d"), (5, "e")], schema)
+    stats, details = _compare_in_one_execution(sql_plans, src, trg)
     assert (stats.only_source_rows, stats.only_target_rows) == (1, 1)
     assert details.source_only_keys_examples == ("3",)
     assert details.target_only_keys_examples == ("4",)
