@@ -37,7 +37,7 @@ def _compare_in_one_execution(sql_plans, src, trg):
     out = {}
     plans = sql_plans(lambda: out.update(r=compare_frames(src, trg, ["id"])))
     assert len(plans) == 1, plans
-    plans = sql_plans(lambda: compare_frames(src, trg, ["id"], with_examples=False))
+    plans = sql_plans(lambda: compare_frames(src, trg, ["id"], max_examples=0))
     assert len(plans) == 1, plans
     return out["r"]
 

@@ -63,7 +63,7 @@ def test_distributed_diff_matches_sequential_spec(spark, src, trg):
     schema = "k int, v1 string, v2 string"
     sdf = spark.createDataFrame(src, schema) if src else spark.createDataFrame([], schema)
     tdf = spark.createDataFrame(trg, schema) if trg else spark.createDataFrame([], schema)
-    stats, _ = compare_frames(sdf, tdf, ["k"], with_examples=False)
+    stats, _ = compare_frames(sdf, tdf, ["k"], max_examples=0)
     if not src and not trg:
         assert stats is None
         return

@@ -48,6 +48,7 @@ ORACLE_STAGE_FRAGMENTS = {
     "AS bkey FROM v": "_embedding_buckets_ctes",
     "HAVING COUNT(*) <=": "_cap_buckets_sql",
     "a.band = b.band AND a.bkey = b.bkey": "_capped_self_join_sql",
+    "(sa.sz + sb.sz - i.inter)": "_candidate_jaccard_sql",
     "AS over_cap_docs": "_bucket_size_stats_sql",
     "DECONTAM_BENCH_MOD} = 0": "_bench_shingles_sql",
     "AS n_dup_shingles": "_dup_shingle_fraction_sql",

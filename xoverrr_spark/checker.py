@@ -28,10 +28,10 @@ that frees every frame it persisted.
 Differences by design (Spark-first, not a port):
 - "tables" are Spark-readable identifiers (``spark.table``) or DataFrames —
   no per-DBMS adapters/engines; one Catalyst plan replaces generated SQL.
-- chunked date iteration (core.py:1447) is unnecessary inside one check —
-  a single distributed plan covers the range; it is kept for bounded
-  retry units, and incremental/resumable execution lives in
-  ``pipeline.runner``.
+- chunked date iteration (core.py:1447) runs no loop: a chunked diff is
+  the same one query, its date chunk a key column (``chunking.chunk_start``),
+  and a chunked sniff is the one sniff over the range.
+  Incremental/resumable execution lives in ``pipeline.runner``.
 - persistence appends to parquet/Iceberg run tables (persistence.py:236's
   audit row, normalized).
 
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from .chunking import chunk_start
 from .exceptions import MetadataError
 from .intermediates import persist, scope
 from .logger import get_logger
@@ -79,13 +80,9 @@ RESERVED_WORDS = {"date", "comment", "file", "number", "mode", "successful"}
 
 _LOG = get_logger("checker")
 
-
-def _merge_counts(dicts: list[dict]) -> dict:
-    out: dict = {}
-    for d in dicts:
-        for k, v in d.items():
-            out[k] = out.get(k, 0) + v
-    return out
+# the date-chunk column a chunked diff adds to both sides
+# (chunking.chunk_start); the x prefix follows xrecently_changed
+_CHUNK = "xchunk_start"
 
 
 def _final_score(stats):
@@ -288,38 +285,17 @@ class QualityChecker:
                       keys: list[str], max_examples: int, tolerance_pct: float,
                       date_column, date_range, chunk_size_days) -> _Outcome:
         """The keyed diff shared by check_samples and check_custom_queries:
-        one compare_frames over the whole range, or one per date chunk
-        (reference A10) merged by accumulator; examples come from the first
-        chunk that has rows."""
-        from .chunking import iter_date_chunks, merge_chunk_stats
-
+        one compare_frames over the whole range; a chunked check (reference
+        A10) tags both sides with the first day of each row's date chunk,
+        which joins the key."""
         src, trg = self._exclude_recent(src, trg, keys)
-        chunks = (
-            iter_date_chunks(date_range[0], date_range[1], chunk_size_days)
-            if (date_column and date_range)
-            else [(None, None)]
-        )
+        chunk = chunk_start(date_column, date_range, chunk_size_days)
+        if chunk is not None:
+            src, trg = src.withColumn(_CHUNK, chunk), trg.withColumn(_CHUNK, chunk)
         with run.dataset_check():
-            if len(chunks) == 1:
-                stats, details = D.compare_frames(src, trg, keys, max_examples)
-            else:
-                per, issue_dicts, details = [], [], None
-                for cs, ce in chunks:
-                    st, dt_ = D.compare_frames(
-                        self._date_filter(src, date_column, (cs, ce)),
-                        self._date_filter(trg, date_column, (cs, ce)),
-                        keys, max_examples, with_examples=details is None,
-                    )
-                    per.append(st)
-                    if st is not None and dt_ is not None:
-                        issue_dicts.append(dict(dt_.issue_breakdown))
-                        if details is None:
-                            details = dt_
-                stats = merge_chunk_stats(per, issue_dicts)
-                if details is not None and stats is not None:
-                    details.issue_breakdown = sorted(
-                        _merge_counts(issue_dicts).items(), key=lambda x: (-x[1], x[0])
-                    )
+            stats, details = D.compare_frames(
+                src, trg, keys, max_examples, chunk=None if chunk is None else _CHUNK,
+            )
         status = D.check_status(stats, tolerance_pct)
         report = render_samples_report(
             run.name, run.run_id, status, stats, details, tolerance_pct,
@@ -1364,7 +1340,7 @@ class QualityChecker:
         (reference core.py:749). Named ``:param`` binds are passed through
         Spark SQL's parameterized queries (reference splices params into
         binds, core.py:959-1028); ``date_column``/``date_range``/
-        ``chunk_size_days`` run the same chunk loop as check_samples
+        ``chunk_size_days`` chunk the diff as in check_samples
         (reference runs all four check types chunked, core.py:1030-1146)."""
         def body(run):
             keys = [k.lower() for k in custom_primary_key]
@@ -1399,28 +1375,17 @@ class QualityChecker:
         chunk_size_days: int | None = None,
     ):
         """Row-rule sniff over arbitrary Spark SQL (reference core.py:620).
-        Named ``:param`` binds ride ``spark.sql(q, args=...)``; chunked
-        execution mirrors the reference's chunked sniff (core.py:1216-1357)
-        with the accumulator merge in operators.sniff.merge_sniff_stats."""
+        Named ``:param`` binds ride ``spark.sql(q, args=...)``. A chunked
+        sniff (reference core.py:1216-1357) sums its counters over chunks
+        that tile the range, so it is the one sniff over the range;
+        ``chunk_size_days`` is only validated."""
         def body(run):
-            from .chunking import iter_date_chunks
-
+            chunk_start(date_column, date_range, chunk_size_days)
             with run.query("source"):
                 df = self.spark.sql(source_query, args=params or {})
                 df = self._date_filter(df, date_column, date_range)
-            chunks = (
-                iter_date_chunks(date_range[0], date_range[1], chunk_size_days)
-                if (date_column and date_range)
-                else [(None, None)]
-            )
             with run.dataset_check():
-                if len(chunks) == 1:
-                    stats = S.evaluate_sniff(df)
-                else:
-                    stats = S.merge_sniff_stats([
-                        S.evaluate_sniff(self._date_filter(df, date_column, (cs, ce)))
-                        for cs, ce in chunks
-                    ])
+                stats = S.evaluate_sniff(df)
                 if stats.total_rows:
                     hist = S.sniff_histogram(df).collect()
                     examples = df.filter(

@@ -1,72 +1,47 @@
-"""Date-chunk iteration + cross-chunk accumulator merge.
+"""Date chunks as a column.
 
-Behavior matched from the reference (``/root/reference/src/xoverrr/
-core.py:1447-1483`` ``_iter_date_chunks``; goldens
-``tests/unit/test_core_chunking.py:23-38``): inclusive chunk ends,
-remainder chunk, single full range when chunking is off, ValueError on
-non-positive sizes / inverted ranges.
+The reference splits a date range into chunks of ``chunk_size_days`` days
+(``src/xoverrr/core.py:1447-1483`` ``_iter_date_chunks``;
+goldens ``tests/unit/test_core_chunking.py:23-38``): inclusive chunk ends, a
+remainder chunk, ValueError on non-positive sizes and inverted ranges. It
+diffs each chunk in its own query and merges the counters on the driver
+(A10, ``core.py:1508-1640``), to bound single-process memory.
 
-On Spark a single distributed plan normally covers the whole range (the
-chunk loop exists in the reference to bound single-process memory), but
-chunked execution remains useful for bounded-retry orchestration and the
-chunked==unchunked equivalence is a correctness invariant the reference
-pins (``tests/integration/self_db/postgres/test_postgres_chunking_yearly.py:64``)
-— mirrored in ``tests/test_chunking.py``.
+On Spark one query covers the range. ``chunk_start`` tags each row with the
+first day of its chunk, and the diff groups by that tag next to the key, so
+a key matches only within its chunk, as in the reference's per-chunk diff.
+The chunks tile the range, so every counter is the sum the reference's
+accumulator merge computes (reference invariant
+``tests/integration/self_db/postgres/test_postgres_chunking_yearly.py:64``,
+mirrored in ``tests/test_chunking.py``).
 """
 
 from __future__ import annotations
 
-from datetime import date, timedelta
+from datetime import date
 
-from .operators.diff import CheckStats, build_check_stats
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 
-def iter_date_chunks(
-    start_date: str | None,
-    end_date: str | None,
+def chunk_start(
+    date_column: str | None,
+    date_range: tuple[str, str] | None,
     chunk_size_days: int | None,
-) -> list[tuple[str | None, str | None]]:
-    if chunk_size_days is not None and chunk_size_days <= 0:
-        raise ValueError("chunk_size_days must be greater than 0")
-    if not (chunk_size_days and start_date is not None and end_date is not None):
-        return [(start_date, end_date)]
-
-    start = date.fromisoformat(start_date)
-    end = date.fromisoformat(end_date)
-    if start > end:
-        raise ValueError(f"date_range start {start_date} is greater than end {end_date}")
-
-    chunks: list[tuple[str, str]] = []
-    current = start
-    while current <= end:
-        chunk_end = min(current + timedelta(days=chunk_size_days - 1), end)
-        chunks.append((current.isoformat(), chunk_end.isoformat()))
-        current = chunk_end + timedelta(days=1)
-    return chunks
-
-
-def merge_chunk_stats(
-    per_chunk: list[CheckStats | None],
-    issue_counts_per_chunk: list[dict[str, int]] | None = None,
-) -> CheckStats | None:
-    """Cross-chunk accumulator merge (reference A10, core.py:1508-1640):
-    sum the raw counters across chunks, then recompute every percentage and
-    the weighted score from the totals."""
-    real = [s for s in per_chunk if s is not None]
-    if not real:
+) -> Column | None:
+    """The first day of each row's ``chunk_size_days``-day chunk of
+    ``date_range``, as a DATE; None when the check is not chunked. Without
+    a date column and range there is nothing to chunk, and the size is not
+    validated."""
+    if not (date_column and date_range) or chunk_size_days is None:
         return None
-    merged_issues: dict[str, int] = {}
-    for d in issue_counts_per_chunk or []:
-        for col, n in d.items():
-            merged_issues[col] = merged_issues.get(col, 0) + n
-    return build_check_stats(
-        sum(s.total_source_rows for s in real),
-        sum(s.total_target_rows for s in real),
-        sum(s.dup_source_rows for s in real),
-        sum(s.dup_target_rows for s in real),
-        sum(s.only_source_rows for s in real),
-        sum(s.only_target_rows for s in real),
-        sum(s.comparable_rows for s in real),
-        sum(s.passed_rows for s in real),
-        [n for n in merged_issues.values() if n > 0],
+    if chunk_size_days <= 0:
+        raise ValueError("chunk_size_days must be greater than 0")
+    start, end = date_range
+    if date.fromisoformat(start) > date.fromisoformat(end):
+        raise ValueError(f"date_range start {start} is greater than end {end}")
+    first = F.lit(start).cast("date")
+    days = F.datediff(F.to_date(F.col(date_column)), first)
+    return F.date_add(
+        first, (F.floor(days / chunk_size_days) * chunk_size_days).cast("int")
     )

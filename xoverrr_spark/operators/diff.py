@@ -33,6 +33,13 @@ observed on the examples query: the stats aggregate is an ``Observation`` on
 the per-key frame, and every example kind is one ranked window over it,
 capped per kind by a partial ``WindowGroupLimit`` before the window's
 exchange. Nothing is persisted.
+
+Date chunks (reference A10: one query per chunk plus a driver-side
+accumulator merge, ``core.py:1508-1640``) are a ``chunk`` column that joins
+the group key: a key matches only within its chunk, every counter is
+already the sum over chunks, and the examples window orders by chunk first,
+which is the reference's "cap per chunk, re-cap on merge in chunk order"
+(``core.py:1290-1313``). A chunked check is the same one query.
 """
 
 from __future__ import annotations
@@ -144,28 +151,32 @@ def _common_value_columns(src: DataFrame, trg: DataFrame, keys: list[str]) -> li
 
 
 def diff_joined(
-    src: DataFrame, trg: DataFrame, keys: list[str], normalize: bool = True
+    src: DataFrame, trg: DataFrame, keys: list[str], normalize: bool = True,
+    chunk: str | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """The core diff plan: per-key frame with per-side group sizes + value
     structs, built from a tagged union and ONE conditional aggregation
     (equivalent to dedup-each-side + full-outer join, at half the shuffles).
+    ``chunk`` names a column of both sides that joins the group key, so a
+    key matches only within its chunk; it is not a value column.
 
     Returns (joined, value_columns); joined columns:
-    keys..., s_cnt, s_row, t_cnt, t_row — side columns are NULL for keys
-    absent on that side, exactly like the outer-join formulation.
+    [chunk,] keys..., s_cnt, s_row, t_cnt, t_row — side columns are NULL for
+    keys absent on that side, exactly like the outer-join formulation.
     """
     if normalize:
         src, trg = canonicalize_pair(src, trg)
-    vals = _common_value_columns(src, trg, keys)
+    group = [chunk, *keys] if chunk else keys
+    vals = _common_value_columns(src, trg, group)
     u = (
-        src.select(*keys, *vals, F.lit("s").alias("_side"))
-        .unionByName(trg.select(*keys, *vals, F.lit("t").alias("_side")))
+        src.select(*group, *vals, F.lit("s").alias("_side"))
+        .unionByName(trg.select(*group, *vals, F.lit("t").alias("_side")))
     )
     is_s = F.col("_side") == "s"
     row_expr = (
         F.struct(*[F.col(c) for c in vals]) if vals else F.lit(True)
     )
-    j = u.groupBy(*keys).agg(
+    j = u.groupBy(*group).agg(
         F.sum(F.when(is_s, 1)).alias("s_cnt"),
         F.min(F.when(is_s, row_expr)).alias("s_row"),
         F.sum(F.when(~is_s, 1)).alias("t_cnt"),
@@ -238,12 +249,14 @@ _SOURCE_ONLY, _TARGET_ONLY, _DUP_SOURCE, _DUP_TARGET, _ISSUE = range(5)
 
 def _examples_frame(
     j: DataFrame, vals: list[str], keys: list[str], max_examples: int,
+    chunk: str | None = None,
 ) -> DataFrame:
     """Every example kind of a ``diff_joined`` frame as one ranked window,
     capped at ``max_examples`` rows per kind: source-only, target-only,
     dup-source and dup-target keys in key order, and per differing column
-    the discrepancies in ``primary_key``-string order (reference caps at
-    utils.py:387-391; its per-chunk row loop becomes explode + window here).
+    the discrepancies in ``primary_key``-string order, all after ``chunk``
+    order when chunked (reference caps at utils.py:387-391; its per-chunk
+    row loop becomes explode + window here).
 
     Columns: ``_key`` (struct of the keys), kind, column_name, primary_key,
     source_value, target_value, rn. The ``rn <= max_examples`` filter lets
@@ -279,14 +292,16 @@ def _examples_frame(
         tv = F.col(f"t_row.{c}").cast("string")
         # null-safe: a NULL-vs-value discrepancy is still an example
         kinds.append(kind(_ISSUE, differing & ~sv.eqNullSafe(tv), F.lit(c), pk, sv, tv))
-    w = Window.partitionBy("kind", "column_name").orderBy("primary_key", "_key")
+    chunks = [chunk] if chunk else []
+    w = Window.partitionBy("kind", "column_name").orderBy(*chunks, "primary_key", "_key")
     return (
         # every issue kind implies `differing`: rows with no example of any
         # kind leave before the explode
         j.filter(source_only | target_only | dup_source | dup_target | differing)
-        .select(F.struct(*keys).alias("_key"), F.explode(F.array(*kinds)).alias("_ex"))
+        .select(*chunks, F.struct(*keys).alias("_key"),
+                F.explode(F.array(*kinds)).alias("_ex"))
         .filter(F.col("_ex").isNotNull())
-        .select("_key", "_ex.*")
+        .select(*chunks, "_key", "_ex.*")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= max_examples)
     )
@@ -298,7 +313,7 @@ def compare_frames(
     keys: list[str],
     max_examples: int = DEFAULT_MAX_EXAMPLES,
     normalize: bool = True,
-    with_examples: bool = True,
+    chunk: str | None = None,
 ) -> tuple[CheckStats | None, CheckDetails | None]:
     """Full diff run -> (CheckStats, CheckDetails); (None, None) when both
     sides are empty (reference utils.py:438-439 -> SKIPPED).
@@ -307,16 +322,18 @@ def compare_frames(
     ``Observation`` on the ``diff_joined`` frame, and every example kind
     comes from one ranked-window frame over that observed frame, collected
     once — the collect runs the scan + key shuffle once and fills both.
-    ``with_examples=False`` collects the stats aggregate alone, also one
-    query; so does ``max_examples <= 0``, whose empty window the optimizer
-    folds away together with the metrics node.
+    ``max_examples <= 0`` collects the stats aggregate alone, also one
+    query: the optimizer would fold its empty window away together with the
+    metrics node. ``chunk`` names the date-chunk column of a chunked check
+    (``chunking.chunk_start``) on both sides: it joins the group key, and
+    the returned keys, ``primary_key`` and skipped columns leave it out.
     """
-    j, vals = diff_joined(src, trg, keys, normalize)
+    j, vals = diff_joined(src, trg, keys, normalize, chunk)
     examples = []
-    if with_examples and max_examples > 0:
+    if max_examples > 0:
         obs = Observation()
         examples = _examples_frame(
-            j.observe(obs, *_stats_aggs(vals)), vals, keys, max_examples
+            j.observe(obs, *_stats_aggs(vals)), vals, keys, max_examples, chunk
         ).collect()
         row = obs.get
     else:
@@ -349,6 +366,7 @@ def compare_frames(
             for r in examples if r.kind == code
         )
 
+    compared = {*keys, *vals, chunk}
     details = CheckDetails(
         issue_breakdown=breakdown,
         issue_examples=[
@@ -361,12 +379,8 @@ def compare_frames(
         source_only_keys_examples=_keys(_SOURCE_ONLY),
         target_only_keys_examples=_keys(_TARGET_ONLY),
         evaluated_columns=vals,
-        skipped_source_columns=[
-            c for c in src.columns if c not in keys and c not in vals
-        ],
-        skipped_target_columns=[
-            c for c in trg.columns if c not in keys and c not in vals
-        ],
+        skipped_source_columns=[c for c in src.columns if c not in compared],
+        skipped_target_columns=[c for c in trg.columns if c not in compared],
     )
     return stats, details
 

@@ -55,21 +55,6 @@ def evaluate_sniff(df: DataFrame, flag_col: str = XSNIFF_PASSED) -> SniffStats:
     return SniffStats(total, total - issues, issues, pct, 100 - pct)
 
 
-def merge_sniff_stats(per_chunk: list[SniffStats | None]) -> SniffStats | None:
-    """Cross-chunk accumulator merge for sniff runs (the sniff analogue of
-    chunking.merge_chunk_stats; reference chunked sniff core.py:1216-1357):
-    sum raw counters, recompute the percentage/score from the totals."""
-    real = [s for s in per_chunk if s is not None]
-    if not real:
-        return None
-    total = sum(s.total_rows for s in real)
-    issues = sum(s.issue_rows for s in real)
-    if total == 0:
-        return SniffStats(0, 0, 0, 0.0, 100.0)
-    pct = issues / total * 100
-    return SniffStats(total, total - issues, issues, pct, 100 - pct)
-
-
 def drop_reason_examples(
     df: DataFrame,
     key_col: str = "image_id",

@@ -620,6 +620,32 @@ SELECT band,
 FROM per_bucket GROUP BY band"""
 
 
+def _candidate_jaccard_sql(sha: str, shb: str, threshold: float) -> str:
+    """CTEs ``sza``, ``szb``, ``inter`` and ``jac`` (doc_a, doc_b, jaccard):
+    the exact shingle Jaccard of each pair of candidate CTE ``cands``
+    (doc_a, doc_b), with doc_a's shingles in CTE ``sha`` and doc_b's in
+    ``shb``, kept when >= ``threshold``. The intersection join runs over
+    candidate pairs only, never a full shingle self-join (twin of
+    dedup.candidate_jaccard)."""
+    return f"""sza AS (SELECT doc_id, COUNT(*) AS sz FROM {sha} GROUP BY doc_id),
+szb AS (SELECT doc_id, COUNT(*) AS sz FROM {shb} GROUP BY doc_id),
+inter AS (
+  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
+  FROM cands c
+  JOIN {sha} a ON a.doc_id = c.doc_a
+  JOIN {shb} b ON b.doc_id = c.doc_b AND b.x = a.x
+  GROUP BY 1, 2
+),
+jac AS (
+  SELECT * FROM (
+    SELECT i.doc_a, i.doc_b, i.inter * 1.0 / (sa.sz + sb.sz - i.inter) AS jaccard
+    FROM inter i
+    JOIN sza sa ON sa.doc_id = i.doc_a
+    JOIN szb sb ON sb.doc_id = i.doc_b
+  ) WHERE jaccard >= {threshold}
+)"""
+
+
 def _bench_shingles_sql(sh: str) -> str:
     """The distinct shingles, within CTE ``sh``, of the synthetic benchmark
     subset (doc_id % DECONTAM_BENCH_MOD == 0)."""
@@ -709,20 +735,8 @@ def minhash_near_dups_documents(
     return f"""
 WITH {_lsh_buckets_ctes(num_hashes, bands)},
 {_capped_self_join_sql('buckets')},
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-  FROM cands c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.x = a.x
-  GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b,
-       i.inter * 1.0 / (sa.sz + sb.sz - i.inter) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE i.inter * 1.0 / (sa.sz + sb.sz - i.inter) >= {threshold}
+{_candidate_jaccard_sql('sh', 'sh', threshold)}
+SELECT doc_a, doc_b, jaccard FROM jac
 """
 
 
@@ -1567,21 +1581,8 @@ cands AS (
   SELECT DISTINCT n.doc_id AS doc_a, c.doc_id AS doc_b
   FROM bn n JOIN bc c ON n.band = c.band AND n.bkey = c.bkey
 ),
-szn AS (SELECT doc_id, COUNT(*) AS sz FROM shn GROUP BY doc_id),
-szc AS (SELECT doc_id, COUNT(*) AS sz FROM shc GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-  FROM cands c
-  JOIN shn a ON a.doc_id = c.doc_a
-  JOIN shc b ON b.doc_id = c.doc_b AND b.x = a.x
-  GROUP BY 1, 2
-),
-near AS (
-  SELECT DISTINCT i.doc_a AS doc_id
-  FROM inter i JOIN szn sa ON sa.doc_id = i.doc_a
-  JOIN szc sb ON sb.doc_id = i.doc_b
-  WHERE i.inter * 1.0 / (sa.sz + sb.sz - i.inter) >= {INCR_JACCARD}
-)
+{_candidate_jaccard_sql('shn', 'shc', INCR_JACCARD)},
+near AS (SELECT DISTINCT doc_a AS doc_id FROM jac)
 SELECT d.doc_id AS new_id,
        CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
             WHEN nr.doc_id IS NOT NULL THEN 'near_dup'
